@@ -1,6 +1,6 @@
 package graft
 
-/** Shared concurrency/diagnostic helpers for the persisted-state commit
+/** Shared concurrency helpers for the persisted-state commit
   * paths (text [[graft.streaming.DedupStream]] and embedding
   * [[graft.operators.EmbeddingIncremental]] /
   * [[graft.streaming.EmbedStream]] sides — one definition, no drift). */
@@ -60,19 +60,6 @@ private[graft] object Par {
       catch { case w: Throwable => if (w ne e) e.addSuppressed(w) }
       throw e
     }
-
-  /** Identity forms the replay guard accepts for the CURRENT lineage:
-    * the raw query-id string (what this build records), plus the
-    * `murmur:`-tagged 32-bit hash form older manifests recorded — a
-    * store committed by a previous build keeps its (weaker, but
-    * existing) guard across the upgrade instead of silently admitting a
-    * redelivered batch twice. New commits always record the raw id;
-    * the legacy form ages out with the manifest that carries it. */
-  def ckptIdentityCandidates(checkpointDir: String): Seq[String] = {
-    val id = ckptIdentity(checkpointDir)
-    Seq(id,
-      "murmur:" + scala.util.hashing.MurmurHash3.stringHash(id).toLong)
-  }
 
   /** Run `f` with adaptive query execution OFF — for the daily-admission
     * paths, whose relations are frontier/batch-sized BY CONSTRUCTION
@@ -164,97 +151,4 @@ private[graft] object Par {
 
   def jsonUnescape(s: String): String =
     s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  /** Cumulative (Spark job count, task-input bytes) meter — ONE
-    * listener per instance; both reads drain the listener bus first so
-    * a just-finished action's events are counted. Shared by the
-    * GRAFT_CHAIN_DEBUG phase timer below and the ChainProbe read
-    * columns, so the two can never measure different things. */
-  final class Meter(sc: org.apache.spark.SparkContext,
-      drainTimeoutMs: Long = 10000) {
-    private val jobCount = new java.util.concurrent.atomic.AtomicLong
-    private val readBytes = new java.util.concurrent.atomic.AtomicLong
-    private val listener =
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobCount.incrementAndGet(); ()
-        }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) readBytes.addAndGet(m.inputMetrics.bytesRead)
-          ()
-        }
-      }
-    sc.addSparkListener(listener)
-
-    /** Unregister from the listener bus. A Meter is registered for the
-      * JVM's lifetime otherwise — a probe run creating one meter per
-      * variant would accumulate listeners that keep counting (and
-      * paying bus dispatch) long after their columns were printed.
-      * Drains the bus FIRST so events already emitted but not yet
-      * dispatched land in the counters — reads after close() then
-      * return the final counts (a remove-without-drain would silently
-      * drop the last action's queued events). */
-    def close(): Unit = {
-      drain()
-      sc.removeSparkListener(listener)
-    }
-    // only a drain TIMEOUT degrades to a possibly-stale read (the
-    // counters are still monotone); any other failure means the meter's
-    // numbers can't be trusted and must fail loudly — these columns are
-    // committed bench evidence
-    private def drain(): Unit =
-      try org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(sc, drainTimeoutMs)
-      catch { case _: java.util.concurrent.TimeoutException => () }
-    def jobs: Long = { drain(); jobCount.get }
-    def read: Long = { drain(); readBytes.get }
-    def jobsAndRead: (Long, Long) = { drain(); (jobCount.get, readBytes.get) }
-  }
-
-  /** Env-gated (GRAFT_CHAIN_DEBUG) phase timer for the admission
-    * paths; `tag` carries the side-specific prefix. Also reports the
-    * Spark JOB count the phase launched — the chains' floor is
-    * sequential small jobs, so the count is the thing to optimize —
-    * and the task-metric INPUT BYTES the phase read, the column that
-    * attributes any per-day cpu trend at a fixed job count (a probe
-    * whose read mass tracks state size shows up here, per phase).
-    *
-    * CAVEAT: both deltas are GLOBAL counters, so phases timed
-    * CONCURRENTLY (the commit's inParallel write tasks) inflate each
-    * other — trust the per-phase numbers only for sequential phases
-    * (the admit.* chain); for a parallel group only the enclosing
-    * phase's delta is attributable. */
-  def timed[A](tag: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_CHAIN_DEBUG")) {
-      debugMeter match {
-        case null =>
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(
-            f"[chain] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-        case m =>
-          val (j0, b0) = m.jobsAndRead
-          val t0 = System.nanoTime(); val r = f
-          val (j1, b1) = m.jobsAndRead
-          System.err.println(
-            f"[chain] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s" +
-              s" jobs=${j1 - j0}" +
-              f" read=${(b1 - b0) / 1048576.0}%.2f MB"); r
-      }
-    } else f
-
-  // debug-only meter; registered once per JVM on first use (volatile
-  // single-field publish — the Meter is fully constructed before the
-  // reference is visible, so no half-initialized read is possible)
-  @volatile private var debugMeterRef: Meter = null
-  private def debugMeter: Meter = {
-    if (debugMeterRef == null) synchronized {
-      if (debugMeterRef == null)
-        org.apache.spark.sql.SparkSession.getActiveSession.foreach(s =>
-          debugMeterRef = new Meter(s.sparkContext, drainTimeoutMs = 2000))
-    }
-    debugMeterRef
-  }
 }

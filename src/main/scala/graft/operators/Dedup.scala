@@ -417,26 +417,23 @@ object Dedup {
     // verify pipeline TWICE whenever the edge set was over the cap
     // (measured: ~2x the cold wall of the q61 edge relation at the 40k-
     // vector scale point). Under the cap the pin is freed immediately.
-    val pinnedEdges = graft.Par.timed("  cl.edgesPin")(
-      graft.Checkpoints.pin(edgesLazy))
-    val tk = graft.Par.timed("  cl.edgesTake")(
-      pinnedEdges.take(IncrementalDedup.KeyPushMax + 1))
+    val pinnedEdges = graft.Checkpoints.pin(edgesLazy)
+    val tk = pinnedEdges.take(IncrementalDedup.KeyPushMax + 1)
     val edges =
       if (tk.length <= IncrementalDedup.KeyPushMax) {
         graft.Checkpoints.free(pinnedEdges)
         universe.sparkSession.createDataFrame(
           java.util.Arrays.asList(tk: _*), edgesLazy.schema)
       } else pinnedEdges
-    val comp = graft.Par.timed("  cl.comp")(
-      Components.connectedComponents(edges, maxRounds = maxIter))
+    val comp = Components.connectedComponents(edges, maxRounds = maxIter)
     // comp arrives eagerly pinned (connectedComponents frees its own
     // round pins against it) — the over-cap edge pin is dead now
     if (tk.length > IncrementalDedup.KeyPushMax)
       graft.Checkpoints.free(pinnedEdges)
-    val labels = graft.Par.timed("  cl.labels")(graft.Checkpoints.pin(universe
+    val labels = graft.Checkpoints.pin(universe
       .join(comp.withColumnRenamed("node", idCol), Seq(idCol), "left")
       .select(col(idCol),
-        coalesce(col("component"), col(idCol)).as("cluster_id"))))
+        coalesce(col("component"), col(idCol)).as("cluster_id")))
     // the labels pin is eager — comp's pin is no longer referenced
     graft.Checkpoints.free(comp)
     labels

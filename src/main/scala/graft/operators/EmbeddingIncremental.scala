@@ -46,7 +46,6 @@ object EmbeddingIncremental {
 
   private def inParallel(tasks: (() => Unit)*): Unit =
     graft.Par.inParallel(tasks: _*)
-  private def t[A](tag: String)(f: => A): A = graft.Par.timed(s"emb.$tag")(f)
 
   /** (grp, vec_id, embedding) — one row per vector per LSH table, the
     * probe-able bucket relation ([[Dedup.embeddingNearDupsLsh]]'s grid,
@@ -113,9 +112,8 @@ object EmbeddingIncremental {
     // state it's a narrow filter (no shuffle, unlike a semi-join); over
     // the persisted grpb-partitioned bucket log ([[admitDrop]]) it
     // statically prunes to the touched partition directories.
-    val touchedGrps: Seq[Long] = t("core.touched")(
-      newBucketRows.select(col("grp")).distinct()
-        .collect().map(_.getLong(0)).toSeq)
+    val touchedGrps: Seq[Long] = newBucketRows.select(col("grp")).distinct()
+      .collect().map(_.getLong(0)).toSeq
     val storedAll = state.buckets
     // loaded states carry the coarse grpb PARTITION column: its IN
     // filter prunes directories statically; the grp IN filter then
@@ -137,7 +135,7 @@ object EmbeddingIncremental {
       Dedup.newPairKernel(rows.map { case (_, id, v, isNew) => (id, v, isNew) },
         threshold)
     }.toDF().select(col("vec_a").as("a"), col("vec_b").as("b")).distinct()
-    val edges = t("core.edges")(graft.Checkpoints.pin(edgesLazy))
+    val edges = graft.Checkpoints.pin(edgesLazy)
 
     // contract endpoints through the persisted labels: old vectors
     // collapse to their cluster representative, new vectors stand for
@@ -145,9 +143,9 @@ object EmbeddingIncremental {
     // ([[IncrementalDedup.repLookup]]) — read once, never shuffled.
     val endpoints = edges.select(col("a").as("doc_id"))
       .union(edges.select(col("b").as("doc_id"))).distinct()
-    val reps = t("core.reps")(graft.Checkpoints.pin(IncrementalDedup.repLookup(
+    val reps = graft.Checkpoints.pin(IncrementalDedup.repLookup(
       state.labels.select(col("vec_id").as("doc_id"), col("cluster_id")),
-      endpoints)))
+      endpoints))
     val contracted = edges
       .join(reps.select(col("doc_id").as("a"), col("cluster_id").as("rep_a")),
         Seq("a"), "left")
@@ -165,7 +163,7 @@ object EmbeddingIncremental {
     // to the pinned distributed rounds; `release` frees exactly what
     // was pinned.
     val (comp, release) = {
-      val take = t("core.contract")(contracted.take(FrontierCap + 1))
+      val take = contracted.take(FrontierCap + 1)
       if (take.length <= FrontierCap) {
         val es = take.map(r => (r.getLong(0), r.getLong(1))).toSeq
         val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
@@ -178,8 +176,7 @@ object EmbeddingIncremental {
         // would be a guaranteed-wasted job
         // connectedComponents' labels arrive eagerly pinned (it frees
         // its own round pins) — re-pinning would orphan the inner pin
-        val c = t("core.comp")(
-          Components.connectedComponents(pc, driverThreshold = 0))
+        val c = Components.connectedComponents(pc, driverThreshold = 0)
         (c, () => Seq(c, pc).foreach(graft.Checkpoints.free))
       }
     }
@@ -256,10 +253,10 @@ object EmbeddingIncremental {
     * values) was measured unusable: every 100-vector admission wrote
     * ~1600 one-row files (one per touched grp dir), the per-admission
     * wall started at 17 s of filesystem churn and grew ~2 s/day from
-    * partition-listing alone (ChainProbe E, first cut). 64 coarse
-    * buckets keep writes to a few files per segment; the probe's two
-    * filters (touched-grpb dirs statically, then the grp IN pushed onto
-    * the SORTED grp column) prune in the TRICKLE regime only — a
+    * partition-listing alone (`bench/EMBCHAIN_r14_sf01_grp_layout.txt`).
+    * 64 coarse buckets keep writes to a few files per segment; the
+    * probe's two filters (touched-grpb dirs statically, then the grp IN
+    * pushed onto the SORTED grp column) prune in the TRICKLE regime only — a
     * handful of vectors touch few grpb values. A bulk daily batch
     * saturates the fixed 4096-cell grid (≈300 vectors already touch
     * ~40% of cells, covering every grpb), so the probe reads most of
@@ -351,9 +348,8 @@ object EmbeddingIncremental {
     // separate sequential job after the parallel group
     @volatile var rows = -1L
     inParallel(
-      () => t("boot.buckets")(
-        writeBucketSeg(state.buckets, s"$dir/buckets/seg=0")),
-      () => t("boot.labels") {
+      () => writeBucketSeg(state.buckets, s"$dir/buckets/seg=0"),
+      () => {
         state.labels.coalesce(1).write.mode("overwrite")
           .parquet(s"$dir/labels/seg=0")
         rows = spark.read.parquet(s"$dir/labels/seg=0").count()
@@ -382,8 +378,7 @@ object EmbeddingIncremental {
     require(VersionedIndex.currentVersion(dir).isEmpty,
       s"$dir already holds a committed state — grow it with admitDrop")
     val joinBuckets = graft.Par.background(() =>
-      t("boot.buckets")(writeBucketSeg(bucketRows(emb),
-        s"$dir/buckets/seg=0")))
+      writeBucketSeg(bucketRows(emb), s"$dir/buckets/seg=0"))
     @volatile var rows = -1L
     // no zombie writers: any failure here joins the in-flight bucket
     // write before propagating, so a retry's overwrite races nothing
@@ -391,9 +386,9 @@ object EmbeddingIncremental {
       // the eager cluster fixpoint (edge kernel, component closure,
       // label pin) runs while the bucket segment writes; labels-only —
       // the store derives sizes at load, so the size join never runs
-      val lab = t("boot.cluster")(Dedup.embeddingDupLabels(emb, threshold))
+      val lab = Dedup.embeddingDupLabels(emb, threshold)
       inParallel(
-        () => t("boot.labels") {
+        () => {
           lab.select(col("vec_id"), col("cluster_id"))
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$dir/labels/seg=0")
@@ -490,7 +485,7 @@ object EmbeddingIncremental {
       streamBatchId: Option[Long], streamCkptId: Option[String],
       retainVersions: Int): Unit = {
     val m = metaOrSaveStateFirst(dir)
-    val st0 = t("load")(stateAt(spark, dir, m))
+    val st0 = stateAt(spark, dir, m)
     val next = m.version + 1
     val fold = m.segs.size + 1 > maxLiveSegments
     // The bucket-log segment depends ONLY on the batch (append) or
@@ -502,17 +497,16 @@ object EmbeddingIncremental {
     // and a crashed attempt's partial segment is overwritten on retry.
     val nbr = bucketRows(newVecs)
     val joinBuckets = graft.Par.background { () =>
-      if (fold) t("fold.buckets")(writeBucketSeg(
+      if (fold) writeBucketSeg(
         st0.buckets.select(col("grp"), col("vec_id"), col("embedding"))
-          .unionByName(nbr), s"$dir/buckets/seg=$next"))
-      else t("app.buckets")(
-        writeBucketSeg(nbr, s"$dir/buckets/seg=$next"))
+          .unionByName(nbr), s"$dir/buckets/seg=$next")
+      else writeBucketSeg(nbr, s"$dir/buckets/seg=$next")
     }
     // a failing core must JOIN the in-flight writer before propagating —
     // returning early would leave a zombie write racing the retry's
     // overwrite of this very segment (the inParallel contract)
     val f = graft.Par.joinOnFailure(joinBuckets)(
-      t("core")(admitCore(st0, newVecs, threshold, Some(nbr))))
+      admitCore(st0, newVecs, threshold, Some(nbr)))
     // footer-only count of the label segment, taken INSIDE its write
     // task (no separate sequential job): the full labels count after
     // this commit is the fold's rewritten base, or the prior total plus
@@ -532,14 +526,14 @@ object EmbeddingIncremental {
         // C folds into the rewritten label base and resets to empty
         inParallel(
           () => joinBuckets(),
-          () => t("fold.labels") {
+          () => {
             applyCore(st0, f.newAssign, f.remap, nbr)
               .labels.coalesce(1).write.mode("overwrite")
               .parquet(s"$dir/labels/seg=$next")
             countSeg()
           },
-          () => t("fold.remap")(emptyRemap(spark).write.mode("overwrite")
-            .parquet(s"$dir/v$next/remap")))
+          () => emptyRemap(spark).write.mode("overwrite")
+            .parquet(s"$dir/v$next/remap"))
         Vector(next)
       } else {
         // true merges only: drop identity rows and rows keyed by the
@@ -563,13 +557,13 @@ object EmbeddingIncremental {
           .unionByName(merges)
         inParallel(
           () => joinBuckets(),
-          () => t("app.labels") {
+          () => {
             f.newAssign.coalesce(1).write.mode("overwrite")
               .parquet(s"$dir/labels/seg=$next")
             countSeg()
           },
-          () => t("app.remap")(composed.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/v$next/remap")))
+          () => composed.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/v$next/remap"))
         m.segs :+ next
       }
     }

@@ -209,8 +209,7 @@ object HeavyHitters {
       width: Int = CmsWidth): DataFrame = {
     // resolve the repartition decision ONCE for both passes
     val src = widened(docs)
-    val cells = graft.Par.timed("cms.build")(
-      cellRel(src, depth, width).collect())
+    val cells = cellRel(src, depth, width).collect()
     candidatesWithExact(src, gridOf(cells, depth, width), depth, width)
   }
 
@@ -253,12 +252,12 @@ object HeavyHitters {
     import spark.implicits._
     val kcol = keys.columns.head
     val src = widened(keys.select(col(kcol).as("k")))
-    val cells = graft.Par.timed("cms.salt.build")(src
+    val cells = src
       .select(posexplode(array(
         (0 until CmsDepth).map(d => bucketCol(d, col("k"), CmsWidth)): _*))
         .as(Seq("d", "bucket")))
       .groupBy(col("d"), col("bucket"))
-      .agg(count(lit(1)).as("c")).collect())
+      .agg(count(lit(1)).as("c")).collect()
     val grid = gridOf(cells, CmsDepth, CmsWidth)
     val n = grid(0).sum
     val threshold = math.max(minCount, n / divisor)

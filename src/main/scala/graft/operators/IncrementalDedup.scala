@@ -160,8 +160,8 @@ object IncrementalDedup {
     * IncrementalDedupSpec.
     *
     * Why no doc_id-bucketed second labels copy (so this read could
-    * prune to endpoint buckets): MEASURED at sf1 (ChainProbe variant D,
-    * `bench/LABELSAB_r13_sf1.txt`) the full stream wins outright —
+    * prune to endpoint buckets): MEASURED at sf1
+    * (`bench/LABELSAB_r13_sf1.txt`) the full stream wins outright —
     * 0.069 s vs 0.232 s at a 64-id frontier and 0.076 s vs 0.569 s at
     * the 2048-id cap (256-bucket copy; the pruned read's multi-
     * directory listing costs more than streaming the whole ~16 B/doc
@@ -371,11 +371,6 @@ object IncrementalDedup {
                  probeMode: ProbeMode = ProbeAuto): DedupState =
     applyDelta(state, admitBatchDelta(state, newDocs, threshold, probeMode))
 
-  /** Env-gated (GRAFT_CHAIN_DEBUG) phase timer, mirroring
-    * [[graft.streaming.DedupStream]]'s chain timer. */
-  private def phaseTimer[A](tag: String)(f: => A): A =
-    graft.Par.timed(s"  admit.$tag")(f)
-
   /** The admission computation itself, returning the frontier-sized
     * [[AdmitDelta]] instead of the reconstructed full state — the input
     * to a touched-partition-only commit
@@ -418,7 +413,7 @@ object IncrementalDedup {
         ((None: Option[Seq[Int]], None: Option[Seq[String]]), newBands)
       else {
         val n = state.buckets.get
-        val tk = phaseTimer("bandTake")(newBands.take(BandTakeMax + 1))
+        val tk = newBands.take(BandTakeMax + 1)
         if (tk.length <= BandTakeMax) {
           val bandIx = newBands.schema.fieldIndex("band")
           val hashIx = newBands.schema.fieldIndex("band_hash")
@@ -451,10 +446,11 @@ object IncrementalDedup {
     // verify/contract/fixpoint jobs entirely, and an under-cap frontier
     // lands as a LOCAL relation whose endpoint ids are then in hand —
     // zero further jobs for the shingle pruning (docBucketLocal) and the
-    // verify narrowing below. (ChainProbe A vs C: the always-pinned fold
-    // layout reads level with the segments-only layout at toy scale and
-    // wins at deployment ratios, bench probe_ab.)
-    val (cand, candRows) = phaseTimer("candTake")(pinFrontierRows(candLazy, spark))
+    // verify narrowing below. (Variants A vs C of
+    // `bench/CHAINPROBE_r12_sf01.txt`: the always-pinned fold layout
+    // reads level with the segments-only layout at toy scale and wins at
+    // deployment ratios, bench probe_ab.)
+    val (cand, candRows) = pinFrontierRows(candLazy, spark)
     // a batch colliding with nothing (no state band hits, no intra-batch
     // pairs) has zero edges by construction — skip the verify/contract/
     // fixpoint jobs entirely and self-assign
@@ -479,8 +475,7 @@ object IncrementalDedup {
     // stay distributed (localCheckpoint, not collect).
     val setsForVerify = endpointIds match {
       case Some(ids) =>
-        phaseTimer("setsPin")(graft.Checkpoints.pin(
-          setsAll.filter(col("doc_id").isin(ids: _*))))
+        graft.Checkpoints.pin(setsAll.filter(col("doc_id").isin(ids: _*)))
       case None => setsAll
     }
     val newEdgesLazy = Dedup.verifyJaccard(cand, setsForVerify)
@@ -489,7 +484,7 @@ object IncrementalDedup {
     // pin the verified edges (bounded take → local; checkpoint over the
     // cap): three consumers follow — the endpoint set and both sides of
     // the contraction — and each would re-run the verify join otherwise
-    val (newEdges, edgeRows) = phaseTimer("verifyTake")(pinFrontierRows(newEdgesLazy, spark))
+    val (newEdges, edgeRows) = pinFrontierRows(newEdgesLazy, spark)
     if (endpointIds.isDefined) freeLocalCheckpoint(setsForVerify)
     freeLocalCheckpoint(cand)
 
@@ -513,9 +508,9 @@ object IncrementalDedup {
         import spark.implicits._
         val endIds = er.flatMap(r => Seq(r.getLong(0), r.getLong(1)))
           .distinct.toSeq
-        val (_, repRows) = phaseTimer("repTake")(pinFrontierRows(
+        val (_, repRows) = pinFrontierRows(
           repLookup(state.labels, endIds.toDF("doc_id")),
-          spark, cap = 2 * KeyPushMax + 2))
+          spark, cap = 2 * KeyPushMax + 2)
         val repMap = repRows.get.map(r => r.getLong(0) -> r.getLong(1)).toMap
         // contract endpoints through the persisted labels: old docs
         // collapse to their cluster representative, new docs stand for
@@ -532,7 +527,7 @@ object IncrementalDedup {
         val compPairs = Components.unionFindLocal(nodes, contractedPairs)
         val compMap = compPairs.toMap
         val remap = compPairs.toDF("cluster_id", "merged")
-        val idTk = phaseTimer("idTake")(newDocs.select(col("doc_id")).take(KeyPushMax + 1))
+        val idTk = newDocs.select(col("doc_id")).take(KeyPushMax + 1)
         val (newAssign, localAssign) =
           if (idTk.length <= KeyPushMax) {
             val pairs = idTk.map { r =>

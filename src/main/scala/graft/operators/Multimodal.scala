@@ -444,7 +444,8 @@ object Multimodal {
 
     /** Decode every audio frame of a FLAC stream whose subframes are
       * CONSTANT or VERBATIM: returns (rate, channels, bits, samples)
-      * with samples in frame order, channel-interleaved per frame.
+      * with samples in frame order and, within a frame, channel-planar
+      * (every sample of channel 0, then channel 1, …).
       * Left(reason) for malformed streams AND for the honest
       * sentinels: `undecodable_subframe` (FIXED/LPC predictors),
       * `undecodable_channel_mode` (decorrelated stereo),
@@ -557,8 +558,10 @@ object Multimodal {
       * (`hi = payload((2k) % n)`, `lo = payload((2k+1) % n)`) — mono,
       * 16-bit, 44100 Hz, blocksize 192 (code 0001), real CRC-8/CRC-16.
       * The oracle re-derives every sample from the document text
-      * independently of this writer (the dimsOf contract). */
+      * independently of this writer (the dimsOf contract). The payload
+      * must be non-empty: the verbatim frame has nothing to wrap over. */
     def flacWithFrames(docId: Long, payload: Array[Byte]): Array[Byte] = {
+      require(payload.nonEmpty, s"doc $docId: empty FLAC payload")
       val total = 384L
       def frame(num: Int, body: java.io.ByteArrayOutputStream => Unit)
           : Array[Byte] = {
@@ -1239,13 +1242,18 @@ object Multimodal {
     * then reduced to q75's PCM statistics. FIXED/LPC predictors and
     * decorrelated stereo remain the named sentinel (spec-pinned) —
     * that is the codec-library line. Parameters in the OUTPUT come
-    * from the decode, not the generator. */
+    * from the decode, not the generator. An empty document has no
+    * payload to encode and gets the same sentinel row as an
+    * undecodable stream. */
   def flacPcmStats(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)].map {
       case (id, text) =>
-        val b = MediaCodec.flacWithFrames(id, text.getBytes("UTF-8"))
-        MediaCodec.flacSamples(b) match {
+        val payload = text.getBytes("UTF-8")
+        val decoded =
+          if (payload.isEmpty) Left("empty_payload")
+          else MediaCodec.flacSamples(MediaCodec.flacWithFrames(id, payload))
+        decoded match {
           case Left(_) =>
             PcmStats(id, -1L, -1L, -1L, -1L, 0.0, 0L, 0.0)
           case Right((rate, ch, bits, samples)) =>
@@ -1276,7 +1284,8 @@ object Multimodal {
     * from the payload's big-endian hex pairs with the wrap rule — then
     * the identical exact-int statistics (sums ≤ 2^53, so the ::DOUBLE
     * casts are exact; each later float op singly rounded on both
-    * sides, the q75 contract). */
+    * sides, the q75 contract). Empty documents get the engine's
+    * sentinel row. */
   val qFlacPcmStatsSql: String = {
     def b(j: String) =
       s"('0x' || substr(hx, (($j)*2+1)::INT, 2))::BIGINT"
@@ -1291,7 +1300,7 @@ object Multimodal {
        |         list_transform(range(0, 192), k ->
        |           CASE WHEN ($raw) >= 32768 THEN ($raw) - 65536
        |                ELSE ($raw) END) AS verb
-       |  FROM f)
+       |  FROM f WHERE nb > 0)
        |SELECT media_id,
        |       CAST(44100 AS BIGINT) AS sample_rate,
        |       CAST(1 AS BIGINT) AS channels,
@@ -1304,6 +1313,12 @@ object Multimodal {
        |       sqrt((192 * cval * cval
        |             + list_sum(list_transform(verb, s -> s * s)))::DOUBLE
        |            / 384) AS rms
-       |FROM v ORDER BY media_id""".stripMargin
+       |FROM v
+       |UNION ALL
+       |SELECT media_id, CAST(-1 AS BIGINT), CAST(-1 AS BIGINT),
+       |       CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS DOUBLE),
+       |       CAST(0 AS BIGINT), CAST(0 AS DOUBLE)
+       |FROM f WHERE nb = 0
+       |ORDER BY media_id""".stripMargin
   }
 }

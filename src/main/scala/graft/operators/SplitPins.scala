@@ -265,23 +265,22 @@ object SplitPins {
     * oracle replays the pin protocol itself via the doc-level
     * equivalence in the object scaladoc. */
   def qPinnedSplit(s: SparkSession, d: String): DataFrame = {
-    import graft.Par.timed
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     def day(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
     val root = java.nio.file.Files.createTempDirectory("graft-q93").toString
-    val st0 = timed("q93.initialState")(IncrementalDedup.initialState(day(0)))
-    timed("q93.bootstrapStore")(bootstrapStore(s, s"$root/state", st0.labels))
-    val d1 = timed("q93.admitDelta1")(IncrementalDedup.admitBatchDelta(st0, day(1)))
-    timed("q93.storeDelta1")(admitDelta(s, s"$root/state", d1.newAssign, d1.remap,
-      maxLiveSegments = 2)) // append
+    val st0 = IncrementalDedup.initialState(day(0))
+    bootstrapStore(s, s"$root/state", st0.labels)
+    val d1 = IncrementalDedup.admitBatchDelta(st0, day(1))
+    admitDelta(s, s"$root/state", d1.newAssign, d1.remap,
+      maxLiveSegments = 2) // append
     val st1 = IncrementalDedup.applyDelta(st0, d1)
-    val d2 = timed("q93.admitDelta2")(IncrementalDedup.admitBatchDelta(st1, day(2)))
-    timed("q93.storeDelta2")(admitDelta(s, s"$root/state", d2.newAssign, d2.remap,
-      maxLiveSegments = 2)) // fold
+    val d2 = IncrementalDedup.admitBatchDelta(st1, day(2))
+    admitDelta(s, s"$root/state", d2.newAssign, d2.remap,
+      maxLiveSegments = 2) // fold
     // pin before the state dir is deleted (the caller writes AFTER this
     // returns; a lazy scan would read deleted files)
-    val out = timed("q93.loadSplits")(graft.Checkpoints.pin(
-      loadSplits(s, s"$root/state").orderBy("doc_id")))
+    val out = graft.Checkpoints.pin(
+      loadSplits(s, s"$root/state").orderBy("doc_id"))
     d1.release(); d2.release()
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))

@@ -402,14 +402,12 @@ object SubstringDedup {
     // shape (the count's input is the file this thunk just wrote)
     @volatile var rows = -1L
     val joinWins = graft.Par.background { () =>
-      graft.Par.timed("sub.boot.windows")(
-        writeWindowSeg(windowRel(docs, k), s"$dir/windows/seg=0"))
+      writeWindowSeg(windowRel(docs, k), s"$dir/windows/seg=0")
       rows = spark.read.parquet(s"$dir/windows/seg=0").count()
     }
     graft.Par.joinOnFailure(joinWins) {
-      graft.Par.timed("sub.boot.spans")(
-        duplicateSpans(docs, k).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/spans/seg=0"))
+      duplicateSpans(docs, k).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/spans/seg=0")
     }
     joinWins()
     VersionedIndex.commit(dir, 0, trainedRows = rows, totalRows = rows,
@@ -458,18 +456,16 @@ object SubstringDedup {
     val nw = graft.Checkpoints.pin(windowRel(newDocs, k))
     try {
       val joinWins = graft.Par.background { () =>
-        if (fold) graft.Par.timed("sub.fold.windows")(writeWindowSeg(
-          st.windows.drop("whb").unionByName(nw), s"$dir/windows/seg=$next"))
-        else graft.Par.timed("sub.app.windows")(
-          writeWindowSeg(nw, s"$dir/windows/seg=$next"))
+        if (fold) writeWindowSeg(
+          st.windows.drop("whb").unionByName(nw), s"$dir/windows/seg=$next")
+        else writeWindowSeg(nw, s"$dir/windows/seg=$next")
       }
       graft.Par.joinOnFailure(joinWins) {
         val newSpans = admitSpans(st, nw, k)
         val spansOut =
           if (fold) st.spans.unionByName(newSpans) else newSpans
-        graft.Par.timed(if (fold) "sub.fold.spans" else "sub.app.spans")(
-          spansOut.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/spans/seg=$next"))
+        spansOut.coalesce(1).write.mode("overwrite")
+          .parquet(s"$dir/spans/seg=$next")
       }
       // the committed window-log total is derivable from the PINNED
       // batch: the new windows are exactly nw's rows, and m.totalRows

@@ -69,33 +69,19 @@ private[graft] object VersionedIndex {
       if (!f.isFile) throw new IllegalStateException(
         s"$indexDir/v$v has no MANIFEST — lost or deleted committed state")
       val txt = java.nio.file.Files.readString(f.toPath)
-      // a manifest with trainedRows but no segs/totalRows is the
-      // pre-seg-log layout (data under v$N/<log>): a VALID old index,
-      // not corruption — name it and prescribe the rebuild
-      def legacy(): Nothing = throw new IllegalStateException(
-        s"$indexDir/v$v uses the pre-seg-log index layout (manifest " +
-          s"$txt) — this reader needs the seg-log protocol; rebuild " +
-          "the index (buildIvfIndex/buildPqIndex) to migrate")
+      def unreadable(): Nothing = throw new IllegalStateException(
+        s"unreadable index manifest v$v: $txt")
       def num(k: String): Long =
         s""""$k":(\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-          .getOrElse(if (txt.contains("trainedRows")) legacy()
-            else throw new IllegalStateException(
-              s"unreadable index manifest v$v: $txt"))
+          .getOrElse(unreadable())
       val segs = s""""segs":\\[([\\d,]*)\\]""".r.findFirstMatchIn(txt)
         .map(m => if (m.group(1).isEmpty) Vector.empty[Long]
                   else m.group(1).split(",").map(_.toLong).toVector)
-        .getOrElse(if (txt.contains("trainedRows")) legacy()
-          else throw new IllegalStateException(
-            s"unreadable index manifest v$v: $txt"))
+        .getOrElse(unreadable())
       val sb = """"streamBatchId":(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toLong)
       val sc = """"streamCkptId":"((?:[^"\\]|\\.)*)"""".r
         .findFirstMatchIn(txt).map(m => graft.Par.jsonUnescape(m.group(1)))
-        // legacy manifests recorded a 32-bit hash — surface it in the
-        // tagged form Par.ckptIdentityCandidates also produces, so an
-        // upgraded store keeps its replay guard
-        .orElse(""""streamCkptHash":(-?\d+)""".r.findFirstMatchIn(txt)
-          .map(m => "murmur:" + m.group(1)))
       val rv = """"retain":(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toInt)
       Meta(v, num("trainedRows"), num("totalRows"), segs, sb, sc, rv)

@@ -156,8 +156,6 @@ object DedupStream {
     r.parquet(paths: _*)
   }
 
-  private def chainTimer[A](tag: String)(f: => A): A =
-    graft.Par.timed(tag)(f)
   private def inParallel(tasks: (() => Unit)*): Unit =
     graft.Par.inParallel(tasks: _*)
 
@@ -198,12 +196,7 @@ object DedupStream {
             b.toInt, owners, num("streamBatchId"),
             """"streamCkptId":"((?:[^"\\]|\\.)*)"""".r
               .findFirstMatchIn(txt)
-              .map(m => graft.Par.jsonUnescape(m.group(1)))
-              // legacy numeric field -> the tagged form the guard's
-              // candidate list also produces (upgraded stores keep
-              // their replay guard)
-              .orElse(""""streamCkptHash":(-?\d+)""".r
-                .findFirstMatchIn(txt).map(m => "murmur:" + m.group(1))),
+              .map(m => graft.Par.jsonUnescape(m.group(1))),
             num("migratedFrom").map(_.toInt)))
         case _ => throw new IllegalStateException(
           s"unreadable state manifest v$v: $txt")
@@ -443,7 +436,7 @@ object DedupStream {
     * live for at most 2 commits). Equal-sized cohorts never trigger
     * early — the cadence stays exactly the count rule's, and the
     * probe's read bound is O(k·batch + touched base buckets) in both
-    * regimes (measured: ChainProbe variants L and P,
+    * regimes (measured: variants L and P of the committed
     * `bench/CHAINPROBE_r16_read.txt`).
     *
     * MAJOR FOLDS: once [[MaxBaseCompactions]] cparts are live, the
@@ -616,11 +609,11 @@ object DedupStream {
     // The FIRST commit's snapshot is corpus-sized — committed as a live
     // segment it would be probed UNPRUNED (bucket computed at read) by
     // every admission until the count-rule fold, i.e. k days of
-    // full-corpus reads (measured: ChainProbe variant P days 0-3 read
-    // the whole band tier at every bucket count). Write it PRE-FOLDED
-    // into the bucketed base instead: one extra shuffle on a day that
-    // is O(corpus) anyway (labels/sizes write every bucket), and every
-    // later probe prunes from day 1.
+    // full-corpus reads (measured: `bench/CHAINPROBE_r16_read.txt`
+    // variant P, days 0-3 read the whole band tier at every bucket
+    // count). Write it PRE-FOLDED into the bucketed base instead: one
+    // extra shuffle on a day that is O(corpus) anyway (labels/sizes
+    // write every bucket), and every later probe prunes from day 1.
     val bootstrapFold = next == 0
     val logTasks: Seq[() => Unit] =
       if (bootstrapFold) Seq(
@@ -639,10 +632,10 @@ object DedupStream {
       if (bootstrapFold) (None, 1, 0, 1L)
       else foldPlan(spark, stateDir, next, prevC, prevCFrom, prevF, b,
         maxLiveSegments)
-    chainTimer("  bootstrap.writes")(inParallel(Seq(
+    inParallel(Seq(
       () => writeBuckets(dropB(st.labels), stateDir, "labels", next, b, all),
       () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next, b, all))
-      ++ logTasks ++ foldTask: _*))
+      ++ logTasks ++ foldTask: _*)
     val owners = Vector.fill(b)(next)
     writeManifest(stateDir, next, newC, newCFrom, newF, b, owners, stream)
     promote(stateDir, next)
@@ -750,7 +743,6 @@ object DedupStream {
           maxLiveSegments = maxLiveSegments,
           stream = stream)
       case Some(man) =>
-        def t[A](tag: String)(f: => A): A = chainTimer(s"  commit.$tag")(f)
         val next = prevV + 1
         val b = man.buckets
         val own = man.owners.get
@@ -762,7 +754,7 @@ object DedupStream {
         // rows already in hand (docBucketLocal — zero jobs); otherwise a
         // frontier-sized collect, the same K-bounded driver-side index
         // material as the band probe.
-        val touched = t("touched")((delta.localRemap, delta.localAssign) match {
+        val touched = (delta.localRemap, delta.localAssign) match {
           case (Some(rm), Some(as)) =>
             (rm.flatMap { case (c, m) => Seq(c, m) } ++ as.map(_._2))
               .map(IncrementalDedup.docBucketLocal(_, b)).distinct.sorted
@@ -770,7 +762,7 @@ object DedupStream {
             .union(delta.remap.select(kb(col("merged"))))
             .union(delta.newAssign.select(kb(col("cluster_id"))))
             .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        })
+        }
         val tset = touched.toSet
         val oldLab =
           ownedRelation(spark, stateDir, "labels", own, Some(tset), LabelsDdl)
@@ -790,15 +782,12 @@ object DedupStream {
           oneTaskIfLocal(df).write.mode("overwrite").parquet(s"$stateDir/$path")
         val (foldTask, newC, newCFrom, newF) = foldPlan(spark, stateDir, next,
           man.compactions, man.cFrom, man.segFrom, b, maxLiveSegments)
-        t("writes+fold")(inParallel(Seq(
-          () => t("writes.labels")(
-            writeBuckets(newLab, stateDir, "labels", next, b, touched)),
-          () => t("writes.sizes")(
-            writeBuckets(newSz, stateDir, "sizes", next, b, touched)),
-          () => t("writes.bands")(wr(delta.newBands, s"bands/seg$next")),
-          () => t("writes.shingles")(
-            wr(delta.newShingles, s"shingles/seg$next")),
-          () => foldTask.foreach(f => t("fold")(f()))): _*))
+        inParallel(Seq(
+          () => writeBuckets(newLab, stateDir, "labels", next, b, touched),
+          () => writeBuckets(newSz, stateDir, "sizes", next, b, touched),
+          () => wr(delta.newBands, s"bands/seg$next"),
+          () => wr(delta.newShingles, s"shingles/seg$next"),
+          () => foldTask.foreach(_())): _*)
         val owners = touched.foldLeft(own)((v, k) => v.updated(k, next))
         writeManifest(stateDir, next, newC, newCFrom, newF, b, owners,
           stream)
@@ -909,7 +898,10 @@ object DedupStream {
     *   exactly-once for both: a redelivery after the split commit
     *   recomputes the identical delta from the unchanged dedup state
     *   (the admission is deterministic) and skips only the split
-    *   commit. */
+    *   commit. An empty split store next to committed dedup state (the
+    *   store enabled on a running stream) is first bootstrapped from
+    *   the committed labels, then admits the batch in the same
+    *   micro-batch. */
   def admitNewDrops(spark: SparkSession, docsPath: String, stateDir: String,
       checkpointDir: String,
       schemaDdl: String = "doc_id bigint, text string",
@@ -936,10 +928,9 @@ object DedupStream {
         // would otherwise re-pair with their own stored copies), while
         // a FRESH checkpoint's restarted ids are not mistaken for one.
         val ckptId = graft.Par.ckptIdentity(checkpointDir)
-        val ckptIds = graft.Par.ckptIdentityCandidates(checkpointDir)
         val already = versionOf(stateDir)
           .flatMap(v => manifestOf(stateDir, v))
-          .exists(m => m.streamCkptId.exists(ckptIds.contains) &&
+          .exists(m => m.streamCkptId.contains(ckptId) &&
             m.streamBatchId.exists(_ >= batchId))
         // foreachBatch hands a streaming-backed DataFrame; the admission
         // builds an iterative multi-action plan over it, so pin the
@@ -955,10 +946,10 @@ object DedupStream {
             // pin the flagged set once: the lineage (contaminationSpans,
             // a shingle explode + join) would otherwise recompute for
             // the anti-join AND the quarantine write (r19 advice)
-            val flagged = graft.Checkpoints.pin(chainTimer("deconGate")(
+            val flagged = graft.Checkpoints.pin(
               graft.operators.SubstringDedup
                 .contaminationSpans(rawPinned, probe)
-                .select(col("train_doc").as("doc_id")).distinct()))
+                .select(col("train_doc").as("doc_id")).distinct())
             val clean =
               if (flagged.isEmpty) rawPinned // nothing flagged: no
               // quarantine dir for this batch (clean batches must not
@@ -976,38 +967,42 @@ object DedupStream {
           case _ => rawPinned
         }
         if (!already && !pinned.isEmpty) {
-          def t[A](tag: String)(f: => A): A = chainTimer(tag)(f)
           // the split store's own replay guard (see the param doc):
           // skip its commit when it already recorded this batch
           val splitAlready = splitStoreDir.exists(sd =>
             graft.operators.VersionedIndex.meta(sd)
-              .exists(sm => sm.streamCkptId.exists(ckptIds.contains) &&
+              .exists(sm => sm.streamCkptId.contains(ckptId) &&
                 sm.streamBatchId.exists(_ >= batchId)))
-          t("load+admit+commit")(loadState(spark, stateDir)) match {
+          loadState(spark, stateDir) match {
             case Some(prev) =>
-              val delta = t("admitDelta")(
-                IncrementalDedup.admitBatchDelta(prev, pinned))
-              splitStoreDir.foreach(sd => if (!splitAlready)
-                t("splitPins")(graft.operators.SplitPins.admitDelta(spark,
+              val delta = IncrementalDedup.admitBatchDelta(prev, pinned)
+              splitStoreDir.foreach(sd => if (!splitAlready) {
+                // a split store enabled on existing dedup state starts
+                // from the committed labels. The bootstrap records no
+                // batch id, so a crash before the delta commit below
+                // redelivers into a plain admitDelta
+                if (graft.operators.VersionedIndex.currentVersion(sd).isEmpty)
+                  graft.operators.SplitPins.bootstrapStore(spark, sd,
+                    prev.labels)
+                graft.operators.SplitPins.admitDelta(spark,
                   sd, delta.newAssign, delta.remap,
                   maxLiveSegments = maxLiveSegments,
-                  stream = Some((ckptId, batchId)))))
-              t("commitDelta")(commitDelta(spark, stateDir, prev, delta,
+                  stream = Some((ckptId, batchId)))
+              })
+              commitDelta(spark, stateDir, prev, delta,
                 maxLiveSegments = maxLiveSegments,
-                stream = Some((ckptId, batchId))))
+                stream = Some((ckptId, batchId)))
               // the commit is durable — release the delta's component
               // checkpoint rather than waiting on the ContextCleaner
               delta.release()
             case None =>
-              val st =
-                t("  bootstrap.cluster")(IncrementalDedup.initialState(pinned))
+              val st = IncrementalDedup.initialState(pinned)
               splitStoreDir.foreach(sd => if (!splitAlready)
-                t("splitPins")(graft.operators.SplitPins.bootstrapStore(spark,
-                  sd, st.labels, stream = Some((ckptId, batchId)))))
-              t("bootstrap")(
-                commitState(st, stateDir,
-                  buckets = buckets, maxLiveSegments = maxLiveSegments,
-                  stream = Some((ckptId, batchId))))
+                graft.operators.SplitPins.bootstrapStore(spark,
+                  sd, st.labels, stream = Some((ckptId, batchId))))
+              commitState(st, stateDir,
+                buckets = buckets, maxLiveSegments = maxLiveSegments,
+                stream = Some((ckptId, batchId)))
           }
           // per-batch shingle/band memos are keyed on this batch's plan
           // and never hit again — drop them so a long-running stream

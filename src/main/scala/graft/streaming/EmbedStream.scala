@@ -24,9 +24,6 @@ import graft.operators.EmbeddingIncremental
   * day drops as separate admissions — stream setup is paid once. */
 object EmbedStream {
 
-  private def chainTimer[A](tag: String)(f: => A): A =
-    graft.Par.timed(s"embchain.$tag")(f)
-
   /** Admit every not-yet-seen parquet drop under `vecsPath` into the
     * embedding-dedup state at `stateDir`, blocking until the
     * AvailableNow run drains. Day-directory drops (`drops/day=0/`…)
@@ -77,9 +74,8 @@ object EmbedStream {
         // the SAME checkpoint is skipped; a fresh checkpoint (ids
         // restart at 0) is not mistaken for a replay.
         val ckptId = graft.Par.ckptIdentity(checkpointDir)
-        val ckptIds = graft.Par.ckptIdentityCandidates(checkpointDir)
         val already = graft.operators.VersionedIndex.meta(stateDir).exists(m =>
-          m.streamCkptId.exists(ckptIds.contains) &&
+          m.streamCkptId.contains(ckptId) &&
             m.streamBatchId.exists(_ >= batchId))
         // foreachBatch hands a streaming-backed DataFrame; the
         // admission builds an iterative multi-action plan over it, so
@@ -93,11 +89,11 @@ object EmbedStream {
           case Some(probe) if !already && !rawPinned.isEmpty =>
             val p = probe.select(col("vec_id").as("probe_id"),
               col("embedding").as("pvec"))
-            val flagged = graft.Checkpoints.pin(chainTimer("deconGate")(
+            val flagged = graft.Checkpoints.pin(
               rawPinned.crossJoin(broadcast(p))
                 .filter(graft.functions.VectorFns.cosineSim(
                   col("embedding"), col("pvec")) >= deconTheta)
-                .select(col("vec_id")).distinct()))
+                .select(col("vec_id")).distinct())
             val clean =
               if (flagged.isEmpty) rawPinned
               else {
@@ -116,15 +112,15 @@ object EmbedStream {
           if (graft.operators.VersionedIndex.currentVersion(stateDir).isEmpty)
             // bootstrapDrop ≡ saveState(initialState(...)) with the
             // bucket-log write overlapping the cluster fixpoint
-            chainTimer("bootstrap")(EmbeddingIncremental.bootstrapDrop(
+            EmbeddingIncremental.bootstrapDrop(
               spark, stateDir, pinned, threshold,
               streamBatchId = Some(batchId),
-              streamCkptId = Some(ckptId)))
+              streamCkptId = Some(ckptId))
           else
-            chainTimer("admitDrop")(EmbeddingIncremental.admitDrop(
+            EmbeddingIncremental.admitDrop(
               spark, stateDir, pinned, threshold, maxLiveSegments,
               streamBatchId = Some(batchId),
-              streamCkptId = Some(ckptId)))
+              streamCkptId = Some(ckptId))
         }
         graft.Checkpoints.free(pinned)
         if (!(pinned eq rawPinned)) graft.Checkpoints.free(rawPinned)
@@ -165,18 +161,17 @@ object EmbedStream {
     val vecs = graft.engine.Tables.embeddings(s, d)
       .filter(col("vec_id") < ChainSubsetMax)
     val root = java.nio.file.Files.createTempDirectory("graft-q63").toString
-    chainTimer("stage")(vecs.withColumn("day", pmod(col("vec_id"), lit(2)))
+    vecs.withColumn("day", pmod(col("vec_id"), lit(2)))
       .repartition(2, col("day"))
-      .write.partitionBy("day").parquet(s"$root/vecs"))
-    chainTimer("stream")(
-      admitNewDrops(s, s"$root/vecs/day=*", s"$root/state", s"$root/ckpt",
-        maxLiveSegments = 1, maxFilesPerBatch = Some(1)))
+      .write.partitionBy("day").parquet(s"$root/vecs")
+    admitNewDrops(s, s"$root/vecs/day=*", s"$root/state", s"$root/ckpt",
+      maxLiveSegments = 1, maxFilesPerBatch = Some(1))
     // pin rows before the state dir is deleted (the caller writes the
     // result AFTER this returns; a lazy scan would read deleted files)
-    val out = chainTimer("read")(graft.Checkpoints.pin(
+    val out = graft.Checkpoints.pin(
       EmbeddingIncremental.labelsWithSizes(
         EmbeddingIncremental.loadState(s, s"$root/state").get)
-      .orderBy("vec_id")))
+      .orderBy("vec_id"))
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))
     catch { case _: Exception => }

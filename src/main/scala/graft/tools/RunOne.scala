@@ -26,10 +26,22 @@ object RunOne {
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     // job counter: the chain queries' wall floor is sequential small
     // jobs, so the count is the first thing to read off a profile
-    val meter = new graft.Par.Meter(spark.sparkContext)
+    val jobCount = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobCount.incrementAndGet()
+      })
+    // drain the listener bus first, so the last action's jobs are counted
+    def jobs: Long = {
+      org.apache.spark.sql.graftbridge.Bridge
+        .drainListenerBus(spark.sparkContext, 10000)
+      jobCount.get
+    }
     (1 to iters).foreach { i =>
       graft.operators.Dedup.clearShingleCaches() // bench-identical cache state
-      val j0 = meter.jobs
+      val j0 = jobs
       val c0 = osBean.getProcessCpuTime
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
@@ -39,7 +51,7 @@ object RunOne {
       df.write.format("noop").mode("overwrite").save()
       val t3 = System.nanoTime()
       val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-      val nJobs = meter.jobs - j0
+      val nJobs = jobs - j0
       println(f"[runone] $name iter $i: build=${(t1 - t0) / 1e9}%.2f " +
         f"plan=${(t2 - t1) / 1e9}%.2f exec=${(t3 - t2) / 1e9}%.2f s " +
         f"cpu=$cpu%.2f s jobs=$nJobs")

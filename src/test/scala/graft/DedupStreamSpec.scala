@@ -61,6 +61,36 @@ class DedupStreamSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
+  test("splitStoreDir enabled on existing dedup state bootstraps from its labels") {
+    val root = Files.createTempDirectory("dedup_stream_late_splits").toString
+    val (docs, state, ckpt, sp) =
+      (s"$root/docs", s"$root/state", s"$root/ckpt", s"$root/splits")
+    // two drops admitted without a split store
+    day1.write.parquet(s"$docs/day1")
+    DedupStream.admitNewDrops(spark, s"$docs/*", state, ckpt)
+    day2.write.parquet(s"$docs/day2")
+    DedupStream.admitNewDrops(spark, s"$docs/*", state, ckpt)
+    // the third enables it: doc 50 joins the bridged cluster 1, doc 60
+    // is a fresh singleton
+    Seq((50L, w(0 until 8)),
+      (60L, "one more singleton with nothing in common at all"))
+      .toDF("doc_id", "text").write.parquet(s"$docs/day3")
+    DedupStream.admitNewDrops(spark, s"$docs/*", state, ckpt,
+      splitStoreDir = Some(sp))
+    val rows = graft.operators.SplitPins.loadSplits(spark, sp).collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toSeq
+    val ids = Seq(1L, 10L, 11L, 20L, 21L, 30L, 40L, 50L, 60L)
+    assert(rows.map(_._1).sorted == ids,
+      s"every admitted doc needs exactly one split row: $rows")
+    val split = rows.toMap
+    // the committed labels seed the store at seq 0; the batch lands at
+    // seq 1 and the new member inherits its cluster's pin
+    assert(ids.filterNot(Set(50L, 60L)).forall(split(_)._2 == 0L))
+    assert(split(50L) == ((split(1L)._1, 1L)) && split(60L)._2 == 1L)
+    assert(Seq(10L, 11L, 20L, 21L).forall(i => split(i)._1 == split(1L)._1))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+  }
+
   test("daily drops stream into versioned state; equals batch recompute") {
     val root = Files.createTempDirectory("dedup_stream").toString
     val (docs, state, ckpt) = (s"$root/docs", s"$root/state", s"$root/ckpt")

@@ -149,32 +149,6 @@ class EmbeddingIncrementalSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("legacy streamCkptHash manifests keep their replay guard after the rename") {
-    // a store committed by a previous build recorded a 32-bit hash; the
-    // parser surfaces it in the tagged form ckptIdentityCandidates also
-    // produces, so the (weaker) guard survives the upgrade instead of
-    // silently admitting a redelivered batch twice
-    val dir = java.nio.file.Files.createTempDirectory("legacyguard")
-    java.nio.file.Files.createDirectories(dir.resolve("v0"))
-    java.nio.file.Files.writeString(dir.resolve("v0/MANIFEST"),
-      """{"trainedRows":1,"totalRows":1,"streamBatchId":7,""" +
-        """"streamCkptHash":-12345,"segs":[0]}""")
-    java.nio.file.Files.writeString(dir.resolve("CURRENT"), "0")
-    val m = graft.operators.VersionedIndex.metaOrThrow(dir.toString)
-    assert(m.streamCkptId.contains("murmur:-12345"))
-    assert(m.streamBatchId.contains(7L))
-    // and a checkpoint whose query id murmurs to that value matches via
-    // the candidate list (the guard's comparison shape)
-    val ck = java.nio.file.Files.createTempDirectory("legacyck")
-    java.nio.file.Files.writeString(ck.resolve("metadata"),
-      """{"id":"some-query-uuid"}""")
-    val cands = graft.Par.ckptIdentityCandidates(ck.toString)
-    assert(cands.head == "some-query-uuid" &&
-      cands(1).startsWith("murmur:"), s"unexpected candidates: $cands")
-    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-    org.apache.commons.io.FileUtils.deleteDirectory(ck.toFile)
-  }
-
   test("log folds past maxLiveSegments and the folded chain equals one-shot") {
     val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val batchTruth = rows(Dedup.embeddingDupClusters(emb))

@@ -359,6 +359,16 @@ class MultimodalSpec extends AnyFunSuite {
     assert(flacSamples(b.take(b.length - 50)).isLeft)
   }
 
+  test("q96 flacPcmStats: an empty document yields the sentinel row, not an executor crash") {
+    import spark.implicits._
+    val docs = Seq((3L, ""), (4L, "ab")).toDF("doc_id", "text")
+    val got = Multimodal.flacPcmStats(docs).as[Multimodal.PcmStats]
+      .collect().sortBy(_.media_id).toSeq
+    assert(got.head == Multimodal.PcmStats(3L, -1L, -1L, -1L, -1L, 0.0, 0L, 0.0))
+    assert(got(1).sample_rate == 44100L && got(1).n_samples == 384L)
+    intercept[IllegalArgumentException](MediaCodec.flacWithFrames(3L, Array.empty))
+  }
+
   test("compressedMediaTable rows parse back to the doc_id arithmetic") {
     val rows = Multimodal.compressedMediaTable(
       graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")).collect()
