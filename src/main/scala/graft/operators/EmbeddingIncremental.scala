@@ -44,9 +44,6 @@ final case class EmbedDedupState(labels: DataFrame, sizes: DataFrame,
 
 object EmbeddingIncremental {
 
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    graft.Par.inParallel(tasks: _*)
-
   /** (grp, vec_id, embedding) — one row per vector per LSH table, the
     * probe-able bucket relation ([[Dedup.embeddingNearDupsLsh]]'s grid,
     * same plane family so candidates match the batch route exactly). */
@@ -336,8 +333,7 @@ object EmbeddingIncremental {
     * empty. Local segment writes coalesce to one file; a deployment
     * sizes segment files by target block size instead. */
   def saveState(state: EmbedDedupState, dir: String,
-      streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
+      stream: Option[(String, Long)] = None,
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit = {
     // fresh-store bootstrap only: a resave would append the FULL bucket
     // relation as a duplicate segment next to the ones it already holds
@@ -347,7 +343,7 @@ object EmbeddingIncremental {
     // footer-only count taken inside the labels write task — not a
     // separate sequential job after the parallel group
     @volatile var rows = -1L
-    inParallel(
+    graft.Par.inParallel(
       () => writeBucketSeg(state.buckets, s"$dir/buckets/seg=0"),
       () => {
         state.labels.coalesce(1).write.mode("overwrite")
@@ -356,10 +352,8 @@ object EmbeddingIncremental {
       },
       () => emptyRemap(spark).write.mode("overwrite")
         .parquet(s"$dir/v0/remap"))
-    VersionedIndex.commit(dir, 0, trainedRows = rows, totalRows = rows,
-      segs = Vector(0L), logs = Seq("buckets", "labels"),
-      streamBatchId = streamBatchId, streamCkptId = streamCkptId,
-      retainVersions = retainVersions)
+    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
+      Seq("buckets", "labels"), stream, retainVersions)
   }
 
   /** Bootstrap a FRESH persisted store straight from the corpus — the
@@ -372,8 +366,7 @@ object EmbeddingIncremental {
     * shape applied to day 0). */
   def bootstrapDrop(spark: SparkSession, dir: String, emb: DataFrame,
       threshold: Double = 0.45,
-      streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
+      stream: Option[(String, Long)] = None,
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit = {
     require(VersionedIndex.currentVersion(dir).isEmpty,
       s"$dir already holds a committed state — grow it with admitDrop")
@@ -387,7 +380,7 @@ object EmbeddingIncremental {
       // label pin) runs while the bucket segment writes; labels-only —
       // the store derives sizes at load, so the size join never runs
       val lab = Dedup.embeddingDupLabels(emb, threshold)
-      inParallel(
+      graft.Par.inParallel(
         () => {
           lab.select(col("vec_id"), col("cluster_id"))
             .coalesce(1).write.mode("overwrite")
@@ -398,10 +391,8 @@ object EmbeddingIncremental {
           .parquet(s"$dir/v0/remap"))
     }
     joinBuckets()
-    VersionedIndex.commit(dir, 0, trainedRows = rows, totalRows = rows,
-      segs = Vector(0L), logs = Seq("buckets", "labels"),
-      streamBatchId = streamBatchId, streamCkptId = streamCkptId,
-      retainVersions = retainVersions)
+    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
+      Seq("buckets", "labels"), stream, retainVersions)
   }
 
   private def emptyRemap(spark: SparkSession): DataFrame =
@@ -410,12 +401,6 @@ object EmbeddingIncremental {
 
   def loadState(spark: SparkSession, dir: String): Option[EmbedDedupState] =
     VersionedIndex.meta(dir).map(m => stateAt(spark, dir, m))
-
-  /** The admission paths' shared read-or-throw of the committed
-    * manifest, with the path-specific remedy in the message. */
-  private def metaOrSaveStateFirst(dir: String): VersionedIndex.Meta =
-    VersionedIndex.meta(dir).getOrElse(throw new IllegalStateException(
-      s"$dir holds no committed embedding-dedup state — saveState first"))
 
   /** Time-travel read of a RETAINED version — retention keeps the
     * latest `retainVersions` commits' manifests, remaps, and log
@@ -459,35 +444,21 @@ object EmbeddingIncremental {
     * note. */
   def admitDrop(spark: SparkSession, dir: String, newVecs: DataFrame,
       threshold: Double = 0.45, maxLiveSegments: Int = 16,
-      streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
-      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit = {
-    // static plans on APPEND days only: the append admission's relations
-    // are batch/frontier-sized by construction (graft.Par.withStaticPlan)
-    // — but a FOLD day rewrites the full accumulated logs, which is
-    // corpus-sized work that keeps AQE (skew/coalesce mitigation),
-    // exactly like the bootstrap paths. The arm is known from the
-    // manifest before any Spark work, so the scope is decided up front
-    // (session conf is shared across this admission's threads — the
-    // backgrounded segment write must run under the same regime).
-    val willFold = metaOrSaveStateFirst(dir).segs.size + 1 > maxLiveSegments
-    if (willFold)
-      admitDropImpl(spark, dir, newVecs, threshold, maxLiveSegments,
-        streamBatchId, streamCkptId, retainVersions)
-    else graft.Par.withAdmitPlan(spark, newVecs) {
-      admitDropImpl(spark, dir, newVecs, threshold, maxLiveSegments,
-        streamBatchId, streamCkptId, retainVersions)
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
+    VersionedIndex.appendOrFold(spark, dir,
+      s"$dir holds no committed embedding-dedup state — saveState first",
+      maxLiveSegments, Seq("buckets", "labels"), sizeBy = Seq(newVecs),
+      stream, retainVersions) { (m, next, fold) =>
+      admitSegs(spark, dir, m, newVecs, threshold, next, fold)
     }
-  }
 
-  private def admitDropImpl(spark: SparkSession, dir: String,
-      newVecs: DataFrame, threshold: Double, maxLiveSegments: Int,
-      streamBatchId: Option[Long], streamCkptId: Option[String],
-      retainVersions: Int): Unit = {
-    val m = metaOrSaveStateFirst(dir)
+  /** Writes this admission's bucket and label segments and remap (or
+    * the folded logs) and returns the committed label-log size. */
+  private def admitSegs(spark: SparkSession, dir: String,
+      m: VersionedIndex.Meta, newVecs: DataFrame, threshold: Double,
+      next: Long, fold: Boolean): Long = {
     val st0 = stateAt(spark, dir, m)
-    val next = m.version + 1
-    val fold = m.segs.size + 1 > maxLiveSegments
     // The bucket-log segment depends ONLY on the batch (append) or
     // batch ∪ stored log (fold) — inputs ready before the admission
     // core — so its write runs CONCURRENTLY with the probe/verify/
@@ -520,11 +491,11 @@ object EmbeddingIncremental {
     // listing), and propagating past an in-flight writer would leave a
     // zombie racing the retry's overwrite (the join handle is memoized —
     // a second invocation inside inParallel is a no-op)
-    val segs = graft.Par.joinOnFailure(joinBuckets) {
+    graft.Par.joinOnFailure(joinBuckets) {
       if (fold) {
         // fold both logs: the grown relations become one segment each,
         // C folds into the rewritten label base and resets to empty
-        inParallel(
+        graft.Par.inParallel(
           () => joinBuckets(),
           () => {
             applyCore(st0, f.newAssign, f.remap, nbr)
@@ -534,7 +505,6 @@ object EmbeddingIncremental {
           },
           () => emptyRemap(spark).write.mode("overwrite")
             .parquet(s"$dir/v$next/remap"))
-        Vector(next)
       } else {
         // true merges only: drop identity rows and rows keyed by the
         // batch's own ids (new ids never appear as a stored label VALUE
@@ -555,7 +525,7 @@ object EmbeddingIncremental {
           .select(prevC("cluster_id"),
             coalesce(col("rv"), prevC("merged")).as("merged"))
           .unionByName(merges)
-        inParallel(
+        graft.Par.inParallel(
           () => joinBuckets(),
           () => {
             f.newAssign.coalesce(1).write.mode("overwrite")
@@ -564,16 +534,12 @@ object EmbeddingIncremental {
           },
           () => composed.coalesce(1).write.mode("overwrite")
             .parquet(s"$dir/v$next/remap"))
-        m.segs :+ next
       }
     }
     require(segRows >= 0, "label segment count must have run in its write task")
-    val total = if (fold) segRows else m.totalRows + segRows
-    VersionedIndex.commit(dir, next, trainedRows = total,
-      totalRows = total, segs = segs, logs = Seq("buckets", "labels"),
-      streamBatchId = streamBatchId, streamCkptId = streamCkptId,
-      retainVersions = retainVersions)
+    // every consumer of the admission's pins is written
     f.release()
+    if (fold) segRows else m.totalRows + segRows
   }
 
   // ---- SparkEntry wiring -------------------------------------------------

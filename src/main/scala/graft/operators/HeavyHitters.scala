@@ -327,33 +327,27 @@ object HeavyHitters {
       s"$dir already holds a committed sketch — grow it with admitDrop")
     val n = writeCellSegCollected(spark,
       cellRel(widened(docs), CmsDepth, CmsWidth), s"$dir/cells/seg=0")
-    VersionedIndex.commit(dir, 0, trainedRows = n, totalRows = n,
-      segs = Vector(0L), logs = Seq("cells"))
+    VersionedIndex.commit(dir, 0, VersionedIndex.rows(n, n), Vector(0L),
+      logs = Seq("cells"))
   }
 
+  /** Appends the batch's cells, or folds the summed grid into one
+    * segment. Appends keep AQE: the one shuffle is collected
+    * grid-bounded material. */
   def admitDrop(spark: SparkSession, dir: String, newDocs: DataFrame,
-      maxLiveSegments: Int = 16): Unit = {
-    val m = VersionedIndex.meta(dir).getOrElse(throw new IllegalStateException(
-      s"$dir holds no committed sketch — bootstrapSketch first"))
-    val next = m.version + 1
-    val fold = m.segs.size + 1 > maxLiveSegments
-    val batchCells = cellRel(widened(newDocs), CmsDepth, CmsWidth)
-    if (fold) {
-      val logCells = VersionedIndex.readLog(spark, dir, "cells", m.segs,
-        CellsDdl)
-      val n = writeCellSegCollected(spark,
-        logCells.unionByName(batchCells)
+      maxLiveSegments: Int = 16): Unit =
+    VersionedIndex.appendOrFold(spark, dir,
+      s"$dir holds no committed sketch — bootstrapSketch first",
+      maxLiveSegments, Seq("cells"), sizeBy = Nil) { (m, next, fold) =>
+      val batchCells = cellRel(widened(newDocs), CmsDepth, CmsWidth)
+      if (fold) writeCellSegCollected(spark,
+        VersionedIndex.readLog(spark, dir, "cells", m.segs, CellsDdl)
+          .unionByName(batchCells)
           .groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c")),
         s"$dir/cells/seg=$next")
-      VersionedIndex.commit(dir, next, trainedRows = n, totalRows = n,
-        segs = Vector(next), logs = Seq("cells"))
-    } else {
-      val n = m.totalRows + writeCellSegCollected(spark, batchCells,
+      else m.totalRows + writeCellSegCollected(spark, batchCells,
         s"$dir/cells/seg=$next")
-      VersionedIndex.commit(dir, next, trainedRows = n, totalRows = n,
-        segs = m.segs :+ next, logs = Seq("cells"))
     }
-  }
 
   /** The committed grid: cell-wise sum over the live segments —
     * ≤ segments·depth·width rows aggregated to one grid, no document

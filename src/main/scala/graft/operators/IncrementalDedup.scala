@@ -62,7 +62,7 @@ final case class AdmitDelta(newAssign: DataFrame, remap: DataFrame,
                             newBands: DataFrame, newShingles: DataFrame,
                             localRemap: Option[Seq[(Long, Long)]] = None,
                             localAssign: Option[Seq[(Long, Long)]] = None) {
-  def release(): Unit = IncrementalDedup.freeLocalCheckpoint(remap)
+  def release(): Unit = graft.Checkpoints.free(remap)
 }
 
 /** Incremental duplicate clustering: admit a new day's batch against
@@ -174,14 +174,6 @@ object IncrementalDedup {
       endpoints: DataFrame): DataFrame =
     labels.join(broadcast(endpoints), Seq("doc_id"))
       .select(col("doc_id"), col("cluster_id"))
-
-  /** Release the storage behind a [[graft.Checkpoints.pin]]ned
-    * DataFrame — block-manager blocks for Local pins, checkpoint files
-    * for Reliable ones. Without this a long-running admission stream
-    * accumulates per-batch candidate pins until the ContextCleaner
-    * happens to GC the RDDs (or forever, for reliable files). */
-  private[graft] def freeLocalCheckpoint(df: DataFrame): Unit =
-    graft.Checkpoints.free(df)
 
   /** Cap on the probe-key literals pushed as a data filter into the
     * base scan. Under the cap, the batch's exact key set rides the scan
@@ -485,8 +477,8 @@ object IncrementalDedup {
     // cap): three consumers follow — the endpoint set and both sides of
     // the contraction — and each would re-run the verify join otherwise
     val (newEdges, edgeRows) = pinFrontierRows(newEdgesLazy, spark)
-    if (endpointIds.isDefined) freeLocalCheckpoint(setsForVerify)
-    freeLocalCheckpoint(cand)
+    if (endpointIds.isDefined) graft.Checkpoints.free(setsForVerify)
+    graft.Checkpoints.free(cand)
 
     edgeRows match {
       case Some(er) if er.isEmpty =>
@@ -579,7 +571,7 @@ object IncrementalDedup {
         // pin here would orphan the inner one
         val comp = Components.connectedComponents(contractedPinned)
         // comp is eager — release every upstream pin (no-ops when local)
-        Seq(contractedPinned, reps, newEdges).foreach(freeLocalCheckpoint)
+        Seq(contractedPinned, reps, newEdges).foreach(graft.Checkpoints.free)
 
         val newIds = newDocs.select(col("doc_id"))
         val newAssign = newIds

@@ -301,8 +301,8 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, indexDir: String,
       numCentroids: Int = NumCentroids, maxIter: Int = 20,
       fitFraction: Option[Double] = None): Unit = {
-    val (cent, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
     val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
+    val (cent, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
     cent.write.mode("overwrite").parquet(s"$indexDir/v$next/centroids")
     assigned.select(col("vec_id"), col("cid").cast("int").as("cid"))
       .write.mode("overwrite").partitionBy("cid")
@@ -312,8 +312,8 @@ object Similarity {
     // APPEND path never needs a corpus-sized job to learn them
     val rows = emb.sparkSession.read
       .parquet(s"$indexDir/assignments/seg=$next").count()
-    VersionedIndex.commit(indexDir, next, trainedRows = rows,
-      totalRows = rows, segs = Vector(next), logs = Seq("assignments"))
+    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
+      segs = Vector(next), logs = Seq("assignments"))
     // cent is a driver-local relation (the fit's clusterCenters) —
     // warming the cache here is job-free and makes the next append/query
     // skip even the K-row read
@@ -418,8 +418,9 @@ object Similarity {
       models.foreach { case (name, _) =>
         VersionedIndex.copyModelDir(indexDir, m.version, next, name)
       }
-      VersionedIndex.commit(indexDir, next, trainedRows = m.trainedRows,
-        totalRows = total, segs = m.segs :+ next, logs = Seq(log))
+      VersionedIndex.commit(indexDir, next,
+        VersionedIndex.rows(m.trainedRows, total), segs = m.segs :+ next,
+        logs = Seq(log))
       models.foreach { case (name, model) =>
         VersionedIndex.putModel(indexDir, next, name, model)
       }
@@ -743,8 +744,8 @@ object Similarity {
   def buildPqIndex(emb: DataFrame, indexDir: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cb = pqCodebook(emb)
     val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
+    val cb = pqCodebook(emb)
     cb.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "cemb")
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$indexDir/v$next/codebook")
@@ -753,8 +754,8 @@ object Similarity {
     // footer-metadata count over the just-written segment: the
     // manifest-carried drift baseline + log size
     val rows = spark.read.parquet(s"$indexDir/codes/seg=$next").count()
-    VersionedIndex.commit(indexDir, next, trainedRows = rows,
-      totalRows = rows, segs = Vector(next), logs = Seq("codes"))
+    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
+      segs = Vector(next), logs = Seq("codes"))
     VersionedIndex.putModel(indexDir, next, "codebook", cb.toIndexedSeq)
   }
 
@@ -811,9 +812,11 @@ object Similarity {
     * the files so a probe reads nprobe cell directories per segment,
     * [[VersionedIndex]] protocol throughout (atomic commits, manifest
     * counts, O(batch) zero-corpus-job appends, drift re-train). */
-  def buildIvfPqIndex(emb: DataFrame, indexDir: String): Unit =
+  def buildIvfPqIndex(emb: DataFrame, indexDir: String): Unit = {
+    VersionedIndex.requireLocalFs(indexDir) // before the model reads
     buildIvfPqIndexWith(emb, indexDir,
       collectCentroids(emb, 0, NumCentroids), pqCodebook(emb))
+  }
 
   /** The LEARNED-model variant of [[buildIvfPqIndex]] — the production
     * shape proper: k-means coarse centroids (same fit as
@@ -855,8 +858,8 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cid")
       .parquet(s"$indexDir/cells/seg=$next")
     val rows = spark.read.parquet(s"$indexDir/cells/seg=$next").count()
-    VersionedIndex.commit(indexDir, next, trainedRows = rows,
-      totalRows = rows, segs = Vector(next), logs = Seq("cells"))
+    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
+      segs = Vector(next), logs = Seq("cells"))
     VersionedIndex.putModel(indexDir, next, "centroids",
       centroids.toIndexedSeq)
     VersionedIndex.putModel(indexDir, next, "codebook", cb.toIndexedSeq)

@@ -128,9 +128,8 @@ object SplitPins {
           s"$dir/splits/seg=0")
         n = spark.read.parquet(s"$dir/splits/seg=0").count()
       })
-    VersionedIndex.commit(dir, 0, trainedRows = n, totalRows = n,
-      segs = Vector(0L), logs = Seq("pins", "splits"),
-      streamCkptId = stream.map(_._1), streamBatchId = stream.map(_._2))
+    VersionedIndex.commit(dir, 0, VersionedIndex.rows(n, n), Vector(0L),
+      logs = Seq("pins", "splits"), stream = stream)
   }
 
   /** Admit one clustering delta ([[IncrementalDedup.admitBatchDelta]]'s
@@ -141,22 +140,21 @@ object SplitPins {
     * committed version number. */
   def admitDelta(spark: SparkSession, dir: String, newAssign: DataFrame,
       remap: DataFrame, maxLiveSegments: Int = 16,
-      stream: Option[(String, Long)] = None): Unit = {
-    val m = VersionedIndex.meta(dir).getOrElse(throw new IllegalStateException(
-      s"$dir holds no committed split store — bootstrapStore first"))
-    val next = m.version + 1
-    val fold = m.segs.size + 1 > maxLiveSegments
-    val run = () => admitDeltaImpl(spark, dir, m, newAssign, remap, next,
-      fold, stream)
+      stream: Option[(String, Long)] = None): Unit =
     // append admissions are frontier-sized — static plans sized to the
-    // delta (the admitBatchDelta measurement; graft.Par.withAdmitPlan);
-    // a fold rewrites the logs, keep AQE
-    if (fold) run() else graft.Par.withAdmitPlan(spark, newAssign)(run())
-  }
+    // delta (the admitBatchDelta measurement); a fold rewrites the logs
+    VersionedIndex.appendOrFold(spark, dir,
+      s"$dir holds no committed split store — bootstrapStore first",
+      maxLiveSegments, Seq("pins", "splits"), sizeBy = Seq(newAssign),
+      stream = stream) { (m, next, fold) =>
+      admitSegs(spark, dir, m, newAssign, remap, next, fold)
+    }
 
-  private def admitDeltaImpl(spark: SparkSession, dir: String,
+  /** Writes this admission's pins and splits segments (or the folded
+    * logs) and returns the committed splits-log size. */
+  private def admitSegs(spark: SparkSession, dir: String,
       m: VersionedIndex.Meta, newAssign: DataFrame, remap: DataFrame,
-      next: Long, fold: Boolean, stream: Option[(String, Long)]): Unit = {
+      next: Long, fold: Boolean): Long = {
     val pinsLog = VersionedIndex.readLog(spark, dir, "pins", m.segs, PinDdl)
     // merged clusters: re-key the surviving pins to the merged label.
     // remap is frontier-sized — broadcast; identity rows change nothing
@@ -224,20 +222,12 @@ object SplitPins {
               SplitDdl).unionByName(splitSeg),
             s"$dir/splits/seg=$next"),
           countTask)
-        val n = m.totalRows + batchRows.get()
-        VersionedIndex.commit(dir, next, trainedRows = n, totalRows = n,
-          segs = Vector(next), logs = Seq("pins", "splits"),
-          streamCkptId = stream.map(_._1), streamBatchId = stream.map(_._2))
-      } else {
+      } else
         graft.Par.inParallel(
           () => writeSeg(pinSeg, s"$dir/pins/seg=$next"),
           () => writeSeg(splitSeg, s"$dir/splits/seg=$next"),
           countTask)
-        val n = m.totalRows + batchRows.get()
-        VersionedIndex.commit(dir, next, trainedRows = n, totalRows = n,
-          segs = m.segs :+ next, logs = Seq("pins", "splits"),
-          streamCkptId = stream.map(_._1), streamBatchId = stream.map(_._2))
-      }
+      m.totalRows + batchRows.get()
     } finally graft.Checkpoints.free(pinned)
   }
 

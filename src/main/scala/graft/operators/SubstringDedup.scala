@@ -410,8 +410,8 @@ object SubstringDedup {
         .write.mode("overwrite").parquet(s"$dir/spans/seg=0")
     }
     joinWins()
-    VersionedIndex.commit(dir, 0, trainedRows = rows, totalRows = rows,
-      segs = Vector(0L), logs = Seq("windows", "spans"))
+    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
+      logs = Seq("windows", "spans"))
   }
 
   def loadStore(spark: SparkSession, dir: String): Option[SubstringState] =
@@ -432,27 +432,21 @@ object SubstringDedup {
     * admissions, amortized O(corpus/K)); the probe reads only touched
     * `whb` partitions (+ wh row groups) of the committed window log. */
   def admitDrop(spark: SparkSession, dir: String, newDocs: DataFrame,
-      k: Int = DedupK, maxLiveSegments: Int = 16): Unit = {
-    val m = VersionedIndex.meta(dir).getOrElse(throw new IllegalStateException(
-      s"$dir holds no committed substring-dedup state — bootstrapStore first"))
-    val fold = m.segs.size + 1 > maxLiveSegments
-    // append admissions are batch/frontier-sized — static plans sized
-    // to the batch (the admitBatchDelta measurement;
-    // graft.Par.withAdmitPlan); a fold rewrites the full logs and
-    // keeps AQE
-    if (fold) admitDropImpl(spark, dir, m, newDocs, k, fold)
-    else graft.Par.withAdmitPlan(spark, newDocs) {
-      admitDropImpl(spark, dir, m, newDocs, k, fold)
+      k: Int = DedupK, maxLiveSegments: Int = 16): Unit =
+    VersionedIndex.appendOrFold(spark, dir,
+      s"$dir holds no committed substring-dedup state — bootstrapStore first",
+      maxLiveSegments, Seq("windows", "spans"), sizeBy = Seq(newDocs)) {
+      (m, next, fold) => admitSegs(spark, dir, m, newDocs, k, next, fold)
     }
-  }
 
-  private def admitDropImpl(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta, newDocs: DataFrame, k: Int,
-      fold: Boolean): Unit = {
+  /** Writes this admission's window and span segments (or the folded
+    * logs) and returns the committed window-log size. */
+  private def admitSegs(spark: SparkSession, dir: String,
+      m: VersionedIndex.Meta, newDocs: DataFrame, k: Int, next: Long,
+      fold: Boolean): Long = {
     val st = stateAt(spark, dir, m)
-    val next = m.version + 1
     // the batch's window relation feeds the seg write, the bucket probe,
-    // AND the match join — pin once (batch-sized), free after commit
+    // AND the match join — pin once (batch-sized), free once written
     val nw = graft.Checkpoints.pin(windowRel(newDocs, k))
     try {
       val joinWins = graft.Par.background { () =>
@@ -476,10 +470,7 @@ object SubstringDedup {
       // parquet re-read of the whole folded segment
       val nwRows = nw.count()
       joinWins()
-      val total = m.totalRows + nwRows
-      VersionedIndex.commit(dir, next, trainedRows = total,
-        totalRows = total, segs = if (fold) Vector(next) else m.segs :+ next,
-        logs = Seq("windows", "spans"))
+      m.totalRows + nwRows
     } finally graft.Checkpoints.free(nw)
   }
 

@@ -2,21 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Atomic versioned-commit protocol shared by the persisted ANN index
-  * stores ([[Similarity.buildIvfIndex]]'s centroids + assignments and
-  * the PQ codebook + codes store) — the same manifest-plus-pointer
-  * shape as the dedup state store ([[graft.streaming.DedupStream]]),
-  * specialized to an APPEND-ONLY data log:
+/** The atomic versioned-commit protocol of every persisted store: the
+  * ANN index stores ([[Similarity.buildIvfIndex]]'s centroids +
+  * assignments, the PQ and IVF-PQ stores), the four log stores
+  * ([[SplitPins]], [[HeavyHitters]], [[SubstringDedup]],
+  * [[EmbeddingIncremental]]) and the dedup state store
+  * ([[graft.streaming.DedupStream]]). This object is the only code that
+  * reads or writes `CURRENT` and `v$N/MANIFEST`:
   *
   * {{{
   * indexDir/
   *   CURRENT              # last committed version number (atomic move)
-  *   v$N/MANIFEST         # {"trainedRows":…,"totalRows":…,"segs":[…]}
-  *   v$N/<model dirs>     # K-row model relations (centroids/codebook)
+  *   v$N/MANIFEST         # {<store members>,"buildId":…,"retain":…,"segs":[…]}
+  *   v$N/<model dirs>     # per-version relations (centroids, codebook, remap)
   *   <log>/seg=$M/…       # one data segment per committing version
   * }}}
   *
-  * The data log (`assignments` for IVF, `codes` for PQ) is a single
+  * The manifest splits into the protocol's members — `buildId`, the
+  * streaming replay guard, `retain` and `segs`, the live segments — and
+  * each store's own members, which [[commit]] writes as given and
+  * [[Meta]] parses strictly when the store reads them: `trainedRows` /
+  * `totalRows` for the index and log stores ([[rows]]), the bucketed
+  * layout (`compactions`, `cFrom`, `segFrom`, `buckets`, `owners`,
+  * `migratedFrom`) for the dedup store.
+  *
+  * A data log (`assignments` for IVF, `codes` for PQ, …) is a single
   * partitioned tree whose FIRST partition level is the writing version
   * (`seg=$N`) — every path segment below the log root is `key=value`,
   * so the committed segments read as ONE multi-path scan with uniform
@@ -25,31 +35,75 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * base path and the files). Readers list exactly the manifest's `segs`
   * — a crashed commit's half-written segment sits outside every
   * committed manifest and is invisible; the retried commit overwrites
-  * it (same version number, `mode("overwrite")`). This closes the r12
-  * advice finding: appends used to `mode("append")` into the LIVE
-  * version's directory, publishing partial batches to every reader.
+  * it (same version number, `mode("overwrite")`). The dedup store keeps
+  * its own segment, compaction and bucket-owner retention and names no
+  * `logs` here; its `segs` list its live segments `segFrom..N`.
   *
-  * `trainedRows` is the drift baseline (rows the model was last fit
-  * on), `totalRows` the committed log size — carried in the manifest so
-  * the append path never runs a corpus-sized (even footer-only) count
-  * job. Retention after each promote keeps the current + previous
-  * versions' dirs and segments (in-flight readers of the prior commit
-  * stay valid) and deletes the rest. */
+  * For the row-counting stores `trainedRows` is the drift baseline (rows
+  * the model was last fit on) and `totalRows` the committed log size —
+  * carried in the manifest so the append path never runs a corpus-sized
+  * (even footer-only) count job. Retention after each promote keeps the
+  * latest `retain` versions' dirs and segments (in-flight readers of the
+  * prior commit stay valid) and deletes the rest.
+  *
+  * Every path here goes through `java.io.File`, so a store dir must be
+  * a driver-local path; [[requireLocalFs]] rejects a URI at every entry
+  * point before anything is written. */
 private[graft] object VersionedIndex {
 
-  /** The committed state a reader resolves: version, drift baseline,
-    * log size, the log segments this version references, and (when the
-    * writer is a streaming admission) the micro-batch id that produced
-    * it — the replay guard: a crash between this commit and the
-    * streaming checkpoint's own commit redelivers the same batch, and
-    * the recorded id lets the admission skip it instead of
-    * double-admitting (manifests without the field read as None). */
-  final case class Meta(version: Long, trainedRows: Long, totalRows: Long,
-      segs: Vector[Long], streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
-      retainVersions: Option[Int] = None)
+  /** The committed state a reader resolves: the version, its live log
+    * segments, and the manifest's raw members (JSON values by name).
+    * `segs` is parsed when the manifest is resolved, so a corrupt
+    * manifest fails there; a store's own members are parsed strictly by
+    * [[num]] / [[nums]] when the store reads them. */
+  final case class Meta(version: Long, members: Map[String, String]) {
+    private def unreadable(k: String): Nothing =
+      throw new IllegalStateException(s"unreadable index manifest v$version: " +
+        s"member '$k' is missing or malformed in $members")
+
+    def num(k: String): Long =
+      members.get(k).flatMap(_.toLongOption).getOrElse(unreadable(k))
+
+    def nums(k: String): Vector[Long] = members.get(k).collect {
+      case LongArray(null) => Vector.empty[Long]
+      case LongArray(xs) => xs.split(",").map(_.toLong).toVector
+    }.getOrElse(unreadable(k))
+
+    val segs: Vector[Long] = nums("segs")
+    def trainedRows: Long = num("trainedRows")
+    def totalRows: Long = num("totalRows")
+    def retainVersions: Option[Int] = members.get("retain").map(_.toInt)
+
+    /** The streaming replay guard: the (checkpoint identity, micro-batch
+      * id) that produced this version. A crash between this commit and
+      * the streaming checkpoint's own commit redelivers the same batch,
+      * and the recorded pair lets the admission skip it instead of
+      * double-admitting. */
+    def stream: Option[(String, Long)] = for {
+      c <- members.get("streamCkptId")
+      b <- members.get("streamBatchId")
+    } yield (graft.Par.jsonUnescape(c.stripPrefix("\"").stripSuffix("\"")),
+      b.toLong)
+  }
+
+  private val LongArray = """\[(\d+(?:,\d+)*)?\]""".r
+  private val Member = """"(\w+)":("(?:[^"\\]|\\.)*"|\[[\d,]*\]|\d+)""".r
+
+  /** The protocol runs on `java.io.File`, i.e. a store dir MUST be a
+    * driver-local filesystem path. On a URI the File calls would not
+    * fail loudly: Spark resolves the scheme and writes the segments,
+    * while the pointer and manifest land in a relative `./file:…` dir
+    * and the store later reads as lost. `file:` URIs are rejected too,
+    * for the same reason. A port to object storage replaces this guard
+    * and the File calls with one filesystem abstraction (Hadoop's). */
+  def requireLocalFs(dir: String): Unit =
+    require("^[A-Za-z][A-Za-z0-9+.-]*:".r.findFirstIn(dir).isEmpty,
+      s"store dir must be a driver-local filesystem path, got '$dir' — " +
+        "the commit protocol (pointer swap, manifest, segment sizing) is " +
+        "java.io.File-based and would misplace or misread a URI")
 
   def currentVersion(indexDir: String): Option[Long] = {
+    requireLocalFs(indexDir)
     val f = new java.io.File(indexDir, "CURRENT")
     if (f.isFile) Some(java.nio.file.Files.readString(f.toPath).trim.toLong)
     else None
@@ -65,32 +119,26 @@ private[graft] object VersionedIndex {
     * promotes. Throws, naming the version, once retention has reclaimed
     * it. */
   def metaAt(indexDir: String, v: Long): Meta = {
-      val f = new java.io.File(indexDir, s"v$v/MANIFEST")
-      if (!f.isFile) throw new IllegalStateException(
-        s"$indexDir/v$v has no MANIFEST — lost or deleted committed state")
-      val txt = java.nio.file.Files.readString(f.toPath)
-      def unreadable(): Nothing = throw new IllegalStateException(
-        s"unreadable index manifest v$v: $txt")
-      def num(k: String): Long =
-        s""""$k":(\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-          .getOrElse(unreadable())
-      val segs = s""""segs":\\[([\\d,]*)\\]""".r.findFirstMatchIn(txt)
-        .map(m => if (m.group(1).isEmpty) Vector.empty[Long]
-                  else m.group(1).split(",").map(_.toLong).toVector)
-        .getOrElse(unreadable())
-      val sb = """"streamBatchId":(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong)
-      val sc = """"streamCkptId":"((?:[^"\\]|\\.)*)"""".r
-        .findFirstMatchIn(txt).map(m => graft.Par.jsonUnescape(m.group(1)))
-      val rv = """"retain":(\d+)""".r.findFirstMatchIn(txt)
-        .map(_.group(1).toInt)
-      Meta(v, num("trainedRows"), num("totalRows"), segs, sb, sc, rv)
+    requireLocalFs(indexDir)
+    val f = new java.io.File(indexDir, s"v$v/MANIFEST")
+    if (!f.isFile) throw new IllegalStateException(
+      s"$indexDir/v$v has no MANIFEST — lost or deleted committed state")
+    Meta(v, Member.findAllMatchIn(java.nio.file.Files.readString(f.toPath))
+      .map(m => m.group(1) -> m.group(2)).toMap)
   }
 
   def metaOrThrow(indexDir: String): Meta = meta(indexDir).getOrElse(
     throw new IllegalStateException(
       s"$indexDir holds no committed index (no CURRENT pointer) — " +
         "build one first"))
+
+  /** Whether the committed version at `dir` already admitted micro-batch
+    * `stream` = (checkpoint identity, batch id) of the same streaming
+    * lineage — a redelivery to skip. A fresh checkpoint's restarted ids
+    * carry another identity and are not mistaken for one. */
+  def admitted(dir: String, stream: (String, Long)): Boolean =
+    meta(dir).flatMap(_.stream).exists { case (c, b) =>
+      c == stream._1 && b >= stream._2 }
 
   /** Committed segment directories of the data log, for a multi-path
     * read rooted at `$indexDir/$log` (so `seg` and any lower partition
@@ -124,9 +172,6 @@ private[graft] object VersionedIndex {
       .parquet(segPaths(indexDir, log, segs): _*)
       .drop("seg")
 
-  /** Publish version `next` (everything under `v$next/` and
-    * `<log>/seg=$next` is already written): manifest, atomic pointer
-    * move, then retention. `logs` names the data-log roots to prune. */
   /** Versions every commit keeps readable (current inclusive). The
     * default preserves the original current+previous contract; a
     * deployment that needs deeper time travel ([[metaAt]] /
@@ -135,15 +180,28 @@ private[graft] object VersionedIndex {
     * boundary is auditable from the store itself. */
   val DefaultRetainVersions: Int = 2
 
-  def commit(indexDir: String, next: Long, trainedRows: Long,
-      totalRows: Long, segs: Vector[Long], logs: Seq[String],
-      streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
+  /** The row-counting stores' own manifest members. */
+  def rows(trainedRows: Long, totalRows: Long): Seq[(String, Any)] =
+    Seq("trainedRows" -> trainedRows, "totalRows" -> totalRows)
+
+  private def json(v: Any): String = v match {
+    case xs: Iterable[_] => xs.mkString("[", ",", "]")
+    case s: String => "\"" + graft.Par.jsonEscape(s) + "\""
+    case n: Int => n.toString
+    case n: Long => n.toString
+  }
+
+  /** Publish version `next` (everything under `v$next/` and
+    * `<log>/seg=$next` is already written): manifest — the store's
+    * `members` (integers, integer arrays or strings), then the
+    * protocol's — atomic pointer move, then retention. `logs` names the
+    * data-log roots to prune. */
+  def commit(indexDir: String, next: Long, members: Seq[(String, Any)],
+      segs: Vector[Long], logs: Seq[String] = Nil,
+      stream: Option[(String, Long)] = None,
       retainVersions: Int = DefaultRetainVersions): Unit = {
     require(retainVersions >= 1,
       s"retainVersions must be >= 1, got $retainVersions")
-    val dir = java.nio.file.Paths.get(indexDir, s"v$next")
-    java.nio.file.Files.createDirectories(dir)
     // single-writer guard: the protocol assumes one writer per index
     // dir; a double-launched append would interleave seg overwrites and
     // silently lose a batch. Detect the realistic double-commit: if
@@ -154,8 +212,10 @@ private[graft] object VersionedIndex {
     // catches a live racer that recreates it inside this window. (The
     // earlier segment-write phase of two LIVE concurrent writers is
     // not detectable here — single-writer remains the contract.)
-    val mf = dir.resolve("MANIFEST")
     val cur = currentVersion(indexDir)
+    val dir = java.nio.file.Paths.get(indexDir, s"v$next")
+    java.nio.file.Files.createDirectories(dir)
+    val mf = dir.resolve("MANIFEST")
     if (java.nio.file.Files.exists(mf)) {
       if (cur.exists(_ >= next)) throw new IllegalStateException(
         s"$indexDir/v$next is already committed (CURRENT=${cur.get}) — " +
@@ -168,14 +228,12 @@ private[graft] object VersionedIndex {
     // version number within the same tick would alias an mtime key and
     // serve the old model — the silent-recall-collapse scenario the key
     // exists to prevent (r13 advice).
-    java.nio.file.Files.writeString(mf,
-      s"""{"trainedRows":$trainedRows,"totalRows":$totalRows,""" +
-        s""""buildId":"${java.util.UUID.randomUUID()}",""" +
-        streamBatchId.map(id => s""""streamBatchId":$id,""").getOrElse("") +
-        streamCkptId.map(h =>
-          s""""streamCkptId":"${graft.Par.jsonEscape(h)}",""").getOrElse("") +
-        s""""retain":$retainVersions,""" +
-        s""""segs":[${segs.mkString(",")}]}""",
+    val protocol = Seq("buildId" -> java.util.UUID.randomUUID().toString) ++
+      stream.toSeq.flatMap { case (c, b) =>
+        Seq("streamBatchId" -> b, "streamCkptId" -> c) } ++
+      Seq("retain" -> retainVersions, "segs" -> segs)
+    java.nio.file.Files.writeString(mf, (members ++ protocol)
+        .map { case (k, v) => s""""$k":${json(v)}""" }.mkString("{", ",", "}"),
       java.nio.file.StandardOpenOption.CREATE_NEW)
     // strict parse (metaAt): a CORRUPT retained manifest must abort the
     // commit, not silently read as segs=[] and let retention delete the
@@ -210,6 +268,32 @@ private[graft] object VersionedIndex {
             && !live.contains(d.getName.drop(4).toLong)) rmQuiet(d)
       }
     }
+  }
+
+  /** The log stores' admission skeleton ([[SplitPins]], [[HeavyHitters]],
+    * [[SubstringDedup]], [[EmbeddingIncremental]]): resolve the committed
+    * manifest (`missing` is the error when there is none), fold once
+    * `segs.size + 1 > maxLiveSegments`, run `write(m, next, fold)` — it
+    * writes `seg=$next` of every log (the batch's rows, or the folded
+    * log) and returns the new log size — then commit. Append days run
+    * under static plans sized to `sizeBy` ([[graft.Par.withAdmitPlan]]:
+    * their relations are batch-sized by construction); a fold rewrites
+    * the logs and keeps AQE, as does an append with no `sizeBy`. The arm
+    * is known from the manifest before any Spark work, so the whole
+    * body, backgrounded writes included, runs under one regime. */
+  def appendOrFold(spark: SparkSession, dir: String, missing: String,
+      maxLiveSegments: Int, logs: Seq[String], sizeBy: Seq[DataFrame],
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = DefaultRetainVersions)(
+      write: (Meta, Long, Boolean) => Long): Unit = {
+    val m = meta(dir).getOrElse(throw new IllegalStateException(missing))
+    val next = m.version + 1
+    val fold = m.segs.size + 1 > maxLiveSegments
+    val total =
+      if (fold || sizeBy.isEmpty) write(m, next, fold)
+      else graft.Par.withAdmitPlan(spark, sizeBy: _*)(write(m, next, fold))
+    commit(dir, next, rows(total, total),
+      if (fold) Vector(next) else m.segs :+ next, logs, stream, retainVersions)
   }
 
   /** Copy a K-row model directory (centroids/codebook) into the next

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{AdmitDelta, DedupState, IncrementalDedup}
+import graft.operators.{AdmitDelta, DedupState, IncrementalDedup, SplitPins,
+  VersionedIndex}
 
 /** Streaming admission for the incremental dedup state — the reference's
   * daily-drop topology (landing zone → bookmark-incremental processing)
@@ -11,12 +11,22 @@ import graft.operators.{AdmitDelta, DedupState, IncrementalDedup}
   * landed documents is admitted against the PERSISTED [[DedupState]]
   * with [[IncrementalDedup.admitBatchDelta]], never re-reading old text.
   *
-  * State lives as four parquet relations under `stateDir`, promoted by
-  * a pointer file — the same atomic-swap shape a Delta/Iceberg table
-  * commit provides, kept here to plain parquet + one rename so the
-  * engine stays dependency-free. Readers (and the next batch) always
-  * load the last COMMITTED version; a crash mid-write leaves garbage
-  * uncommitted files and an intact previous version.
+  * The state commits through the shared [[VersionedIndex]] protocol —
+  * an atomic `CURRENT` pointer over per-version manifests, the
+  * atomic-swap shape a Delta/Iceberg table commit provides, kept to
+  * plain parquet + one rename so the engine stays dependency-free.
+  * Readers (and the next batch) always load the last COMMITTED version;
+  * a crash mid-write leaves garbage uncommitted files and an intact
+  * previous version. Layout:
+  *
+  * {{{
+  * stateDir/
+  *   CURRENT  v$N/MANIFEST              # the VersionedIndex protocol
+  *   bands/seg$M/  shingles/seg$M/      # live day segments segFrom..N
+  *   bands/base/cpart=$j/bucket=$k/     # bucketed base, compactions
+  *   shingles/base/cpart=$j/bucket=$k/  #   [cFrom, compactions)
+  *   labels/b$k/v$M/  sizes/b$k/v$M/    # copy-on-write buckets, owners(k)=M
+  * }}}
   *
   * `bands`/`shingles` exploit being APPEND-ONLY: a two-tier log (LSM in
   * miniature) of RECENT day segments (`bands/seg$i`, batch-sized). Once
@@ -35,7 +45,7 @@ import graft.operators.{AdmitDelta, DedupState, IncrementalDedup}
   * `labels`/`sizes` — the two relations admission MUTATES — are
   * copy-on-write per cluster-id bucket: bucket k's rows live at
   * `labels/b$k/v$N` where N is the last commit that touched the bucket,
-  * and the committed MANIFEST's `owners` array maps bucket → owning
+  * and the committed manifest's `owners` array maps bucket → owning
   * version. A commit rewrites ONLY the buckets its frontier touches
   * (remapped cluster ids ∪ merged labels ∪ the batch's cluster ids —
   * O(batch) buckets), so per-day labels/sizes write bytes are
@@ -47,14 +57,15 @@ import graft.operators.{AdmitDelta, DedupState, IncrementalDedup}
   * marker dir (zero files), so a referenced dir that is ABSENT is loud
   * lost-state, same contract as the base compactions.
   *
-  * Each version's `MANIFEST` (written before the pointer moves) records
-  * compactions, live-segment range, bucket count, and the labels/sizes
-  * owner array. Crash-safety: half-written segments/compactions/bucket
-  * versions sit above the committed pointer or outside the committed
-  * owners and are never listed; the retried commit overwrites them.
-  * Retention keeps the current + previous version of everything (bucket
-  * versions referenced by either manifest survive; in-flight readers of
-  * the prior commit stay valid) and deletes the rest, so disk stays
+  * Each manifest carries the store's [[Layout]] members (compactions,
+  * live-segment range, bucket count, owner array) next to the
+  * protocol's, whose `segs` list the live segments. Crash-safety:
+  * half-written segments/compactions/bucket versions sit above the
+  * committed pointer or outside the committed owners and are never
+  * listed; the retried commit overwrites them. The protocol keeps the
+  * current + previous manifests, and [[publish]] keeps every segment,
+  * compaction and bucket version either references (in-flight readers
+  * of the prior commit stay valid) and deletes the rest, so disk stays
   * O(corpus + 2·touched), not O(days · corpus).
   */
 object DedupStream {
@@ -156,88 +167,25 @@ object DedupStream {
     r.parquet(paths: _*)
   }
 
-  private def inParallel(tasks: (() => Unit)*): Unit =
-    graft.Par.inParallel(tasks: _*)
-
-  private def versionOf(stateDir: String): Option[Long] = {
-    val f = new java.io.File(stateDir, "CURRENT")
-    if (f.isFile) Some(java.nio.file.Files.readString(f.toPath).trim.toLong)
-    else None
+  /** The store's own manifest members, next to [[VersionedIndex]]'s: the
+    * base holds compactions [cFrom, compactions) — cFrom advances past
+    * the compactions a major fold or a re-bucketing migration
+    * supersedes; segments segFrom..N are live; `owners(k)` is the
+    * version whose commit last wrote labels/sizes bucket k; a migration
+    * records the bucket count it replaced as `migratedFrom`. */
+  private final case class Layout(compactions: Int, cFrom: Int,
+      segFrom: Long, buckets: Int, owners: Vector[Long],
+      migratedFrom: Option[Int] = None) {
+    def members: Seq[(String, Any)] = Seq("compactions" -> compactions,
+      "cFrom" -> cFrom, "segFrom" -> segFrom, "buckets" -> buckets,
+      "owners" -> owners) ++ migratedFrom.map("migratedFrom" -> _)
   }
 
-  /** Committed-version metadata. The base holds compactions
-    * [cFrom, compactions); cFrom is 0 until a re-bucketing migration
-    * supersedes the older compactions. `owners(k)` is the version whose
-    * commit last wrote labels/sizes bucket k; None on manifests from
-    * before the copy-on-write layout (labels/sizes then live whole at
-    * `v$N/`). */
-  private final case class Manifest(compactions: Int, cFrom: Int,
-      segFrom: Long, buckets: Int, owners: Option[Vector[Long]],
-      streamBatchId: Option[Long] = None,
-      streamCkptId: Option[String] = None,
-      migratedFrom: Option[Int] = None)
-
-  /** Versions committed before the bucketed layout have no MANIFEST —
-    * they read as (0, 0, 0, 0, None): all segments live, no base,
-    * unbucketed, legacy whole-relation labels/sizes. */
-  private def manifestOf(stateDir: String, v: Long): Option[Manifest] = {
-    val f = new java.io.File(stateDir, s"v$v/MANIFEST")
-    if (!f.isFile) None
-    else {
-      val txt = java.nio.file.Files.readString(f.toPath).trim
-      def num(k: String): Option[Long] =
-        s""""$k":(\\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      val owners = s""""owners":\\[([\\d,]*)\\]""".r.findFirstMatchIn(txt)
-        .map(m => if (m.group(1).isEmpty) Vector.empty[Long]
-                  else m.group(1).split(",").map(_.toLong).toVector)
-      (num("compactions"), num("segFrom"), num("buckets")) match {
-        case (Some(c), Some(fr), Some(b)) =>
-          Some(Manifest(c.toInt, num("cFrom").getOrElse(0L).toInt, fr,
-            b.toInt, owners, num("streamBatchId"),
-            """"streamCkptId":"((?:[^"\\]|\\.)*)"""".r
-              .findFirstMatchIn(txt)
-              .map(m => graft.Par.jsonUnescape(m.group(1))),
-            num("migratedFrom").map(_.toInt)))
-        case _ => throw new IllegalStateException(
-          s"unreadable state manifest v$v: $txt")
-      }
-    }
-  }
-
-  private def writeManifest(stateDir: String, v: Long, compactions: Int,
-      cFrom: Int, segFrom: Long, buckets: Int, owners: Vector[Long],
-      stream: Option[(String, Long)] = None,
-      migratedFrom: Option[Int] = None): Unit = {
-    val dir = java.nio.file.Paths.get(stateDir, s"v$v")
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(dir.resolve("MANIFEST"),
-      s"""{"compactions":$compactions,"cFrom":$cFrom,"segFrom":$segFrom,""" +
-        stream.map { case (ck, id) =>
-          s""""streamCkptId":"${graft.Par.jsonEscape(ck)}","streamBatchId":$id,"""
-        }.getOrElse("") +
-        migratedFrom.map(b => s""""migratedFrom":$b,""").getOrElse("") +
-        s""""buckets":$buckets,"owners":[${owners.mkString(",")}]}""")
-  }
+  private def layoutOf(m: VersionedIndex.Meta): Layout =
+    Layout(m.num("compactions").toInt, m.num("cFrom").toInt,
+      m.num("segFrom"), m.num("buckets").toInt, m.nums("owners"))
 
   private def isDir(p: String): Boolean = new java.io.File(p).isDirectory
-
-  /** The store's driver-side protocol — CURRENT pointer, manifests,
-    * atomic renames, [[foldPlan]]'s mass-trigger segment sizing,
-    * [[retire]] — runs on `java.io.File`, i.e. the state dir MUST be a
-    * driver-local filesystem path. On a remote URI those calls would
-    * not fail loudly: `isDirectory` reads false, sizing reads 0, and
-    * the store would silently behave as if empty (the mass trigger
-    * never firing is the subtlest such degrade). Reject schemes at
-    * every entry point instead; a port to object storage replaces this
-    * guard and the File calls with one filesystem abstraction
-    * (Hadoop's), not scattered fixes. `file:` URIs are NOT accepted:
-    * the raw-path File calls here never strip the scheme, so even the
-    * local scheme would resolve to a `./file:...` relative dir. */
-  private def requireLocalFs(stateDir: String): Unit =
-    require(!"^[A-Za-z][A-Za-z0-9+.-]*:".r.findFirstIn(stateDir).isDefined,
-      s"stateDir must be a driver-local filesystem path, got '$stateDir' — " +
-        "the state protocol (pointer swap, manifest, segment sizing) is " +
-        "java.io.File-based and would silently read a remote URI as empty")
 
   /** A DataFrame whose every leaf is an in-memory LocalRelation (the
     * admission's pinned frontier) would otherwise be WRITTEN through
@@ -295,8 +243,7 @@ object DedupStream {
   }
 
   /** Load the last committed state, or None before the first commit.
-    * `labels`/`sizes` come from the owner-mapped bucket dirs (or the
-    * legacy `v$N/` whole relation when the manifest predates owners);
+    * `labels`/`sizes` come from the owner-mapped bucket dirs;
     * `bands`/`shingles` each come from two multi-root scans — the
     * committed compactions of the bucketed base (carrying the `bucket`
     * partition column for pruning) and the live segments (bucket
@@ -305,29 +252,22 @@ object DedupStream {
     * listed. A state whose tiers are ALL legitimately empty
     * (empty-corpus commits) reads as an empty relation of the right
     * schema, not an error. */
-  def loadState(spark: SparkSession, stateDir: String): Option[DedupState] = {
-    requireLocalFs(stateDir)
-    versionOf(stateDir).map { v =>
-      val man = manifestOf(stateDir, v)
-      val (c, cFrom, segFrom, b) = man
-        .map(m => (m.compactions, m.cFrom, m.segFrom, m.buckets))
-        .getOrElse((0, 0, 0L, 0))
+  def loadState(spark: SparkSession, stateDir: String): Option[DedupState] =
+    VersionedIndex.meta(stateDir).map { m =>
+      val l = layoutOf(m)
       def log(t: String, bucketCol: Int => Column, emptyDdl: String) = {
-        val segPaths = (segFrom to v).map(i => s"$stateDir/$t/seg$i")
-          .filter(isDir)
-        val basePaths = (cFrom until c).map { j =>
+        val segPaths = m.segs.map(i => s"$stateDir/$t/seg$i").filter(isDir)
+        val basePaths = (l.cFrom until l.compactions).map { j =>
           val p = s"$stateDir/$t/base/cpart=$j"
           if (!isDir(p)) throw new IllegalStateException(
-            s"committed state v$v references $t compaction cpart=$j " +
-              s"but $p does not exist — lost or deleted committed state")
+            s"committed state v${m.version} references $t compaction " +
+              s"cpart=$j but $p does not exist — lost or deleted committed state")
           p
         }.filter(hasBucketDirs)
         val segDf =
           if (segPaths.isEmpty) None
-          else {
-            val raw = readPq(spark, emptyDdl, segPaths)
-            Some(if (b > 0) raw.withColumn("bucket", bucketCol(b)) else raw)
-          }
+          else Some(readPq(spark, emptyDdl, segPaths)
+            .withColumn("bucket", bucketCol(l.buckets)))
         // basePath so the committed cpart roots read as one partitioned
         // tree (partition columns cpart, bucket); cpart is only commit
         // bookkeeping — drop it, keep bucket for probe-time pruning
@@ -338,23 +278,16 @@ object DedupStream {
         (baseDf.toSeq ++ segDf.toSeq).reduceOption(_ unionByName _)
           .getOrElse(emptyDf(spark, emptyDdl))
       }
-      val (labels, sizes) = man.flatMap(_.owners) match {
-        case Some(own) =>
-          (ownedRelation(spark, stateDir, "labels", own, None, LabelsDdl),
-            ownedRelation(spark, stateDir, "sizes", own, None, SizesDdl))
-        case None => // legacy whole-relation layout
-          (readPq(spark, LabelsDdl, Seq(s"$stateDir/v$v/labels")),
-            readPq(spark, SizesDdl, Seq(s"$stateDir/v$v/sizes")))
-      }
-      DedupState(labels, sizes,
+      DedupState(
+        ownedRelation(spark, stateDir, "labels", l.owners, None, LabelsDdl),
+        ownedRelation(spark, stateDir, "sizes", l.owners, None, SizesDdl),
         log("bands",
           n => IncrementalDedup.bandBucket(col("band"), col("band_hash"), n),
           BandsDdl),
         log("shingles", n => IncrementalDedup.docBucket(col("doc_id"), n),
           ShinglesDdl),
-        buckets = if (b > 0) Some(b) else None)
+        buckets = Some(l.buckets))
     }
-  }
 
   /** Fold segments [from, to] of one log into compaction `cpart`,
     * partitioned by the probe key's bucket and sorted by the key within
@@ -442,11 +375,11 @@ object DedupStream {
     * MAJOR FOLDS: once [[MaxBaseCompactions]] cparts are live, the
     * fold also folds them all into its new compaction and returns an
     * advanced cFrom — see [[MaxBaseCompactions]]'s amortization
-    * argument. Returns (fold task, compactions, cFrom, segFrom) for
-    * the next manifest. */
+    * argument. Returns the fold task and the next manifest's layout
+    * (owners still `prev`'s). */
   private def foldPlan(spark: SparkSession, stateDir: String, next: Long,
-      prevC: Int, prevCFrom: Int, prevF: Long, b: Int,
-      maxLiveSegments: Int): (Option[() => Unit], Int, Int, Long) = {
+      prev: Layout, maxLiveSegments: Int): (Option[() => Unit], Layout) = {
+    val Layout(prevC, prevCFrom, prevF, b, _, _) = prev
     def segBytes(i: Long): Long = Seq("bands", "shingles").map { t =>
       val d = new java.io.File(stateDir, s"$t/seg$i")
       if (d.isDirectory)
@@ -460,7 +393,7 @@ object DedupStream {
     }
     if (next - prevF >= maxLiveSegments || oversized) {
       val major = prevC - prevCFrom >= MaxBaseCompactions
-      val task = () => inParallel(
+      val task = () => graft.Par.inParallel(
         () => compactLog(spark, stateDir, "bands", BandsDdl, major,
           prevCFrom, prevC, prevF, next - 1,
           IncrementalDedup.bandBucket(col("band"), col("band_hash"), b),
@@ -469,8 +402,9 @@ object DedupStream {
           prevCFrom, prevC, prevF, next - 1,
           IncrementalDedup.docBucket(col("doc_id"), b),
           col("doc_id"), b))
-      (Some(task), prevC + 1, if (major) prevC else prevCFrom, next)
-    } else (None, prevC, prevCFrom, prevF)
+      (Some(task), prev.copy(compactions = prevC + 1,
+        cFrom = if (major) prevC else prevCFrom, segFrom = next))
+    } else (None, prev)
   }
 
   /** Write `df` (carrying cluster_id) into per-bucket version dirs
@@ -516,22 +450,23 @@ object DedupStream {
     try org.apache.commons.io.FileUtils.deleteDirectory(d)
     catch { case _: Exception => } // stale history is harmless
 
-  /** Post-promotion cleanup: keep the current + previous version of
-    * everything (in-flight readers of the prior commit stay valid),
-    * delete the rest — manifest dirs, folded-away segments, and
-    * labels/sizes bucket versions referenced by neither owner map. */
-  private def retire(stateDir: String, next: Long, newF: Long, prevF: Long,
-      newCFrom: Int, prevCFrom: Int,
-      curOwn: Option[Vector[Long]], prevOwn: Option[Vector[Long]]): Unit = {
-    (0L until next - 1).map(i => new java.io.File(stateDir, s"v$i"))
-      .filter(_.isDirectory).foreach(rmQuiet)
+  /** Commit version `next` (every relation it references is written)
+    * through [[VersionedIndex.commit]] — manifest, atomic pointer move,
+    * manifest retention — then delete the folded-away segments,
+    * superseded compactions and labels/sizes bucket versions that
+    * neither `cur` nor `prev` references (in-flight readers of the prior
+    * commit stay valid). Returns `next`. */
+  private def publish(stateDir: String, next: Long, cur: Layout,
+      prev: Option[Layout], stream: Option[(String, Long)]): Long = {
+    VersionedIndex.commit(stateDir, next, cur.members,
+      segs = (cur.segFrom to next).toVector, stream = stream)
     Seq("bands", "shingles").foreach { t =>
-      (0L until math.min(newF, prevF))
+      (0L until math.min(cur.segFrom, prev.fold(0L)(_.segFrom)))
         .map(i => new java.io.File(stateDir, s"$t/seg$i"))
         .filter(_.isDirectory).foreach(rmQuiet)
       // compactions superseded by a re-bucketing migration in BOTH the
       // current and previous manifests' ranges are unreferenced
-      (0 until math.min(newCFrom, prevCFrom))
+      (0 until math.min(cur.cFrom, prev.fold(0)(_.cFrom)))
         .map(j => new java.io.File(stateDir, s"$t/base/cpart=$j"))
         .filter(_.isDirectory).foreach(rmQuiet)
     }
@@ -541,33 +476,24 @@ object DedupStream {
         if (bdir.isDirectory && bdir.getName.startsWith("b")
             && bdir.getName.drop(1).forall(_.isDigit)) {
           val k = bdir.getName.drop(1).toInt
-          def owns(o: Option[Vector[Long]], ver: Long) =
-            o.exists(v => k < v.length && v(k) == ver)
+          def owns(l: Layout, ver: Long) =
+            k < l.owners.length && l.owners(k) == ver
           bdir.listFiles.foreach { vdir =>
             if (vdir.isDirectory && vdir.getName.startsWith("v")) {
               val ver = vdir.getName.drop(1).toLong
-              if (!owns(curOwn, ver) && !owns(prevOwn, ver)) rmQuiet(vdir)
+              if (!owns(cur, ver) && !prev.exists(owns(_, ver))) rmQuiet(vdir)
             }
           }
         }
       }
     }
-  }
-
-  private def promote(stateDir: String, next: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(stateDir, s".CURRENT.$next.tmp")
-    java.nio.file.Files.writeString(tmp, next.toString)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(stateDir, "CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    next
   }
 
   /** Write the next state version FROM A FULL STATE and promote it —
-    * the bootstrap path (and the one-time upgrade of a legacy state,
-    * which pays one full labels/sizes write to enter the copy-on-write
-    * layout: every bucket becomes owned by this commit). Materializes
-    * every relation BEFORE the pointer moves, so a failed write never
-    * publishes a partial state.
+    * the bootstrap path: every labels/sizes bucket becomes owned by
+    * this commit. Materializes every relation BEFORE the pointer moves,
+    * so a failed write never publishes a partial state.
     *
     * `newBands`/`newShingles` are the CURRENT BATCH's rows only — the
     * append-log delta. Omitting them is only legal on the very first
@@ -581,22 +507,17 @@ object DedupStream {
       buckets: Int = StateBuckets,
       maxLiveSegments: Int = MaxLiveSegments,
       stream: Option[(String, Long)] = None): Long = {
-    requireLocalFs(stateDir)
-    val prevVersion = versionOf(stateDir)
-    val next = prevVersion.getOrElse(-1L) + 1
+    val prevMeta = VersionedIndex.meta(stateDir)
+    val prev = prevMeta.map(layoutOf)
+    val next = prevMeta.fold(0L)(_.version + 1)
     require(next == 0 || (newBands.isDefined && newShingles.isDefined),
       "commitState on an existing state requires the batch deltas for the " +
         "bands/shingles append log (a full rewrite would double-count)")
-    val prevMan = prevVersion.flatMap(v => manifestOf(stateDir, v))
     // layout constants are fixed by the FIRST commit's manifest; later
-    // commits inherit them (a pre-manifest legacy state inherits the
-    // defaults — its old segments simply all read as live until folded).
-    // The manifest value wins on every commit after the first; a caller
-    // passing a CONFLICTING non-default count would otherwise silently
-    // believe the layout was re-sized.
-    val (prevC, prevCFrom, prevF, b) = prevMan
-      .map(m => (m.compactions, m.cFrom, m.segFrom, m.buckets))
-      .getOrElse((0, 0, 0L, buckets))
+    // commits inherit them. The manifest value wins on every commit
+    // after the first; a caller passing a CONFLICTING non-default count
+    // would otherwise silently believe the layout was re-sized.
+    val b = prev.fold(buckets)(_.buckets)
     require(buckets == StateBuckets || buckets == b,
       s"state layout is fixed at $b buckets by its first commit's manifest; " +
         s"got buckets=$buckets — a plain commit cannot re-size the layout " +
@@ -614,9 +535,8 @@ object DedupStream {
     // count). Write it PRE-FOLDED into the bucketed base instead: one
     // extra shuffle on a day that is O(corpus) anyway (labels/sizes
     // write every bucket), and every later probe prunes from day 1.
-    val bootstrapFold = next == 0
     val logTasks: Seq[() => Unit] =
-      if (bootstrapFold) Seq(
+      if (prev.isEmpty) Seq(
         () => compactInto(dropB(newBands.getOrElse(st.bands)),
           s"$stateDir/bands/base/cpart=0",
           IncrementalDedup.bandBucket(col("band"), col("band_hash"), b),
@@ -628,20 +548,16 @@ object DedupStream {
         () => wr(dropB(newBands.getOrElse(st.bands)), s"bands/seg$next"),
         () => wr(dropB(newShingles.getOrElse(st.shingles)),
           s"shingles/seg$next"))
-    val (foldTask, newC, newCFrom, newF) =
-      if (bootstrapFold) (None, 1, 0, 1L)
-      else foldPlan(spark, stateDir, next, prevC, prevCFrom, prevF, b,
-        maxLiveSegments)
-    inParallel(Seq(
+    val owners = Vector.fill(b)(next)
+    val (foldTask, cur) = prev match {
+      case None => (None, Layout(1, 0, 1L, b, owners))
+      case Some(p) => foldPlan(spark, stateDir, next, p, maxLiveSegments)
+    }
+    graft.Par.inParallel(Seq(
       () => writeBuckets(dropB(st.labels), stateDir, "labels", next, b, all),
       () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next, b, all))
       ++ logTasks ++ foldTask: _*)
-    val owners = Vector.fill(b)(next)
-    writeManifest(stateDir, next, newC, newCFrom, newF, b, owners, stream)
-    promote(stateDir, next)
-    retire(stateDir, next, newF, prevF, newCFrom, prevCFrom,
-      Some(owners), prevMan.flatMap(_.owners))
-    next
+    publish(stateDir, next, cur.copy(owners = owners), prev, stream)
   }
 
   /** Commit one admitted batch against the previously committed state —
@@ -652,8 +568,7 @@ object DedupStream {
     * whose owner map points untouched buckets at their existing files —
     * which are never opened, never rewritten. Per-day labels/sizes I/O is
     * O(batch + touched-bucket rows); everything else is the amortized
-    * segment fold. A legacy previous state (pre-owners manifest) takes
-    * the [[commitState]] upgrade path once.
+    * segment fold.
     *
     * RETURNS the latest PROMOTED version — normally the version that
     * admitted this delta, but when the mass policy fires a follow-on
@@ -664,7 +579,7 @@ object DedupStream {
     * migration manifest's `migratedFrom`, or pass
     * `autoMigrate = false` and run [[migrateBuckets]] on its own
     * schedule. */
-  def commitDelta(spark: SparkSession, stateDir: String, prev: DedupState,
+  def commitDelta(spark: SparkSession, stateDir: String,
       delta: AdmitDelta, maxLiveSegments: Int = MaxLiveSegments,
       stream: Option[(String, Long)] = None,
       autoMigrate: Boolean = true,
@@ -675,7 +590,7 @@ object DedupStream {
     // shingle segments are the commit's heaviest shuffled relations)
     val v = graft.Par.withAdmitPlan(spark, delta.newBands,
       delta.newShingles) {
-      commitDeltaImpl(spark, stateDir, prev, delta, maxLiveSegments, stream)
+      commitDeltaImpl(spark, stateDir, delta, maxLiveSegments, stream)
     }
     // the auto-migration check runs AFTER the commit is durable and
     // OUTSIDE the static-plan scope (a migration is corpus-sized work
@@ -695,107 +610,90 @@ object DedupStream {
     * read, two directory sizings, zero jobs). */
   private def maybeAutoMigrate(spark: SparkSession, stateDir: String,
       bucketBytesTarget: Long, bucketBytesFloor: Long): Option[Long] =
-    versionOf(stateDir).flatMap(v => manifestOf(stateDir, v)).flatMap { man =>
+    VersionedIndex.meta(stateDir).map(layoutOf).flatMap { man =>
       val b = man.buckets
-      if (man.owners.isEmpty || b <= 0) None
-      else {
-        val newB = math.min(b * AutoMigrateGrowth, AutoMigrateMaxBuckets)
-        // PER-TABLE masses: the sizing rule ("one bucket ≈ a few
-        // block-sized files") is a statement about each probed table's
-        // files, so the trigger compares the HEAVIEST table's per-bucket
-        // mass to the target (summing bands+shingles would fire at ~half
-        // the documented per-table target) and the floor protects the
-        // LIGHTEST (an admission probes both tables, so shattering
-        // either into sub-footer files pays the tiny-file penalty).
-        lazy val perTableBytes = Seq("bands", "shingles").map { t =>
-          (man.cFrom until man.compactions).map { j =>
-            val d = new java.io.File(stateDir, s"$t/base/cpart=$j")
-            if (d.isDirectory)
-              org.apache.commons.io.FileUtils.sizeOfDirectory(d) else 0L
-          }.sum
-        }
-        // newB > b FIRST: at the bucket cap the sizing walk (a full
-        // recursive listing of the base) would otherwise run on every
-        // commit for a result migration could never use
-        lazy val massHit = perTableBytes.max / b > bucketBytesTarget
-        // the floor: never migrate EITHER table into the tiny-file regime
-        lazy val floorOk = perTableBytes.min / newB >= bucketBytesFloor
-        if (newB > b && massHit && floorOk) {
-          System.err.println(s"[chain] auto-migrating $b -> $newB buckets " +
-            s"(max table base/bucket=${perTableBytes.max / b} B > target " +
-            s"$bucketBytesTarget)")
-          Some(migrateBuckets(spark, stateDir, newB))
-        } else None
+      val newB = math.min(b * AutoMigrateGrowth, AutoMigrateMaxBuckets)
+      // PER-TABLE masses: the sizing rule ("one bucket ≈ a few
+      // block-sized files") is a statement about each probed table's
+      // files, so the trigger compares the HEAVIEST table's per-bucket
+      // mass to the target (summing bands+shingles would fire at ~half
+      // the documented per-table target) and the floor protects the
+      // LIGHTEST (an admission probes both tables, so shattering
+      // either into sub-footer files pays the tiny-file penalty).
+      lazy val perTableBytes = Seq("bands", "shingles").map { t =>
+        (man.cFrom until man.compactions).map { j =>
+          val d = new java.io.File(stateDir, s"$t/base/cpart=$j")
+          if (d.isDirectory)
+            org.apache.commons.io.FileUtils.sizeOfDirectory(d) else 0L
+        }.sum
       }
+      // newB > b FIRST: at the bucket cap the sizing walk (a full
+      // recursive listing of the base) would otherwise run on every
+      // commit for a result migration could never use
+      lazy val massHit = perTableBytes.max / b > bucketBytesTarget
+      // the floor: never migrate EITHER table into the tiny-file regime
+      lazy val floorOk = perTableBytes.min / newB >= bucketBytesFloor
+      if (newB > b && massHit && floorOk) {
+        System.err.println(s"[chain] auto-migrating $b -> $newB buckets " +
+          s"(max table base/bucket=${perTableBytes.max / b} B > target " +
+          s"$bucketBytesTarget)")
+        Some(migrateBuckets(spark, stateDir, newB))
+      } else None
     }
 
   private def commitDeltaImpl(spark: SparkSession, stateDir: String,
-      prev: DedupState, delta: AdmitDelta, maxLiveSegments: Int,
+      delta: AdmitDelta, maxLiveSegments: Int,
       stream: Option[(String, Long)]): Long = {
-    requireLocalFs(stateDir)
-    val prevV = versionOf(stateDir).getOrElse(throw new IllegalStateException(
-      "commitDelta requires an existing committed state (bootstrap with commitState)"))
-    manifestOf(stateDir, prevV).filter(_.owners.isDefined) match {
-      case None =>
-        commitState(IncrementalDedup.applyDelta(prev, delta), stateDir,
-          newBands = Some(delta.newBands),
-          newShingles = Some(delta.newShingles),
-          maxLiveSegments = maxLiveSegments,
-          stream = stream)
-      case Some(man) =>
-        val next = prevV + 1
-        val b = man.buckets
-        val own = man.owners.get
-        def kb(c: Column) = IncrementalDedup.docBucket(c, b).as("k")
-        // every bucket a label row can leave, enter, or appear in:
-        // remapped old cluster ids (rows leave), merged labels (rows
-        // enter), the batch's assignments. When the admission kept the
-        // frontier driver-local, this is a pure driver computation over
-        // rows already in hand (docBucketLocal — zero jobs); otherwise a
-        // frontier-sized collect, the same K-bounded driver-side index
-        // material as the band probe.
-        val touched = (delta.localRemap, delta.localAssign) match {
-          case (Some(rm), Some(as)) =>
-            (rm.flatMap { case (c, m) => Seq(c, m) } ++ as.map(_._2))
-              .map(IncrementalDedup.docBucketLocal(_, b)).distinct.sorted
-          case _ => delta.remap.select(kb(col("cluster_id")))
-            .union(delta.remap.select(kb(col("merged"))))
-            .union(delta.newAssign.select(kb(col("cluster_id"))))
-            .distinct().collect().map(_.getInt(0)).toSeq.sorted
-        }
-        val tset = touched.toSet
-        val oldLab =
-          ownedRelation(spark, stateDir, "labels", own, Some(tset), LabelsDdl)
-        val newLab = oldLab.join(broadcast(delta.remap), Seq("cluster_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("merged"), col("cluster_id")).as("cluster_id"))
-          .unionByName(delta.newAssign.select("doc_id", "cluster_id"))
-        val oldSz =
-          ownedRelation(spark, stateDir, "sizes", own, Some(tset), SizesDdl)
-        val newSz = oldSz.join(broadcast(delta.remap), Seq("cluster_id"), "left")
-          .select(coalesce(col("merged"), col("cluster_id")).as("cluster_id"),
-            col("cluster_size"))
-          .unionByName(delta.newAssign.groupBy("cluster_id")
-            .agg(count(lit(1)).as("cluster_size")))
-          .groupBy("cluster_id").agg(sum("cluster_size").as("cluster_size"))
-        def wr(df: DataFrame, path: String): Unit =
-          oneTaskIfLocal(df).write.mode("overwrite").parquet(s"$stateDir/$path")
-        val (foldTask, newC, newCFrom, newF) = foldPlan(spark, stateDir, next,
-          man.compactions, man.cFrom, man.segFrom, b, maxLiveSegments)
-        inParallel(Seq(
-          () => writeBuckets(newLab, stateDir, "labels", next, b, touched),
-          () => writeBuckets(newSz, stateDir, "sizes", next, b, touched),
-          () => wr(delta.newBands, s"bands/seg$next"),
-          () => wr(delta.newShingles, s"shingles/seg$next"),
-          () => foldTask.foreach(_())): _*)
-        val owners = touched.foldLeft(own)((v, k) => v.updated(k, next))
-        writeManifest(stateDir, next, newC, newCFrom, newF, b, owners,
-          stream)
-        promote(stateDir, next)
-        retire(stateDir, next, newF, man.segFrom, newCFrom, man.cFrom,
-          Some(owners), Some(own))
-        next
+    val committed = VersionedIndex.meta(stateDir).getOrElse(
+      throw new IllegalStateException("commitDelta requires an existing " +
+        "committed state (bootstrap with commitState)"))
+    val prev = layoutOf(committed)
+    val next = committed.version + 1
+    val b = prev.buckets
+    def kb(c: Column) = IncrementalDedup.docBucket(c, b).as("k")
+    // every bucket a label row can leave, enter, or appear in:
+    // remapped old cluster ids (rows leave), merged labels (rows
+    // enter), the batch's assignments. When the admission kept the
+    // frontier driver-local, this is a pure driver computation over
+    // rows already in hand (docBucketLocal — zero jobs); otherwise a
+    // frontier-sized collect, the same K-bounded driver-side index
+    // material as the band probe.
+    val touched = (delta.localRemap, delta.localAssign) match {
+      case (Some(rm), Some(as)) =>
+        (rm.flatMap { case (c, m) => Seq(c, m) } ++ as.map(_._2))
+          .map(IncrementalDedup.docBucketLocal(_, b)).distinct.sorted
+      case _ => delta.remap.select(kb(col("cluster_id")))
+        .union(delta.remap.select(kb(col("merged"))))
+        .union(delta.newAssign.select(kb(col("cluster_id"))))
+        .distinct().collect().map(_.getInt(0)).toSeq.sorted
     }
+    val tset = touched.toSet
+    val oldLab = ownedRelation(spark, stateDir, "labels", prev.owners,
+      Some(tset), LabelsDdl)
+    val newLab = oldLab.join(broadcast(delta.remap), Seq("cluster_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("merged"), col("cluster_id")).as("cluster_id"))
+      .unionByName(delta.newAssign.select("doc_id", "cluster_id"))
+    val oldSz = ownedRelation(spark, stateDir, "sizes", prev.owners,
+      Some(tset), SizesDdl)
+    val newSz = oldSz.join(broadcast(delta.remap), Seq("cluster_id"), "left")
+      .select(coalesce(col("merged"), col("cluster_id")).as("cluster_id"),
+        col("cluster_size"))
+      .unionByName(delta.newAssign.groupBy("cluster_id")
+        .agg(count(lit(1)).as("cluster_size")))
+      .groupBy("cluster_id").agg(sum("cluster_size").as("cluster_size"))
+    def wr(df: DataFrame, path: String): Unit =
+      oneTaskIfLocal(df).write.mode("overwrite").parquet(s"$stateDir/$path")
+    val (foldTask, cur) = foldPlan(spark, stateDir, next, prev, maxLiveSegments)
+    graft.Par.inParallel(Seq(
+      () => writeBuckets(newLab, stateDir, "labels", next, b, touched),
+      () => writeBuckets(newSz, stateDir, "sizes", next, b, touched),
+      () => wr(delta.newBands, s"bands/seg$next"),
+      () => wr(delta.newShingles, s"shingles/seg$next"),
+      () => foldTask.foreach(_())): _*)
+    publish(stateDir, next,
+      cur.copy(owners = touched.foldLeft(prev.owners)((v, k) => v.updated(k, next))),
+      Some(prev), stream)
   }
 
   /** Re-size the persisted layout's bucket count — the migration fold a
@@ -812,81 +710,67 @@ object DedupStream {
     * not a daily cost. */
   def migrateBuckets(spark: SparkSession, stateDir: String,
       newBuckets: Int): Long = {
-    requireLocalFs(stateDir)
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
-    val prevV = versionOf(stateDir).getOrElse(throw new IllegalStateException(
-      "migrateBuckets requires an existing committed state"))
-    val man = manifestOf(stateDir, prevV).filter(_.owners.isDefined)
-      .getOrElse(throw new IllegalStateException(
-        "migrateBuckets requires a copy-on-write state — commit once to upgrade a legacy state first"))
-    val next = prevV + 1
+    val committed = VersionedIndex.meta(stateDir).getOrElse(
+      throw new IllegalStateException(
+        "migrateBuckets requires an existing committed state"))
+    val prev = layoutOf(committed)
+    val next = committed.version + 1
     val st = loadState(spark, stateDir).get
     def dropB(df: DataFrame) = IncrementalDedup.dropBucket(df)
     val all = (0 until newBuckets).toSeq
-    inParallel(
+    graft.Par.inParallel(
       () => writeBuckets(dropB(st.labels), stateDir, "labels", next,
         newBuckets, all),
       () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next,
         newBuckets, all),
       () => compactInto(dropB(st.bands),
-        s"$stateDir/bands/base/cpart=${man.compactions}",
+        s"$stateDir/bands/base/cpart=${prev.compactions}",
         IncrementalDedup.bandBucket(col("band"), col("band_hash"), newBuckets),
         col("band_hash"), newBuckets),
       () => compactInto(dropB(st.shingles),
-        s"$stateDir/shingles/base/cpart=${man.compactions}",
+        s"$stateDir/shingles/base/cpart=${prev.compactions}",
         IncrementalDedup.docBucket(col("doc_id"), newBuckets),
         col("doc_id"), newBuckets))
-    val owners = Vector.fill(newBuckets)(next)
     // the new base is compaction [compactions, compactions+1); every
     // prior compaction and every live segment is folded in and
     // superseded (segFrom moves past this version's — empty — segment
-    // slot, which never exists: migration admits no batch)
-    // carry the streaming replay guard FORWARD: migration admits no
+    // slot, which never exists: migration admits no batch).
+    // The streaming replay guard carries FORWARD: migration admits no
     // batch, so the last admitted (checkpoint identity, batch id) must
     // survive into this manifest — dropping it would open the exact
     // at-least-once window the guard exists for (a crash between the
     // migrated commit and the streaming checkpoint would re-admit the
     // last micro-batch against its own stored copies)
-    writeManifest(stateDir, next, man.compactions + 1, man.compactions,
-      next + 1, newBuckets, owners,
-      stream = for { c <- man.streamCkptId; b <- man.streamBatchId }
-        yield (c, b),
-      migratedFrom = Some(man.buckets))
-    promote(stateDir, next)
-    retire(stateDir, next, next + 1, man.segFrom, man.compactions, man.cFrom,
-      Some(owners), man.owners)
-    next
+    publish(stateDir, next,
+      Layout(prev.compactions + 1, prev.compactions, next + 1, newBuckets,
+        Vector.fill(newBuckets)(next), migratedFrom = Some(prev.buckets)),
+      Some(prev), committed.stream)
   }
 
   /** Admit every not-yet-seen parquet drop under `docsPath` into the
-    * persisted state, exactly once per file (streaming checkpoint =
-    * bookmark, like [[graft.sources.Ingest.processNewFiles]]), blocking
-    * until the AvailableNow run drains. Batch 0 against an empty
-    * `stateDir` bootstraps with [[IncrementalDedup.initialState]];
-    * later batches take the touched-bucket [[commitDelta]] path.
+    * persisted state, exactly once per file, through the
+    * [[AdmitStream]] driver (file bookmark, replay guard, decon gate,
+    * `AvailableNow`). Batch 0 against an empty `stateDir` bootstraps
+    * with [[IncrementalDedup.initialState]]; later batches take the
+    * touched-bucket [[commitDelta]] path.
     *
     * `docsPath` goes to the file source verbatim — when each day lands
     * as its own directory (`drops/day1/`, `drops/day2/`, the landing-
     * zone shape), pass the glob `drops/&#42;`; the file source does not
     * recurse on its own. `schemaDdl` is declared (streaming sources
     * require it) — defaults to the documents fixture shape.
-    * `maxFilesPerBatch` caps files per micro-batch, so ONE stream run
-    * can replay several day drops as separate admissions — the
-    * per-admission setup cost is paid once, not per day. */
-  /** @param deconProbe optional benchmark/eval set (doc_id, text): when
+    *
+    * @param deconProbe optional benchmark/eval set (doc_id, text): when
     *   set, every micro-batch passes the STREAMING DECONTAMINATION GATE
     *   before touching persisted state — q78's broadcast cross-set
     *   kernel ([[graft.operators.SubstringDedup.contaminationSpans]]:
     *   batch windows equi-joined against the broadcast probe windows,
     *   the batch never shuffles) flags docs sharing a ≥ k-token run
-    *   with the probe; flagged docs land under
-    *   `quarantineDir/batch=$id` (full rows — the audit trail) and are
-    *   EXCLUDED from the admission, so a contaminated daily drop never
-    *   enters state (decon as an admission invariant, not a batch
-    *   afterthought). An all-contaminated drop commits nothing: the
-    *   quarantine write is per-batch `mode(overwrite)`, so the
-    *   at-least-once redelivery after a crash re-quarantines
-    *   idempotently.
+    *   with the probe; flagged docs are quarantined and EXCLUDED from
+    *   the admission, so a contaminated daily drop never enters state
+    *   (decon as an admission invariant, not a batch afterthought). An
+    *   all-contaminated drop commits nothing.
     * @param quarantineDir where flagged rows land (required with
     *   deconProbe).
     * @param splitStoreDir optional [[graft.operators.SplitPins]] store:
@@ -911,113 +795,46 @@ object DedupStream {
       deconProbe: Option[DataFrame] = None,
       quarantineDir: Option[String] = None,
       splitStoreDir: Option[String] = None): Unit = {
-    require(deconProbe.isEmpty || quarantineDir.isDefined,
-      "deconProbe needs a quarantineDir for the flagged rows")
-    val reader = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-    maxFilesPerBatch.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val drops = reader.parquet(docsPath)
-    val q = drops.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // replay guard: foreachBatch is at-least-once — a crash between
-        // the state commit and the streaming checkpoint's own commit
-        // redelivers this batch on restart; the manifest records the
-        // (checkpoint identity, batch id) pair atomically with the
-        // commit — graft.Par.ckptIdentity's Delta-recipe note — so the
-        // redelivery is skipped instead of double-admitted (the docs
-        // would otherwise re-pair with their own stored copies), while
-        // a FRESH checkpoint's restarted ids are not mistaken for one.
-        val ckptId = graft.Par.ckptIdentity(checkpointDir)
-        val already = versionOf(stateDir)
-          .flatMap(v => manifestOf(stateDir, v))
-          .exists(m => m.streamCkptId.contains(ckptId) &&
-            m.streamBatchId.exists(_ >= batchId))
-        // foreachBatch hands a streaming-backed DataFrame; the admission
-        // builds an iterative multi-action plan over it, so pin the
-        // batch to a stable local copy first
-        val rawPinned = graft.Checkpoints.pin(batch)
-        // the decon gate, ahead of every state read/write: flagged rows
-        // divert to the quarantine log, the admission sees only the
-        // clean subset (pinned again — the admission probes it several
-        // times and the anti join must not replan per consumer)
-        val pinned = deconProbe match {
-          case Some(probe) if !already && !rawPinned.isEmpty =>
-            import org.apache.spark.sql.functions.{broadcast, col}
-            // pin the flagged set once: the lineage (contaminationSpans,
-            // a shingle explode + join) would otherwise recompute for
-            // the anti-join AND the quarantine write (r19 advice)
-            val flagged = graft.Checkpoints.pin(
-              graft.operators.SubstringDedup
-                .contaminationSpans(rawPinned, probe)
-                .select(col("train_doc").as("doc_id")).distinct())
-            val clean =
-              if (flagged.isEmpty) rawPinned // nothing flagged: no
-              // quarantine dir for this batch (clean batches must not
-              // accumulate empty parquet dirs), admit the batch as-is
-              else {
-                rawPinned.join(broadcast(flagged), Seq("doc_id"))
-                  .write.mode("overwrite")
-                  .parquet(s"${quarantineDir.get}/batch=$batchId")
-                graft.Checkpoints.pin(
-                  rawPinned.join(broadcast(flagged), Seq("doc_id"),
-                    "left_anti"))
-              }
-            IncrementalDedup.freeLocalCheckpoint(flagged)
-            clean
-          case _ => rawPinned
-        }
-        if (!already && !pinned.isEmpty) {
-          // the split store's own replay guard (see the param doc):
-          // skip its commit when it already recorded this batch
-          val splitAlready = splitStoreDir.exists(sd =>
-            graft.operators.VersionedIndex.meta(sd)
-              .exists(sm => sm.streamCkptId.contains(ckptId) &&
-                sm.streamBatchId.exists(_ >= batchId)))
-          loadState(spark, stateDir) match {
-            case Some(prev) =>
-              val delta = IncrementalDedup.admitBatchDelta(prev, pinned)
-              splitStoreDir.foreach(sd => if (!splitAlready) {
-                // a split store enabled on existing dedup state starts
-                // from the committed labels. The bootstrap records no
-                // batch id, so a crash before the delta commit below
-                // redelivers into a plain admitDelta
-                if (graft.operators.VersionedIndex.currentVersion(sd).isEmpty)
-                  graft.operators.SplitPins.bootstrapStore(spark, sd,
-                    prev.labels)
-                graft.operators.SplitPins.admitDelta(spark,
-                  sd, delta.newAssign, delta.remap,
-                  maxLiveSegments = maxLiveSegments,
-                  stream = Some((ckptId, batchId)))
-              })
-              commitDelta(spark, stateDir, prev, delta,
-                maxLiveSegments = maxLiveSegments,
-                stream = Some((ckptId, batchId)))
-              // the commit is durable — release the delta's component
-              // checkpoint rather than waiting on the ContextCleaner
-              delta.release()
-            case None =>
-              val st = IncrementalDedup.initialState(pinned)
-              splitStoreDir.foreach(sd => if (!splitAlready)
-                graft.operators.SplitPins.bootstrapStore(spark,
-                  sd, st.labels, stream = Some((ckptId, batchId))))
-              commitState(st, stateDir,
-                buckets = buckets, maxLiveSegments = maxLiveSegments,
-                stream = Some((ckptId, batchId)))
-          }
-          // per-batch shingle/band memos are keyed on this batch's plan
-          // and never hit again — drop them so a long-running stream
-          // doesn't accumulate cached relations; same for the pinned
-          // micro-batch copy, whose blocks outlive the batch otherwise
-          graft.operators.Dedup.clearShingleCaches()
-        }
-        IncrementalDedup.freeLocalCheckpoint(pinned)
-        if (!(pinned eq rawPinned))
-          IncrementalDedup.freeLocalCheckpoint(rawPinned)
+    val gate = deconProbe.map(probe => (batch: DataFrame) =>
+      graft.operators.SubstringDedup.contaminationSpans(batch, probe)
+        .select(col("train_doc").as("doc_id")))
+    AdmitStream.run(spark, docsPath, schemaDdl, stateDir, checkpointDir,
+      maxFilesPerBatch, "doc_id", gate, quarantineDir) { (batch, stream) =>
+      // the split store's own replay guard (see the param doc): skip its
+      // commit when it already recorded this batch
+      val splitAlready =
+        splitStoreDir.exists(VersionedIndex.admitted(_, stream))
+      loadState(spark, stateDir) match {
+        case Some(prev) =>
+          val delta = IncrementalDedup.admitBatchDelta(prev, batch)
+          splitStoreDir.foreach(sd => if (!splitAlready) {
+            // a split store enabled on existing dedup state starts from
+            // the committed labels. The bootstrap records no batch id,
+            // so a crash before the delta commit below redelivers into a
+            // plain admitDelta
+            if (VersionedIndex.currentVersion(sd).isEmpty)
+              SplitPins.bootstrapStore(spark, sd, prev.labels)
+            SplitPins.admitDelta(spark, sd, delta.newAssign, delta.remap,
+              maxLiveSegments = maxLiveSegments, stream = Some(stream))
+          })
+          commitDelta(spark, stateDir, delta,
+            maxLiveSegments = maxLiveSegments, stream = Some(stream))
+          // the commit is durable — release the delta's component
+          // checkpoint rather than waiting on the ContextCleaner
+          delta.release()
+        case None =>
+          val st = IncrementalDedup.initialState(batch)
+          splitStoreDir.foreach(sd => if (!splitAlready)
+            SplitPins.bootstrapStore(spark, sd, st.labels,
+              stream = Some(stream)))
+          commitState(st, stateDir, buckets = buckets,
+            maxLiveSegments = maxLiveSegments, stream = Some(stream))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      // per-batch shingle/band memos are keyed on this batch's plan and
+      // never hit again — drop them so a long-running stream doesn't
+      // accumulate cached relations
+      graft.operators.Dedup.clearShingleCaches()
+    }
   }
 
   // ---- SparkEntry wiring -------------------------------------------------

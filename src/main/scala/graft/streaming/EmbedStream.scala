@@ -2,26 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.EmbeddingIncremental
 
 /** Structured-Streaming wiring for the persisted EMBEDDING dedup state
   * ([[graft.operators.EmbeddingIncremental]]) — the vector analog of
-  * [[DedupStream.admitNewDrops]]: each parquet drop of
-  * (vec_id, embedding) rows under a watched path is admitted against
-  * the store exactly once — the streaming checkpoint is the bookmark
-  * for new files (like `Ingest.processNewFiles`), and the store
-  * manifest records the admitting micro-batch id so a batch
-  * crash-redelivered by foreachBatch's at-least-once contract is
-  * skipped, not double-admitted — batch 0 bootstrapping with
-  * `initialState`/`saveState` and later batches taking the LSM
-  * `admitDrop` path (O(batch + merges) state writes, log folds on
-  * cadence).
-  *
-  * Same execution model as the text chain: `Trigger.AvailableNow`
-  * reproduces "process everything new, then stop" (the scheduled-job
-  * shape), and `maxFilesPerBatch` lets ONE stream run replay several
-  * day drops as separate admissions — stream setup is paid once. */
+  * [[DedupStream.admitNewDrops]] on the same [[AdmitStream]] driver
+  * (file bookmark, replay guard, decon gate, `AvailableNow`): batch 0
+  * bootstraps the store with `bootstrapDrop`, later batches take the
+  * LSM `admitDrop` path (O(batch + merges) state writes, log folds on
+  * cadence). */
 object EmbedStream {
 
   /** Admit every not-yet-seen parquet drop under `vecsPath` into the
@@ -54,81 +43,26 @@ object EmbedStream {
       deconProbe: Option[DataFrame] = None,
       quarantineDir: Option[String] = None,
       deconTheta: Double = 0.45): Unit = {
-    require(deconProbe.isEmpty || quarantineDir.isDefined,
-      "deconProbe needs a quarantineDir for the flagged rows")
-    val reader = spark.readStream.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "vec_id BIGINT, embedding ARRAY<FLOAT>"))
-    maxFilesPerBatch.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val drops = reader.parquet(vecsPath)
-    val q = drops.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // replay guard: foreachBatch is at-least-once — a crash between
-        // the store's commit and the STREAMING checkpoint's own commit
-        // redelivers this batch on restart, and re-admitting rows whose
-        // vec_ids the state already holds would silently violate the
-        // new-ids precondition (self-pairs, duplicate labels). The
-        // store's manifest records (checkpoint identity, batch id)
-        // atomically with the commit — the Delta txnAppId/txnVersion
-        // recipe ([[graft.Par.ckptIdentity]]): a redelivered id under
-        // the SAME checkpoint is skipped; a fresh checkpoint (ids
-        // restart at 0) is not mistaken for a replay.
-        val ckptId = graft.Par.ckptIdentity(checkpointDir)
-        val already = graft.operators.VersionedIndex.meta(stateDir).exists(m =>
-          m.streamCkptId.contains(ckptId) &&
-            m.streamBatchId.exists(_ >= batchId))
-        // foreachBatch hands a streaming-backed DataFrame; the
-        // admission builds an iterative multi-action plan over it, so
-        // pin a stable local copy first and release it once the commit
-        // is durable
-        val rawPinned = graft.Checkpoints.pin(batch)
-        // the vector decon gate, ahead of every state read/write
-        // (flagged set pinned once; no quarantine dir for clean
-        // batches — the DedupStream gate's r19-advice shape)
-        val pinned = deconProbe match {
-          case Some(probe) if !already && !rawPinned.isEmpty =>
-            val p = probe.select(col("vec_id").as("probe_id"),
-              col("embedding").as("pvec"))
-            val flagged = graft.Checkpoints.pin(
-              rawPinned.crossJoin(broadcast(p))
-                .filter(graft.functions.VectorFns.cosineSim(
-                  col("embedding"), col("pvec")) >= deconTheta)
-                .select(col("vec_id")).distinct())
-            val clean =
-              if (flagged.isEmpty) rawPinned
-              else {
-                rawPinned.join(broadcast(flagged), Seq("vec_id"))
-                  .write.mode("overwrite")
-                  .parquet(s"${quarantineDir.get}/batch=$batchId")
-                graft.Checkpoints.pin(
-                  rawPinned.join(broadcast(flagged), Seq("vec_id"),
-                    "left_anti"))
-              }
-            graft.Checkpoints.free(flagged)
-            clean
-          case _ => rawPinned
-        }
-        if (!already && !pinned.isEmpty) {
-          if (graft.operators.VersionedIndex.currentVersion(stateDir).isEmpty)
-            // bootstrapDrop ≡ saveState(initialState(...)) with the
-            // bucket-log write overlapping the cluster fixpoint
-            EmbeddingIncremental.bootstrapDrop(
-              spark, stateDir, pinned, threshold,
-              streamBatchId = Some(batchId),
-              streamCkptId = Some(ckptId))
-          else
-            EmbeddingIncremental.admitDrop(
-              spark, stateDir, pinned, threshold, maxLiveSegments,
-              streamBatchId = Some(batchId),
-              streamCkptId = Some(ckptId))
-        }
-        graft.Checkpoints.free(pinned)
-        if (!(pinned eq rawPinned)) graft.Checkpoints.free(rawPinned)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val gate = deconProbe.map { probe =>
+      val p = probe.select(col("vec_id").as("probe_id"),
+        col("embedding").as("pvec"))
+      (batch: DataFrame) => batch.crossJoin(broadcast(p))
+        .filter(graft.functions.VectorFns.cosineSim(
+          col("embedding"), col("pvec")) >= deconTheta)
+        .select(col("vec_id"))
+    }
+    AdmitStream.run(spark, vecsPath, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      stateDir, checkpointDir, maxFilesPerBatch, "vec_id", gate,
+      quarantineDir) { (batch, stream) =>
+      if (graft.operators.VersionedIndex.currentVersion(stateDir).isEmpty)
+        // bootstrapDrop ≡ saveState(initialState(...)) with the
+        // bucket-log write overlapping the cluster fixpoint
+        EmbeddingIncremental.bootstrapDrop(spark, stateDir, batch, threshold,
+          stream = Some(stream))
+      else
+        EmbeddingIncremental.admitDrop(spark, stateDir, batch, threshold,
+          maxLiveSegments, stream = Some(stream))
+    }
   }
 
   // ---- SparkEntry wiring -------------------------------------------------

@@ -724,8 +724,9 @@ class DedupSpec extends AnyFunSuite {
     // a second writer re-committing an ALREADY-PUBLISHED version must
     // fail loudly (the store is single-writer), not silently republish
     val e = intercept[IllegalStateException] {
-      VersionedIndex.commit(dir, m.version, m.trainedRows, m.totalRows,
-        m.segs, Seq("assignments"))
+      VersionedIndex.commit(dir, m.version,
+        VersionedIndex.rows(m.trainedRows, m.totalRows), m.segs,
+        Seq("assignments"))
     }
     assert(e.getMessage.contains("concurrent writer"), e.getMessage)
     // a corrupt PREVIOUS manifest must abort the next commit (strict
@@ -734,8 +735,9 @@ class DedupSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, s"v${m.version}/MANIFEST"), "{garbage")
     val e2 = intercept[IllegalStateException] {
-      VersionedIndex.commit(dir, m.version + 1, m.trainedRows,
-        m.totalRows, m.segs :+ (m.version + 1), Seq("assignments"))
+      VersionedIndex.commit(dir, m.version + 1,
+        VersionedIndex.rows(m.trainedRows, m.totalRows),
+        m.segs :+ (m.version + 1), Seq("assignments"))
     }
     assert(e2.getMessage.contains("unreadable index manifest"), e2.getMessage)
     assert(new java.io.File(dir, s"assignments/seg=${m.segs.head}").isDirectory,

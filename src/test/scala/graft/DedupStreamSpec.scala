@@ -359,7 +359,7 @@ class DedupStreamSpec extends AnyFunSuite {
     def admit(df: org.apache.spark.sql.DataFrame): Unit = {
       val prev = DedupStream.loadState(spark, state).get
       val delta = IncrementalDedup.admitBatchDelta(prev, df)
-      DedupStream.commitDelta(spark, state, prev, delta)
+      DedupStream.commitDelta(spark, state, delta)
       delta.release()
       Dedup.clearShingleCaches()
     }
@@ -407,7 +407,7 @@ class DedupStreamSpec extends AnyFunSuite {
     def admit(df: org.apache.spark.sql.DataFrame): Unit = {
       val prev = DedupStream.loadState(spark, state).get
       val delta = IncrementalDedup.admitBatchDelta(prev, df)
-      DedupStream.commitDelta(spark, state, prev, delta, maxLiveSegments = 1)
+      DedupStream.commitDelta(spark, state, delta, maxLiveSegments = 1)
       delta.release()
       Dedup.clearShingleCaches()
     }
@@ -499,44 +499,45 @@ class DedupStreamSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
-  test("a pre-manifest (legacy) state loads unbucketed and upgrades on commit") {
-    // States committed before the bucketed layout have no MANIFEST: they
-    // must read exactly as before (all segments live, no bucket column,
-    // unpruned probes), and the next commit writes a manifest that
-    // starts the bucketed lifecycle without disturbing the data.
-    val root = Files.createTempDirectory("dedup_legacy").toString
+  test("dedup commits inherit the shared guards: double-commit detected, " +
+      "corrupt manifest aborts") {
+    import graft.operators.VersionedIndex
+    val root = Files.createTempDirectory("dedup_guards").toString
     val state = s"$root/state"
-    val st0 = IncrementalDedup.initialState(day1)
-    DedupStream.commitState(st0, state) // v0 writes a manifest...
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(state, "v0", "MANIFEST")) // ...make it legacy:
-    // pre-manifest states kept labels/sizes whole under v$N/ and their
-    // bands/shingles as flat live segments (no bucketed base at all) —
-    // stage that layout and drop the copy-on-write/base dirs the new
-    // writer produced (the modern bootstrap pre-folds into base/cpart=0,
-    // which a manifest-less reader rightly ignores)
-    st0.labels.write.parquet(s"$state/v0/labels")
-    st0.sizes.write.parquet(s"$state/v0/sizes")
-    st0.bands.write.parquet(s"$state/bands/seg0")
-    st0.shingles.write.parquet(s"$state/shingles/seg0")
-    Seq("labels", "sizes", "bands/base", "shingles/base").foreach { t =>
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(s"$state/$t"))
+    DedupStream.commitState(IncrementalDedup.initialState(day1), state)
+    val d2 = IncrementalDedup.admitBatchDelta(
+      DedupStream.loadState(spark, state).get, day2)
+    DedupStream.commitDelta(spark, state, d2)
+    d2.release()
+    val m = VersionedIndex.metaOrThrow(state)
+    assert(m.version == 1 && m.segs == Vector(1L) && m.num("segFrom") == 1L,
+      s"v1 should list its one live segment: ${m.members}")
+    // a second writer re-committing the published version fails loudly
+    val e = intercept[IllegalStateException] {
+      VersionedIndex.commit(state, m.version, Seq("segFrom" -> 1L), m.segs)
     }
-    val legacy = DedupStream.loadState(spark, state).get
-    assert(legacy.buckets.isEmpty && !legacy.bands.columns.contains("bucket"))
-    val st1 = IncrementalDedup.admitBatch(legacy, day2)
-    DedupStream.commitState(st1, state,
-      newBands = Some(Dedup.lshBands(day2)),
-      newShingles = Some(Dedup.shingleSets(day2)))
-    val upgraded = DedupStream.loadState(spark, state).get
-    assert(upgraded.buckets.contains(DedupStream.StateBuckets),
-      "post-upgrade state is not bucket-aware")
-    val streamed = IncrementalDedup.labelsWithSizes(upgraded).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val batch = Dedup.duplicateClusters(day1.union(day2)).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(streamed == batch)
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    // a corrupt previous manifest aborts the next commit before anything
+    // is retired: the pointer stays put and every referenced tier survives
+    val day3 = Seq((50L, "third day singleton unshared words")).toDF("doc_id", "text")
+    val d3 = IncrementalDedup.admitBatchDelta(
+      DedupStream.loadState(spark, state).get, day3)
+    Files.writeString(java.nio.file.Paths.get(state, "v1", "MANIFEST"),
+      "{garbage")
+    val e2 = intercept[IllegalStateException] {
+      DedupStream.commitDelta(spark, state, d3)
+    }
+    d3.release()
+    assert(e2.getMessage.contains("unreadable index manifest"), e2.getMessage)
+    assert(Files.readString(java.nio.file.Paths.get(state, "CURRENT")).trim == "1")
+    val owned = m.nums("owners").zipWithIndex.flatMap { case (v, k) =>
+      Seq(s"labels/b$k/v$v", s"sizes/b$k/v$v") }
+    (Seq("bands/seg1", "shingles/seg1", "bands/base/cpart=0",
+        "shingles/base/cpart=0") ++ owned).foreach { t =>
+      assert(new java.io.File(s"$state/$t").isDirectory,
+        s"the aborted commit deleted referenced state $t")
+    }
+    Dedup.clearShingleCaches()
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
@@ -923,7 +924,7 @@ class DedupStreamSpec extends AnyFunSuite {
     val migratedAt = (1 to 4).flatMap { d =>
       val prev = DedupStream.loadState(spark, s"$root/a").get
       val delta = IncrementalDedup.admitBatchDelta(prev, day(d))
-      DedupStream.commitDelta(spark, s"$root/a", prev, delta,
+      DedupStream.commitDelta(spark, s"$root/a", delta,
         bucketBytesTarget = 1L, bucketBytesFloor = 0L)
       delta.release()
       val b = DedupStream.loadState(spark, s"$root/a").get.buckets.get
@@ -968,7 +969,7 @@ class DedupStreamSpec extends AnyFunSuite {
     (1 to 4).foreach { d =>
       val prev = DedupStream.loadState(spark, s"$root/b").get
       val delta = IncrementalDedup.admitBatchDelta(prev, day(d))
-      DedupStream.commitDelta(spark, s"$root/b", prev, delta,
+      DedupStream.commitDelta(spark, s"$root/b", delta,
         autoMigrate = false, bucketBytesTarget = 1L, bucketBytesFloor = 0L)
       delta.release()
     }
@@ -981,7 +982,7 @@ class DedupStreamSpec extends AnyFunSuite {
     (1 to 4).foreach { d =>
       val prev = DedupStream.loadState(spark, s"$root/c").get
       val delta = IncrementalDedup.admitBatchDelta(prev, day(d))
-      DedupStream.commitDelta(spark, s"$root/c", prev, delta,
+      DedupStream.commitDelta(spark, s"$root/c", delta,
         bucketBytesTarget = 1L)
       delta.release()
     }
