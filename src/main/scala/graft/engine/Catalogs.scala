@@ -28,22 +28,18 @@ object Catalogs {
 
   /** Register the processed zone as an external partitioned table and
     * recover its (year, month) Hive partitions — `MSCK REPAIR` is the
-    * crawler-run analog. Schema is discovered from the parquet footers
-    * (the crawler infers; we don't hand-declare). */
+    * crawler-run analog. The schema is the zone's declared
+    * [[graft.sources.Ingest.processedSchemaDdl]] (PipelineSpec pins it to
+    * what footer discovery reads), so registering runs no inference job. */
   def registerProcessedTable(spark: SparkSession, processedDir: String,
       db: String = CrimeDb): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    val schema = spark.read.parquet(processedDir).schema
-    val partCols = Seq("year", "month").filter(schema.fieldNames.contains)
-    val colsDdl = schema.fields
-      .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
     spark.sql(s"DROP TABLE IF EXISTS $db.processed")
-    val partClause =
-      if (partCols.isEmpty) ""
-      else partCols.mkString(" PARTITIONED BY (", ", ", ")")
-    spark.sql(s"CREATE TABLE $db.processed ($colsDdl) USING parquet" +
-      s"$partClause LOCATION '$processedDir'")
-    if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $db.processed")
+    val cols = org.apache.spark.sql.types.StructType
+      .fromDDL(graft.sources.Ingest.processedSchemaDdl).toDDL
+    spark.sql(s"CREATE TABLE $db.processed ($cols) USING parquet " +
+      s"PARTITIONED BY (year, month) LOCATION '$processedDir'")
+    spark.sql(s"MSCK REPAIR TABLE $db.processed")
   }
 
   /** Persistent-view variant of [[Pipeline.refreshViews]]: the same four

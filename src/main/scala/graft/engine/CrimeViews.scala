@@ -15,10 +15,10 @@ import org.apache.spark.sql.functions._
   *  - fixedDates:    CDK/cdk/athena_queries/fixed_dates_violent.txt
   *
   * All four views are narrow/declarative: Catalyst pushes the violent-crime
-  * filter into the parquet scan, plans partial+final hash aggregation, and
-  * broadcast-joins the two post-aggregation sides of arrestPctByCommunity
-  * (≤ ~100 communities each). Nothing here shuffles more than once per
-  * aggregation — the same plan shape survives a 100 TB input.
+  * filter into the parquet scan and plans partial+final hash aggregation.
+  * arrestPctByCommunity computes both of its counts in one aggregation, so
+  * it scans once and shuffles once. Nothing here shuffles more than once
+  * per view — the same plan shape survives a 100 TB input.
   */
 object CrimeViews {
 
@@ -49,23 +49,23 @@ object CrimeViews {
       .groupBy(concat(col("primary_type"), lit(" - "), col("description")).as("crime_type"))
       .agg(count(lit(1)).as("count"))
 
-  /** arrest_pct_by_community_VIOLENT: two aggregations over the violent view
-    * inner-joined on community_area, ratio as double, top-15 by reports
-    * (arrest_pct_by_community_VIOLENT.txt). The inner join intentionally
-    * drops zero-arrest communities (SURVEY.md §4 hazard 6); the explicit
-    * double casts avoid integer division (hazard 5). */
-  def arrestPctByCommunity(violent: DataFrame): DataFrame = {
-    val totReports = violent.groupBy("community_area")
-      .agg(count(lit(1)).as("tot_reports"))
-    val totArrests = violent.filter(col("arrest") === true)
-      .groupBy("community_area")
-      .agg(count(lit(1)).as("tot_arrests"))
-    totReports.join(totArrests, Seq("community_area"), "inner")
+  /** arrest_pct_by_community_VIOLENT: the reference inner-joins two
+    * aggregations over the violent view on community_area, ratio as
+    * double, top-15 by reports (arrest_pct_by_community_VIOLENT.txt).
+    * Here both counts come from one aggregation, and the filter keeps the
+    * join's semantics: a null key never joins, and a community without an
+    * arrest has no row on the arrest side (SURVEY.md §4 hazard 6). An
+    * `arrest = null` row counts as a report, not as an arrest. The
+    * explicit double casts avoid integer division (hazard 5). */
+  def arrestPctByCommunity(violent: DataFrame): DataFrame =
+    violent.groupBy("community_area")
+      .agg(count(lit(1)).as("tot_reports"),
+        count(when(col("arrest") === true, 1)).as("tot_arrests"))
+      .filter(col("community_area").isNotNull && col("tot_arrests") > 0)
       .withColumn("arrest_pct",
         round(col("tot_arrests").cast("double") / col("tot_reports").cast("double") * 100, 2))
       .orderBy(col("tot_reports").desc)
       .limit(15)
-  }
 
   /** fixed_dates_violent: Presto date_parse/date_format/DAY_OF_WEEK over the
     * violent view (fixed_dates_violent.txt:3-7), via the dialect helpers. */

@@ -98,12 +98,14 @@ object Pipeline {
     * through the verbatim definitions. Without a configured store
     * (embedded/library use), fall back to the paraphrased
     * [[refreshViews]] with a logged notice — that remains the
-    * library-facing API and is row-equal by CatalogSpec's assertion. */
+    * library-facing API; PipelineSpec asserts the two are row-equal,
+    * null keys and null arrests included. */
   def refreshCatalog(spark: SparkSession, processedDir: String): Unit =
     storedNamedQueries() match {
       case Some(ddls) =>
         Catalogs.refreshViewsVerbatim(spark, processedDir, ddls)
-        spark.read.parquet(processedDir).createOrReplaceTempView("processed")
+        graft.sources.Ingest.readProcessed(spark, processedDir)
+          .createOrReplaceTempView("processed")
         ViewNames.foreach(v =>
           spark.table(s"glue_crime_db.$v").createOrReplaceTempView(v))
       case None =>
@@ -116,9 +118,9 @@ object Pipeline {
   /** Register the four views over the processed zone in dependency order,
     * from the PARAPHRASED DataFrame definitions — the library-facing API
     * ([[refreshCatalog]] prefers the verbatim stored texts when present;
-    * CatalogSpec asserts the two are row-equal). */
+    * PipelineSpec asserts the two are row-equal). */
   def refreshViews(spark: SparkSession, processedDir: String): Unit = {
-    val processed = spark.read.parquet(processedDir)
+    val processed = graft.sources.Ingest.readProcessed(spark, processedDir)
     processed.createOrReplaceTempView("processed")
     val violent = CrimeViews.violentCrimes(processed)
     violent.createOrReplaceTempView("dependency1_violent_crimes")
@@ -131,42 +133,4 @@ object Pipeline {
   }
 
   def view(spark: SparkSession, name: String): DataFrame = spark.table(name)
-
-  /** Alternative SQL-path refresh: execute Athena-dialect view DDL (the
-    * form the reference stores its NamedQueries in) through
-    * [[PrestoSql.executeView]], in dependency order. Semantically equal to
-    * [[refreshViews]] (asserted in PipelineSpec); demonstrates the E3
-    * contract — run dialect DDL text against the processed zone. */
-  def refreshViewsSql(spark: SparkSession, processedDir: String): Unit = {
-    spark.read.parquet(processedDir).createOrReplaceTempView("processed")
-    Seq(
-      """CREATE OR REPLACE TEMP VIEW dependency1_violent_crimes AS
-        |SELECT * FROM processed
-        |WHERE (primary_type = 'ROBBERY' AND description LIKE '%ARMED%')
-        |   OR primary_type = 'ASSAULT' OR primary_type = 'BATTERY'
-        |   OR primary_type = 'HOMICIDE'
-        |   OR primary_type = 'CRIMINAL SEXUAL ASSAULT'""".stripMargin,
-      """CREATE OR REPLACE TEMP VIEW count_by_crime_type AS
-        |SELECT primary_type || ' - ' || description AS crime_type,
-        |       COUNT(*) AS "count"
-        |FROM processed GROUP BY primary_type || ' - ' || description""".stripMargin,
-      """CREATE OR REPLACE TEMP VIEW arrest_pct_by_community_violent AS
-        |SELECT tr.community_area, tot_reports, tot_arrests,
-        |       ROUND(CAST(tot_arrests AS DOUBLE) / CAST(tot_reports AS DOUBLE) * 100, 2) AS arrest_pct
-        |FROM (SELECT community_area, COUNT(*) AS tot_reports
-        |      FROM dependency1_violent_crimes GROUP BY community_area) tr
-        |INNER JOIN
-        |     (SELECT community_area, COUNT(*) AS tot_arrests
-        |      FROM dependency1_violent_crimes WHERE arrest = true
-        |      GROUP BY community_area) ta
-        |  ON tr.community_area = ta.community_area
-        |ORDER BY tot_reports DESC LIMIT 15""".stripMargin,
-      """CREATE OR REPLACE TEMP VIEW fixed_dates_violent AS
-        |SELECT *,
-        |       date_parse(date, '%m/%d/%Y %T %p') AS date_timestamp,
-        |       date_format(date_parse(date, '%m/%d/%Y %T %p'), '%W') AS day_of_week,
-        |       DAY_OF_WEEK(date_parse(date, '%m/%d/%Y %T %p')) AS day_of_week_num
-        |FROM dependency1_violent_crimes""".stripMargin,
-    ).foreach(PrestoSql.executeView(spark, _))
-  }
 }

@@ -279,15 +279,9 @@ object EmbeddingIncremental {
     * CURRENT root. Size is bounded by cumulative merge events (plus the
     * batch's bridged new ids), not by the corpus — merges only happen
     * when new data connects existing clusters. */
-  private def remapOf(spark: SparkSession, dir: String, v: Long): DataFrame = {
-    val p = s"$dir/v$v/remap"
-    if (!new java.io.File(p).isDirectory) throw new IllegalStateException(
-      s"$dir/v$v has no remap relation — this store predates the " +
-        "labels-log layout; migrate by rebuilding into a FRESH directory " +
-        "(initialState over the corpus, then saveState there)")
+  private def remapOf(spark: SparkSession, dir: String, v: Long): DataFrame =
     spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(RemapDdl))
-      .parquet(p)
-  }
+      .parquet(s"$dir/v$v/remap")
 
   /** Labels as of the committed version: the append-only label log
     * (base fold + one O(batch) segment per admission) repaired through
@@ -416,11 +410,6 @@ object EmbeddingIncremental {
 
   private def stateAt(spark: SparkSession, dir: String,
       m: VersionedIndex.Meta): EmbedDedupState = {
-    if (!new java.io.File(dir, "labels").isDirectory)
-      throw new IllegalStateException(
-        s"$dir has no labels log — this store predates the labels-log " +
-          "layout; migrate by rebuilding into a FRESH directory " +
-          "(initialState over the corpus, then saveState there)")
     val labels = labelsOf(spark, dir, m, remapOf(spark, dir, m.version))
     EmbedDedupState(
       labels = labels,

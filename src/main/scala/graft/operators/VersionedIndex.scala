@@ -73,6 +73,8 @@ private[graft] object VersionedIndex {
     def trainedRows: Long = num("trainedRows")
     def totalRows: Long = num("totalRows")
     def retainVersions: Option[Int] = members.get("retain").map(_.toInt)
+    def buildId: String = members.get("buildId")
+      .map(_.stripPrefix("\"").stripSuffix("\"")).getOrElse(unreadable("buildId"))
 
     /** The streaming replay guard: the (checkpoint identity, micro-batch
       * id) that produced this version. A crash between this commit and
@@ -336,26 +338,20 @@ private[graft] object VersionedIndex {
     * dir deleted and rebuilt from a different corpus restarts at the
     * same version number, and a pure (dir, version) key would serve the
     * old centroids against the new assignments — silent recall
-    * collapse, no error. The buildId is a fresh UUID per commit (mtime,
-    * the previous identity, aliases under 1s-granularity filesystems);
-    * manifests from older builds without the field fall back to mtime.
+    * collapse, no error. The buildId is a fresh UUID per commit (mtime
+    * aliases under 1s-granularity filesystems); a manifest without one
+    * fails as unreadable, like one without `segs`.
     *
     * The manifest is a <200-byte file re-read on every call —
     * deliberate: identity must be re-validated per call or the
     * same-tick rebuild aliasing returns through a cached id, and a
-    * small-file read is the same one-round-trip cost class as the
-    * lastModified stat it replaced (this cache's job is eliminating
-    * the K-row Spark read, not the manifest peek). */
+    * small-file read is the same one-round-trip cost class as a stat
+    * (this cache's job is eliminating the K-row Spark read, not the
+    * manifest peek). */
   private def modelKey(indexDir: String, version: Long,
-      name: String): (String, Long, String) = {
-    val mf = new java.io.File(indexDir, s"v$version/MANIFEST")
-    val id = (try {
-      val txt = java.nio.file.Files.readString(mf.toPath)
-      """"buildId":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    } catch { case _: Exception => None })
-      .getOrElse(mf.lastModified.toString)
-    (new java.io.File(indexDir).getCanonicalPath, version, s"$name@$id")
-  }
+      name: String): (String, Long, String) =
+    (new java.io.File(indexDir).getCanonicalPath, version,
+      s"$name@${metaAt(indexDir, version).buildId}")
 
   def cachedModel[A <: AnyRef](indexDir: String, version: Long, name: String)(
       load: => A): A = {

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.time.LocalDate
 
@@ -19,10 +20,12 @@ import java.time.LocalDate
   *
   *  - [[processNewFiles]] ≈ the Glue job with `--job-bookmark-option:
   *    job-bookmark-enable` (CDK/cdk/cdk_stack.py:165): a Structured
-  *    Streaming CSV file source with checkpoint + Trigger.AvailableNow
-  *    gives exactly-once-per-file processing across restarts — the Spark-
-  *    native bookmark. Output is the processed zone: parquet partitioned
-  *    by (year, month) like Glue Script/process_crime_data.py:32-37.
+  *    Streaming CSV file source with checkpoint + Trigger.AvailableNow is
+  *    the Spark-native bookmark. Output is the processed zone: parquet
+  *    partitioned by (year, month) like Glue Script/process_crime_data.py:32-37.
+  *    Each micro-batch is staged under `_staging/` and its files then
+  *    moved into the zone, so a batch that Spark replays after a crash
+  *    lands its rows exactly once ([[processNewFiles]]).
   */
 object Ingest {
 
@@ -136,22 +139,52 @@ object Ingest {
       "community_area bigint, year bigint, updated_on string, " +
       "latitude double, longitude double"
 
+  /** The processed zone's schema as `spark.read.parquet` discovers it:
+    * the CSV columns without `year`, the [[graft.engine.CrimeViews.enrich]]
+    * columns without `month`, then the two partition columns typed as
+    * partition discovery types them. Readers declare it, so a refresh
+    * runs no footer-inference job. */
+  val processedSchemaDdl: String =
+    "id bigint, case_number string, date string, primary_type string, " +
+      "description string, arrest boolean, domestic boolean, " +
+      "community_area bigint, updated_on string, latitude double, " +
+      "longitude double, new_date date, day int, year int, month int"
+
+  /** The processed zone as a DataFrame, read with [[processedSchemaDdl]]. */
+  def readProcessed(spark: SparkSession, processedDir: String): DataFrame =
+    spark.read.schema(StructType.fromDDL(processedSchemaDdl)).parquet(processedDir)
+
   /** Process all not-yet-seen CSVs in `landingDir` into the partitioned
     * processed zone, exactly once per file (checkpoint = bookmark). Blocks
-    * until the AvailableNow run drains. Returns count of batches run. */
+    * until the AvailableNow run drains.
+    *
+    * A batch read from more than one input split (a backfill, or several
+    * landed days) is clustered on (year, month) first, so it writes one
+    * file per touched partition instead of one per split and partition.
+    * A one-split batch (a daily delta) already writes one file per
+    * touched partition and is written as it is.
+    *
+    * Spark replays a micro-batch whose commit-log entry is missing, so a
+    * crash between the write and that entry would append the batch twice.
+    * The write therefore goes through a stage: batch N of the query with
+    * checkpoint identity Q is written to `processedDir/_staging/Q-N` (the
+    * leading `_` hides it from `spark.read.parquet` and `MSCK REPAIR`),
+    * and its data files are then moved into their partition dirs with
+    * `FileSystem.rename`. A replayed
+    * batch whose stage holds `_SUCCESS` skips the write and moves only
+    * the files not yet moved; a stage without `_SUCCESS` is a crashed
+    * write and is written again. After the move the stage keeps only its
+    * `_SUCCESS` marker, and every other batch's stage is deleted. */
   def processNewFiles(spark: SparkSession, landingDir: String,
       processedDir: String, checkpointDir: String): Unit = {
     val raw = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(crimeSchemaDdl))
+      .schema(StructType.fromDDL(crimeSchemaDdl))
       .option("header", "true")
       .csv(landingDir)
     val enriched = graft.engine.CrimeViews.enrich(raw)
     val q = enriched.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append")
-          .partitionBy("year", "month")
-          .option("compression", "uncompressed") // process_crime_data.py:37
-          .parquet(processedDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        publishBatch(batch, batchId, processedDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -159,9 +192,51 @@ object Ingest {
     q.awaitTermination()
   }
 
-  // ---- crawler-style schema inference (SURVEY.md §2.1 S1) ----------------
+  private def publishBatch(batch: DataFrame, batchId: Long,
+      processedDir: String): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.spark.sql.functions.col
+    val zone = new HPath(processedDir)
+    val fs = zone.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new HPath(zone, "_staging")
+    // keyed by the query's checkpoint identity too: a zone reused with a
+    // fresh checkpoint restarts at batch 0 and must not find the old
+    // checkpoint's stage of the same number
+    val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+    val stage = new HPath(staging, s"$query-$batchId")
+    val success = new HPath(stage, "_SUCCESS")
+    if (!fs.exists(success)) {
+      fs.delete(stage, true)
+      // as many clustered tasks as input splits: streaming runs without
+      // AQE, so the session's shuffle partition count would not coalesce
+      val splits = batch.rdd.getNumPartitions
+      val clustered =
+        if (splits > 1) batch.repartition(splits, col("year"), col("month"))
+        else batch
+      clustered.write
+        .partitionBy("year", "month")
+        .option("compression", "uncompressed") // process_crime_data.py:37
+        .parquet(stage.toString)
+    }
+    def publish(from: HPath, to: HPath): Unit =
+      fs.listStatus(from).foreach { st =>
+        val name = st.getPath.getName
+        val dest = new HPath(to, name)
+        if (st.isDirectory) {
+          fs.mkdirs(dest)
+          publish(st.getPath, dest)
+          fs.delete(st.getPath, true)
+        } else if (!name.startsWith("_") && !name.startsWith(".") &&
+            !fs.exists(dest) && !fs.rename(st.getPath, dest))
+          throw new java.io.IOException(s"could not move ${st.getPath} to $dest")
+      }
+    publish(stage, zone)
+    fs.listStatus(staging).map(_.getPath)
+      .filter(_.getName != stage.getName)
+      .foreach(fs.delete(_, true))
+  }
 
-  import org.apache.spark.sql.types._
+  // ---- crawler-style schema inference (SURVEY.md §2.1 S1) ----------------
 
   private val integralLadder: Seq[DataType] =
     Seq(ByteType, ShortType, IntegerType, LongType)

@@ -101,6 +101,22 @@ class CrimeViewsSpec extends AnyFunSuite {
     assert(!out.contains(3L) && !out.contains(99L))
   }
 
+  test("arrest_pct: a null community_area never joins; a null arrest is no arrest") {
+    val withNulls = crimes.union(
+      Seq[(Long, String, String, String, Option[Boolean], Option[Long])](
+        (9L, "01/05/2021 01:00:00 AM", "BATTERY", "SIMPLE", Some(true), None),
+        (10L, "01/06/2021 01:00:00 AM", "ASSAULT", "SIMPLE", None, Some(7L)))
+        .toDF("id", "date", "primary_type", "description", "arrest", "community_area"))
+    val out = CrimeViews.arrestPctByCommunity(CrimeViews.violentCrimes(withNulls))
+      .collect()
+    assert(out.forall(!_.isNullAt(0)), "the null-community violent row must drop")
+    val byCa = out.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
+    // community 7: violent {3, 5, 10}, arrests {5}; id 10's null arrest
+    // is a report, not an arrest
+    assert(byCa(7L) == ((3L, 1L, 33.33)))
+    assert(byCa(25L) == ((2L, 2L, 100.0)))
+  }
+
   test("presto pattern translation map") {
     assert(PrestoCompat.prestoPatternToJava("%m/%d/%Y %T %p") == "MM/dd/yyyy HH:mm:ss a")
     assert(PrestoCompat.prestoPatternToJava("%W") == "EEEE")

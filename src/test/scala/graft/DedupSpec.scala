@@ -752,6 +752,13 @@ class DedupSpec extends AnyFunSuite {
     def dirOf(i: Int) = s"$root/ix$i"
     def load(i: Int, tag: String): String =
       VersionedIndex.cachedModel(dirOf(i), 0, "m")(s"$tag$i")
+    // a cached model belongs to a committed version, whose manifest
+    // carries the buildId the key is made of
+    (0 until cap + 8).foreach { i =>
+      val v0 = new java.io.File(dirOf(i), "v0"); v0.mkdirs()
+      java.nio.file.Files.writeString(new java.io.File(v0, "MANIFEST").toPath,
+        s"""{"buildId":"ix$i","segs":[0]}""")
+    }
     // fill to capacity, then touch entry 0 (access order!) and overflow
     (0 until cap).foreach(i => assert(load(i, "a") == s"a$i"))
     assert(load(0, "IGNORED") == "a0", "warm hit must not re-load")
@@ -775,6 +782,12 @@ class DedupSpec extends AnyFunSuite {
     mf.toFile.setLastModified(t0) // same tick — mtime would alias
     assert(VersionedIndex.cachedModel(s"$root/ident", 0, "m")("new") == "new",
       "rebuild with a new buildId must not be served the old model")
+    // a manifest without a buildId has no identity to key on: unreadable,
+    // never an mtime fallback
+    java.nio.file.Files.writeString(mf, """{"trainedRows":1,"totalRows":1,"segs":[0]}""")
+    val noId = intercept[IllegalStateException](
+      VersionedIndex.cachedModel(s"$root/ident", 0, "m")("mtime"))
+    assert(noId.getMessage.contains("unreadable index manifest"), noId.getMessage)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 

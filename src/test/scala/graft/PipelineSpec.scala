@@ -75,14 +75,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(fixed.contains((1L, "Tuesday", 2L)))
   }
 
-  test("pipeline default refresh executes the stored NamedQuery texts (E3 verbatim)") {
-    // Store-PRESENT path, with the store as explicit configuration (no
-    // baked-in path): the spec provisions its own NamedQuery directory —
-    // Athena-dialect texts whose arrest view orders tot_arrests BEFORE
-    // tot_reports, the fingerprint distinguishing the stored text from
-    // the paraphrased refreshViews (which orders tot_reports first) —
-    // and points graft.namedquery.dir at it. (CatalogSpec separately
-    // runs the reference tree's actual texts byte-for-byte when mounted.)
+  /** The spec's own NamedQuery store: Athena-dialect texts of the four
+    * views, with the arrest view in the reference's join shape. */
+  def namedQueryStore(): java.nio.file.Path = {
     val store = java.nio.file.Files.createTempDirectory("nq_store")
     def put(name: String, ddl: String): Unit =
       java.nio.file.Files.writeString(store.resolve(name), ddl)
@@ -120,6 +115,18 @@ class PipelineSpec extends AnyFunSuite {
         |  DAY_OF_WEEK("date_timestamp") AS day_of_week_num, *
         |FROM (SELECT date_parse("date", '%m/%d/%Y %T %p') AS date_timestamp, *
         |      FROM "glue_crime_db"."dependency1_violent_crimes")""".stripMargin)
+    store
+  }
+
+  test("pipeline default refresh executes the stored NamedQuery texts (E3 verbatim)") {
+    // Store-PRESENT path, with the store as explicit configuration (no
+    // baked-in path): the spec provisions its own NamedQuery directory —
+    // Athena-dialect texts whose arrest view orders tot_arrests BEFORE
+    // tot_reports, the fingerprint distinguishing the stored text from
+    // the paraphrased refreshViews (which orders tot_reports first) —
+    // and points graft.namedquery.dir at it. (CatalogSpec separately
+    // runs the reference tree's actual texts byte-for-byte when mounted.)
+    val store = namedQueryStore()
     sys.props("graft.namedquery.dir") = store.toString
     try {
       assert(Pipeline.storedNamedQueries().isDefined)
@@ -169,22 +176,120 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("SQL-path view refresh (Presto dialect DDL) equals the DataFrame path") {
+    // refreshCatalog runs the spec's Athena-dialect texts through
+    // PrestoSql, with arrest_pct as the reference's inner join of two
+    // aggregations; the DataFrame path computes it in one aggregation.
+    // Two extra violent rows: one with a null community_area (a null key
+    // never joins) and one with a null arrest (a report, not an arrest).
+    val nulls = Seq[(Long, String, String, String, Option[Boolean], Option[Long], Long, String)](
+      (5L, "07/03/2021 09:00:00 PM", "BATTERY", "SIMPLE", Some(true), None, 2021L, "2021-07-04 01:00:00"),
+      (6L, "07/03/2021 10:00:00 PM", "ASSAULT", "SIMPLE", None, Some(7L), 2021L, "2021-07-04 01:00:00"),
+    ).toDF("id", "date", "primary_type", "description", "arrest",
+        "community_area", "year", "updated_on")
+      .withColumn("case_number", concat(lit("JE"), col("id")))
+      .withColumn("domestic", lit(false))
+      .withColumn("latitude", lit(41.88))
+      .withColumn("longitude", lit(-87.63))
     val dirs = freshDirs()
-    Pipeline.run(spark, srcRows("2021-07-31"), dirs,
-      since = "2021-01-01", fileDate = LocalDate.parse("2021-07-03"))
+    Pipeline.run(spark, srcRows("2021-07-31").unionByName(nulls), dirs,
+      since = "2021-01-01", fileDate = LocalDate.parse("2021-07-04"))
     def snapshot(): Map[String, Seq[String]] =
-      Seq("dependency1_violent_crimes", "count_by_crime_type",
-        "arrest_pct_by_community_violent", "fixed_dates_violent").map { v =>
+      Pipeline.ViewNames.map { v =>
         val df = Pipeline.view(spark, v)
         // sorted multiset, not a Set: a duplicated/dropped row must fail
-        v -> df.select(df.columns.sorted.map(col): _*)
+        v -> df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
           .collect().map(_.toString).toSeq.sorted
       }.toMap
     Pipeline.refreshViews(spark, dirs.processed)
     val dataframePath = snapshot()
-    Pipeline.refreshViewsSql(spark, dirs.processed)
+    sys.props("graft.namedquery.dir") = namedQueryStore().toString
+    try Pipeline.refreshCatalog(spark, dirs.processed)
+    finally sys.props -= "graft.namedquery.dir"
     val sqlPath = snapshot()
     assert(dataframePath == sqlPath)
+    val pct = Pipeline.view(spark, "arrest_pct_by_community_violent")
+      .select("community_area", "tot_reports", "tot_arrests").collect()
+    assert(pct.forall(!_.isNullAt(0)), "a null community_area never joins")
+    assert(pct.find(_.getLong(0) == 7L).map(r => (r.getLong(1), r.getLong(2)))
+      .contains((3L, 1L)), "the null-arrest row is a report, not an arrest")
+  }
+
+  test("declared processed schema equals what discovery reads from the zone") {
+    val dirs = freshDirs()
+    Ingest.fetchRecent(srcRows("2021-07-31"), since = "2021-01-01",
+      dirs.landing, LocalDate.parse("2021-07-03"))
+    Ingest.processNewFiles(spark, dirs.landing, dirs.processed, dirs.checkpoint)
+    assert(org.apache.spark.sql.types.StructType.fromDDL(Ingest.processedSchemaDdl) ==
+      spark.read.parquet(dirs.processed).schema)
+  }
+
+  def parquetFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val walk = Files.walk(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+    } finally walk.close()
+  }
+
+  test("two CSVs processed in one batch write one file per (year, month)") {
+    val dirs = freshDirs()
+    // both days carry June and July rows; each CSV is its own input split
+    for (d <- Seq("2021-07-03", "2021-07-04"))
+      Ingest.fetchRecent(srcRows("2021-07-31"), since = "2021-01-01",
+        dirs.landing, LocalDate.parse(d))
+    Ingest.processNewFiles(spark, dirs.landing, dirs.processed, dirs.checkpoint)
+    assert(spark.read.parquet(dirs.processed).count() == 8)
+    val perPartition = parquetFiles(Paths.get(dirs.processed))
+      .groupBy(_.getParent).map { case (p, fs) => p.getFileName.toString -> fs.size }
+    assert(perPartition.keySet == Set("month=6", "month=7"), perPartition)
+    assert(perPartition.values.forall(_ == 1), s"files per partition: $perPartition")
+  }
+
+  test("a replayed micro-batch lands its rows exactly once") {
+    val dirs = freshDirs()
+    def ids(): Seq[Long] =
+      spark.read.parquet(dirs.processed).select("id").as[Long].collect().sorted.toSeq
+    def process(): Unit =
+      Ingest.processNewFiles(spark, dirs.landing, dirs.processed, dirs.checkpoint)
+    Ingest.fetchRecent(srcRows("2021-06-30"), since = "2021-01-01",
+      dirs.landing, LocalDate.parse("2021-06-16"))
+    process() // batch 0
+    val day2 = Ingest.fetchRecent(srcRows("2021-07-31"), since = "2021-06-30",
+      dirs.landing, LocalDate.parse("2021-07-03")).get
+    // a crash after batch 1 was staged, before its files moved into the
+    // zone and before its commit-log entry: the stage holds the batch
+    val query = """"id":"([^"]+)"""".r
+      .findFirstMatchIn(Files.readString(Paths.get(dirs.checkpoint, "metadata")))
+      .get.group(1)
+    graft.engine.CrimeViews.enrich(spark.read
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(Ingest.crimeSchemaDdl))
+        .option("header", "true").csv(day2.toString))
+      .write.partitionBy("year", "month").option("compression", "uncompressed")
+      .parquet(s"${dirs.processed}/_staging/$query-1")
+    assert(ids() == Seq(1L, 2L), "a stage is not part of the zone")
+    process() // batch 1 finds its stage and publishes it without a write
+    assert(ids() == Seq(1L, 2L, 3L, 4L))
+    // a crash after the move, before the commit-log entry: Spark replays
+    // batch 1
+    Seq("1", ".1.crc").foreach(f =>
+      Files.deleteIfExists(Paths.get(dirs.checkpoint, "commits", f)))
+    process()
+    assert(ids() == Seq(1L, 2L, 3L, 4L), "the replay appended the batch again")
+    val staging = Paths.get(dirs.processed, "_staging")
+    assert(staging.toFile.list().toSeq == Seq(s"$query-1"), "earlier stages are deleted")
+    assert(parquetFiles(staging).isEmpty, "published files left in the stage")
+  }
+
+  test("a fresh checkpoint over a reused zone lands its first batch") {
+    // the kept stage of the old checkpoint's batch 0 must not pass for
+    // the new checkpoint's batch 0; the reset bookmark reprocesses every
+    // landed file, so the rows double (reference bookmark-reset semantics)
+    val dirs = freshDirs()
+    Ingest.fetchRecent(srcRows("2021-07-31"), since = "2021-01-01",
+      dirs.landing, LocalDate.parse("2021-07-03"))
+    Ingest.processNewFiles(spark, dirs.landing, dirs.processed, dirs.checkpoint)
+    Ingest.processNewFiles(spark, dirs.landing, dirs.processed, s"${dirs.checkpoint}-reset")
+    assert(spark.read.parquet(dirs.processed).count() == 8)
   }
 
   test("ingest guard: header-only extract is not written") {
