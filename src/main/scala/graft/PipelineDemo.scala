@@ -46,7 +46,8 @@ object PipelineDemo {
       since = "2021-06-30", fileDate = LocalDate.parse("2021-07-03"))
     println(s"   processed rows: ${spark.read.parquet(dirs.processed).count()}")
     println("   partitions: " + new java.io.File(dirs.processed).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.mkString(", "))
+      .filter(_.isDirectory).map(_.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted.mkString(", "))
 
     println("== views (dependency order)")
     Pipeline.view(spark, "dependency1_violent_crimes")

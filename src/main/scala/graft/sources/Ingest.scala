@@ -167,7 +167,8 @@ object Ingest {
     * Spark replays a micro-batch whose commit-log entry is missing, so a
     * crash between the write and that entry would append the batch twice.
     * The write therefore goes through a stage: batch N of the query with
-    * checkpoint identity Q is written to `processedDir/_staging/Q-N` (the
+    * checkpoint identity Q ([[graft.Par.ckptIdentity]]) is written to
+    * `processedDir/_staging/Q-N` (the
     * leading `_` hides it from `spark.read.parquet` and `MSCK REPAIR`),
     * and its data files are then moved into their partition dirs with
     * `FileSystem.rename`. A replayed
@@ -184,7 +185,8 @@ object Ingest {
     val enriched = graft.engine.CrimeViews.enrich(raw)
     val q = enriched.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publishBatch(batch, batchId, processedDir)
+        publishBatch(batch, s"${graft.Par.ckptIdentity(checkpointDir)}-$batchId",
+          processedDir)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -192,18 +194,17 @@ object Ingest {
     q.awaitTermination()
   }
 
-  private def publishBatch(batch: DataFrame, batchId: Long,
+  private def publishBatch(batch: DataFrame, stageName: String,
       processedDir: String): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     import org.apache.spark.sql.functions.col
     val zone = new HPath(processedDir)
     val fs = zone.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
     val staging = new HPath(zone, "_staging")
-    // keyed by the query's checkpoint identity too: a zone reused with a
-    // fresh checkpoint restarts at batch 0 and must not find the old
+    // keyed by the checkpoint identity too: a zone reused with a fresh
+    // checkpoint restarts at batch 0 and must not find the old
     // checkpoint's stage of the same number
-    val query = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
-    val stage = new HPath(staging, s"$query-$batchId")
+    val stage = new HPath(staging, stageName)
     val success = new HPath(stage, "_SUCCESS")
     if (!fs.exists(success)) {
       fs.delete(stage, true)

@@ -258,9 +258,7 @@ class PipelineSpec extends AnyFunSuite {
       dirs.landing, LocalDate.parse("2021-07-03")).get
     // a crash after batch 1 was staged, before its files moved into the
     // zone and before its commit-log entry: the stage holds the batch
-    val query = """"id":"([^"]+)"""".r
-      .findFirstMatchIn(Files.readString(Paths.get(dirs.checkpoint, "metadata")))
-      .get.group(1)
+    val query = graft.Par.ckptIdentity(dirs.checkpoint)
     graft.engine.CrimeViews.enrich(spark.read
         .schema(org.apache.spark.sql.types.StructType.fromDDL(Ingest.crimeSchemaDdl))
         .option("header", "true").csv(day2.toString))
