@@ -1,7 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.time.LocalDate
+import scala.jdk.CollectionConverters._
 
 /** The end-to-end pipeline driver — the reference's event-driven
   * orchestration collapsed into ordinary control flow (SURVEY.md §3):
@@ -118,18 +120,79 @@ object Pipeline {
   /** Register the four views over the processed zone in dependency order,
     * from the PARAPHRASED DataFrame definitions — the library-facing API
     * ([[refreshCatalog]] prefers the verbatim stored texts when present;
-    * PipelineSpec asserts the two are row-equal). */
+    * PipelineSpec asserts the two are row-equal).
+    *
+    * The two row-level views are O(history) DataFrames over the zone, as
+    * in Athena. The two aggregate views are served from counts kept per
+    * (session, zone): the zone only gains files, so a refresh lists it
+    * ([[graft.FileSet]]), aggregates only the files its counts do not
+    * cover yet, in one aggregation, and adds the collected rows (one per
+    * key, not per input row) to the counts. count_by_crime_type
+    * and [[CrimeViews.topArrestPct]] of the summed community counts are
+    * then registered over local relations. A refresh that finds no new
+    * file runs no Spark job. A covered file that is gone or changed drops
+    * the counts, and the refresh counts the whole zone again, as the first
+    * refresh of a session does. Nothing is written under `processedDir`;
+    * PipelineSpec asserts the kept views equal the full-scan
+    * [[CrimeViews]] functions after every day. */
   def refreshViews(spark: SparkSession, processedDir: String): Unit = {
     val processed = graft.sources.Ingest.readProcessed(spark, processedDir)
     processed.createOrReplaceTempView("processed")
     val violent = CrimeViews.violentCrimes(processed)
     violent.createOrReplaceTempView("dependency1_violent_crimes")
-    CrimeViews.countByCrimeType(processed)
+    val counts = zoneCounts(spark, processedDir)
+    spark.createDataFrame(counts.crimeTypes.map { case (t, n) => Row(t.orNull, n) }.toSeq.asJava,
+        CrimeViews.countByCrimeType(processed).schema)
       .createOrReplaceTempView("count_by_crime_type")
-    CrimeViews.arrestPctByCommunity(violent)
+    CrimeViews.topArrestPct(spark.createDataFrame(counts.communities.map {
+        case (c, (reports, arrests)) => Row(c.map(Long.box).orNull, reports, arrests)
+      }.toSeq.asJava, CrimeViews.communityCounts(violent).schema))
       .createOrReplaceTempView("arrest_pct_by_community_violent")
     CrimeViews.fixedDates(violent)
       .createOrReplaceTempView("fixed_dates_violent")
+  }
+
+  /** The aggregate views' counts over `files` of one zone: rows per crime
+    * type, and (reports, arrests) per community_area of the violent rows;
+    * a null key is a group of its own. */
+  private final case class ZoneCounts(files: Set[graft.FileSet.File],
+      crimeTypes: Map[Option[String], Long],
+      communities: Map[Option[Long], (Long, Long)])
+
+  private val kept = new java.util.WeakHashMap[SparkSession, Map[String, ZoneCounts]]()
+
+  /** The counts over every file now in the zone: the kept counts plus one
+    * aggregation over the files they do not cover, grouped by crime type,
+    * violence and (for violent rows) community. */
+  private def zoneCounts(spark: SparkSession, processedDir: String): ZoneCounts = {
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    val zone = graft.FileSet.list(spark, processedDir)
+    val listed = zone.files.toSet
+    val prev = kept.synchronized(Option(kept.get(spark)).flatMap(_.get(zone.root)))
+      .filter(_.files.subsetOf(listed))
+      .getOrElse(ZoneCounts(Set.empty, Map.empty, Map.empty))
+    val fresh = zone.files.filterNot(prev.files)
+    if (fresh.isEmpty) return prev
+    val rows = spark.read.schema(StructType.fromDDL(graft.sources.Ingest.processedSchemaDdl))
+      .option("basePath", zone.root).parquet(fresh.map(f => s"${zone.root}/${f.path}"): _*)
+      .groupBy(CrimeViews.CrimeType, CrimeViews.Violent,
+        when(CrimeViews.Violent, col("community_area")))
+      .agg(count(lit(1)), count(when(col("arrest") === true, 1))).collect()
+    val crimeTypes = collection.mutable.Map(prev.crimeTypes.toSeq: _*)
+    val communities = collection.mutable.Map(prev.communities.toSeq: _*)
+    for (r <- rows; n = r.getLong(3)) {
+      val t = Option(r.getString(0))
+      crimeTypes(t) = crimeTypes.getOrElse(t, 0L) + n
+      if (!r.isNullAt(1) && r.getBoolean(1)) {
+        val c = if (r.isNullAt(2)) None else Some(r.getLong(2))
+        val (reports, arrests) = communities.getOrElse(c, (0L, 0L))
+        communities(c) = (reports + n, arrests + r.getLong(4))
+      }
+    }
+    val counts = ZoneCounts(listed, crimeTypes.toMap, communities.toMap)
+    kept.synchronized(kept.put(spark,
+      Option(kept.get(spark)).getOrElse(Map.empty).updated(zone.root, counts)))
+    counts
   }
 
   def view(spark: SparkSession, name: String): DataFrame = spark.table(name)

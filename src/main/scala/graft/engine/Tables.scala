@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table access. All SparkEntry queries read the driver-generated
   * parquet star schema (TESTDATA.md): one file per table under `sfDir`.
@@ -11,8 +12,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * filters into the scan either way).
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Loads `name` with its schema declared when this file set was read
+    * before under the same parquet read confs, which skips the
+    * footer-inference job `spark.read.parquet` would run on every load;
+    * a rewritten table lists a different file set and is inferred again. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (graft.FileSet.list(spark, path), ReadConfs.map(spark.conf.getOption))
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
+
+  /** The session confs that change what footer inference returns. */
+  private val ReadConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema")
+
+  /** Inferred schemas by (file set, read confs), the 256 most recent. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[AnyRef, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, StructType]) = size() > 256
+    })
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -46,13 +46,16 @@ object Dedup {
     * entries outlived the whole 33-query run. The memo persists each
     * distinct input exactly once; [[clearShingleCaches]] releases them.
     *
-    * The key canonicalizes FILE inputs by their root paths: two separate
-    * `spark.read.parquet(same path)` calls build `LogicalRelation`s whose
-    * canonical plans compare by file-index REFERENCE, so a plan-keyed
-    * memo silently missed across queries and every consumer re-ran the
-    * whole intermediate (measured: the q38 cluster fixpoint re-ran 16 s
-    * of work q37 had just done). Local (in-memory test) relations key on
-    * their row data; anything else keys on identity — never a false hit. */
+    * The key canonicalizes FILE inputs by their root paths' file sets
+    * ([[graft.FileSet]]): two separate `spark.read.parquet(same path)`
+    * calls build `LogicalRelation`s whose canonical plans compare by
+    * file-index REFERENCE, so a plan-keyed memo silently missed across
+    * queries and every consumer re-ran the whole intermediate (measured:
+    * the q38 cluster fixpoint re-ran 16 s of work q37 had just done). The
+    * file set, not the path alone, so a table rewritten in place misses
+    * instead of serving the old files' result. Local (in-memory test)
+    * relations key on their row data; anything else keys on identity —
+    * never a false hit. */
   private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), DataFrame]()
 
@@ -73,7 +76,8 @@ object Dedup {
     val analyzed = docs.queryExecution.analyzed
     val leaves = analyzed.collectLeaves().map {
       case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => "files:" + fs.location.rootPaths.mkString(",")
+        case fs: HadoopFsRelation => "files:" + fs.location.rootPaths
+          .map(p => graft.FileSet.list(docs.sparkSession, p.toString)).mkString(",")
         case other => "rel:" + System.identityHashCode(other)
       }
       // md5 over the full rendered rows, not Seq.hashCode: a 32-bit

@@ -139,9 +139,8 @@ object SubstringDedup {
     spansFromWindows(windowRel(docs, k), k, saltBuckets, autoSalt)
 
   /** The matched window pairs of one window relation — plain self-join
-    * or ([[Skew.saltGridSides]]) the exact blocked decomposition.
-    * `private[graft]` for the SaltProbe stage-level timing. */
-  private[graft] def matchedPairs(wins: DataFrame, saltBuckets: Int): DataFrame = {
+    * or ([[Skew.saltGridSides]]) the exact blocked decomposition. */
+  private def matchedPairs(wins: DataFrame, saltBuckets: Int): DataFrame = {
     val salted = saltBuckets > 1
     val (lSide, rSide) =
       if (salted) Skew.saltGridSides(wins, "doc_id", saltBuckets)

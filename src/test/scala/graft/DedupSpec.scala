@@ -1100,4 +1100,18 @@ class DedupSpec extends AnyFunSuite {
     assert(!onFail.isNaN && onFail > 0.0 && onFail < Dedup.RouterRecallFloor,
       s"breached gate must stamp its sampled recall (got $onFail)")
   }
+
+  test("dedup memo: a table rewritten in place is read again, not served from the memo") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
+    val all = graft.engine.Tables.documents(spark, sf).orderBy("doc_id")
+    all.limit(40).write.parquet(s"$dir/documents.parquet")
+    def q37() = Dedup.qDupClusters(spark, dir).collect().map(_.toString).toSeq
+    val first = q37()
+    all.filter(col("doc_id") > 100L).limit(60)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val second = q37()
+    Dedup.clearShingleCaches()
+    assert(second == q37(), "the rewritten table was served the old file's clusters")
+    assert(second != first)
+  }
 }

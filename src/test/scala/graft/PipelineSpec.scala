@@ -560,4 +560,113 @@ class PipelineSpec extends AnyFunSuite {
       assert(before.contains("en") && before.contains("de"))
     } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
   }
+
+  // (id, date, primary_type, description, arrest, community_area, updated_on)
+  type Crime = (Long, String, String, Option[String], Option[Boolean], Option[Long], String)
+
+  def crimeDf(rows: Seq[Crime]) =
+    rows.toDF("id", "date", "primary_type", "description", "arrest",
+        "community_area", "updated_on")
+      .withColumn("year", lit(2021L))
+      .withColumn("case_number", concat(lit("JE"), col("id")))
+      .withColumn("domestic", lit(false))
+      .withColumn("latitude", lit(41.88))
+      .withColumn("longitude", lit(-87.63))
+      .select(Ingest.crimeSchemaDdl.split(",").map(_.trim.split(" ")(0)).map(col): _*)
+
+  /** Four landed days: a null community_area (id 4), a null description
+    * (ids 5 and 10), a null arrest (id 6), a robbery that is not armed
+    * (id 7), a community whose first arrest comes a day after its first
+    * report (community 3) and a late update of id 3 that appends again. */
+  val keptDays: Seq[(String, Seq[Crime])] = Seq(
+    "2021-06-16" -> Seq(
+      (1L, "06/15/2021 09:30:00 PM", "ROBBERY", Some("ARMED - HANDGUN"), Some(true), Some(25L), "2021-06-16 01:00:00"),
+      (2L, "06/15/2021 11:00:00 AM", "THEFT", Some("OVER $500"), Some(false), Some(25L), "2021-06-16 01:00:00"),
+      (3L, "06/15/2021 08:00:00 AM", "ASSAULT", Some("AGGRAVATED"), Some(false), Some(7L), "2021-06-16 01:00:00"),
+      (4L, "06/15/2021 10:00:00 PM", "BATTERY", Some("SIMPLE"), Some(true), None, "2021-06-16 01:00:00")),
+    "2021-07-03" -> Seq(
+      (5L, "07/01/2021 09:00:00 AM", "THEFT", None, Some(false), Some(7L), "2021-07-03 01:00:00"),
+      (6L, "07/02/2021 10:00:00 PM", "ASSAULT", Some("SIMPLE"), None, Some(7L), "2021-07-03 01:00:00"),
+      (7L, "07/02/2021 11:00:00 PM", "ROBBERY", Some("STRONGARM"), Some(true), Some(3L), "2021-07-03 01:00:00"),
+      (8L, "07/02/2021 01:00:00 AM", "HOMICIDE", Some("FIRST DEGREE"), Some(false), Some(3L), "2021-07-03 01:00:00")),
+    "2021-07-04" -> Seq(
+      (3L, "06/15/2021 08:00:00 AM", "ASSAULT", Some("AGGRAVATED"), Some(true), Some(7L), "2021-07-04 01:00:00"),
+      (9L, "07/03/2021 07:00:00 PM", "BATTERY", Some("SIMPLE"), Some(true), Some(3L), "2021-07-04 01:00:00"),
+      (10L, "07/03/2021 08:00:00 PM", "ROBBERY", None, Some(true), Some(3L), "2021-07-04 01:00:00")),
+    "2021-08-02" -> Seq(
+      (11L, "08/01/2021 09:00:00 AM", "CRIMINAL SEXUAL ASSAULT", Some("NON-AGGRAVATED"), Some(true), Some(12L), "2021-08-02 01:00:00"),
+      (12L, "08/01/2021 10:00:00 AM", "THEFT", Some("OVER $500"), Some(false), None, "2021-08-02 01:00:00"),
+      (13L, "08/01/2021 11:00:00 AM", "BATTERY", Some("SIMPLE"), Some(false), Some(25L), "2021-08-02 01:00:00")))
+
+  /** Land and process one of [[keptDays]], then refresh the views. */
+  def keptDay(dirs: Pipeline.Dirs, day: (String, Seq[Crime])): Unit = {
+    Ingest.fetchRecent(crimeDf(day._2), since = "2021-01-01", dirs.landing,
+      LocalDate.parse(day._1))
+    Ingest.processNewFiles(spark, dirs.landing, dirs.processed, dirs.checkpoint)
+    Pipeline.refreshViews(spark, dirs.processed)
+  }
+
+  /** Both kept aggregate views equal the full-scan functions over the
+    * zone, as sorted row multisets with the same column names and types. */
+  def assertKeptEqualsRecomputed(processedDir: String, when: String): Unit = {
+    import graft.engine.CrimeViews
+    val zone = Ingest.readProcessed(spark, processedDir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    Seq("count_by_crime_type" -> CrimeViews.countByCrimeType(zone),
+      "arrest_pct_by_community_violent" ->
+        CrimeViews.arrestPctByCommunity(CrimeViews.violentCrimes(zone))
+    ).foreach { case (v, full) =>
+      val kept = Pipeline.view(spark, v)
+      assert(kept.schema.map(f => f.name -> f.dataType) ==
+        full.schema.map(f => f.name -> f.dataType), s"$v columns $when")
+      assert(rows(kept) == rows(full), s"$v rows $when")
+    }
+  }
+
+  test("kept aggregate views equal the full-scan views after every day") {
+    val dirs = freshDirs()
+    for (day <- keptDays) {
+      keptDay(dirs, day)
+      assertKeptEqualsRecomputed(dirs.processed, s"after ${day._1}")
+    }
+    val types = Pipeline.view(spark, "count_by_crime_type").collect()
+      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
+    assert(types(None) == 2L, "null descriptions are one group")
+    assert(types(Some("ASSAULT - AGGRAVATED")) == 2L, "the late update appends")
+    val pct = Pipeline.view(spark, "arrest_pct_by_community_violent")
+      .select("community_area", "tot_reports", "tot_arrests").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(pct == Map(25L -> (2L, 1L), 7L -> (3L, 1L), 3L -> (2L, 1L), 12L -> (1L, 1L)))
+  }
+
+  test("kept aggregate views: a deleted zone file makes the next refresh recount") {
+    val dirs = freshDirs()
+    keptDays.foreach(keptDay(dirs, _))
+    val july = parquetFiles(Paths.get(dirs.processed, "year=2021", "month=7")).sorted
+    assert(july.size == 2)
+    Files.delete(july.head)
+    Files.deleteIfExists(july.head.resolveSibling(s".${july.head.getFileName}.crc"))
+    Pipeline.refreshViews(spark, dirs.processed)
+    assertKeptEqualsRecomputed(dirs.processed, "after a delete")
+  }
+
+  test("kept aggregate views: a refresh that finds no new file runs no Spark job") {
+    val dirs = freshDirs()
+    keptDays.take(2).foreach(keptDay(dirs, _))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val bus = org.apache.spark.sql.graftbridge.Bridge
+    bus.drainListenerBus(spark.sparkContext, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.refreshViews(spark, dirs.processed)
+      bus.drainListenerBus(spark.sparkContext, 10000)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assertKeptEqualsRecomputed(dirs.processed, "after an idle refresh")
+  }
 }

@@ -53,4 +53,45 @@ class TablesSpec extends AnyFunSuite {
       loaded.select(col("ts").cast("bigint")).queryExecution.analyzed
     }
   }
+
+  /** Jobs `body` starts, counted after draining the listener bus. */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val bus = org.apache.spark.sql.graftbridge.Bridge
+    bus.drainListenerBus(spark.sparkContext, 10000)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; bus.drainListenerBus(spark.sparkContext, 10000) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("Tables.load infers an unchanged table's schema once") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    graft.engine.Tables.nation(spark, sf).write.parquet(s"$dir/nation.parquet")
+    var schemas = Seq.empty[org.apache.spark.sql.types.StructType]
+    val jobs = jobsOf {
+      schemas = Seq.fill(2)(graft.engine.Tables.nation(spark, dir).schema)
+    }
+    assert(jobs == 1, "the second load declares the inferred schema")
+    assert(schemas.distinct.size == 1)
+    assert(graft.engine.Tables.nation(spark, dir).count() ==
+      graft.engine.Tables.nation(spark, sf).count())
+  }
+
+  test("Tables.load sees a table rewritten with an added column") {
+    val dir = Files.createTempDirectory("graft-tables").toString
+    val nation = graft.engine.Tables.nation(spark, sf)
+    nation.write.parquet(s"$dir/nation.parquet")
+    assert(!graft.engine.Tables.nation(spark, dir).columns.contains("extra"))
+    nation.withColumn("extra", lit(7L))
+      .write.mode("overwrite").parquet(s"$dir/nation.parquet")
+    val reread = graft.engine.Tables.nation(spark, dir)
+    assert(reread.schema == nation.schema.add("extra", "bigint", nullable = true))
+    assert(reread.select("extra").distinct().as[Long].collect().toSeq == Seq(7L))
+  }
 }

@@ -2,7 +2,7 @@
 """Interleaved A/B of the repo benchmark: a base revision against this checkout.
 
     python3 tools/perf_ab.py <rev> [--pairs 10] [--workloads crime_daily,...]
-                             [--first-seed 1]
+                             [--first-seed 1] [--trace]
 
 Exports <rev> with `git archive` into a temporary directory, then runs
 perfbench/run.py untraced in both trees for BENCHMARK.json's run_seconds,
@@ -17,6 +17,13 @@ exceeds the metric's bound, unless every change run beats every base run;
 medians differ by more than the base's IQR and the checkout failed no more
 runs than the base; "worse" when the checkout's median is worse by more
 than the bound.
+
+With --trace it instead runs one traced run per side and workload, seed
+first_seed, and prints every per-layer metric either side reports as
+non-zero side by side. A counter (unit count or bytes: jobs, stages,
+tasks, input, output, shuffle and spill bytes, files, store jobs and
+state) that is higher on the checkout is flagged "rose"; timings are
+printed but not flagged, since one run cannot resolve them.
 """
 import argparse
 import json
@@ -43,10 +50,11 @@ def export(rev, dest):
     return tree
 
 
-def run_once(tree, workload, seed, seconds):
-    """One untraced run; returns its result line, or None on failure."""
+def run_once(tree, workload, seed, seconds, trace=False):
+    """One run; returns its result line, or None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", "1" if trace else "0"]
     p = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = [l for l in p.stdout.splitlines() if l.startswith("{")]
     if p.returncode != 0 or len(lines) < 2:
@@ -119,6 +127,30 @@ def summarize(spec, workload, pairs):
     return rows
 
 
+COUNTER_UNITS = ("count", "B", "B/B", "B/row")
+
+
+def print_traced(spec, workload, base, change):
+    """Per-layer metrics of one traced run per side, counters flagged."""
+    print(f"{workload}: traced, base vs change")
+    if base is None or change is None:
+        print("  no result on one side")
+        return
+    print(f"  {'metric':<52} {'base':>12} {'change':>12} {'delta':>8}")
+    for m in spec["per_layer"]:
+        name = m["name"]
+        x = base["metrics"].get(name, {}).get("value")
+        y = change["metrics"].get(name, {}).get("value")
+        if not x and not y:
+            continue
+        delta = f"{(y - x) / abs(x):+.1%}" if x and y is not None else ""
+        rose = (m["unit"] in COUNTER_UNITS and m["better"] == "lower"
+                and x is not None and y is not None and y > x)
+        cells = [f"{v:.6g}" if v is not None else "-" for v in (x, y)]
+        print(f"  {name:<52} {cells[0]:>12} {cells[1]:>12} {delta:>8}"
+              f"{'  rose' if rose else ''}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("rev", help="base revision (anything git archive accepts)")
@@ -126,6 +158,8 @@ def main():
     ap.add_argument("--workloads", default=None,
                     help="comma-separated; default: every BENCHMARK.json workload")
     ap.add_argument("--first-seed", type=int, default=1)
+    ap.add_argument("--trace", action="store_true",
+                    help="one traced run per side: per-layer counters")
     args = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
@@ -138,6 +172,12 @@ def main():
     try:
         base_tree = export(args.rev, tmp)
         print(f"base {args.rev} -> {base_tree}; change = {ROOT}", file=sys.stderr)
+        if args.trace:
+            for w in workloads:
+                got = [run_once(tree, w, args.first_seed, seconds, trace=True)
+                       for tree in (base_tree, ROOT)]
+                print_traced(spec, w, *got)
+            return 0
         for w in workloads:
             pairs = []
             for i in range(args.pairs):
