@@ -9,18 +9,40 @@ private[graft] object Par {
   /** Run independent Spark actions as concurrent jobs (one commit's
     * segment/tier writes touch disjoint paths and share no lineage
     * beyond already-pinned blocks) — wall time is the slowest task, not
-    * the sum. AWAITS EVERY task before propagating the first failure:
-    * returning on first error would leave sibling writers running in
-    * the background, and a same-process retry of the commit would then
-    * race those zombies on the very seg paths it overwrites. */
-  def inParallel(tasks: (() => Unit)*): Unit = {
+    * the sum — and return their results in order. AWAITS EVERY task
+    * before propagating the first failure: returning on first error
+    * would leave sibling writers running in the background, and a
+    * same-process retry of the commit would then race those zombies on
+    * the very seg paths it overwrites. */
+  def inParallel[A](tasks: (() => A)*): Seq[A] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.util.Try
-    val done = Await.result(
-      Future.sequence(tasks.map(tk => Future(Try(tk())))), Duration.Inf)
-    done.foreach(_.get)
+    Await.result(Future.sequence(tasks.map(tk => Future(Try(tk())))),
+      Duration.Inf).map(_.get)
+  }
+
+  /** Start `task` as a concurrent Spark-action thread, run `body`, and
+    * ALWAYS await `task` before returning or rethrowing — for a commit
+    * write whose inputs are ready before the rest of the admission's
+    * work, so the write overlaps that work instead of queueing behind
+    * it, and no failure leaves it running as a zombie that a retry's
+    * overwrite of the same segment would race (the [[inParallel]]
+    * contract). A failing `body` wins; the task's own failure is then
+    * attached to it as suppressed. */
+  def overlap[A, B](task: => A)(body: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.util.Try
+    val fut = Future(Try(task))
+    val b = try body catch { case e: Throwable =>
+      Try(Await.result(fut, Duration.Inf)).flatten.failed
+        .foreach(e.addSuppressed)
+      throw e
+    }
+    (Await.result(fut, Duration.Inf).get, b)
   }
 
   /** Stable identity of a streaming checkpoint LINEAGE, recorded in
@@ -46,21 +68,6 @@ private[graft] object Par {
       .getOrElse(new java.io.File(checkpointDir).getAbsolutePath)
   }
 
-  /** Run `body`; on failure, JOIN the given in-flight writer before
-    * rethrowing — the single place encoding the no-zombie-writers
-    * contract ([[background]]'s counterpart). The join handle is
-    * memoized, so when the WRITER ITSELF was the failure that `body`
-    * rethrew, the re-join yields the identical exception instance —
-    * guarded, because `addSuppressed(self)` throws IllegalArgument and
-    * would replace the real diagnostic. */
-  def joinOnFailure[A](join: () => Unit)(body: => A): A =
-    try body
-    catch { case e: Throwable =>
-      try join()
-      catch { case w: Throwable => if (w ne e) e.addSuppressed(w) }
-      throw e
-    }
-
   /** Run `f` with adaptive query execution OFF — for the daily-admission
     * paths, whose relations are frontier/batch-sized BY CONSTRUCTION
     * (bounded takes, pinned batches, touched-bucket reads). AQE's
@@ -71,7 +78,7 @@ private[graft] object Par {
     * analytic queries) keeps AQE — only the admission commit scope is
     * static. Session-scoped set/restore: admissions are sequential by
     * the single-writer store contract, and an admission's own
-    * backgrounded writes are joined inside the scope. */
+    * overlapped writes are awaited inside the scope ([[overlap]]). */
   def withStaticPlan[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
     val k = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(k, "true")
@@ -125,22 +132,6 @@ private[graft] object Par {
         ScanDecompressionFactor).sum
     val want = (bytes + advisory - 1) / advisory
     want.min(BigInt(cap)).max(BigInt(1)).toLong
-  }
-
-  /** Start `task` as a concurrent Spark-action thread NOW and return its
-    * join handle — for a commit write whose inputs are ready before the
-    * rest of the admission's work, so the write overlaps it instead of
-    * queueing behind it. The handle MUST be invoked on every path
-    * (including failure of the intervening work — join-then-rethrow, the
-    * same no-zombie-writers contract as [[inParallel]]): it awaits
-    * completion and rethrows the task's failure. */
-  def background(task: () => Unit): () => Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.Try
-    val fut = Future(Try(task()))
-    () => Await.result(fut, Duration.Inf).get
   }
 
   /** Minimal JSON string escaping for manifest fields ([[ckptIdentity]]

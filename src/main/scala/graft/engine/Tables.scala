@@ -50,12 +50,20 @@ object Tables {
     * INT64 TIMESTAMP(NANOS) (read as long via nanosAsLong, truncated to
     * micros — what DuckDB's micro-precision TIMESTAMP does on the same
     * file) vs plain timestamp[us] (arrives as TIMESTAMP_NTZ; pass through).
-    * Branch on the loaded dtype so either generation reads identically. */
+    * Branch on the loaded dtype so either generation reads identically.
+    * The session's nanosAsLong is set only when schema inference rejects
+    * a nanos `ts` (the file's scans read under it too, so it stays set);
+    * a timestamp[us] file leaves the caller's session untouched. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.expr
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(s, d, "events")
+    def nanos(e: Throwable): Boolean = e != null &&
+      (String.valueOf(e.getMessage).contains("TIMESTAMP(NANOS") || nanos(e.getCause))
+    val df = try load(s, d, "events") catch {
+      case e: Exception if nanos(e) =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        load(s, d, "events")
+    }
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

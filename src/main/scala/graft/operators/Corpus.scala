@@ -764,7 +764,8 @@ object Corpus {
     * booleans cannot separate an honest fit from a broken one (an
     * inverted model's delta is 0 for any source whose holdout weak rate
     * sits at 0.5 — measured: half the sources at sf0.001), so the gate
-    * is the AGGREGATE deviation. Measured (tools/Q95Probe, r20): honest
+    * is the AGGREGATE deviation. Measured (Q95Probe, r20; its sf0.01 rows are
+    * bench/Q95_PROBE_r22.txt): honest
     * fit 31.9 / 26.1 / 26.0 mean tokens at sf0.001 / 0.01 / 0.1;
     * train-inverted fit 231 / 307 / 112. Margin 75 ≈ 2.5× the honest
     * ceiling and 1.5× under the worst inverted reading; fit

@@ -188,8 +188,9 @@ object Dedup {
     *   q13's oracle), ~(B/2+1)× band-row replication for a B²-fold
     *   hottest-cell shrink.
     *
-    *   When it pays, MEASURED (tools/HotLshProbe, 50k docs, 15k-doc hot
-    *   near-dup mass, local[32]): never locally — 0.77–0.86× at
+    *   When it pays, MEASURED (HotLshProbe, 50k docs, 15k-doc hot
+    *   near-dup mass, local[32]; its 20k-doc default run is
+    *   bench/HOTLSH_PROBE_r22.txt): never locally — 0.77–0.86× at
     *   B∈{2,3,8} — because a hot doc set is hot in all [[NumBands]]
     *   bands at once, which already spreads its pair work 16 ways, and
     *   32 cores can't exploit more than 2× further while the

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import VersionedIndex.{OneFile, writeSeg}
 
 /** Persisted-corpus semantic-dedup state for EMBEDDINGS — the vector
   * analog of [[IncrementalDedup]]: a corpus's near-dup clusters are
@@ -264,12 +265,12 @@ object EmbeddingIncremental {
     * scan pruning at a saturated grid. */
   val EmbStateBuckets = 64
 
-  private def writeBucketSeg(rows: DataFrame, path: String): Unit =
+  /** The bucket log's layout: `grpb` dirs, `grp`-sorted files. */
+  private val BucketLayout = VersionedIndex.Bucketed("grpb",
+    pmod(col("grp"), lit(EmbStateBuckets)).cast("int"), "grp")
+
+  private def bucketCols(rows: DataFrame): DataFrame =
     rows.select(col("grp"), col("vec_id"), col("embedding"))
-      .withColumn("grpb", pmod(col("grp"), lit(EmbStateBuckets)).cast("int"))
-      .repartition(col("grpb"))
-      .sortWithinPartitions(col("grpb"), col("grp"))
-      .write.mode("overwrite").partitionBy("grpb").parquet(path)
 
   private val LabelsDdl = "vec_id BIGINT, cluster_id BIGINT"
   private val RemapDdl = "cluster_id BIGINT, merged BIGINT"
@@ -280,8 +281,13 @@ object EmbeddingIncremental {
     * batch's bridged new ids), not by the corpus — merges only happen
     * when new data connects existing clusters. */
   private def remapOf(spark: SparkSession, dir: String, v: Long): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(RemapDdl))
-      .parquet(s"$dir/v$v/remap")
+    VersionedIndex.readModel(spark, dir, v, "remap", RemapDdl)
+
+  /** Writes a version's labels segment and remap; returns the label rows. */
+  private def writeLabels(labels: DataFrame, remap: DataFrame, dir: String,
+      version: Long): Long =
+    graft.Par.overlap(VersionedIndex.writeModel(remap, dir, version, "remap"))(
+      writeSeg(labels, dir, "labels", version, OneFile))._2
 
   /** Labels as of the committed version: the append-only label log
     * (base fold + one O(batch) segment per admission) repaired through
@@ -328,27 +334,16 @@ object EmbeddingIncremental {
     * sizes segment files by target block size instead. */
   def saveState(state: EmbedDedupState, dir: String,
       stream: Option[(String, Long)] = None,
-      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit = {
+      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
     // fresh-store bootstrap only: a resave would append the FULL bucket
     // relation as a duplicate segment next to the ones it already holds
-    require(VersionedIndex.currentVersion(dir).isEmpty,
-      s"$dir already holds a committed state — grow it with admitDrop")
-    val spark = state.labels.sparkSession
-    // footer-only count taken inside the labels write task — not a
-    // separate sequential job after the parallel group
-    @volatile var rows = -1L
-    graft.Par.inParallel(
-      () => writeBucketSeg(state.buckets, s"$dir/buckets/seg=0"),
-      () => {
-        state.labels.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/labels/seg=0")
-        rows = spark.read.parquet(s"$dir/labels/seg=0").count()
-      },
-      () => emptyRemap(spark).write.mode("overwrite")
-        .parquet(s"$dir/v0/remap"))
-    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
-      Seq("buckets", "labels"), stream, retainVersions)
-  }
+    VersionedIndex.bootstrap(dir, Seq("buckets", "labels"), stream,
+        retainVersions) {
+      graft.Par.overlap(
+        writeSeg(bucketCols(state.buckets), dir, "buckets", 0, BucketLayout))(
+        writeLabels(state.labels, emptyRemap(state.labels.sparkSession),
+          dir, 0))._2
+    }
 
   /** Bootstrap a FRESH persisted store straight from the corpus — the
     * streaming day-0 path. Result-equivalent to
@@ -356,38 +351,24 @@ object EmbeddingIncremental {
     * spec-pinned by the chain ≡ batch suite), but the bucket-log
     * segment — which depends only on the corpus, not the clustering —
     * starts writing BEFORE the cluster fixpoint runs, so the two
-    * overlap instead of serializing (the [[admitDrop]] background-write
+    * overlap instead of serializing (the [[admitDrop]] overlapped-write
     * shape applied to day 0). */
   def bootstrapDrop(spark: SparkSession, dir: String, emb: DataFrame,
       threshold: Double = 0.45,
       stream: Option[(String, Long)] = None,
-      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit = {
-    require(VersionedIndex.currentVersion(dir).isEmpty,
-      s"$dir already holds a committed state — grow it with admitDrop")
-    val joinBuckets = graft.Par.background(() =>
-      writeBucketSeg(bucketRows(emb), s"$dir/buckets/seg=0"))
-    @volatile var rows = -1L
-    // no zombie writers: any failure here joins the in-flight bucket
-    // write before propagating, so a retry's overwrite races nothing
-    graft.Par.joinOnFailure(joinBuckets) {
-      // the eager cluster fixpoint (edge kernel, component closure,
-      // label pin) runs while the bucket segment writes; labels-only —
-      // the store derives sizes at load, so the size join never runs
-      val lab = Dedup.embeddingDupLabels(emb, threshold)
-      graft.Par.inParallel(
-        () => {
-          lab.select(col("vec_id"), col("cluster_id"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/labels/seg=0")
-          rows = spark.read.parquet(s"$dir/labels/seg=0").count()
-        },
-        () => emptyRemap(spark).write.mode("overwrite")
-          .parquet(s"$dir/v0/remap"))
+      retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
+    VersionedIndex.bootstrap(dir, Seq("buckets", "labels"), stream,
+        retainVersions) {
+      graft.Par.overlap(
+        writeSeg(bucketRows(emb), dir, "buckets", 0, BucketLayout)) {
+        // the eager cluster fixpoint (edge kernel, component closure,
+        // label pin) runs while the bucket segment writes; labels-only —
+        // the store derives sizes at load, so the size join never runs
+        val lab = Dedup.embeddingDupLabels(emb, threshold)
+        writeLabels(lab.select(col("vec_id"), col("cluster_id")),
+          emptyRemap(spark), dir, 0)
+      }._2
     }
-    joinBuckets()
-    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
-      Seq("buckets", "labels"), stream, retainVersions)
-  }
 
   private def emptyRemap(spark: SparkSession): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -456,78 +437,42 @@ object EmbeddingIncremental {
     // unchanged: nothing is visible until the CURRENT pointer moves,
     // and a crashed attempt's partial segment is overwritten on retry.
     val nbr = bucketRows(newVecs)
-    val joinBuckets = graft.Par.background { () =>
-      if (fold) writeBucketSeg(
-        st0.buckets.select(col("grp"), col("vec_id"), col("embedding"))
-          .unionByName(nbr), s"$dir/buckets/seg=$next")
-      else writeBucketSeg(nbr, s"$dir/buckets/seg=$next")
+    val (_, segRows) = graft.Par.overlap(writeSeg(
+        if (fold) bucketCols(st0.buckets).unionByName(nbr) else nbr,
+        dir, "buckets", next, BucketLayout)) {
+      val f = admitCore(st0, newVecs, threshold, Some(nbr))
+      val n =
+        if (fold)
+          // fold both logs: the grown relations become one segment each,
+          // C folds into the rewritten label base and resets to empty
+          writeLabels(applyCore(st0, f.newAssign, f.remap, nbr).labels,
+            emptyRemap(spark), dir, next)
+        else {
+          // true merges only: drop identity rows and rows keyed by the
+          // batch's own ids (new ids never appear as a stored label VALUE
+          // — newAssign rows already carry final roots — so they would
+          // only bloat C)
+          val merges = f.remap.filter(col("cluster_id") =!= col("merged"))
+            .join(broadcast(newVecs.select(col("vec_id").as("cluster_id"))),
+              Seq("cluster_id"), "left_anti")
+          val prevC = remapOf(spark, dir, m.version)
+          // compose: entries of C whose root was merged again re-point to
+          // the new root; this admission's merges append. Keys stay
+          // disjoint — C's keys are dead clusters, a remap key is a live
+          // one.
+          val r = merges.select(col("cluster_id").as("rk"),
+            col("merged").as("rv"))
+          val composed = prevC
+            .join(broadcast(r), prevC("merged") === col("rk"), "left")
+            .select(prevC("cluster_id"),
+              coalesce(col("rv"), prevC("merged")).as("merged"))
+            .unionByName(merges)
+          writeLabels(f.newAssign, composed, dir, next)
+        }
+      // every consumer of the admission's pins is written
+      f.release()
+      n
     }
-    // a failing core must JOIN the in-flight writer before propagating —
-    // returning early would leave a zombie write racing the retry's
-    // overwrite of this very segment (the inParallel contract)
-    val f = graft.Par.joinOnFailure(joinBuckets)(
-      admitCore(st0, newVecs, threshold, Some(nbr)))
-    // footer-only count of the label segment, taken INSIDE its write
-    // task (no separate sequential job): the full labels count after
-    // this commit is the fold's rewritten base, or the prior total plus
-    // the batch segment
-    @volatile var segRows = -1L
-    def countSeg(): Unit =
-      segRows = spark.read.parquet(s"$dir/labels/seg=$next").count()
-    // the whole segment-write phase joins the background writer on
-    // failure too: plan construction here can throw BEFORE inParallel
-    // takes ownership of the join (remapOf on a damaged store, FS
-    // listing), and propagating past an in-flight writer would leave a
-    // zombie racing the retry's overwrite (the join handle is memoized —
-    // a second invocation inside inParallel is a no-op)
-    graft.Par.joinOnFailure(joinBuckets) {
-      if (fold) {
-        // fold both logs: the grown relations become one segment each,
-        // C folds into the rewritten label base and resets to empty
-        graft.Par.inParallel(
-          () => joinBuckets(),
-          () => {
-            applyCore(st0, f.newAssign, f.remap, nbr)
-              .labels.coalesce(1).write.mode("overwrite")
-              .parquet(s"$dir/labels/seg=$next")
-            countSeg()
-          },
-          () => emptyRemap(spark).write.mode("overwrite")
-            .parquet(s"$dir/v$next/remap"))
-      } else {
-        // true merges only: drop identity rows and rows keyed by the
-        // batch's own ids (new ids never appear as a stored label VALUE
-        // — newAssign rows already carry final roots — so they would
-        // only bloat C)
-        val merges = f.remap.filter(col("cluster_id") =!= col("merged"))
-          .join(broadcast(newVecs.select(col("vec_id").as("cluster_id"))),
-            Seq("cluster_id"), "left_anti")
-        val prevC = remapOf(spark, dir, m.version)
-        // compose: entries of C whose root was merged again re-point to
-        // the new root; this admission's merges append. Keys stay
-        // disjoint — C's keys are dead clusters, a remap key is a live
-        // one.
-        val r = merges.select(col("cluster_id").as("rk"),
-          col("merged").as("rv"))
-        val composed = prevC
-          .join(broadcast(r), prevC("merged") === col("rk"), "left")
-          .select(prevC("cluster_id"),
-            coalesce(col("rv"), prevC("merged")).as("merged"))
-          .unionByName(merges)
-        graft.Par.inParallel(
-          () => joinBuckets(),
-          () => {
-            f.newAssign.coalesce(1).write.mode("overwrite")
-              .parquet(s"$dir/labels/seg=$next")
-            countSeg()
-          },
-          () => composed.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/v$next/remap"))
-      }
-    }
-    require(segRows >= 0, "label segment count must have run in its write task")
-    // every consumer of the admission's pins is written
-    f.release()
     if (fold) segRows else m.totalRows + segRows
   }
 

@@ -313,23 +313,20 @@ object HeavyHitters {
     * segMass-read-job chain with one collect job plus a local one-task
     * write; the occurrence mass falls out of the rows in hand. */
   private def writeCellSegCollected(spark: SparkSession, cells: DataFrame,
-      path: String): Long = {
+      dir: String, version: Long): Long = {
     val rows = cells.select(col("d"), col("bucket"), col("c")).collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        org.apache.spark.sql.types.StructType.fromDDL(CellsDdl))
-      .coalesce(1).write.mode("overwrite").parquet(path)
+    VersionedIndex.writeSeg(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        org.apache.spark.sql.types.StructType.fromDDL(CellsDdl)),
+      dir, "cells", version, VersionedIndex.OneFile)
     rows.iterator.filter(_.getInt(0) == 0).map(_.getLong(2)).sum
   }
 
   def bootstrapSketch(spark: SparkSession, dir: String,
-      docs: DataFrame): Unit = {
-    require(VersionedIndex.currentVersion(dir).isEmpty,
-      s"$dir already holds a committed sketch — grow it with admitDrop")
-    val n = writeCellSegCollected(spark,
-      cellRel(widened(docs), CmsDepth, CmsWidth), s"$dir/cells/seg=0")
-    VersionedIndex.commit(dir, 0, VersionedIndex.rows(n, n), Vector(0L),
-      logs = Seq("cells"))
-  }
+      docs: DataFrame): Unit =
+    VersionedIndex.bootstrap(dir, Seq("cells")) {
+      writeCellSegCollected(spark,
+        cellRel(widened(docs), CmsDepth, CmsWidth), dir, 0)
+    }
 
   /** Appends the batch's cells, or folds the summed grid into one
     * segment. Appends keep AQE: the one shuffle is collected
@@ -344,9 +341,8 @@ object HeavyHitters {
         VersionedIndex.readLog(spark, dir, "cells", m.segs, CellsDdl)
           .unionByName(batchCells)
           .groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c")),
-        s"$dir/cells/seg=$next")
-      else m.totalRows + writeCellSegCollected(spark, batchCells,
-        s"$dir/cells/seg=$next")
+        dir, next)
+      else m.totalRows + writeCellSegCollected(spark, batchCells, dir, next)
     }
 
   /** The committed grid: cell-wise sum over the live segments —

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
 import graft.functions.TextFns.hash60
+import VersionedIndex.{PartitionedBy, writeSeg}
 
 /** Approximate-nearest-neighbor / similarity search over the `embeddings`
   * table (`embedding: array<float>`, dim 64).
@@ -303,15 +304,12 @@ object Similarity {
       fitFraction: Option[Double] = None): Unit = {
     val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
     val (cent, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
-    cent.write.mode("overwrite").parquet(s"$indexDir/v$next/centroids")
-    assigned.select(col("vec_id"), col("cid").cast("int").as("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$indexDir/assignments/seg=$next")
-    // footer-metadata count over the just-written segment (no data
-    // read): the manifest-carried drift baseline + log size, so the
-    // APPEND path never needs a corpus-sized job to learn them
-    val rows = emb.sparkSession.read
-      .parquet(s"$indexDir/assignments/seg=$next").count()
+    VersionedIndex.writeModel(cent, indexDir, next, "centroids")
+    // the written row count is the manifest-carried drift baseline + log
+    // size, so the APPEND path never needs a corpus-sized job to learn them
+    val rows = writeSeg(
+      assigned.select(col("vec_id"), col("cid").cast("int").as("cid")),
+      indexDir, "assignments", next, PartitionedBy("cid"))
     VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
       segs = Vector(next), logs = Seq("assignments"))
     // cent is a driver-local relation (the fit's clusterCenters) —
@@ -344,7 +342,7 @@ object Similarity {
   private def ivfCentroids(spark: SparkSession, indexDir: String,
       version: Long): IndexedSeq[(Long, Seq[Float])] =
     VersionedIndex.cachedModel(indexDir, version, "centroids") {
-      spark.read.parquet(s"$indexDir/v$version/centroids").collect()
+      VersionedIndex.readModel(spark, indexDir, version, "centroids").collect()
         .map(r => (idAt(r, 0), r.getSeq[Float](1)))
         .sortBy(_._1).toIndexedSeq
     }
@@ -437,10 +435,9 @@ object Similarity {
       () => buildIvfIndex(corpus, indexDir, numCentroids, maxIter, fitFraction)
     ) { (m, next) =>
       val cents = ivfCentroids(spark, indexDir, m.version)
-      assignCells(newVecs, cents)
-        .select(col("vec_id"), col("cid").cast("int").as("cid"))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$indexDir/assignments/seg=$next")
+      writeSeg(assignCells(newVecs, cents)
+          .select(col("vec_id"), col("cid").cast("int").as("cid")),
+        indexDir, "assignments", next, PartitionedBy("cid"))
       Seq("centroids" -> cents)
     }
   }
@@ -548,7 +545,7 @@ object Similarity {
     * engine-portable — the learned index is oracle-gated through its
     * recall-floor derivative (q59), the q35 pattern.
     *
-    * Granularity caveat (measured, tools/IvfPqProbe): on tightly
+    * Granularity caveat (measured, bench/IVFPQ_PROBE_r22.txt): on tightly
     * clustered data a NEAR-PERFECT codebook reconstructs every member
     * of a cluster to ~the same point, so ADC cannot order WITHIN a
     * cluster and recall@k against the exact in-cluster top-k
@@ -746,14 +743,11 @@ object Similarity {
     import spark.implicits._
     val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
     val cb = pqCodebook(emb)
-    cb.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "cemb")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexDir/v$next/codebook")
-    pqIndexRelation(emb, cb).write.mode("overwrite")
-      .parquet(s"$indexDir/codes/seg=$next")
-    // footer-metadata count over the just-written segment: the
-    // manifest-carried drift baseline + log size
-    val rows = spark.read.parquet(s"$indexDir/codes/seg=$next").count()
+    VersionedIndex.writeModel(cb.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cid", "cemb"), indexDir, next, "codebook")
+    // the written row count: the manifest-carried drift baseline + log size
+    val rows = writeSeg(pqIndexRelation(emb, cb), indexDir, "codes", next,
+      PartitionedBy())
     VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
       segs = Vector(next), logs = Seq("codes"))
     VersionedIndex.putModel(indexDir, next, "codebook", cb.toIndexedSeq)
@@ -764,7 +758,7 @@ object Similarity {
   private def pqCodebookOf(spark: SparkSession, indexDir: String,
       version: Long): IndexedSeq[Seq[Double]] =
     VersionedIndex.cachedModel(indexDir, version, "codebook") {
-      spark.read.parquet(s"$indexDir/v$version/codebook").collect()
+      VersionedIndex.readModel(spark, indexDir, version, "codebook").collect()
         .map(r => (idAt(r, 0), r.getSeq[Double](1).toSeq))
         .sortBy(_._1).map(_._2).toIndexedSeq
     }
@@ -786,8 +780,8 @@ object Similarity {
       () => buildPqIndex(corpus, indexDir)
     ) { (m, next) =>
       val cb = pqCodebookOf(spark, indexDir, m.version)
-      pqIndexRelation(newVecs, cb).write.mode("overwrite")
-        .parquet(s"$indexDir/codes/seg=$next")
+      writeSeg(pqIndexRelation(newVecs, cb), indexDir, "codes", next,
+        PartitionedBy())
       Seq("codebook" -> cb)
     }
   }
@@ -846,18 +840,15 @@ object Similarity {
     val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
     // int cid like buildIvfIndex writes — ONE on-disk centroid shape
     // (and one loader, ivfCentroids) across both IVF-family stores
-    centroids.toDF("cid", "cemb")
-      .select(col("cid").cast("int").as("cid"), col("cemb")).coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/v$next/centroids")
-    cb.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cid", "cemb")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$indexDir/v$next/codebook")
-    pqEncodeWith(emb, cb)(
+    VersionedIndex.writeModel(centroids.toDF("cid", "cemb")
+      .select(col("cid").cast("int").as("cid"), col("cemb")),
+      indexDir, next, "centroids")
+    VersionedIndex.writeModel(cb.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("cid", "cemb"), indexDir, next, "codebook")
+    val rows = writeSeg(pqEncodeWith(emb, cb)(
         Seq(nearestCentroid(col("embedding"), centroids)
-          .cast("int").as("cid")))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$indexDir/cells/seg=$next")
-    val rows = spark.read.parquet(s"$indexDir/cells/seg=$next").count()
+          .cast("int").as("cid"))),
+      indexDir, "cells", next, PartitionedBy("cid"))
     VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
       segs = Vector(next), logs = Seq("cells"))
     VersionedIndex.putModel(indexDir, next, "centroids",
@@ -876,11 +867,10 @@ object Similarity {
     ) { (m, next) =>
       val cents = ivfCentroids(spark, indexDir, m.version)
       val cb = pqCodebookOf(spark, indexDir, m.version)
-      pqEncodeWith(newVecs, cb)(
+      writeSeg(pqEncodeWith(newVecs, cb)(
           Seq(nearestCentroid(col("embedding"), cents)
-            .cast("int").as("cid")))
-        .write.mode("overwrite").partitionBy("cid")
-        .parquet(s"$indexDir/cells/seg=$next")
+            .cast("int").as("cid"))),
+        indexDir, "cells", next, PartitionedBy("cid"))
       Seq("centroids" -> cents, "codebook" -> cb)
     }
   }
@@ -949,9 +939,9 @@ object Similarity {
     * composed chain's recall decomposes as (true neighbors inside the
     * probed cells) ∩ (survivors of the ADC shortlist cut); MEASURED at
     * sf0.1 the probe term is NOT binding — the same 4 probed cells
-    * scored at full precision read recall 0.97 (RecallProbe ivf-seed) —
-    * while raw ADC ordering reads ~0.25, so the 50-candidate cut is
-    * what holds q60 at ~0.70. Deepening the cut to 200 is FREE at the
+    * scored at full precision read recall 0.97 (r14; ivf-seed in
+    * bench/RECALL_PROBE_r22.txt) — while raw ADC ordering reads ~0.25,
+    * so the 50-candidate cut is what holds q60 at ~0.70. Deepening the cut to 200 is FREE at the
     * ADC tier (every candidate in a probed cell is ADC-scored either
     * way — the scan budget is cells × codes, unchanged) and costs only
     * a 4× larger exact-re-rank gather (|queries|·200 rows, still a
@@ -1493,8 +1483,8 @@ object Similarity {
     * hits), not per-query like q35: on the near-uniform synthetic
     * corpus the ADC noise of an 8-byte code dominates per-query tails
     * (a single query's recall sits at 0.1 with 0.0 one config step
-    * away — RecallProbe, all three sf), while the aggregate is stable
-    * at 0.24–0.29 across sf0.001/0.01/0.1. 0.15 sits well under every
+    * away — bench/RECALL_PROBE_r22.txt, all three sf), while the
+    * aggregate is stable at 0.24–0.29 across sf0.001/0.01/0.1. 0.15 sits well under every
     * observed aggregate and ~10× the k/N random baseline. The
     * learned-beats-seed claim lives in DedupSpec on a CLUSTERED
     * fixture, where trained models genuinely pay. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import VersionedIndex.{OneFile, writeSeg}
 
 /** Pinned (incremental) leakage-safe split — q93, the stable-across-
   * admissions sibling of [[Corpus.clusterSafeSplit]] (q91).
@@ -97,40 +98,25 @@ object SplitPins {
        |     WHEN substr(md5(CAST($x AS VARCHAR)), 1, 1)
        |       IN ('e', 'f') THEN 'test' ELSE 'train' END""".stripMargin
 
-  private def writeSeg(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-
   /** Bootstrap the store from a day-0 labeling (doc_id, cluster_id) —
     * every cluster (singletons included) gets its nibble pin at seq 0;
     * every doc gets its cluster's split. */
   def bootstrapStore(spark: SparkSession, dir: String,
-      labels: DataFrame, stream: Option[(String, Long)] = None): Unit = {
-    require(VersionedIndex.currentVersion(dir).isEmpty,
-      s"$dir already holds a committed split store — grow it with admitDelta")
+      labels: DataFrame, stream: Option[(String, Long)] = None): Unit =
     // the two seg writes touch disjoint paths and share only the (pinned
     // upstream) labels relation — overlap them (guide §2.6: fill the
     // tail with the independent sibling job instead of serializing two
-    // ~single-task writes)
-    // footer-only count of the splits segment, taken INSIDE its write
-    // thunk (overlapped with the pins write) instead of as a sequential
-    // post-parallel job — the admitDelta countTask shape; labels itself
-    // may carry a sizes join above its pin, so counting the written
-    // file's footers is the cheap, call-site-independent source
-    @volatile var n = -1L
-    graft.Par.inParallel(
-      () => writeSeg(labels.select(col("cluster_id")).distinct()
-          .select(col("cluster_id"), nibbleSplit(col("cluster_id")).as("split"),
-            lit(0L).as("seq"), col("cluster_id").as("pin_src")),
-        s"$dir/pins/seg=0"),
-      () => {
-        writeSeg(labels.select(col("doc_id"),
-          nibbleSplit(col("cluster_id")).as("split"), lit(0L).as("admit_seq")),
-          s"$dir/splits/seg=0")
-        n = spark.read.parquet(s"$dir/splits/seg=0").count()
-      })
-    VersionedIndex.commit(dir, 0, VersionedIndex.rows(n, n), Vector(0L),
-      logs = Seq("pins", "splits"), stream = stream)
-  }
+    // ~single-task writes); the splits write's row count is the log size
+    VersionedIndex.bootstrap(dir, Seq("pins", "splits"), stream) {
+      graft.Par.inParallel(
+        () => writeSeg(labels.select(col("cluster_id")).distinct()
+            .select(col("cluster_id"), nibbleSplit(col("cluster_id")).as("split"),
+              lit(0L).as("seq"), col("cluster_id").as("pin_src")),
+          dir, "pins", 0, OneFile),
+        () => writeSeg(labels.select(col("doc_id"),
+            nibbleSplit(col("cluster_id")).as("split"), lit(0L).as("admit_seq")),
+          dir, "splits", 0, OneFile)).last
+    }
 
   /** Admit one clustering delta ([[IncrementalDedup.admitBatchDelta]]'s
     * `newAssign`/`remap`) and commit the next version. `newAssign` is
@@ -196,14 +182,10 @@ object SplitPins {
       val splitSeg = pinned.select(col("doc_id"), col("split"),
         lit(next).as("admit_seq"))
       // The splits log is PURE APPEND (one row per doc ever admitted,
-      // never deduped), so the committed running total is m.totalRows +
-      // batch rows on BOTH paths — counting the pinned (local-
-      // checkpointed) batch replaces the sequential post-write parquet
-      // re-read, and runs CONCURRENTLY with the two seg writes, which
-      // touch disjoint paths (guide §2.6; all three actions read only
-      // already-pinned blocks).
-      val batchRows = new java.util.concurrent.atomic.AtomicLong
-      val countTask = () => { batchRows.set(pinned.count()); () }
+      // never deduped): an append's segment is the batch, a fold's the
+      // whole log, and the written row count gives the committed total
+      // on both paths. The two seg writes touch disjoint paths and read
+      // only already-pinned blocks — overlap them (guide §2.6).
       if (fold) {
         // splits: pure concatenation; pins: effective row per key (the
         // min-(seq, pin_src) reduction preserves every future lookup —
@@ -217,17 +199,13 @@ object SplitPins {
                 struct(col("seq"), col("pin_src"))).as("w"))
               .select(col("cluster_id"), col("w.split").as("split"),
                 col("w.seq").as("seq"), col("w.pin_src").as("pin_src")),
-            s"$dir/pins/seg=$next"),
+            dir, "pins", next, OneFile),
           () => writeSeg(VersionedIndex.readLog(spark, dir, "splits", m.segs,
-              SplitDdl).unionByName(splitSeg),
-            s"$dir/splits/seg=$next"),
-          countTask)
+              SplitDdl).unionByName(splitSeg), dir, "splits", next, OneFile)).last
       } else
-        graft.Par.inParallel(
-          () => writeSeg(pinSeg, s"$dir/pins/seg=$next"),
-          () => writeSeg(splitSeg, s"$dir/splits/seg=$next"),
-          countTask)
-      m.totalRows + batchRows.get()
+        m.totalRows + graft.Par.inParallel(
+          () => writeSeg(pinSeg, dir, "pins", next, OneFile),
+          () => writeSeg(splitSeg, dir, "splits", next, OneFile)).last
     } finally graft.Checkpoints.free(pinned)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
+import VersionedIndex.{OneFile, writeSeg}
 import graft.functions.TextFns
 
 /** Exact-substring (shared-passage) dedup and n-gram-overlap
@@ -363,12 +364,9 @@ object SubstringDedup {
   private val SpanDdl = "doc_a BIGINT, doc_b BIGINT, a_start BIGINT, " +
     "b_start BIGINT, span_tokens BIGINT"
 
-  private def writeWindowSeg(rows: DataFrame, path: String): Unit =
-    rows.select(col("doc_id"), col("pos"), col("wh"))
-      .withColumn("whb", whBucket(col("wh"), WinStateBuckets))
-      .repartition(col("whb"))
-      .sortWithinPartitions(col("whb"), col("wh"))
-      .write.mode("overwrite").partitionBy("whb").parquet(path)
+  /** The window log's layout: `whb` dirs, `wh`-sorted files. */
+  private val WindowLayout = VersionedIndex.Bucketed("whb",
+    whBucket(col("wh"), WinStateBuckets), "wh")
 
   /** On-disk layout (the [[VersionedIndex]] protocol — atomic CURRENT
     * pointer, manifest-listed segments, crashed commits invisible):
@@ -388,30 +386,16 @@ object SubstringDedup {
     * carry the WINDOW log size — the O(batch)-writes evidence the bench
     * stamps. */
   def bootstrapStore(spark: SparkSession, dir: String, docs: DataFrame,
-      k: Int = DedupK): Unit = {
-    require(VersionedIndex.currentVersion(dir).isEmpty,
-      s"$dir already holds a committed state — grow it with admitDrop")
+      k: Int = DedupK): Unit =
     // the window segment depends only on docs, not on the span join —
     // its write runs concurrently with the one-shot span computation
     // (the bootstrapDrop overlap shape); both sides re-run the narrow
     // windowRel scan rather than pinning a corpus-sized relation
-    // the window-segment footer count rides inside the window-write
-    // thunk (overlapped with the span leg) rather than running as a
-    // sequential job after both legs join — the admit-path countSeg
-    // shape (the count's input is the file this thunk just wrote)
-    @volatile var rows = -1L
-    val joinWins = graft.Par.background { () =>
-      writeWindowSeg(windowRel(docs, k), s"$dir/windows/seg=0")
-      rows = spark.read.parquet(s"$dir/windows/seg=0").count()
+    VersionedIndex.bootstrap(dir, Seq("windows", "spans")) {
+      graft.Par.overlap(
+        writeSeg(windowRel(docs, k), dir, "windows", 0, WindowLayout))(
+        writeSeg(duplicateSpans(docs, k), dir, "spans", 0, OneFile))._1
     }
-    graft.Par.joinOnFailure(joinWins) {
-      duplicateSpans(docs, k).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/spans/seg=0")
-    }
-    joinWins()
-    VersionedIndex.commit(dir, 0, VersionedIndex.rows(rows, rows), Vector(0L),
-      logs = Seq("windows", "spans"))
-  }
 
   def loadStore(spark: SparkSession, dir: String): Option[SubstringState] =
     VersionedIndex.meta(dir).map(stateAt(spark, dir, _))
@@ -448,28 +432,17 @@ object SubstringDedup {
     // AND the match join — pin once (batch-sized), free once written
     val nw = graft.Checkpoints.pin(windowRel(newDocs, k))
     try {
-      val joinWins = graft.Par.background { () =>
-        if (fold) writeWindowSeg(
-          st.windows.drop("whb").unionByName(nw), s"$dir/windows/seg=$next")
-        else writeWindowSeg(nw, s"$dir/windows/seg=$next")
-      }
-      graft.Par.joinOnFailure(joinWins) {
+      // the window write overlaps the span probe; its row count is the
+      // batch's windows (append) or the whole folded log (fold), and
+      // m.totalRows already carries the live log's size
+      val (winRows, _) = graft.Par.overlap(
+        writeSeg(if (fold) st.windows.drop("whb").unionByName(nw) else nw,
+          dir, "windows", next, WindowLayout)) {
         val newSpans = admitSpans(st, nw, k)
-        val spansOut =
-          if (fold) st.spans.unionByName(newSpans) else newSpans
-        spansOut.coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/spans/seg=$next")
+        writeSeg(if (fold) st.spans.unionByName(newSpans) else newSpans,
+          dir, "spans", next, OneFile)
       }
-      // the committed window-log total is derivable from the PINNED
-      // batch: the new windows are exactly nw's rows, and m.totalRows
-      // already carries the live log's size (bootstrap and every append
-      // maintain it; a fold rewrites log ∪ batch, i.e. the same sum) —
-      // so count the checkpointed batch while the (backgrounded) window
-      // write is still in flight instead of a sequential post-write
-      // parquet re-read of the whole folded segment
-      val nwRows = nw.count()
-      joinWins()
-      m.totalRows + nwRows
+      if (fold) winRows else m.totalRows + winRows
     } finally graft.Checkpoints.free(nw)
   }
 

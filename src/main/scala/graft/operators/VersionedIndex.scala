@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The atomic versioned-commit protocol of every persisted store: the
   * ANN index stores ([[Similarity.buildIvfIndex]]'s centroids +
@@ -8,7 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[SplitPins]], [[HeavyHitters]], [[SubstringDedup]],
   * [[EmbeddingIncremental]]) and the dedup state store
   * ([[graft.streaming.DedupStream]]). This object is the only code that
-  * reads or writes `CURRENT` and `v$N/MANIFEST`:
+  * reads or writes `CURRENT` and `v$N/MANIFEST`, and the only code that
+  * names a store's segment and model paths: the stores hand it
+  * relations and a [[Layout]] ([[writeSeg]], [[writeModel]],
+  * [[bootstrap]]) and get back the rows written, so no admission runs a
+  * count job over a segment it has just written:
   *
   * {{{
   * indexDir/
@@ -48,7 +53,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every path here goes through `java.io.File`, so a store dir must be
   * a driver-local path; [[requireLocalFs]] rejects a URI at every entry
-  * point before anything is written. */
+  * point before anything is written. (The dedup store's own `seg$N` and
+  * bucket-owner dirs stay in [[graft.streaming.DedupStream]]: its
+  * compaction fixes the task count at the bucket count.) */
 private[graft] object VersionedIndex {
 
   /** The committed state a reader resolves: the version, its live log
@@ -282,7 +289,7 @@ private[graft] object VersionedIndex {
     * their relations are batch-sized by construction); a fold rewrites
     * the logs and keeps AQE, as does an append with no `sizeBy`. The arm
     * is known from the manifest before any Spark work, so the whole
-    * body, backgrounded writes included, runs under one regime. */
+    * body, overlapped writes included, runs under one regime. */
   def appendOrFold(spark: SparkSession, dir: String, missing: String,
       maxLiveSegments: Int, logs: Seq[String], sizeBy: Seq[DataFrame],
       stream: Option[(String, Long)] = None,
@@ -296,6 +303,81 @@ private[graft] object VersionedIndex {
       else graft.Par.withAdmitPlan(spark, sizeBy: _*)(write(m, next, fold))
     commit(dir, next, rows(total, total),
       if (fold) Vector(next) else m.segs :+ next, logs, stream, retainVersions)
+  }
+
+  /** How [[writeSeg]] lays out a segment's files. */
+  sealed trait Layout
+
+  /** One file (`coalesce(1)`): the small logs (pins, splits, spans,
+    * labels, sketch cells). */
+  case object OneFile extends Layout
+
+  /** Partition directories by existing columns (`cid` for the IVF
+    * logs); none writes the files as planned. */
+  final case class PartitionedBy(cols: String*) extends Layout
+
+  /** Coarse bucket column `b` = `of`, one shuffle on it, rows sorted by
+    * (`b`, `key`) inside each file and partition dirs by `b` — the
+    * window and embedding bucket logs: a probe prunes to touched bucket
+    * dirs, then row groups on the sorted key. The task count is the
+    * plan's shuffle width. */
+  final case class Bucketed(b: String, of: Column, key: String) extends Layout
+
+  /** Write `df` as `$dir/$log/seg=$version` (overwrite: a crashed
+    * attempt's half-written segment is replaced) and return the rows
+    * written, summed from the written files' parquet footers on the
+    * driver — no Spark job. (An `Observation` would count on the write
+    * itself, but it leaves the session's observation manager set, and
+    * Spark then fails to serialize any closure that captures the
+    * session, such as a logistic-regression model's training summary.) */
+  def writeSeg(df: DataFrame, dir: String, log: String, version: Long,
+      layout: Layout): Long = {
+    val w = layout match {
+      case OneFile => df.coalesce(1).write
+      case PartitionedBy() => df.write
+      case PartitionedBy(cols @ _*) => df.write.partitionBy(cols: _*)
+      case Bucketed(b, of, key) => df.withColumn(b, of).repartition(col(b))
+        .sortWithinPartitions(col(b), col(key)).write.partitionBy(b)
+    }
+    val path = s"$dir/$log/seg=$version"
+    w.mode("overwrite").parquet(path)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val written = graft.FileSet.list(df.sparkSession, path)
+    written.files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"${written.root}/${f.path}"), conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** Write a version's model relation (centroids, codebook, remap) as
+    * one file at `$dir/v$version/$name`. */
+  def writeModel(df: DataFrame, dir: String, version: Long,
+      name: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(s"$dir/v$version/$name")
+
+  /** A version's model relation; `ddl` declares its schema, empty infers
+    * it from the file. */
+  def readModel(spark: SparkSession, dir: String, version: Long,
+      name: String, ddl: String = ""): DataFrame = {
+    val r = spark.read
+    (if (ddl.isEmpty) r
+      else r.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+      .parquet(s"$dir/v$version/$name")
+  }
+
+  /** Commit version 0 of a fresh store: reject a URI dir and an existing
+    * store before `write` runs, then commit the `seg=0` segments of
+    * `logs` that `write` wrote, with the log size it returns (the URI
+    * guard runs inside [[currentVersion]]). */
+  def bootstrap(dir: String, logs: Seq[String],
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = DefaultRetainVersions)(write: => Long): Unit = {
+    require(currentVersion(dir).isEmpty,
+      s"$dir already holds a committed store — admit into it instead")
+    val n = write
+    commit(dir, 0, rows(n, n), Vector(0L), logs, stream, retainVersions)
   }
 
   /** Copy a K-row model directory (centroids/codebook) into the next

@@ -393,7 +393,7 @@ object DedupStream {
     }
     if (next - prevF >= maxLiveSegments || oversized) {
       val major = prevC - prevCFrom >= MaxBaseCompactions
-      val task = () => graft.Par.inParallel(
+      val task: () => Unit = () => graft.Par.inParallel(
         () => compactLog(spark, stateDir, "bands", BandsDdl, major,
           prevCFrom, prevC, prevF, next - 1,
           IncrementalDedup.bandBucket(col("band"), col("band_hash"), b),

@@ -36,8 +36,9 @@ object ScaleGen {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // events.ts is INT64 TIMESTAMP(NANOS) (see Tables.events): read it as
-    // a plain long and write it back as one — Tables.events handles both
+    // the fixtures store events.ts as timestamp[us], which needs no conf;
+    // an older INT64 TIMESTAMP(NANOS) file reads as a plain long under
+    // this conf and is written back as one — Tables.events handles both
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")

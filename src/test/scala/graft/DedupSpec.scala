@@ -539,7 +539,7 @@ class DedupSpec extends AnyFunSuite {
     // disjoint from the 8 query vectors, vs the trained coarse centroids
     // + per-subspace-trained codebook. Measured on the real fixture the
     // learned index wins at every scale (0.29/0.23/0.24 vs
-    // 0.20/0.10/0.11 at sf0.001/0.01/0.1 — tools/IvfPqProbe).
+    // 0.20/0.10/0.11 at sf0.001/0.01/0.1 — bench/IVFPQ_PROBE_r22.txt).
     //
     // Why not a tight-cluster fixture: with 16 clean clusters the
     // trained codebook reconstructs every member of a cluster to ~the
@@ -547,7 +547,7 @@ class DedupSpec extends AnyFunSuite {
     // of the exact top-10 (all in the query's own ~40-member cluster)
     // degenerates to ~k/cluster_size regardless of model quality — at
     // that granularity the production answer is an exact re-rank of the
-    // ADC shortlist, not a better codebook (tools/IvfPqProbe measures
+    // ADC shortlist, not a better codebook (bench/IVFPQ_PROBE_r22.txt shows
     // the collapse: learned-np16 0.275 on a 16x40 fixture with a
     // PERFECT coarse stage).
     val emb = graft.engine.Tables.embeddings(spark, sf)

@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every persisted store commits through `VersionedIndex`, the one
   * place that reads or writes the `CURRENT` pointer and the `MANIFEST`
   * files; a second copy of that protocol would miss its single-writer
-  * guard and strict manifest parse. */
+  * guard and strict manifest parse. It is also the only code that names
+  * a store's `<log>/seg=$N` segments and `v$N/<model>` dirs, so the
+  * segment layout and its row counts live in one writer. */
 class EnvReadsSpec extends AnyFunSuite {
 
   private val Reads = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
@@ -27,13 +29,16 @@ class EnvReadsSpec extends AnyFunSuite {
 
   private val root = new java.io.File("src/main/scala")
 
+  /** Library files: everything but the command-line mains and tools. */
+  private def library: Seq[java.io.File] = scalaFiles(root).filterNot { f =>
+    val rel = root.toPath.relativize(f.toPath).toString
+    Mains(f.getName) || f.getName.endsWith("Demo.scala") ||
+      rel.startsWith("graft/tools/")
+  }
+
   test("no library code reads the environment or system properties") {
     assert(root.isDirectory, s"run from the repository root: $root")
-    val lib = scalaFiles(root).filterNot { f =>
-      val rel = root.toPath.relativize(f.toPath).toString
-      Mains(f.getName) || f.getName.endsWith("Demo.scala") ||
-        rel.startsWith("graft/tools/")
-    }
+    val lib = library
     assert(lib.exists(_.getName == "Par.scala"), "scan found no engine files")
     val reads = for {
       f <- lib
@@ -60,6 +65,23 @@ class EnvReadsSpec extends AnyFunSuite {
       code = line.trim
       if !(code.startsWith("*") || code.startsWith("/**"))
       if protocol.findFirstIn(code).isDefined
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only VersionedIndex builds store segment and version paths") {
+    assert(root.isDirectory, s"run from the repository root: $root")
+    // DedupStream's bucket-owner dirs `<table>/b$k/v$N` are its own layout
+    val paths = """seg=|(?<!/b\$k)/v\$""".r
+    val lib = library
+    assert(lib.exists(_.getName == "SplitPins.scala"), "scan found no store files")
+    val hits = for {
+      f <- lib if f.getName != "VersionedIndex.scala"
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq
+        .zipWithIndex
+      code = line.trim
+      if !(code.startsWith("*") || code.startsWith("/**") || code.startsWith("//"))
+      if paths.findFirstIn(code).isDefined
     } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

@@ -54,6 +54,49 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("Tables.events leaves the caller's nanosAsLong alone on a timestamp[us] file") {
+    val k = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(k)
+    spark.conf.set(k, "false")
+    try {
+      assert(graft.engine.Tables.events(spark, sf).schema("ts").dataType == TimestampType)
+      assert(spark.conf.get(k) == "false")
+    } finally before match {
+      case Some(v) => spark.conf.set(k, v)
+      case None => spark.conf.unset(k)
+    }
+  }
+
+  test("Tables.events reads an INT64 TIMESTAMP(NANOS) ts, truncated to micros") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val k = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.getOption(k)
+    val dir = Files.createTempDirectory("graft-ev-int64-nanos").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try w.write(groups.newGroup().append("event_id", 1L)
+      .append("ts", 1700000000123456789L))
+    finally w.close()
+    spark.conf.set(k, "false")
+    try {
+      val ev = graft.engine.Tables.events(spark, dir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      assert(ev.select(expr("unix_micros(ts)")).head().getLong(0) == 1700000000123456L)
+    } finally {
+      before match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   /** Jobs `body` starts, counted after draining the listener bus. */
   private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
