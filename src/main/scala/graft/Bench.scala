@@ -494,8 +494,9 @@ object Bench {
         spark, s"$root/state", day(0).union(day(1))))
       val admit = secs(graft.operators.SubstringDedup.admitDrop(
         spark, s"$root/state", day(2)))
-      val segRows = spark.read.parquet(s"$root/state/windows/seg=1").count()
-      val batchRows = spark.read.parquet(s"$root/state/windows/seg=0").count()
+      def windowRows(v: Long) = graft.operators.VersionedIndex.segRows(
+        spark, s"$root/state", "windows", v)
+      val (segRows, batchRows) = (windowRows(1), windowRows(0))
       try org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(root))
       catch { case _: Exception => }

@@ -11,6 +11,12 @@ import graft.operators.{Corpus, Dedup, Events, Multimodal, Similarity, TextAnaly
   * equivalent DuckDB SQL over the same parquet tables. Column names and
   * dtypes are aligned between both sides (the driver's compare sorts
   * columns by name and hashes values).
+  *
+  * A query returns a relation: its row order is not part of its
+  * contract. The driver, `tools/localcheck.py` and perfbench all compare
+  * rows order-free, so a query sorts only where the order decides which
+  * rows it returns (`ORDER BY … LIMIT`, planned as TakeOrderedAndProject).
+  * A caller that needs ordered rows sorts them itself.
   */
 object SparkEntry {
 

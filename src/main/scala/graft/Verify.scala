@@ -33,7 +33,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      // one file per query; repartition, not coalesce, so the query's
+      // own last stage keeps its parallelism (queries end unsorted)
+      try fn(spark, sfDir).repartition(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

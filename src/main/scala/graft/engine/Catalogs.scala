@@ -136,7 +136,6 @@ object Catalogs {
     StarQueries.arrestPctTopk(s, d)
       .withColumnRenamed("c_nationkey", "community_area")
       .join(broadcast(lookup), "community_area")
-      .orderBy(col("tot_reports").desc, col("community_area"))
   }
 
   val lookupJoinSql: String =

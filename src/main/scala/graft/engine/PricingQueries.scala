@@ -33,7 +33,6 @@ object PricingQueries {
         min(col("l_extendedprice")).as("min_price"),
         max(col("l_extendedprice")).as("max_price"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
   }
 
   val pricingSummarySql: String =
@@ -87,7 +86,6 @@ object PricingQueries {
     val day2 = Tables.orders(s, d).filter(col("o_orderkey") % 2 === 1)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
     day1.unionByName(day2, allowMissingColumns = true)
-      .orderBy("o_orderkey")
   }
 
   val schemaDriftUnionSql: String =
@@ -107,7 +105,6 @@ object PricingQueries {
       .groupBy("l_returnflag")
       .agg(countDistinct(col("l_partkey")).as("exact_parts"),
         count(lit(1)).as("n_rows"))
-      .orderBy("l_returnflag")
 
   val distinctCountsSql: String =
     """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS exact_parts,
@@ -148,7 +145,6 @@ object PricingQueries {
         * (lit(1) - col("l_discount").cast("decimal(18,2)"))).cast("decimal(28,6)"))
         .cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
-      .orderBy(col("revenue").desc, col("n_name"))
   }
 
   val regionVolumeSql: String =
@@ -178,7 +174,6 @@ object PricingQueries {
         expr("approx_percentile(l_extendedprice, 0.5, 10000)").as("price_p50"),
         expr("approx_percentile(l_extendedprice, 0.99, 10000)").as("price_p99"),
         count(lit(1)).as("n_rows"))
-      .orderBy("l_returnflag")
 
   /** Error bounds the q32 booleans pin. HLL at rsd=0.02 is well inside
     * 10% relative (PricingSpec has asserted that numerically since
@@ -252,7 +247,6 @@ object PricingQueries {
           / col("exact_parts") <= lit(HllRelBound)).as("parts_ok"),
         quantileOk(0.5, "n_lt_p50", "n_le_p50").as("p50_ok"),
         quantileOk(0.99, "n_lt_p99", "n_le_p99").as("p99_ok"))
-      .orderBy("l_returnflag")
   }
 
   /** The oracle recomputes the exact values and pins every bound boolean:

@@ -22,7 +22,6 @@ object StarQueries {
     orders(s, d)
       .groupBy(concat(col("o_orderstatus"), lit(" - "), col("o_orderpriority")).as("crime_type"))
       .agg(count(lit(1)).as("count"))
-      .orderBy("crime_type")
 
   val countByTypeSql: String =
     """SELECT o_orderstatus || ' - ' || o_orderpriority AS crime_type,
@@ -36,7 +35,6 @@ object StarQueries {
     part(s, d)
       .filter((col("p_type") === "ECONOMY" && col("p_name").like("%widget%")) ||
         col("p_type").isin("PROMO", "LARGE", "SMALL"))
-      .orderBy("p_partkey")
 
   val violentFilterSql: String =
     """SELECT * FROM part
@@ -92,7 +90,6 @@ object StarQueries {
       .withColumn("day", dayofmonth(col("new_date")).cast("long"))
       .select("o_orderkey", "date_str", "date_timestamp", "new_date",
         "day_of_week", "day_of_week_num", "month", "day")
-      .orderBy("o_orderkey")
   }
 
   val fixedDatesSql: String =
@@ -115,7 +112,6 @@ object StarQueries {
       .groupBy(year(col("l_shipdate")).cast("long").as("year"),
         month(col("l_shipdate")).cast("long").as("month"))
       .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_qty"))
-      .orderBy("year", "month")
 
   val partitionDeriveSql: String =
     """SELECT year(l_shipdate) AS year, month(l_shipdate) AS month,
@@ -136,7 +132,6 @@ object StarQueries {
       .orderBy(col("n_orders").desc, col("c_custkey"))
     perCust.withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 3)
-      .orderBy("c_nationkey", "rnk")
   }
 
   val topkWindowSql: String =

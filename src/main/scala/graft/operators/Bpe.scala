@@ -153,11 +153,10 @@ object Bpe {
 
   def qBpePack(s: SparkSession, d: String): DataFrame =
     Sequencing.packSequences(Tables.documents(s, d),
-      nTokens = tokenCount(col("text"))).orderBy("doc_id")
+      nTokens = tokenCount(col("text")))
 
   def qBpeChunk(s: SparkSession, d: String): DataFrame =
     Sequencing.chunkTokensOf(Tables.documents(s, d), tokens(col("text")))
-      .orderBy("doc_id", "chunk_id")
 
   /** q67: subword-vocabulary statistics — per BPE token, corpus
     * occurrences and document frequency, top-K by occurrences. The
@@ -317,7 +316,6 @@ object Bpe {
     src.select(col("doc_id"), posexplode(tokens(col("text"))))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("token"))
-      .orderBy("doc_id", "pos")
   }
 
   /** The fixture rows as SQL literals (single quotes escaped; the

@@ -348,7 +348,6 @@ object Corpus {
 
   def qTokenBudgetMix(s: SparkSession, d: String): DataFrame =
     tokenBudgetMix(Tables.documents(s, d), TokenMixBudget)
-      .orderBy("doc_id")
 
   /** The oracle replays the budget fill as one plain per-source window
     * over the identical md5 order — the blocked formulation must equal
@@ -377,7 +376,6 @@ object Corpus {
 
   def qQualityWeightedMix(s: SparkSession, d: String): DataFrame =
     qualityWeightedMix(Tables.documents(s, d), QualityMixBase)
-      .orderBy("doc_id")
 
   /** The oracle replays the whole loop: q83's weak labels (exact
     * percentile terciles over q8's quality), per-source pass rates in
@@ -442,7 +440,7 @@ object Corpus {
       .withColumn("split", SplitPins.nibbleSplit(col("cluster_id")))
 
   def qClusterSafeSplit(s: SparkSession, d: String): DataFrame =
-    clusterSafeSplit(Tables.documents(s, d)).orderBy("doc_id")
+    clusterSafeSplit(Tables.documents(s, d))
 
   /** Oracle: the q37 closure clustering (shared CTE chain) + the same
     * md5-nibble rule on the cluster id. */
@@ -522,7 +520,7 @@ object Corpus {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qShuffleShard(s: SparkSession, d: String): DataFrame =
-    shuffleShard(Tables.documents(s, d)).orderBy("doc_id")
+    shuffleShard(Tables.documents(s, d))
 
   val qShuffleShardSql: String =
     """WITH h AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents)
@@ -536,7 +534,7 @@ object Corpus {
       |FROM h ORDER BY doc_id""".stripMargin
 
   def qSourceStats(s: SparkSession, d: String): DataFrame =
-    sourceStats(Tables.documents(s, d)).orderBy("source")
+    sourceStats(Tables.documents(s, d))
 
   val qSourceStatsSql: String =
     s"""WITH RECURSIVE ${Dedup.jaccardCtesSql},
@@ -561,7 +559,7 @@ object Corpus {
     * [[decontaminate]] (spec-pinned), so the DuckDB oracle gates the
     * scale shape a deployment actually runs. */
   def qDecontaminate(s: SparkSession, d: String): DataFrame =
-    decontaminateBloom(Tables.documents(s, d)).orderBy("doc_id")
+    decontaminateBloom(Tables.documents(s, d))
 
   /** Minimal shingle CTE (the full [[Dedup.jaccardCtesSql]] chain would
     * also compute the unused minhash column per doc); probe bound
@@ -662,7 +660,7 @@ object Corpus {
       .unionByName(NeardupTrainFixture.toDF("doc_id", "text"))
     val probe = docs.filter(col("doc_id") < DefaultProbeMaxId)
       .unionByName(NeardupProbeFixture.toDF("doc_id", "text"))
-    neardupDecontaminate(train, probe).orderBy("doc_id")
+    neardupDecontaminate(train, probe)
   }
 
   /** The oracle replays the WHOLE route cross-set: bands over the union
@@ -707,7 +705,6 @@ object Corpus {
     mixCorpus(Tables.documents(s, d).filter(
       !(col("source").isin("src0", "src1", "src2") &&
         expr("(doc_id div 20) % 2 = 1"))))
-      .orderBy("doc_id")
 
   /** The oracle recomputes the skew, counts, integer thresholds, and the
     * same md5-derived hash gate — the kept set must match row for row. */
@@ -726,7 +723,7 @@ object Corpus {
       |ORDER BY d.doc_id""".stripMargin
 
   def qCorpusFilter(s: SparkSession, d: String): DataFrame =
-    corpusFilter(Tables.documents(s, d)).orderBy("doc_id")
+    corpusFilter(Tables.documents(s, d))
 
   /** Composed oracle: the q37 closure chain labels clusters over ALL
     * docs; the q8 / q9 statements run as subqueries for quality and
@@ -820,7 +817,7 @@ object Corpus {
   def qModelBudgetGate(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val lab = Dedup.memoPersist(docs, "q83labeled")(QualityModel.labeled)
-    modelBudgetGateFrom(docs, lab, QualityMixBase).orderBy("source")
+    modelBudgetGateFrom(docs, lab, QualityMixBase)
   }
 
   /** Oracle: replay the weak side exactly (q83's labels + md5 split,
@@ -946,7 +943,7 @@ object Corpus {
           " AS BIGINT)").as("shard"))
     val out = graft.Checkpoints.pin(
       dFold.unionByName(dNear).unionByName(dCont).unionByName(dLow)
-        .unionByName(dBud).unionByName(dKept).orderBy("doc_id"))
+        .unionByName(dBud).unionByName(dKept))
     Seq(r1, s2, s3, s3q, cum).foreach(graft.Checkpoints.free)
     out
   }

@@ -1049,7 +1049,6 @@ object Dedup {
         when(col("dup_src").isNull, lit("keep")).otherwise(lit("drop"))
           .as("status"),
         coalesce(col("dup_src"), lit(-1L)).as("dup_of"))
-      .orderBy("vec_id")
   }
 
   /** Expected size of the sampled ground-truth stratum the LSH arm
@@ -1137,7 +1136,7 @@ object Dedup {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qExact(s: SparkSession, d: String): DataFrame =
-    exact(Tables.documents(s, d)).orderBy("content_hash")
+    exact(Tables.documents(s, d))
 
   val qExactSql: String =
     """SELECT md5(text) AS content_hash, MIN(doc_id) AS keep_doc_id,
@@ -1158,7 +1157,7 @@ object Dedup {
     s"((2*k + 1) * h + k * 104729) % $HashPrime"
 
   def qMinhash(s: SparkSession, d: String): DataFrame =
-    minhashSignature(Tables.documents(s, d)).orderBy("doc_id", "k")
+    minhashSignature(Tables.documents(s, d))
 
   val qMinhashSql: String =
     s"""WITH sh AS (SELECT doc_id, list_transform($shinglesSqlExpr, s -> $h0SqlExpr) AS h0s
@@ -1169,14 +1168,13 @@ object Dedup {
        |ORDER BY doc_id, k""".stripMargin
 
   def qLshPairs(s: SparkSession, d: String): DataFrame =
-    lshCandidatePairs(Tables.documents(s, d)).orderBy("doc_a", "doc_b")
+    lshCandidatePairs(Tables.documents(s, d))
 
   /** q57: the hot-bucket salted variant of q13, against the SAME oracle
     * — the correctness proof that the salt grid is an exact
     * decomposition of the LSH band self-join (the q52↔q36 pattern). */
   def qLshPairsSalted(s: SparkSession, d: String): DataFrame =
     lshCandidatePairs(Tables.documents(s, d), saltBuckets = 4)
-      .orderBy("doc_a", "doc_b")
 
   val qLshPairsSql: String = {
     val rows = NumHashes / NumBands
@@ -1197,7 +1195,7 @@ object Dedup {
   }
 
   def qJaccardPairs(s: SparkSession, d: String): DataFrame =
-    jaccardPairs(Tables.documents(s, d)).orderBy("doc_a", "doc_b")
+    jaccardPairs(Tables.documents(s, d))
 
   /** Oracle fragment: `sh` (shingle sets + h0 hashes) → `sig` (minhash
     * signatures) → `bands` (banded signature hashes) over source CTE
@@ -1247,7 +1245,7 @@ object Dedup {
        |SELECT doc_a, doc_b, jaccard FROM jac ORDER BY doc_a, doc_b""".stripMargin
 
   def qSimhash(s: SparkSession, d: String): DataFrame =
-    simhash(Tables.documents(s, d)).orderBy("doc_id")
+    simhash(Tables.documents(s, d))
 
   val qSimhashSql: String =
     """WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS toks
@@ -1261,14 +1259,13 @@ object Dedup {
       |FROM t ORDER BY doc_id""".stripMargin
 
   def qSimhashPairs(s: SparkSession, d: String): DataFrame =
-    simhashPairs(Tables.documents(s, d)).orderBy("doc_a", "doc_b")
+    simhashPairs(Tables.documents(s, d))
 
   /** q52: the hot-band salted variant of q36, against the SAME
     * brute-force oracle — the correctness proof that the salt grid is an
     * exact decomposition of the band self-join. */
   def qSimhashPairsSalted(s: SparkSession, d: String): DataFrame =
     simhashPairs(Tables.documents(s, d), saltBuckets = 4)
-      .orderBy("doc_a", "doc_b")
 
   /** The oracle brute-forces ALL pairs on the 60-bit simhash — comparing
     * it against the banded Spark plan is exactly the pigeonhole-
@@ -1292,7 +1289,7 @@ object Dedup {
        |ORDER BY doc_a, doc_b""".stripMargin
 
   def qDupClusters(s: SparkSession, d: String): DataFrame =
-    duplicateClusters(Tables.documents(s, d)).orderBy("doc_id")
+    duplicateClusters(Tables.documents(s, d))
 
   /** Component-closure CTEs over `jac` (requires [[jaccardCtesSql]] in
     * scope under WITH RECURSIVE): `lab` = (doc_id, cluster_id), `sz` =
@@ -1321,7 +1318,7 @@ object Dedup {
        |FROM lab JOIN sz USING (cluster_id) ORDER BY doc_id""".stripMargin
 
   def qEmbedNearDups(s: SparkSession, d: String): DataFrame =
-    embeddingNearDups(Tables.embeddings(s, d)).orderBy("vec_a", "vec_b")
+    embeddingNearDups(Tables.embeddings(s, d))
 
   /** The ::DOUBLE[] casts make DuckDB accumulate in float64 like Spark's
     * double-typed zip_with/aggregate (float32 output would diverge at the
@@ -1493,7 +1490,7 @@ object Dedup {
     * than a recall floor; the recall trade itself is spec-measured in
     * DedupSpec and documented on [[embeddingNearDupsLsh]]). */
   def qEmbedNearDupsLsh(s: SparkSession, d: String): DataFrame =
-    embeddingNearDupsLsh(Tables.embeddings(s, d)).orderBy("vec_a", "vec_b")
+    embeddingNearDupsLsh(Tables.embeddings(s, d))
 
   /** CTE fragment replaying the whole LSH near-dup route in DuckDB —
     * `esrc` (the source relation, parameterizable so chained queries
@@ -1535,7 +1532,7 @@ object Dedup {
 
   def qEmbedNearDupsMultiProbe(s: SparkSession, d: String): DataFrame =
     embeddingNearDupsLsh(Tables.embeddings(s, d),
-      probes = NearDupMultiProbes).orderBy("vec_a", "vec_b")
+      probes = NearDupMultiProbes)
 
   /** The q58 oracle with the multi-probe expansion: per (vector, table),
     * the own bucket plus the `probes` smallest-|projection| plane flips
@@ -1578,7 +1575,7 @@ object Dedup {
     val (tables, planes, probes) = routerLshGrid(0.45)
     embeddingNearDupsLsh(Tables.embeddings(s, d),
       nTables = tables, planes = planes,
-      probes = probes).orderBy("vec_a", "vec_b")
+      probes = probes)
   }
 
   val qEmbedNearDupsAutoGridSql: String = {
@@ -1589,7 +1586,7 @@ object Dedup {
 
   /** q61 — semantic-dedup clustering over the LSH near-dup graph. */
   def qEmbedClusters(s: SparkSession, d: String): DataFrame =
-    embeddingDupClusters(Tables.embeddings(s, d)).orderBy("vec_id")
+    embeddingDupClusters(Tables.embeddings(s, d))
 
   /** Transitive closure as a recursive CTE over the SAME LSH-routed
     * edge relation the Spark side clusters — the q37 pattern on the

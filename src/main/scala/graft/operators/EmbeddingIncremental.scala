@@ -488,7 +488,7 @@ object EmbeddingIncremental {
     val emb = Tables.embeddings(s, d)
     val st0 = initialState(emb.filter(col("vec_id") % 5 =!= 0))
     val st1 = admitBatch(st0, emb.filter(col("vec_id") % 5 === 0))
-    labelsWithSizes(st1).orderBy("vec_id")
+    labelsWithSizes(st1)
   }
 
   val qIncrementalSql: String = Dedup.qEmbedClustersSql

@@ -183,7 +183,7 @@ object Events {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qHourlyWindows(s: SparkSession, d: String): DataFrame =
-    hourlyWindows(Tables.events(s, d)).orderBy("window_start", "event_type")
+    hourlyWindows(Tables.events(s, d))
 
   val qHourlyWindowsSql: String =
     """SELECT date_trunc('hour', ts) AS window_start, event_type,
@@ -192,7 +192,7 @@ object Events {
       |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin
 
   def qJsonExtract(s: SparkSession, d: String): DataFrame =
-    jsonExtract(Tables.events(s, d)).orderBy("event_type")
+    jsonExtract(Tables.events(s, d))
 
   val qJsonExtractSql: String =
     """SELECT event_type, COUNT(*) AS n_events,
@@ -202,7 +202,7 @@ object Events {
       |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin
 
   def qSessionize(s: SparkSession, d: String): DataFrame =
-    sessionize(Tables.events(s, d)).orderBy("user_id", "session_id")
+    sessionize(Tables.events(s, d))
 
   val qSessionizeSql: String =
     s"""WITH g AS (
@@ -224,10 +224,9 @@ object Events {
 
   def qAsOfJoin(s: SparkSession, d: String): DataFrame =
     asOfJoinOrders(Tables.events(s, d), Tables.orders(s, d))
-      .orderBy("event_id")
 
   def qRangeJoin(s: SparkSession, d: String): DataFrame =
-    rangeJoinPriorCount(Tables.events(s, d)).orderBy("event_id")
+    rangeJoinPriorCount(Tables.events(s, d))
 
   val qRangeJoinSql: String =
     """SELECT e1.event_id, COUNT(e2.event_id) AS n_prior

@@ -385,7 +385,6 @@ object HeavyHitters {
     import s.implicits._
     heavyGrams(Tables.documents(s, d).select(col("doc_id"), col("text"))
         .unionByName(BoilerplateFixture.toDF("doc_id", "text")))
-      .orderBy("gram")
   }
 
   /** q90: the persisted incremental sketch — three daily drops
@@ -410,7 +409,6 @@ object HeavyHitters {
       .deleteDirectory(new java.io.File(root))
     catch { case _: Exception => }
     candidatesWithExact(widened(docs), grid, CmsDepth, CmsWidth)
-      .orderBy("gram")
   }
 
   /** Chained sketch ≡ one-shot: q88's oracle verbatim (set after

@@ -655,7 +655,6 @@ object IncrementalDedup {
     val oldDocs = docs.filter(col("doc_id") % 5 =!= 0)
     val newBatch = docs.filter(col("doc_id") % 5 === 0)
     labelsWithSizes(admitBatch(initialState(oldDocs), newBatch))
-      .orderBy("doc_id")
   }
 
   /** Oracle mirrors the incremental semantics literally: cluster the day-1

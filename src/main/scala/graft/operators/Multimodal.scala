@@ -920,7 +920,6 @@ object Multimodal {
     }.toDF("media_id", "format", "issue", "sample_rate", "channels",
       "bits_per_sample", "bitrate_kbps", "n_frames", "total_samples",
       "n_bytes")
-      .orderBy("media_id")
   }
 
   /** The oracle: organic rows replay the generator's doc_id arithmetic
@@ -1045,7 +1044,6 @@ object Multimodal {
       .toDF("format", "reason", "n_bytes")
       .groupBy("format", "reason")
       .agg(count(lit(1)).as("n_media"), sum(col("n_bytes")).as("sum_bytes"))
-      .orderBy("format", "reason")
   }
 
   /** The oracle: organic rows are 'ok' by construction (generator
@@ -1080,7 +1078,6 @@ object Multimodal {
       .toDF()
       .select(col("media_id"), col("n_bytes"), col("format"),
         col("width"), col("height"), col("brightness"), col("content_hash"))
-      .orderBy("media_id")
   }
 
   /** Projection of [[qMediaDecodeSql]]'s independent re-derivation
@@ -1106,7 +1103,7 @@ object Multimodal {
   def qMediaDecode(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     decodeFeatures(decodableMediaTable(Tables.documents(s, d)))
-      .toDF().orderBy("media_id")
+      .toDF()
   }
 
   /** The oracle never parses bytes: it re-derives width/height (images)
@@ -1141,13 +1138,13 @@ object Multimodal {
       |FROM documents ORDER BY media_id""".stripMargin
 
   def qFrameSample(s: SparkSession, d: String): DataFrame =
-    sampleFrames(mediaTable(Tables.documents(s, d))).orderBy("media_id", "frame_idx")
+    sampleFrames(mediaTable(Tables.documents(s, d)))
 
   /** q75: real PCM sample statistics over every wav row's payload. */
   def qPcmStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     pcmStats(decodableMediaTable(Tables.documents(s, d)))
-      .toDF().orderBy("media_id")
+      .toDF()
   }
 
   /** The oracle re-derives the STATISTICS FROM THE PAYLOAD BYTES
@@ -1277,7 +1274,7 @@ object Multimodal {
   }
 
   def qFlacPcmStats(s: SparkSession, d: String): DataFrame =
-    flacPcmStats(Tables.documents(s, d)).orderBy("media_id")
+    flacPcmStats(Tables.documents(s, d))
 
   /** Oracle: every sample re-derived from the DOCUMENT TEXT alone —
     * the constant frame from the doc_id arithmetic, the verbatim frame

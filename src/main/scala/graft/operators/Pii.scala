@@ -200,7 +200,6 @@ object Pii {
     scrub(src)
       .withColumn("redacted_hash", md5(col("text_redacted")))
       .drop("text_redacted")
-      .orderBy("doc_id")
   }
 
   private def fixtureValues: String = PiiFixture.map {

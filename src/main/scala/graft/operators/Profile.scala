@@ -76,7 +76,6 @@ object Profile {
       Tables.orders(s, d).select("o_orderkey", "o_custkey", "o_orderstatus",
         "o_totalprice", "o_orderpriority"),
       c => countDistinct(c), "exact_distinct")
-      .orderBy("column_name")
 
   val qProfileSql: String = {
     val cols = Seq(

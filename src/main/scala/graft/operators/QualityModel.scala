@@ -155,7 +155,6 @@ object QualityModel {
     lab.select(col("doc_id"), col("weak_label"), col("split"))
       .withColumn("model_pass", lit(agree >= AgreementFloor))
       .withColumn("beats_majority", lit(agree > majority))
-      .orderBy("doc_id")
   }
 
   /** Oracle: replay the thresholds (quantile_cont ≡ the engine's exact

@@ -133,7 +133,7 @@ object Sequencing {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qPackSequences(s: SparkSession, d: String): DataFrame =
-    packSequences(Tables.documents(s, d)).orderBy("doc_id")
+    packSequences(Tables.documents(s, d))
 
   val qPackSequencesSql: String =
     s"""SELECT doc_id, lang,
@@ -145,7 +145,7 @@ object Sequencing {
        |FROM documents ORDER BY doc_id""".stripMargin
 
   def qChunkTokens(s: SparkSession, d: String): DataFrame =
-    chunkTokens(Tables.documents(s, d)).orderBy("doc_id", "chunk_id")
+    chunkTokens(Tables.documents(s, d))
 
   val qChunkTokensSql: String =
     s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks

@@ -1032,7 +1032,7 @@ object Similarity {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qCosineTopK(s: SparkSession, d: String): DataFrame =
-    bruteForceTopK(Tables.embeddings(s, d)).orderBy("query_id", "rnk")
+    bruteForceTopK(Tables.embeddings(s, d))
 
   val qCosineTopKSql: String =
     """WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
@@ -1049,7 +1049,7 @@ object Similarity {
       |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
 
   def qAnnIvf(s: SparkSession, d: String): DataFrame =
-    annIvf(Tables.embeddings(s, d)).orderBy("query_id", "rnk")
+    annIvf(Tables.embeddings(s, d))
 
   val qAnnIvfSql: String =
     s"""WITH cent AS (
@@ -1088,7 +1088,7 @@ object Similarity {
        |WHERE rnk <= 10 ORDER BY query_id, rnk""".stripMargin
 
   def qAnnLsh(s: SparkSession, d: String): DataFrame =
-    annLsh(Tables.embeddings(s, d)).orderBy("query_id", "rnk")
+    annLsh(Tables.embeddings(s, d))
 
   /** q43 runs the PRODUCTION shape: query the persisted PQ index
     * ([[ensurePqIndex]] builds it once per corpus per process), which
@@ -1097,7 +1097,6 @@ object Similarity {
     * steady state a deployment actually pays per query batch. */
   def qAnnPq(s: SparkSession, d: String): DataFrame =
     annPqIndexed(Tables.embeddings(s, d), ensurePqIndex(s, d))
-      .orderBy("query_id", "rnk")
 
   /** Shared DuckDB snippets for the PQ math — the encode CTEs
     * (codebook, encoded codes, query norms) and the ADC score
@@ -1161,7 +1160,6 @@ object Similarity {
     * batch. */
   def qAnnIvfPq(s: SparkSession, d: String): DataFrame =
     annIvfPqIndexed(Tables.embeddings(s, d), ensureIvfPqIndex(s, d))
-      .orderBy("query_id", "rnk")
 
   /** Mirrors [[annIvfPq]]: [[qAnnIvfSql]]'s probe/assignment CTEs
     * composed with [[qAnnPqSql]]'s encode + ADC scoring, candidates
@@ -1211,14 +1209,12 @@ object Similarity {
     * shortlist with exact cosine. */
   def qAnnRefined(s: SparkSession, d: String): DataFrame =
     annIvfPqRefined(Tables.embeddings(s, d), ensureIvfPqIndex(s, d))
-      .orderBy("query_id", "rnk")
 
   /** q70 — the deep-shortlist refine over the SAME persisted index q60
     * reads (no rebuild, no probe change; see [[DeepShortlist]]): the
     * production recall configuration, full-hash oracle like q60's. */
   def qAnnRefinedDeep(s: SparkSession, d: String): DataFrame =
     annIvfPqRefinedDeep(Tables.embeddings(s, d), ensureIvfPqIndex(s, d))
-      .orderBy("query_id", "rnk")
 
   def qAnnRefinedDeepSql: String = annRefinedSqlAt(DeepShortlist)
 
@@ -1382,7 +1378,7 @@ object Similarity {
   }
 
   def qAnnRecall(s: SparkSession, d: String): DataFrame =
-    annRecallAll(s, d).orderBy("method", "query_id")
+    annRecallAll(s, d)
 
   // def, not val: the per-family SQL strings are declared later in this
   // object and a strict val here would capture null during object init
@@ -1466,7 +1462,6 @@ object Similarity {
     recallFloorVsExact(emb,
       annIvfIndexed(emb, ensureIvfIndex(s, d)),
       nQueries = 8, k = 10, floor = KmeansRecallFloor)
-      .orderBy("query_id")
   }
 
   /** The oracle pins the boolean: DuckDB can't rerun k-means||, but it
@@ -1585,7 +1580,7 @@ object Similarity {
   }
 
   def qAnnLshMultiProbe(s: SparkSession, d: String): DataFrame =
-    annLshMultiProbe(Tables.embeddings(s, d)).orderBy("query_id", "rnk")
+    annLshMultiProbe(Tables.embeddings(s, d))
 
   /** q69's oracle: the q18 corpus buckets joined against multi-probe
     * QUERY buckets — projections, smallest-margin plane selection, and

@@ -248,7 +248,7 @@ object SplitPins {
     // pin before the state dir is deleted (the caller writes AFTER this
     // returns; a lazy scan would read deleted files)
     val out = graft.Checkpoints.pin(
-      loadSplits(s, s"$root/state").orderBy("doc_id"))
+      loadSplits(s, s"$root/state"))
     d1.release(); d2.release()
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))

@@ -514,7 +514,6 @@ object SubstringDedup {
     duplicateSpans(
       Tables.documents(s, d).select(col("doc_id"), col("text"))
         .unionByName(fixtureDf(s, SpanFixture)), DedupK)
-      .orderBy("doc_a", "doc_b", "a_start", "b_start")
 
   /** Oracle fragment: the window relation `<p>wins(doc_id, pos, wh)` of
     * source CTE `src` — the [[windowRel]] replay. DuckDB's `range()`
@@ -565,7 +564,6 @@ object SubstringDedup {
     val probe = docs.filter(col("doc_id") < Corpus.DefaultProbeMaxId)
       .unionByName(fixtureDf(s, BenchmarkFixture))
     contaminationSpans(train, probe, ContaminationK)
-      .orderBy("train_doc", "probe_doc", "train_start", "probe_start")
   }
 
   /** q85: the incremental ladder rung for q76 — three "daily" drops
@@ -588,8 +586,7 @@ object SubstringDedup {
     admitDrop(s, s"$root/state", day(2), maxLiveSegments = 2) // fold
     // pin before the state dir is deleted (the caller writes AFTER this
     // returns; a lazy scan would read deleted files)
-    val out = graft.Checkpoints.pin(loadStore(s, s"$root/state").get.spans
-      .orderBy("doc_a", "doc_b", "a_start", "b_start"))
+    val out = graft.Checkpoints.pin(loadStore(s, s"$root/state").get.spans)
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))
     catch { case _: Exception => }

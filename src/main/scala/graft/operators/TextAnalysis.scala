@@ -226,7 +226,7 @@ object TextAnalysis {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qTokenStats(s: SparkSession, d: String): DataFrame =
-    tokenStats(Tables.documents(s, d)).orderBy("doc_id")
+    tokenStats(Tables.documents(s, d))
 
   val qTokenStatsSql: String =
     """SELECT doc_id,
@@ -237,7 +237,7 @@ object TextAnalysis {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   def qQualityScore(s: SparkSession, d: String): DataFrame =
-    qualityScore(Tables.documents(s, d)).orderBy("doc_id")
+    qualityScore(Tables.documents(s, d))
 
   /** q8's relation over an arbitrary source fragment — embeddable as a
     * parenthesized subquery (q94's composed ladder scores its stage-3
@@ -270,7 +270,7 @@ object TextAnalysis {
     s"$qualityScoreNoOrderSql ORDER BY doc_id"
 
   def qLangId(s: SparkSession, d: String): DataFrame =
-    langId(Tables.documents(s, d)).orderBy("doc_id")
+    langId(Tables.documents(s, d))
 
   val qLangIdSql: String = {
     val scoreCols = langMarkers.map { case (lang, words) =>
@@ -314,7 +314,7 @@ object TextAnalysis {
       .select("doc_id", "lang", "n_chars")
 
   def qLengthPercentiles(s: SparkSession, d: String): DataFrame =
-    lengthPercentiles(Tables.documents(s, d)).orderBy("lang")
+    lengthPercentiles(Tables.documents(s, d))
 
   val qLengthPercentilesSql: String =
     """SELECT lang,
@@ -325,7 +325,7 @@ object TextAnalysis {
       |FROM documents GROUP BY 1 ORDER BY lang""".stripMargin
 
   def qStratifiedSample(s: SparkSession, d: String): DataFrame =
-    stratifiedSample(Tables.documents(s, d)).orderBy("doc_id")
+    stratifiedSample(Tables.documents(s, d))
 
   val qStratifiedSampleSql: String =
     """SELECT doc_id, lang, n_chars FROM documents
@@ -333,7 +333,7 @@ object TextAnalysis {
       |ORDER BY doc_id""".stripMargin
 
   def qRepetition(s: SparkSession, d: String): DataFrame =
-    repetition(Tables.documents(s, d)).orderBy("doc_id")
+    repetition(Tables.documents(s, d))
 
   val qRepetitionSql: String =
     s"""WITH t AS (
@@ -349,7 +349,7 @@ object TextAnalysis {
       |FROM t ORDER BY doc_id""".stripMargin
 
   def qFingerprint(s: SparkSession, d: String): DataFrame =
-    fingerprintGroups(Tables.documents(s, d)).orderBy("fp")
+    fingerprintGroups(Tables.documents(s, d))
 
   val qFingerprintSql: String =
     """SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
@@ -392,7 +392,6 @@ object TextAnalysis {
         length(col("text")).cast("long").as("n_chars_raw"),
         length(col("norm")).cast("long").as("n_chars_nfc"),
         md5(col("norm")).as("nfc_md5"))
-      .orderBy("doc_id")
   }
 
   /** Oracle: DuckDB's `nfc_normalize` (utf8proc) against the JDK
@@ -469,7 +468,6 @@ object TextAnalysis {
         (col("text") =!= col("folded")).as("changed"),
         length(col("folded")).cast("long").as("n_chars_folded"),
         md5(col("folded")).as("folded_md5"))
-      .orderBy("doc_id")
   }
 
   /** Oracle: fixture rows carry their DECLARED folded form; organic
@@ -520,7 +518,6 @@ object TextAnalysis {
         .as("fold_md5"))
       .agg(min(col("doc_id")).as("keep_doc_id"),
         count(lit(1)).as("n_dups"))
-      .orderBy("fold_md5")
   }
 
   /** Oracle: the q89 derivation (declared fixture folds, organic

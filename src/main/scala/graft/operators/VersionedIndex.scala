@@ -325,8 +325,7 @@ private[graft] object VersionedIndex {
 
   /** Write `df` as `$dir/$log/seg=$version` (overwrite: a crashed
     * attempt's half-written segment is replaced) and return the rows
-    * written, summed from the written files' parquet footers on the
-    * driver — no Spark job. (An `Observation` would count on the write
+    * written ([[segRows]]). (An `Observation` would count on the write
     * itself, but it leaves the session's observation manager set, and
     * Spark then fails to serialize any closure that captures the
     * session, such as a logistic-regression model's training summary.) */
@@ -339,14 +338,20 @@ private[graft] object VersionedIndex {
       case Bucketed(b, of, key) => df.withColumn(b, of).repartition(col(b))
         .sortWithinPartitions(col(b), col(key)).write.partitionBy(b)
     }
-    val path = s"$dir/$log/seg=$version"
-    w.mode("overwrite").parquet(path)
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val written = graft.FileSet.list(df.sparkSession, path)
-    written.files.map { f =>
+    w.mode("overwrite").parquet(s"$dir/$log/seg=$version")
+    segRows(df.sparkSession, dir, log, version)
+  }
+
+  /** Rows in segment `$dir/$log/seg=$version`, summed from its files'
+    * parquet footers on the driver — no Spark job. */
+  def segRows(spark: SparkSession, dir: String, log: String,
+      version: Long): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val seg = graft.FileSet.list(spark, s"$dir/$log/seg=$version")
+    seg.files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"${written.root}/${f.path}"), conf))
+          new org.apache.hadoop.fs.Path(s"${seg.root}/${f.path}"), conf))
       try r.getRecordCount finally r.close()
     }.sum
   }

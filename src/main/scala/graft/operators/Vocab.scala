@@ -82,7 +82,7 @@ object Vocab {
   // ---- SparkEntry wiring -------------------------------------------------
 
   def qVocabDf(s: SparkSession, d: String): DataFrame =
-    vocabDf(Tables.documents(s, d)).orderBy("token")
+    vocabDf(Tables.documents(s, d))
 
   val qVocabDfSql: String =
     """SELECT tok AS token, COUNT(*) AS tf_total, COUNT(DISTINCT doc_id) AS df
@@ -91,7 +91,7 @@ object Vocab {
       |GROUP BY 1 ORDER BY token""".stripMargin
 
   def qTfidfTopK(s: SparkSession, d: String): DataFrame =
-    tfidfTopK(Tables.documents(s, d)).orderBy("doc_id", "rnk")
+    tfidfTopK(Tables.documents(s, d))
 
   val qTfidfTopKSql: String =
     """WITH toks AS (

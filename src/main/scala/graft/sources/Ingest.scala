@@ -428,7 +428,7 @@ object Ingest {
         .agg(count(lit(1)).as("n"))
       val coverage = dayCounts.join(broadcast(presence), Seq("day"))
         .groupBy("column").agg(sum(col("n")).as("n_rows"))
-      audit.join(coverage, Seq("column")).orderBy("column")
+      audit.join(coverage, Seq("column"))
     } finally org.apache.commons.io.FileUtils
       .deleteDirectory(root.toFile)
   }

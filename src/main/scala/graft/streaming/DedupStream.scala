@@ -879,8 +879,7 @@ object DedupStream {
     // pin rows before the state dir is deleted (the caller writes the
     // result AFTER this returns; a lazy scan would read deleted files)
     val out = graft.Checkpoints.pin(IncrementalDedup.labelsWithSizes(
-        loadState(s, s"$root/state").get)
-      .orderBy("doc_id"))
+        loadState(s, s"$root/state").get))
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))
     catch { case _: Exception => }

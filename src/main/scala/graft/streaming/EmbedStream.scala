@@ -104,8 +104,7 @@ object EmbedStream {
     // result AFTER this returns; a lazy scan would read deleted files)
     val out = graft.Checkpoints.pin(
       EmbeddingIncremental.labelsWithSizes(
-        EmbeddingIncremental.loadState(s, s"$root/state").get)
-      .orderBy("vec_id"))
+        EmbeddingIncremental.loadState(s, s"$root/state").get))
     try org.apache.commons.io.FileUtils
       .deleteDirectory(new java.io.File(root))
     catch { case _: Exception => }

@@ -102,11 +102,11 @@ class CheckpointSpec extends AnyFunSuite {
     // end-to-end run proves a released pin is never read again and the
     // chain's result is substrate-independent
     val local = graft.streaming.DedupStream.qChainBucketed(spark, sf)
-      .collect().map(_.toString).toSeq
+      .collect().map(_.toString).toSeq.sorted
     val dir = java.nio.file.Files.createTempDirectory("ckpt_chain").toString
     val reliable = Checkpoints.withPolicy(CheckpointPolicy.Reliable(dir))(
       graft.streaming.DedupStream.qChainBucketed(spark, sf)
-        .collect().map(_.toString).toSeq)
+        .collect().map(_.toString).toSeq.sorted)
     assert(local == reliable,
       "chain results must be identical under Local and Reliable policies")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -121,7 +121,7 @@ class CheckpointSpec extends AnyFunSuite {
     def run(): (Seq[String], Seq[String], Seq[String]) = {
       Dedup.clearShingleCaches()
       val clusters = Dedup.qDupClusters(spark, sf)
-        .collect().map(_.toString).toSeq
+        .collect().map(_.toString).toSeq.sorted
       val st0 = IncrementalDedup.initialState(
         docs.filter(col("doc_id") % 5 =!= 0))
       val st1 = IncrementalDedup.admitBatch(st0,

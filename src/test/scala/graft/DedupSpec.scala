@@ -1105,7 +1105,7 @@ class DedupSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-memo").toString
     val all = graft.engine.Tables.documents(spark, sf).orderBy("doc_id")
     all.limit(40).write.parquet(s"$dir/documents.parquet")
-    def q37() = Dedup.qDupClusters(spark, dir).collect().map(_.toString).toSeq
+    def q37() = Dedup.qDupClusters(spark, dir).collect().map(_.toString).toSeq.sorted
     val first = q37()
     all.filter(col("doc_id") > 100L).limit(60)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

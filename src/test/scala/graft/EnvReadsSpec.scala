@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * files; a second copy of that protocol would miss its single-writer
   * guard and strict manifest parse. It is also the only code that names
   * a store's `<log>/seg=$N` segments and `v$N/<model>` dirs, so the
-  * segment layout and its row counts live in one writer. */
+  * segment layout and its row counts live in one writer. Library code
+  * also never uses an `Observation`, which breaks closure serialization
+  * for the rest of the session. */
 class EnvReadsSpec extends AnyFunSuite {
 
   private val Reads = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
@@ -52,37 +54,48 @@ class EnvReadsSpec extends AnyFunSuite {
     assert(reads.isEmpty, reads.mkString("\n"))
   }
 
+  /** `file:line: code` for each non-scaladoc line of `files` that `re`
+    * matches (`skipLineComments` also skips `//` lines). */
+  private def hits(files: Seq[java.io.File], re: scala.util.matching.Regex,
+      skipLineComments: Boolean = false): Seq[String] = for {
+    f <- files
+    (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq
+      .zipWithIndex
+    code = line.trim
+    if !(code.startsWith("*") || code.startsWith("/**"))
+    if !(skipLineComments && code.startsWith("//"))
+    if re.findFirstIn(code).isDefined
+  } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
+
   test("only VersionedIndex reads or writes the store pointer and manifests") {
     assert(root.isDirectory, s"run from the repository root: $root")
-    val protocol = """"CURRENT"|/MANIFEST|ATOMIC_MOVE""".r
     val files = scalaFiles(root)
     assert(files.exists(_.getName == "VersionedIndex.scala"),
       "scan found no VersionedIndex")
-    val hits = for {
-      f <- files if f.getName != "VersionedIndex.scala"
-      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq
-        .zipWithIndex
-      code = line.trim
-      if !(code.startsWith("*") || code.startsWith("/**"))
-      if protocol.findFirstIn(code).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
-    assert(hits.isEmpty, hits.mkString("\n"))
+    val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
+      """"CURRENT"|/MANIFEST|ATOMIC_MOVE""".r)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("only VersionedIndex builds store segment and version paths") {
     assert(root.isDirectory, s"run from the repository root: $root")
+    // the mains too: Bench stamps segment row counts
+    val files = scalaFiles(root)
+    assert(files.exists(_.getName == "SplitPins.scala") &&
+      files.exists(_.getName == "Bench.scala"), "scan found no store files")
     // DedupStream's bucket-owner dirs `<table>/b$k/v$N` are its own layout
-    val paths = """seg=|(?<!/b\$k)/v\$""".r
-    val lib = library
-    assert(lib.exists(_.getName == "SplitPins.scala"), "scan found no store files")
-    val hits = for {
-      f <- lib if f.getName != "VersionedIndex.scala"
-      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines().toSeq
-        .zipWithIndex
-      code = line.trim
-      if !(code.startsWith("*") || code.startsWith("/**") || code.startsWith("//"))
-      if paths.findFirstIn(code).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
-    assert(hits.isEmpty, hits.mkString("\n"))
+    val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
+      """seg=|(?<!/b\$k)/v\$""".r, skipLineComments = true)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("no library code uses org.apache.spark.sql.Observation") {
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val found = hits(library, """\bObservation\b""".r, skipLineComments = true)
+    assert(found.isEmpty,
+      "an Observation leaves the session's observation manager set; later " +
+        "closures that capture the session then fail with `Task not " +
+        "serializable: ObservationManager` (q95, PlanShapeSpec):\n" +
+        found.mkString("\n"))
   }
 }
