@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import VersionedIndex.{OneFile, writeSeg}
+import VersionedIndex.Log
 
 /** Persisted-corpus semantic-dedup state for EMBEDDINGS — the vector
   * analog of [[IncrementalDedup]]: a corpus's near-dup clusters are
@@ -221,10 +221,7 @@ object EmbeddingIncremental {
     EmbedDedupState(
       labels = oldRelabeled.union(newAssign),
       sizes = untouched.union(touchedSizes),
-      // normalized projection: a loaded log carries the extra grpb
-      // partition column and its own column order
-      buckets = state.buckets.select(col("grp"), col("vec_id"), col("embedding"))
-        .unionByName(newBucketRows))
+      buckets = bucketCols(state.buckets).unionByName(newBucketRows))
   }
 
   /** (vec_id, cluster_id, cluster_size) — the batch
@@ -265,14 +262,22 @@ object EmbeddingIncremental {
     * scan pruning at a saturated grid. */
   val EmbStateBuckets = 64
 
-  /** The bucket log's layout: `grpb` dirs, `grp`-sorted files. */
-  private val BucketLayout = VersionedIndex.Bucketed("grpb",
-    pmod(col("grp"), lit(EmbStateBuckets)).cast("int"), "grp")
+  /** The bucket log: `grpb` dirs, `grp`-sorted files. */
+  private val Buckets = Log("buckets",
+    "grp BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>", partitionDdl = "grpb INT",
+    layout = VersionedIndex.Bucketed("grpb",
+      pmod(col("grp"), lit(EmbStateBuckets)).cast("int"), "grp"))
 
+  /** The bucket log's columns: a loaded log also carries the grpb
+    * partition column, in its own column order. */
   private def bucketCols(rows: DataFrame): DataFrame =
     rows.select(col("grp"), col("vec_id"), col("embedding"))
 
-  private val LabelsDdl = "vec_id BIGINT, cluster_id BIGINT"
+  /** The label log; its rows are the store's committed size. A fold
+    * writes it whole: the relabeled labels, with the composed remap
+    * applied (and reset to empty). */
+  private val Labels = Log("labels", "vec_id BIGINT, cluster_id BIGINT",
+    fold = None)
   private val RemapDdl = "cluster_id BIGINT, merged BIGINT"
 
   /** The committed composed remap `C` of version `v` — the LSM read
@@ -283,21 +288,19 @@ object EmbeddingIncremental {
   private def remapOf(spark: SparkSession, dir: String, v: Long): DataFrame =
     VersionedIndex.readModel(spark, dir, v, "remap", RemapDdl)
 
-  /** Writes a version's labels segment and remap; returns the label rows. */
-  private def writeLabels(labels: DataFrame, remap: DataFrame, dir: String,
-      version: Long): Long =
-    graft.Par.overlap(VersionedIndex.writeModel(remap, dir, version, "remap"))(
-      writeSeg(labels, dir, "labels", version, OneFile))._2
+  /** Writes a version's labels segment and remap. */
+  private def writeLabels(a: VersionedIndex.Admission, labels: DataFrame,
+      remap: DataFrame): Unit =
+    graft.Par.overlap(VersionedIndex.writeModel(remap, a.dir, a.next, "remap"))(
+      a.seg(Labels, labels))
 
   /** Labels as of the committed version: the append-only label log
     * (base fold + one O(batch) segment per admission) repaired through
     * the broadcast composed remap. Every vector's row is written exactly
     * once — rows never move; only their cluster VALUE is re-pointed at
     * read via `C`. */
-  private def labelsOf(spark: SparkSession, dir: String, m: VersionedIndex.Meta,
-      c: DataFrame): DataFrame =
-    VersionedIndex.readLog(spark, dir, "labels", m.segs, LabelsDdl)
-      .join(broadcast(c.select(col("cluster_id").as("ck"), col("merged"))),
+  private def labelsOf(log: DataFrame, c: DataFrame): DataFrame =
+    log.join(broadcast(c.select(col("cluster_id").as("ck"), col("merged"))),
         col("cluster_id") === col("ck"), "left")
       .select(col("vec_id"),
         coalesce(col("merged"), col("cluster_id")).as("cluster_id"))
@@ -337,12 +340,10 @@ object EmbeddingIncremental {
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
     // fresh-store bootstrap only: a resave would append the FULL bucket
     // relation as a duplicate segment next to the ones it already holds
-    VersionedIndex.bootstrap(dir, Seq("buckets", "labels"), stream,
-        retainVersions) {
-      graft.Par.overlap(
-        writeSeg(bucketCols(state.buckets), dir, "buckets", 0, BucketLayout))(
-        writeLabels(state.labels, emptyRemap(state.labels.sparkSession),
-          dir, 0))._2
+    VersionedIndex.bootstrap(state.labels.sparkSession, dir,
+        Seq(Labels, Buckets), stream, retainVersions) { a =>
+      graft.Par.overlap(a.seg(Buckets, bucketCols(state.buckets)))(
+        writeLabels(a, state.labels, emptyRemap(state.labels.sparkSession)))
     }
 
   /** Bootstrap a FRESH persisted store straight from the corpus — the
@@ -357,17 +358,16 @@ object EmbeddingIncremental {
       threshold: Double = 0.45,
       stream: Option[(String, Long)] = None,
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
-    VersionedIndex.bootstrap(dir, Seq("buckets", "labels"), stream,
-        retainVersions) {
-      graft.Par.overlap(
-        writeSeg(bucketRows(emb), dir, "buckets", 0, BucketLayout)) {
+    VersionedIndex.bootstrap(spark, dir, Seq(Labels, Buckets), stream,
+        retainVersions) { a =>
+      graft.Par.overlap(a.seg(Buckets, bucketRows(emb))) {
         // the eager cluster fixpoint (edge kernel, component closure,
         // label pin) runs while the bucket segment writes; labels-only —
         // the store derives sizes at load, so the size join never runs
         val lab = Dedup.embeddingDupLabels(emb, threshold)
-        writeLabels(lab.select(col("vec_id"), col("cluster_id")),
-          emptyRemap(spark), dir, 0)
-      }._2
+        writeLabels(a, lab.select(col("vec_id"), col("cluster_id")),
+          emptyRemap(spark))
+      }
     }
 
   private def emptyRemap(spark: SparkSession): DataFrame =
@@ -390,15 +390,18 @@ object EmbeddingIncremental {
     stateAt(spark, dir, VersionedIndex.metaAt(dir, version))
 
   private def stateAt(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta): EmbedDedupState = {
-    val labels = labelsOf(spark, dir, m, remapOf(spark, dir, m.version))
+      m: VersionedIndex.Meta): EmbedDedupState =
+    stateOf(spark, dir, m.version, VersionedIndex.readLog(spark, dir, _, m.segs))
+
+  /** The state of committed `version`, its logs read through `read`. */
+  private def stateOf(spark: SparkSession, dir: String, version: Long,
+      read: Log => DataFrame): EmbedDedupState = {
+    val labels = labelsOf(read(Labels), remapOf(spark, dir, version))
     EmbedDedupState(
       labels = labels,
       sizes = labels.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cluster_size")),
-      buckets = VersionedIndex.readLog(spark, dir, "buckets", m.segs,
-        "grp BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>",
-        partitionDdl = "grpb INT"))
+      buckets = read(Buckets))
   }
 
   /** Admit a batch against the PERSISTED state at `dir` and commit the
@@ -418,35 +421,24 @@ object EmbeddingIncremental {
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
     VersionedIndex.appendOrFold(spark, dir,
       s"$dir holds no committed embedding-dedup state — saveState first",
-      maxLiveSegments, Seq("buckets", "labels"), sizeBy = Seq(newVecs),
-      stream, retainVersions) { (m, next, fold) =>
-      admitSegs(spark, dir, m, newVecs, threshold, next, fold)
-    }
-
-  /** Writes this admission's bucket and label segments and remap (or
-    * the folded logs) and returns the committed label-log size. */
-  private def admitSegs(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta, newVecs: DataFrame, threshold: Double,
-      next: Long, fold: Boolean): Long = {
-    val st0 = stateAt(spark, dir, m)
-    // The bucket-log segment depends ONLY on the batch (append) or
-    // batch ∪ stored log (fold) — inputs ready before the admission
-    // core — so its write runs CONCURRENTLY with the probe/verify/
-    // fixpoint instead of queueing in the post-core write group
-    // (measured ~0.7 s off the admission floor). Crash semantics are
-    // unchanged: nothing is visible until the CURRENT pointer moves,
-    // and a crashed attempt's partial segment is overwritten on retry.
-    val nbr = bucketRows(newVecs)
-    val (_, segRows) = graft.Par.overlap(writeSeg(
-        if (fold) bucketCols(st0.buckets).unionByName(nbr) else nbr,
-        dir, "buckets", next, BucketLayout)) {
-      val f = admitCore(st0, newVecs, threshold, Some(nbr))
-      val n =
-        if (fold)
-          // fold both logs: the grown relations become one segment each,
-          // C folds into the rewritten label base and resets to empty
-          writeLabels(applyCore(st0, f.newAssign, f.remap, nbr).labels,
-            emptyRemap(spark), dir, next)
+      Seq(Labels, Buckets), VersionedIndex.segmentCap(maxLiveSegments),
+      sizeBy = Seq(newVecs), stream, retainVersions) { a =>
+      val st0 = stateOf(spark, dir, a.base.version, a.read)
+      // The bucket-log segment depends ONLY on the batch (and, on a
+      // fold, the stored log) — inputs ready before the admission core
+      // — so its write runs CONCURRENTLY with the probe/verify/fixpoint
+      // instead of queueing in the post-core write group (measured
+      // ~0.7 s off the admission floor). Crash semantics are unchanged:
+      // nothing is visible until the CURRENT pointer moves, and a
+      // crashed attempt's partial segment is overwritten on retry.
+      val nbr = bucketRows(newVecs)
+      graft.Par.overlap(a.seg(Buckets, nbr)) {
+        val f = admitCore(st0, newVecs, threshold, Some(nbr))
+        if (a.fold)
+          // the grown labels become one segment, C folds into the
+          // rewritten label base and resets to empty
+          writeLabels(a, applyCore(st0, f.newAssign, f.remap, nbr).labels,
+            emptyRemap(spark))
         else {
           // true merges only: drop identity rows and rows keyed by the
           // batch's own ids (new ids never appear as a stored label VALUE
@@ -455,7 +447,7 @@ object EmbeddingIncremental {
           val merges = f.remap.filter(col("cluster_id") =!= col("merged"))
             .join(broadcast(newVecs.select(col("vec_id").as("cluster_id"))),
               Seq("cluster_id"), "left_anti")
-          val prevC = remapOf(spark, dir, m.version)
+          val prevC = remapOf(spark, dir, a.base.version)
           // compose: entries of C whose root was merged again re-point to
           // the new root; this admission's merges append. Keys stay
           // disjoint — C's keys are dead clusters, a remap key is a live
@@ -467,14 +459,12 @@ object EmbeddingIncremental {
             .select(prevC("cluster_id"),
               coalesce(col("rv"), prevC("merged")).as("merged"))
             .unionByName(merges)
-          writeLabels(f.newAssign, composed, dir, next)
+          writeLabels(a, f.newAssign, composed)
         }
-      // every consumer of the admission's pins is written
-      f.release()
-      n
+        // every consumer of the admission's pins is written
+        f.release()
+      }
     }
-    if (fold) segRows else m.totalRows + segRows
-  }
 
   // ---- SparkEntry wiring -------------------------------------------------
 

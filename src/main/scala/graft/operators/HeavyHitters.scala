@@ -301,31 +301,28 @@ object HeavyHitters {
     * Past `maxLiveSegments` the commit folds the summed grid into one
     * segment (O(grid) work — folding a SKETCH is cheap, unlike the
     * window/bucket logs whose folds rewrite corpus-sized relations).
-    * The manifest's row counts carry the cumulative occurrence mass N
-    * (the threshold input), so loading never re-reads documents. */
-  private val CellsDdl = "d INT, bucket BIGINT, c BIGINT"
+    * The manifest's committed size is the cumulative occurrence mass N
+    * (the threshold input), so loading never re-reads documents.
+    *
+    * The cell log is written from the rows collected to the driver — the
+    * cell relation is GRID-BOUNDED material (≤ depth·width rows ≈ 1 MB
+    * at the default sizing, the same driver bound [[heavyGrams]]'
+    * broadcast already relies on), so one collect job plus a local
+    * one-task write replaces a distributed write and a post-write mass
+    * read. Its size is the d=0 mass of the rows in hand. */
+  private val Cells = VersionedIndex.Log("cells",
+    "d INT, bucket BIGINT, c BIGINT", layout = VersionedIndex.Collected(
+      _.iterator.filter(_.getInt(0) == 0).map(_.getLong(2)).sum),
+    fold = Some(sumCells))
 
-  /** Collect a cell relation to the driver, write it as the segment, and
-    * return its d=0 mass — the cell relation is GRID-BOUNDED material
-    * (≤ depth·width rows ≈ 1 MB at the default sizing, the same driver
-    * bound [[heavyGrams]]' broadcast already relies on), so collecting
-    * replaces the previous agg-job → distributed-write-job → post-write
-    * segMass-read-job chain with one collect job plus a local one-task
-    * write; the occurrence mass falls out of the rows in hand. */
-  private def writeCellSegCollected(spark: SparkSession, cells: DataFrame,
-      dir: String, version: Long): Long = {
-    val rows = cells.select(col("d"), col("bucket"), col("c")).collect()
-    VersionedIndex.writeSeg(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        org.apache.spark.sql.types.StructType.fromDDL(CellsDdl)),
-      dir, "cells", version, VersionedIndex.OneFile)
-    rows.iterator.filter(_.getInt(0) == 0).map(_.getLong(2)).sum
-  }
+  /** Cell-wise sum: the fold reducer and the committed grid. */
+  private def sumCells(cells: DataFrame): DataFrame =
+    cells.groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c"))
 
   def bootstrapSketch(spark: SparkSession, dir: String,
       docs: DataFrame): Unit =
-    VersionedIndex.bootstrap(dir, Seq("cells")) {
-      writeCellSegCollected(spark,
-        cellRel(widened(docs), CmsDepth, CmsWidth), dir, 0)
+    VersionedIndex.bootstrap(spark, dir, Seq(Cells)) {
+      _.seg(Cells, cellRel(widened(docs), CmsDepth, CmsWidth))
     }
 
   /** Appends the batch's cells, or folds the summed grid into one
@@ -335,14 +332,8 @@ object HeavyHitters {
       maxLiveSegments: Int = 16): Unit =
     VersionedIndex.appendOrFold(spark, dir,
       s"$dir holds no committed sketch — bootstrapSketch first",
-      maxLiveSegments, Seq("cells"), sizeBy = Nil) { (m, next, fold) =>
-      val batchCells = cellRel(widened(newDocs), CmsDepth, CmsWidth)
-      if (fold) writeCellSegCollected(spark,
-        VersionedIndex.readLog(spark, dir, "cells", m.segs, CellsDdl)
-          .unionByName(batchCells)
-          .groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c")),
-        dir, next)
-      else m.totalRows + writeCellSegCollected(spark, batchCells, dir, next)
+      Seq(Cells), VersionedIndex.segmentCap(maxLiveSegments), sizeBy = Nil) {
+      _.seg(Cells, cellRel(widened(newDocs), CmsDepth, CmsWidth))
     }
 
   /** The committed grid: cell-wise sum over the live segments —
@@ -350,8 +341,7 @@ object HeavyHitters {
     * read. */
   def loadGrid(spark: SparkSession, dir: String): Array[Array[Long]] = {
     val m = VersionedIndex.metaOrThrow(dir)
-    gridOf(VersionedIndex.readLog(spark, dir, "cells", m.segs, CellsDdl)
-      .groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c"))
+    gridOf(sumCells(VersionedIndex.readLog(spark, dir, Cells, m.segs))
       .collect(), CmsDepth, CmsWidth)
   }
 

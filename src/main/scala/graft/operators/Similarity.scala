@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
 import graft.functions.TextFns.hash60
-import VersionedIndex.{PartitionedBy, writeSeg}
+import VersionedIndex.{Admission, Log, PartitionedBy}
 
 /** Approximate-nearest-neighbor / similarity search over the `embeddings`
   * table (`embedding: array<float>`, dim 64).
@@ -261,17 +261,17 @@ object Similarity {
   def annIvfKmeans(emb: DataFrame, nQueries: Int = 8, k: Int = 10,
       numCentroids: Int = NumCentroids, nprobe: Int = NumProbe,
       maxIter: Int = 20, fitFraction: Option[Double] = None): DataFrame = {
-    val (cent, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
-    ivfSearch(emb, cent, assigned, nQueries, k, nprobe)
+    val (cents, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
+    ivfSearch(emb, centroidRel(emb.sparkSession, cents), assigned, nQueries, k,
+      nprobe)
   }
 
-  /** Learned-IVF index relations: `(cid, cemb)` centroids (K tiny rows)
-    * and `(vec_id, cid)` cell assignments (one narrow row per corpus
-    * vector). The fit is bounded by [[kmeansFitSet]]. */
+  /** Learned-IVF index: the (cid, cemb) centroids (K tiny driver-side
+    * rows, ordered by cid) and the `(vec_id, cid)` cell assignments (one
+    * narrow row per corpus vector). The fit is bounded by
+    * [[kmeansFitSet]]. */
   private[graft] def kmeansIndex(emb: DataFrame, numCentroids: Int, maxIter: Int,
-      fitFraction: Option[Double]): (DataFrame, DataFrame) = {
-    val spark = emb.sparkSession
-    import spark.implicits._
+      fitFraction: Option[Double]): (IndexedSeq[(Long, Seq[Float])], DataFrame) = {
     val feats = emb.withColumn("features",
       org.apache.spark.ml.functions.array_to_vector(col("embedding")))
     val fitSet = kmeansFitSet(feats, fitFraction)
@@ -281,11 +281,8 @@ object Similarity {
       .fit(fitSet)
     val assigned = model.transform(feats)
       .select(col("vec_id"), col("prediction").as("cid"))
-    // learned centroids: K tiny driver-side rows, broadcast for probing
-    val cent = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat).toSeq) }
-      .toSeq.toDF("cid", "cemb")
-    (cent, assigned)
+    (model.clusterCenters.toIndexedSeq.zipWithIndex
+      .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat).toSeq) }, assigned)
   }
 
   /** Persist the learned-IVF index next to the corpus: the one-time
@@ -301,40 +298,61 @@ object Similarity {
     * runtime cid filter into the scan (asserted in DedupSpec). */
   def buildIvfIndex(emb: DataFrame, indexDir: String,
       numCentroids: Int = NumCentroids, maxIter: Int = 20,
-      fitFraction: Option[Double] = None): Unit = {
-    val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
-    val (cent, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
-    VersionedIndex.writeModel(cent, indexDir, next, "centroids")
-    // the written row count is the manifest-carried drift baseline + log
-    // size, so the APPEND path never needs a corpus-sized job to learn them
-    val rows = writeSeg(
-      assigned.select(col("vec_id"), col("cid").cast("int").as("cid")),
-      indexDir, "assignments", next, PartitionedBy("cid"))
-    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
-      segs = Vector(next), logs = Seq("assignments"))
-    // cent is a driver-local relation (the fit's clusterCenters) —
-    // warming the cache here is job-free and makes the next append/query
-    // skip even the K-row read
-    VersionedIndex.putModel(indexDir, next, "centroids",
-      cent.collect().map(r => (r.getInt(0).toLong, r.getSeq[Float](1)))
-        .sortBy(_._1).toIndexedSeq)
+      fitFraction: Option[Double] = None): Unit =
+    VersionedIndex.rebuild(emb.sparkSession, indexDir, Seq(Assignments))(
+      ivfFit(emb, numCentroids, maxIter, fitFraction))
+
+  /** The IVF store's assignment log: cid partitions below `seg=`. A
+    * retrain writes it whole. */
+  private val Assignments = Log("assignments", "vec_id BIGINT",
+    partitionDdl = "cid INT", layout = PartitionedBy("cid"), fold = None)
+
+  /** PQ code rows: the PQ store's `codes` log and, partitioned by cid,
+    * the IVF-PQ store's `cells` log. */
+  private val CodeDdl = "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE"
+  private val Codes = Log("codes", CodeDdl, layout = PartitionedBy(),
+    fold = None)
+  private val Cells = Log("cells", CodeDdl, partitionDdl = "cid INT",
+    layout = PartitionedBy("cid"), fold = None)
+
+  /** The model relations every writer since r13 writes: INT ids. */
+  private val CentroidDdl = "cid INT, cemb ARRAY<FLOAT>"
+  private val CodebookDdl = "cid INT, cemb ARRAY<DOUBLE>"
+
+  private def centroidRel(spark: SparkSession,
+      cents: Seq[(Long, Seq[Float])]): DataFrame =
+    spark.createDataFrame(cents.map { case (c, e) => (c.toInt, e) })
+      .toDF("cid", "cemb")
+
+  private def codebookRel(spark: SparkSession, cb: Seq[Seq[Double]]): DataFrame =
+    spark.createDataFrame(cb.zipWithIndex.map(_.swap)).toDF("cid", "cemb")
+
+  /** The index stores' fold decision: retrain when appending `newVecs`
+    * would leave more than `maxDriftFraction` of the index added since
+    * the last build or retrain (`trainedRows`). The batch count is the
+    * append's one pre-write job; the rest rides the manifest. */
+  private def drifted(newVecs: DataFrame, maxDriftFraction: Double)(
+      m: VersionedIndex.Meta): Boolean = {
+    val total = m.totalRows + newVecs.count()
+    total > 0 && (total - m.trainedRows).toDouble / total > maxDriftFraction
   }
 
-  /** Tolerant model-id read: current builds write centroid/codebook
-    * `cid` as INT, but an index persisted by a pre-r13 build stored it
-    * as LONG — a strict getInt would fail the read with an opaque
-    * ClassCastException on a perfectly usable on-disk model (r13
-    * advice). Anything non-integral still fails loudly with the path
-    * context the caller supplies. */
-  private def idAt(r: org.apache.spark.sql.Row, i: Int): Long =
-    r.get(i) match {
-      case n: java.lang.Integer => n.toLong
-      case n: java.lang.Long    => n
-      case n: java.lang.Short   => n.toLong
-      case other => throw new IllegalStateException(
-        s"unexpected model id type ${if (other == null) "null"
-          else other.getClass.getName} — corrupt index model relation")
-    }
+  /** Fit the IVF index on `emb` as version `a.next`. */
+  private def ivfFit(emb: DataFrame, numCentroids: Int, maxIter: Int,
+      fitFraction: Option[Double])(a: Admission): Unit = {
+    val (cents, assigned) = kmeansIndex(emb, numCentroids, maxIter, fitFraction)
+    ivfVersion(a, cents, assigned)
+  }
+
+  /** Version `a.next` of the IVF store: centroids `cents` (written on a
+    * build or retrain, copied on an append) and the `(vec_id, cid)` rows
+    * `assigned` under them. */
+  private def ivfVersion(a: Admission, cents: IndexedSeq[(Long, Seq[Float])],
+      assigned: DataFrame): Unit = {
+    a.model("centroids", cents)(centroidRel(assigned.sparkSession, cents))
+    a.seg(Assignments,
+      assigned.select(col("vec_id"), col("cid").cast("int").as("cid")))
+  }
 
   /** Centroids of the committed index version, driver-cached per
     * (dir, version) — the append/query paths pay at most one K-row read
@@ -342,8 +360,9 @@ object Similarity {
   private def ivfCentroids(spark: SparkSession, indexDir: String,
       version: Long): IndexedSeq[(Long, Seq[Float])] =
     VersionedIndex.cachedModel(indexDir, version, "centroids") {
-      VersionedIndex.readModel(spark, indexDir, version, "centroids").collect()
-        .map(r => (idAt(r, 0), r.getSeq[Float](1)))
+      VersionedIndex.readModel(spark, indexDir, version, "centroids",
+          CentroidDdl).collect()
+        .map(r => (r.getInt(0).toLong, r.getSeq[Float](1)))
         .sortBy(_._1).toIndexedSeq
     }
 
@@ -351,94 +370,44 @@ object Similarity {
     * the manifest's segments. Exposed for specs/tools; queries go
     * through [[annIvfIndexed]]. */
   private[graft] def ivfAssignments(spark: SparkSession,
-      indexDir: String): DataFrame = {
-    val m = VersionedIndex.metaOrThrow(indexDir)
-    VersionedIndex.readLog(spark, indexDir, "assignments", m.segs,
-      "vec_id BIGINT", partitionDdl = "cid INT")
-  }
+      indexDir: String): DataFrame =
+    VersionedIndex.readLog(spark, indexDir, Assignments,
+      VersionedIndex.metaOrThrow(indexDir).segs)
 
   /** Incrementally grow a persisted IVF index: assign ONLY `newVecs`
-    * against the EXISTING centroids (the same narrow argmax fold as the
-    * build's assignment pass — K driver-side literal rows, no join, no
-    * shuffle) and commit the new (vec_id, cid) rows as their own
-    * `assignments/seg=$N` segment. Daily cost is O(batch), not the
-    * O(corpus) fit + full re-assignment of [[buildIvfIndex]] — and the
-    * append runs ZERO corpus-sized jobs (job-count spec-pinned): drift
-    * state comes from the manifest's `totalRows`/`trainedRows`,
-    * centroids from the per-version driver cache, and the only Spark
-    * jobs are the O(batch) count and the O(batch) segment write.
+    * against the EXISTING centroids (the build's narrow argmax fold — K
+    * driver-side literal rows, no join, no shuffle) and commit the rows
+    * as their own `assignments/seg=$N` segment. The append runs ZERO
+    * corpus-sized jobs (job-count spec-pinned): drift state comes from
+    * the manifest, centroids from the per-version driver cache, and the
+    * only Spark jobs are the O(batch) count and segment write.
     *
-    * Atomicity (closes the r12 advice finding): the segment is written
-    * under a path no committed manifest references, so a crash
-    * mid-append publishes nothing — readers resolve the previous
-    * version untouched — and the retried append overwrites the same
-    * segment before committing it.
-    *
-    * Holding centroids fixed degrades recall as the corpus drifts away
-    * from the trained distribution, so the append carries its own
-    * re-train trigger, checked BEFORE any write: when the batch would
-    * push untrained rows past `maxDriftFraction` of the index, the
-    * append is skipped entirely (it would be discarded moments later)
-    * and the full [[buildIvfIndex]] re-fit runs on `corpus` (the grown
-    * corpus INCLUDING this batch), committing a fresh index version
-    * atomically and resetting the baseline — the segment chain also
-    * resets to one full segment, so a long append history compacts at
-    * every re-train. Returns true iff the re-train fired. With the
-    * trigger un-fired the index is row-identical to re-assigning the
-    * grown corpus under the original centroids; after it fires the
-    * index is bit-identical to a fresh build (seed-pinned fit) — both
-    * spec-pinned.
+    * Holding centroids fixed degrades recall as the corpus drifts, so
+    * the append's fold arm is a re-train, decided BEFORE any write
+    * ([[drifted]]): the [[buildIvfIndex]] fit runs on `corpus` (the
+    * grown corpus INCLUDING this batch) and commits one full segment as
+    * the new baseline. Returns true iff the re-train fired. Un-fired,
+    * the index is row-identical to re-assigning the grown corpus under
+    * the original centroids; fired, bit-identical to a fresh build
+    * (seed-pinned fit) — both spec-pinned.
     *
     * PRECONDITION (same as [[graft.operators.IncrementalDedup
     * .admitBatch]]): `newVecs.vec_id` must be new ids — the upstream
     * file bookmark's exactly-once contract. */
-  /** Shared skeleton of the three index appends: drift-check FIRST (a
-    * batch that will trip the re-train anyway must not pay an encode/
-    * assignment pass the rebuild's overwrite discards moments later),
-    * then encode-the-segment → copy-models → commit → warm-cache, in
-    * that order — the atomicity argument (an uncommitted segment is
-    * reader-invisible) depends on it, and ONE copy of the ordering
-    * can't drift between the IVF/PQ/IVF-PQ stores. `encodeSegment`
-    * writes `$log/seg=$next` and returns the (model name → cached
-    * model) pairs the new version carries forward. */
-  private def appendToIndex(indexDir: String, newVecs: DataFrame,
-      maxDriftFraction: Double, log: String)(
-      rebuild: () => Unit)(
-      encodeSegment: (VersionedIndex.Meta, Long) => Seq[(String, AnyRef)]): Boolean = {
-    val m = VersionedIndex.metaOrThrow(indexDir)
-    val total = m.totalRows + newVecs.count()
-    val drifted = total > 0 &&
-      (total - m.trainedRows).toDouble / total > maxDriftFraction
-    if (drifted) rebuild()
-    else {
-      val next = m.version + 1
-      val models = encodeSegment(m, next)
-      models.foreach { case (name, _) =>
-        VersionedIndex.copyModelDir(indexDir, m.version, next, name)
-      }
-      VersionedIndex.commit(indexDir, next,
-        VersionedIndex.rows(m.trainedRows, total), segs = m.segs :+ next,
-        logs = Seq(log))
-      models.foreach { case (name, model) =>
-        VersionedIndex.putModel(indexDir, next, name, model)
-      }
-    }
-    drifted
-  }
-
   def appendToIvfIndex(corpus: DataFrame, newVecs: DataFrame,
       indexDir: String, numCentroids: Int = NumCentroids, maxIter: Int = 20,
       fitFraction: Option[Double] = None,
       maxDriftFraction: Double = 0.5): Boolean = {
     val spark = corpus.sparkSession
-    appendToIndex(indexDir, newVecs, maxDriftFraction, "assignments")(
-      () => buildIvfIndex(corpus, indexDir, numCentroids, maxIter, fitFraction)
-    ) { (m, next) =>
-      val cents = ivfCentroids(spark, indexDir, m.version)
-      writeSeg(assignCells(newVecs, cents)
-          .select(col("vec_id"), col("cid").cast("int").as("cid")),
-        indexDir, "assignments", next, PartitionedBy("cid"))
-      Seq("centroids" -> cents)
+    VersionedIndex.appendOrFold(spark, indexDir,
+        VersionedIndex.noIndex(indexDir), Seq(Assignments),
+        drifted(newVecs, maxDriftFraction), sizeBy = Nil) { a =>
+      if (a.fold) ivfFit(corpus, numCentroids, maxIter, fitFraction)(a)
+      else {
+        val cents = ivfCentroids(spark, indexDir, a.base.version)
+        ivfVersion(a, cents, assignCells(newVecs, cents))
+      }
+      a.fold
     }
   }
 
@@ -450,16 +419,12 @@ object Similarity {
   def annIvfIndexed(emb: DataFrame, indexDir: String, nQueries: Int = 8,
       k: Int = 10, nprobe: Int = NumProbe): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val m = VersionedIndex.metaOrThrow(indexDir)
     // int cid on BOTH sides (the partition column is int): a mixed-type
     // join key would wrap the partition column in a cast and defeat
     // dynamic partition pruning
-    val cent = ivfCentroids(spark, indexDir, m.version)
-      .toDF("cid", "cemb")
-      .select(col("cid").cast("int").as("cid"), col("cemb"))
-    val assigned = VersionedIndex.readLog(spark, indexDir, "assignments",
-      m.segs, "vec_id BIGINT", partitionDdl = "cid INT")
+    val cent = centroidRel(spark, ivfCentroids(spark, indexDir, m.version))
+    val assigned = VersionedIndex.readLog(spark, indexDir, Assignments, m.segs)
     ivfSearch(emb, cent, assigned, nQueries, k, nprobe)
   }
 
@@ -738,19 +703,18 @@ object Similarity {
     * [[annPqIndexed]] query batch, which scans [[PqM]] bytes of codes
     * per candidate instead of re-deriving them from 256 bytes of
     * floats. */
-  def buildPqIndex(emb: DataFrame, indexDir: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
-    val cb = pqCodebook(emb)
-    VersionedIndex.writeModel(cb.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cid", "cemb"), indexDir, next, "codebook")
-    // the written row count: the manifest-carried drift baseline + log size
-    val rows = writeSeg(pqIndexRelation(emb, cb), indexDir, "codes", next,
-      PartitionedBy())
-    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
-      segs = Vector(next), logs = Seq("codes"))
-    VersionedIndex.putModel(indexDir, next, "codebook", cb.toIndexedSeq)
+  def buildPqIndex(emb: DataFrame, indexDir: String): Unit =
+    VersionedIndex.rebuild(emb.sparkSession, indexDir, Seq(Codes)) { a =>
+      pqVersion(a, emb, pqCodebook(emb))
+    }
+
+  /** Version `a.next` of the PQ store: codebook `cb` (written on a
+    * build or retrain, copied on an append) and `vecs` encoded under
+    * it. */
+  private def pqVersion(a: Admission, vecs: DataFrame,
+      cb: Seq[Seq[Double]]): Unit = {
+    a.model("codebook", cb.toIndexedSeq)(codebookRel(vecs.sparkSession, cb))
+    a.seg(Codes, pqIndexRelation(vecs, cb))
   }
 
   /** Committed codebook, driver-cached per (dir, version) like the IVF
@@ -758,8 +722,9 @@ object Similarity {
   private def pqCodebookOf(spark: SparkSession, indexDir: String,
       version: Long): IndexedSeq[Seq[Double]] =
     VersionedIndex.cachedModel(indexDir, version, "codebook") {
-      VersionedIndex.readModel(spark, indexDir, version, "codebook").collect()
-        .map(r => (idAt(r, 0), r.getSeq[Double](1).toSeq))
+      VersionedIndex.readModel(spark, indexDir, version, "codebook",
+          CodebookDdl).collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
         .sortBy(_._1).map(_._2).toIndexedSeq
     }
 
@@ -769,22 +734,20 @@ object Similarity {
     * jobs (drift state from the manifest, codebook from the driver
     * cache), atomic exactly like [[appendToIvfIndex]]. A batch pushing
     * untrained rows past `maxDriftFraction` skips the append and
-    * re-fits via [[buildPqIndex]] on the grown corpus instead
+    * re-fits the [[buildPqIndex]] way on the grown corpus instead
     * (resetting the segment chain to one full segment). Returns true
     * iff the re-train fired. Same new-ids PRECONDITION as the IVF
     * append. */
   def appendToPqIndex(corpus: DataFrame, newVecs: DataFrame,
-      indexDir: String, maxDriftFraction: Double = 0.5): Boolean = {
-    val spark = corpus.sparkSession
-    appendToIndex(indexDir, newVecs, maxDriftFraction, "codes")(
-      () => buildPqIndex(corpus, indexDir)
-    ) { (m, next) =>
-      val cb = pqCodebookOf(spark, indexDir, m.version)
-      writeSeg(pqIndexRelation(newVecs, cb), indexDir, "codes", next,
-        PartitionedBy())
-      Seq("codebook" -> cb)
+      indexDir: String, maxDriftFraction: Double = 0.5): Boolean =
+    VersionedIndex.appendOrFold(corpus.sparkSession, indexDir,
+        VersionedIndex.noIndex(indexDir), Seq(Codes),
+        drifted(newVecs, maxDriftFraction), sizeBy = Nil) { a =>
+      if (a.fold) pqVersion(a, corpus, pqCodebook(corpus))
+      else pqVersion(a, newVecs,
+        pqCodebookOf(corpus.sparkSession, indexDir, a.base.version))
+      a.fold
     }
-  }
 
   /** Query a PERSISTED PQ index: no encode pass — the cached codebook
     * and the committed code segments feed the same ADC scoring tail as
@@ -795,8 +758,7 @@ object Similarity {
     val spark = emb.sparkSession
     val m = VersionedIndex.metaOrThrow(indexDir)
     val cb = pqCodebookOf(spark, indexDir, m.version)
-    val index = VersionedIndex.readLog(spark, indexDir, "codes", m.segs,
-      "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE")
+    val index = VersionedIndex.readLog(spark, indexDir, Codes, m.segs)
     pqScore(emb, index, cb, nQueries, k)
   }
 
@@ -827,51 +789,45 @@ object Similarity {
       numCentroids: Int = NumCentroids, maxIter: Int = 20,
       fitFraction: Option[Double] = None): Unit = {
     val cents = kmeansIndex(emb, numCentroids, maxIter, fitFraction)._1
-      .collect().map(r => (idAt(r, 0), r.getSeq[Float](1)))
-      .sortBy(_._1).toIndexedSeq
     buildIvfPqIndexWith(emb, indexDir, cents,
       pqCodebookTrained(emb, maxIter, fitFraction))
   }
 
   private[graft] def buildIvfPqIndexWith(emb: DataFrame, indexDir: String,
+      centroids: Seq[(Long, Seq[Float])], cb: Seq[Seq[Double]]): Unit =
+    VersionedIndex.rebuild(emb.sparkSession, indexDir, Seq(Cells))(
+      ivfPqVersion(_, emb, centroids, cb))
+
+  /** Version `a.next` of the IVF-PQ store: both models (written on a
+    * build or retrain, copied on an append) and `vecs`' cells, one
+    * narrow pass for cell id and codes. Centroid ids are INT like
+    * [[buildIvfIndex]]'s: one on-disk centroid shape and one loader
+    * ([[ivfCentroids]]) across both IVF-family stores. */
+  private def ivfPqVersion(a: Admission, vecs: DataFrame,
       centroids: Seq[(Long, Seq[Float])], cb: Seq[Seq[Double]]): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val next = VersionedIndex.currentVersion(indexDir).getOrElse(-1L) + 1
-    // int cid like buildIvfIndex writes — ONE on-disk centroid shape
-    // (and one loader, ivfCentroids) across both IVF-family stores
-    VersionedIndex.writeModel(centroids.toDF("cid", "cemb")
-      .select(col("cid").cast("int").as("cid"), col("cemb")),
-      indexDir, next, "centroids")
-    VersionedIndex.writeModel(cb.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cid", "cemb"), indexDir, next, "codebook")
-    val rows = writeSeg(pqEncodeWith(emb, cb)(
-        Seq(nearestCentroid(col("embedding"), centroids)
-          .cast("int").as("cid"))),
-      indexDir, "cells", next, PartitionedBy("cid"))
-    VersionedIndex.commit(indexDir, next, VersionedIndex.rows(rows, rows),
-      segs = Vector(next), logs = Seq("cells"))
-    VersionedIndex.putModel(indexDir, next, "centroids",
-      centroids.toIndexedSeq)
-    VersionedIndex.putModel(indexDir, next, "codebook", cb.toIndexedSeq)
+    val spark = vecs.sparkSession
+    a.model("centroids", centroids.toIndexedSeq)(centroidRel(spark, centroids))
+    a.model("codebook", cb.toIndexedSeq)(codebookRel(spark, cb))
+    a.seg(Cells, pqEncodeWith(vecs, cb)(Seq(
+      nearestCentroid(col("embedding"), centroids).cast("int").as("cid"))))
   }
 
   /** Grow the persisted IVF-PQ index by one batch — O(batch), zero
     * corpus-sized jobs, same append/drift contract as the single-model
-    * stores (both models held fixed until the drift re-train). */
+    * stores (both models held fixed until the drift re-train, which
+    * re-fits the [[buildIvfPqIndex]] seed models on `corpus`). */
   def appendToIvfPqIndex(corpus: DataFrame, newVecs: DataFrame,
       indexDir: String, maxDriftFraction: Double = 0.5): Boolean = {
     val spark = corpus.sparkSession
-    appendToIndex(indexDir, newVecs, maxDriftFraction, "cells")(
-      () => buildIvfPqIndex(corpus, indexDir)
-    ) { (m, next) =>
-      val cents = ivfCentroids(spark, indexDir, m.version)
-      val cb = pqCodebookOf(spark, indexDir, m.version)
-      writeSeg(pqEncodeWith(newVecs, cb)(
-          Seq(nearestCentroid(col("embedding"), cents)
-            .cast("int").as("cid"))),
-        indexDir, "cells", next, PartitionedBy("cid"))
-      Seq("centroids" -> cents, "codebook" -> cb)
+    VersionedIndex.appendOrFold(spark, indexDir,
+        VersionedIndex.noIndex(indexDir), Seq(Cells),
+        drifted(newVecs, maxDriftFraction), sizeBy = Nil) { a =>
+      if (a.fold) ivfPqVersion(a, corpus,
+        collectCentroids(corpus, 0, NumCentroids), pqCodebook(corpus))
+      else ivfPqVersion(a, newVecs,
+        ivfCentroids(spark, indexDir, a.base.version),
+        pqCodebookOf(spark, indexDir, a.base.version))
+      a.fold
     }
   }
 
@@ -882,14 +838,10 @@ object Similarity {
   def annIvfPqIndexed(emb: DataFrame, indexDir: String, nQueries: Int = 8,
       k: Int = 10, nprobe: Int = NumProbe): DataFrame = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val m = VersionedIndex.metaOrThrow(indexDir)
-    val cents = ivfCentroids(spark, indexDir, m.version)
+    val cent = centroidRel(spark, ivfCentroids(spark, indexDir, m.version))
     val cb = pqCodebookOf(spark, indexDir, m.version)
-    val index = VersionedIndex.readLog(spark, indexDir, "cells", m.segs,
-      "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE", partitionDdl = "cid INT")
-    val cent = cents.toDF("cid", "cemb")
-      .select(col("cid").cast("int").as("cid"), col("cemb"))
+    val index = VersionedIndex.readLog(spark, indexDir, Cells, m.segs)
     ivfPqSearch(emb, cent, index, cb, nQueries, k, nprobe)
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import VersionedIndex.{OneFile, writeSeg}
+import VersionedIndex.{Log, OneFile}
 
 /** Pinned (incremental) leakage-safe split — q93, the stable-across-
   * admissions sibling of [[Corpus.clusterSafeSplit]] (q91).
@@ -52,8 +52,9 @@ import VersionedIndex.{OneFile, writeSeg}
   * three ints and a 5-char string — if even that scan bites, the
   * bucket-by-cluster-hash upgrade is the [[IncrementalDedup]] bands
   * layout applied verbatim. Past `maxLiveSegments` the commit folds
-  * each log (splits = concatenation; pins = keep the effective min-
-  * (seq, pin_src) row per key, which preserves every future lookup).
+  * each log through its declared reducer (splits = concatenation; pins
+  * = keep the effective min-(seq, pin_src) row per key, which preserves
+  * every future lookup).
   *
   * WHY THE ORACLE CAN REPLAY THIS (engine rule ≡ doc-level rule): the
   * engine resolves a cluster's effective pin as the pin row with
@@ -77,9 +78,23 @@ import VersionedIndex.{OneFile, writeSeg}
   */
 object SplitPins {
 
-  private val PinDdl =
-    "cluster_id BIGINT, split STRING, seq BIGINT, pin_src BIGINT"
-  private val SplitDdl = "doc_id BIGINT, split STRING, admit_seq BIGINT"
+  /** The cluster pin log. Its fold keeps the effective min-(seq,
+    * pin_src) row per key, which preserves every future lookup:
+    * dead-label keys survive harmlessly, they are never current labels
+    * again because components only grow. */
+  private val Pins = Log("pins",
+    "cluster_id BIGINT, split STRING, seq BIGINT, pin_src BIGINT",
+    layout = OneFile("cluster_id", "seq", "pin_src"),
+    fold = Some(_.groupBy(col("cluster_id"))
+      .agg(min_by(struct(col("split"), col("seq"), col("pin_src")),
+        struct(col("seq"), col("pin_src"))).as("w"))
+      .select(col("cluster_id"), col("w.split").as("split"),
+        col("w.seq").as("seq"), col("w.pin_src").as("pin_src"))))
+
+  /** The splits log: PURE APPEND, one row per doc ever admitted, never
+    * deduped, so its rows are the store's committed size. */
+  private val Splits = Log("splits",
+    "doc_id BIGINT, split STRING, admit_seq BIGINT", layout = OneFile("doc_id"))
 
   /** The shared 12/2/2-sixteenths assignment rule ([[Corpus
     * .shuffleShard]]'s nibble rule applied to an id): first hex nibble
@@ -106,16 +121,14 @@ object SplitPins {
     // the two seg writes touch disjoint paths and share only the (pinned
     // upstream) labels relation — overlap them (guide §2.6: fill the
     // tail with the independent sibling job instead of serializing two
-    // ~single-task writes); the splits write's row count is the log size
-    VersionedIndex.bootstrap(dir, Seq("pins", "splits"), stream) {
+    // ~single-task writes)
+    VersionedIndex.bootstrap(spark, dir, Seq(Splits, Pins), stream) { a =>
       graft.Par.inParallel(
-        () => writeSeg(labels.select(col("cluster_id")).distinct()
-            .select(col("cluster_id"), nibbleSplit(col("cluster_id")).as("split"),
-              lit(0L).as("seq"), col("cluster_id").as("pin_src")),
-          dir, "pins", 0, OneFile),
-        () => writeSeg(labels.select(col("doc_id"),
-            nibbleSplit(col("cluster_id")).as("split"), lit(0L).as("admit_seq")),
-          dir, "splits", 0, OneFile)).last
+        () => a.seg(Pins, labels.select(col("cluster_id")).distinct()
+          .select(col("cluster_id"), nibbleSplit(col("cluster_id")).as("split"),
+            lit(0L).as("seq"), col("cluster_id").as("pin_src"))),
+        () => a.seg(Splits, labels.select(col("doc_id"),
+          nibbleSplit(col("cluster_id")).as("split"), lit(0L).as("admit_seq"))))
     }
 
   /** Admit one clustering delta ([[IncrementalDedup.admitBatchDelta]]'s
@@ -131,95 +144,66 @@ object SplitPins {
     // delta (the admitBatchDelta measurement); a fold rewrites the logs
     VersionedIndex.appendOrFold(spark, dir,
       s"$dir holds no committed split store — bootstrapStore first",
-      maxLiveSegments, Seq("pins", "splits"), sizeBy = Seq(newAssign),
-      stream = stream) { (m, next, fold) =>
-      admitSegs(spark, dir, m, newAssign, remap, next, fold)
-    }
-
-  /** Writes this admission's pins and splits segments (or the folded
-    * logs) and returns the committed splits-log size. */
-  private def admitSegs(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta, newAssign: DataFrame, remap: DataFrame,
-      next: Long, fold: Boolean): Long = {
-    val pinsLog = VersionedIndex.readLog(spark, dir, "pins", m.segs, PinDdl)
-    // merged clusters: re-key the surviving pins to the merged label.
-    // remap is frontier-sized — broadcast; identity rows change nothing
-    // and are dropped
-    val relabel = remap.filter(col("cluster_id") =!= col("merged"))
-    val remapped = pinsLog
-      .join(broadcast(relabel.select(col("cluster_id"), col("merged"))),
-        Seq("cluster_id"))
-      .select(col("merged").as("cluster_id"), col("split"), col("seq"),
-        col("pin_src"))
-    // effective pin per batch-touched cluster: min (seq, pin_src) row
-    // over live pins (log ∪ this admission's re-keyed rows), restricted
-    // to the batch's cluster set (broadcast semi-join keeps the agg
-    // O(touched) — the scan of the thin pins log is the per-admission
-    // floor, see the scaladoc's bucket upgrade note)
-    val touched = newAssign.select(col("cluster_id")).distinct()
-    val eff = pinsLog.unionByName(remapped)
-      .join(broadcast(touched), Seq("cluster_id"))
-      .groupBy(col("cluster_id"))
-      .agg(min_by(col("split"),
-        struct(col("seq"), col("pin_src"))).as("pin_split"))
-    val assigned = newAssign.select(col("doc_id"), col("cluster_id"))
-      .join(eff, Seq("cluster_id"), "left")
-      .select(col("doc_id"), col("cluster_id"),
-        coalesce(col("pin_split"), nibbleSplit(col("cluster_id")))
-          .as("split"),
-        col("pin_split").isNull.as("fresh"))
-    // the batch probes `assigned` twice (splits seg + fresh pins) and
-    // it is frontier-sized — pin once
-    val pinned = graft.Checkpoints.pin(assigned)
-    try {
-      val freshPins = pinned.filter(col("fresh"))
-        .select(col("cluster_id"), col("split")).distinct()
-        .select(col("cluster_id"), col("split"), lit(next).as("seq"),
-          col("cluster_id").as("pin_src"))
-      val pinSeg = remapped.select(col("cluster_id"), col("split"),
-          col("seq"), col("pin_src")).distinct()
-        .unionByName(freshPins)
-      val splitSeg = pinned.select(col("doc_id"), col("split"),
-        lit(next).as("admit_seq"))
-      // The splits log is PURE APPEND (one row per doc ever admitted,
-      // never deduped): an append's segment is the batch, a fold's the
-      // whole log, and the written row count gives the committed total
-      // on both paths. The two seg writes touch disjoint paths and read
-      // only already-pinned blocks — overlap them (guide §2.6).
-      if (fold) {
-        // splits: pure concatenation; pins: effective row per key (the
-        // min-(seq, pin_src) reduction preserves every future lookup —
-        // dead-label keys survive harmlessly, they are never current
-        // labels again because components only grow)
-        val allPins = pinsLog.unionByName(pinSeg)
+      Seq(Splits, Pins), VersionedIndex.segmentCap(maxLiveSegments),
+      sizeBy = Seq(newAssign), stream = stream) { a =>
+      val pinsLog = a.read(Pins)
+      // merged clusters: re-key the surviving pins to the merged label.
+      // remap is frontier-sized — broadcast; identity rows change nothing
+      // and are dropped
+      val relabel = remap.filter(col("cluster_id") =!= col("merged"))
+      val remapped = pinsLog
+        .join(broadcast(relabel.select(col("cluster_id"), col("merged"))),
+          Seq("cluster_id"))
+        .select(col("merged").as("cluster_id"), col("split"), col("seq"),
+          col("pin_src"))
+      // effective pin per batch-touched cluster: min (seq, pin_src) row
+      // over live pins (log ∪ this admission's re-keyed rows), restricted
+      // to the batch's cluster set (broadcast semi-join keeps the agg
+      // O(touched) — the scan of the thin pins log is the per-admission
+      // floor, see the scaladoc's bucket upgrade note)
+      val touched = newAssign.select(col("cluster_id")).distinct()
+      val eff = pinsLog.unionByName(remapped)
+        .join(broadcast(touched), Seq("cluster_id"))
+        .groupBy(col("cluster_id"))
+        .agg(min_by(col("split"),
+          struct(col("seq"), col("pin_src"))).as("pin_split"))
+      val assigned = newAssign.select(col("doc_id"), col("cluster_id"))
+        .join(eff, Seq("cluster_id"), "left")
+        .select(col("doc_id"), col("cluster_id"),
+          coalesce(col("pin_split"), nibbleSplit(col("cluster_id")))
+            .as("split"),
+          col("pin_split").isNull.as("fresh"))
+      // the batch probes `assigned` twice (splits seg + fresh pins) and
+      // it is frontier-sized — pin once
+      val pinned = graft.Checkpoints.pin(assigned)
+      try {
+        val freshPins = pinned.filter(col("fresh"))
+          .select(col("cluster_id"), col("split")).distinct()
+          .select(col("cluster_id"), col("split"), lit(a.next).as("seq"),
+            col("cluster_id").as("pin_src"))
+        val pinSeg = remapped.select(col("cluster_id"), col("split"),
+            col("seq"), col("pin_src")).distinct()
+          .unionByName(freshPins)
+        // the two seg writes touch disjoint paths and read only
+        // already-pinned blocks — overlap them (guide §2.6)
         graft.Par.inParallel(
-          () => writeSeg(allPins
-              .groupBy(col("cluster_id"))
-              .agg(min_by(struct(col("split"), col("seq"), col("pin_src")),
-                struct(col("seq"), col("pin_src"))).as("w"))
-              .select(col("cluster_id"), col("w.split").as("split"),
-                col("w.seq").as("seq"), col("w.pin_src").as("pin_src")),
-            dir, "pins", next, OneFile),
-          () => writeSeg(VersionedIndex.readLog(spark, dir, "splits", m.segs,
-              SplitDdl).unionByName(splitSeg), dir, "splits", next, OneFile)).last
-      } else
-        m.totalRows + graft.Par.inParallel(
-          () => writeSeg(pinSeg, dir, "pins", next, OneFile),
-          () => writeSeg(splitSeg, dir, "splits", next, OneFile)).last
-    } finally graft.Checkpoints.free(pinned)
-  }
+          () => a.seg(Pins, pinSeg),
+          () => a.seg(Splits, pinned.select(col("doc_id"), col("split"),
+            lit(a.next).as("admit_seq"))))
+      } finally graft.Checkpoints.free(pinned)
+    }
 
   /** Every admitted document's pinned assignment:
     * (doc_id, split, admit_seq). */
   def loadSplits(spark: SparkSession, dir: String): DataFrame = {
     val m = VersionedIndex.metaOrThrow(dir)
-    VersionedIndex.readLog(spark, dir, "splits", m.segs, SplitDdl)
+    VersionedIndex.readLog(spark, dir, Splits, m.segs)
   }
 
   /** The live pin log (post-fold: one effective row per key). */
   private[graft] def loadPins(spark: SparkSession, dir: String): DataFrame = {
     val m = VersionedIndex.metaOrThrow(dir)
-    VersionedIndex.readLog(spark, dir, "pins", m.segs, PinDdl)
+    VersionedIndex.readLog(spark, dir, Pins, m.segs)
   }
 
   // ---- SparkEntry wiring -------------------------------------------------

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import VersionedIndex.{OneFile, writeSeg}
+import VersionedIndex.Log
 import graft.functions.TextFns
 
 /** Exact-substring (shared-passage) dedup and n-gram-overlap
@@ -360,13 +360,14 @@ object SubstringDedup {
 
   // ---- persisted store (the VersionedIndex protocol) ---------------------
 
-  private val WindowDdl = "doc_id BIGINT, pos BIGINT, wh STRING"
-  private val SpanDdl = "doc_a BIGINT, doc_b BIGINT, a_start BIGINT, " +
-    "b_start BIGINT, span_tokens BIGINT"
+  /** The window log — `whb` dirs, `wh`-sorted files; its rows are the
+    * store's committed size. */
+  private val Windows = Log("windows", "doc_id BIGINT, pos BIGINT, wh STRING",
+    partitionDdl = "whb INT", layout = VersionedIndex.Bucketed("whb",
+      whBucket(col("wh"), WinStateBuckets), "wh"))
 
-  /** The window log's layout: `whb` dirs, `wh`-sorted files. */
-  private val WindowLayout = VersionedIndex.Bucketed("whb",
-    whBucket(col("wh"), WinStateBuckets), "wh")
+  private val Spans = Log("spans", "doc_a BIGINT, doc_b BIGINT, a_start BIGINT, " +
+    "b_start BIGINT, span_tokens BIGINT")
 
   /** On-disk layout (the [[VersionedIndex]] protocol — atomic CURRENT
     * pointer, manifest-listed segments, crashed commits invisible):
@@ -391,21 +392,17 @@ object SubstringDedup {
     // its write runs concurrently with the one-shot span computation
     // (the bootstrapDrop overlap shape); both sides re-run the narrow
     // windowRel scan rather than pinning a corpus-sized relation
-    VersionedIndex.bootstrap(dir, Seq("windows", "spans")) {
-      graft.Par.overlap(
-        writeSeg(windowRel(docs, k), dir, "windows", 0, WindowLayout))(
-        writeSeg(duplicateSpans(docs, k), dir, "spans", 0, OneFile))._1
+    VersionedIndex.bootstrap(spark, dir, Seq(Windows, Spans)) { a =>
+      graft.Par.overlap(a.seg(Windows, windowRel(docs, k)))(
+        a.seg(Spans, duplicateSpans(docs, k)))
     }
 
   def loadStore(spark: SparkSession, dir: String): Option[SubstringState] =
-    VersionedIndex.meta(dir).map(stateAt(spark, dir, _))
+    VersionedIndex.meta(dir)
+      .map(m => stateOf(VersionedIndex.readLog(spark, dir, _, m.segs)))
 
-  private def stateAt(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta): SubstringState =
-    SubstringState(
-      spans = VersionedIndex.readLog(spark, dir, "spans", m.segs, SpanDdl),
-      windows = VersionedIndex.readLog(spark, dir, "windows", m.segs,
-        WindowDdl, partitionDdl = "whb INT"),
+  private def stateOf(read: Log => DataFrame): SubstringState =
+    SubstringState(spans = read(Spans), windows = read(Windows),
       buckets = Some(WinStateBuckets))
 
   /** Admit a batch against the PERSISTED state at `dir` and commit the
@@ -418,33 +415,17 @@ object SubstringDedup {
       k: Int = DedupK, maxLiveSegments: Int = 16): Unit =
     VersionedIndex.appendOrFold(spark, dir,
       s"$dir holds no committed substring-dedup state — bootstrapStore first",
-      maxLiveSegments, Seq("windows", "spans"), sizeBy = Seq(newDocs)) {
-      (m, next, fold) => admitSegs(spark, dir, m, newDocs, k, next, fold)
+      Seq(Windows, Spans), VersionedIndex.segmentCap(maxLiveSegments),
+      sizeBy = Seq(newDocs)) { a =>
+      val st = stateOf(a.read)
+      // the batch's window relation feeds the seg write, the bucket probe,
+      // AND the match join — pin once (batch-sized), free once written;
+      // the window write overlaps the span probe
+      val nw = graft.Checkpoints.pin(windowRel(newDocs, k))
+      try graft.Par.overlap(a.seg(Windows, nw))(
+        a.seg(Spans, admitSpans(st, nw, k)))
+      finally graft.Checkpoints.free(nw)
     }
-
-  /** Writes this admission's window and span segments (or the folded
-    * logs) and returns the committed window-log size. */
-  private def admitSegs(spark: SparkSession, dir: String,
-      m: VersionedIndex.Meta, newDocs: DataFrame, k: Int, next: Long,
-      fold: Boolean): Long = {
-    val st = stateAt(spark, dir, m)
-    // the batch's window relation feeds the seg write, the bucket probe,
-    // AND the match join — pin once (batch-sized), free once written
-    val nw = graft.Checkpoints.pin(windowRel(newDocs, k))
-    try {
-      // the window write overlaps the span probe; its row count is the
-      // batch's windows (append) or the whole folded log (fold), and
-      // m.totalRows already carries the live log's size
-      val (winRows, _) = graft.Par.overlap(
-        writeSeg(if (fold) st.windows.drop("whb").unionByName(nw) else nw,
-          dir, "windows", next, WindowLayout)) {
-        val newSpans = admitSpans(st, nw, k)
-        writeSeg(if (fold) st.spans.unionByName(newSpans) else newSpans,
-          dir, "spans", next, OneFile)
-      }
-      if (fold) winRows else m.totalRows + winRows
-    } finally graft.Checkpoints.free(nw)
-  }
 
   // ---- SparkEntry wiring -------------------------------------------------
 

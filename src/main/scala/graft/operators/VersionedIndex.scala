@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** The atomic versioned-commit protocol of every persisted store: the
   * ANN index stores ([[Similarity.buildIvfIndex]]'s centroids +
@@ -10,10 +11,7 @@ import org.apache.spark.sql.functions.col
   * [[EmbeddingIncremental]]) and the dedup state store
   * ([[graft.streaming.DedupStream]]). This object is the only code that
   * reads or writes `CURRENT` and `v$N/MANIFEST`, and the only code that
-  * names a store's segment and model paths: the stores hand it
-  * relations and a [[Layout]] ([[writeSeg]], [[writeModel]],
-  * [[bootstrap]]) and get back the rows written, so no admission runs a
-  * count job over a segment it has just written:
+  * names a store's segment and model paths:
   *
   * {{{
   * indexDir/
@@ -23,39 +21,40 @@ import org.apache.spark.sql.functions.col
   *   <log>/seg=$M/…       # one data segment per committing version
   * }}}
   *
-  * The manifest splits into the protocol's members — `buildId`, the
-  * streaming replay guard, `retain` and `segs`, the live segments — and
-  * each store's own members, which [[commit]] writes as given and
-  * [[Meta]] parses strictly when the store reads them: `trainedRows` /
-  * `totalRows` for the index and log stores ([[rows]]), the bucketed
-  * layout (`compactions`, `cFrom`, `segFrom`, `buckets`, `owners`,
-  * `migratedFrom`) for the dedup store.
+  * Each store declares its data logs once, as data ([[Log]]: name,
+  * schema, partition columns, [[Layout]], fold reducer), and every store
+  * but the dedup store commits through one skeleton, [[appendOrFold]]
+  * (with [[bootstrap]] and [[rebuild]]): the store's fold decision on
+  * the manifest, then an [[Admission]] whose segment writer writes the
+  * batch or, on a fold, the log's reducer over committed ∪ batch. The
+  * log stores fold past a live-segment cap ([[segmentCap]]); the ANN
+  * index stores' fold is a drift retrain that writes their logs whole.
   *
-  * A data log (`assignments` for IVF, `codes` for PQ, …) is a single
-  * partitioned tree whose FIRST partition level is the writing version
-  * (`seg=$N`) — every path segment below the log root is `key=value`,
-  * so the committed segments read as ONE multi-path scan with uniform
-  * partition columns (a flat `v$N/<log>` layout cannot: Spark's
-  * partition discovery rejects non-partition directories between the
-  * base path and the files). Readers list exactly the manifest's `segs`
-  * — a crashed commit's half-written segment sits outside every
-  * committed manifest and is invisible; the retried commit overwrites
-  * it (same version number, `mode("overwrite")`). The dedup store keeps
-  * its own segment, compaction and bucket-owner retention and names no
-  * `logs` here; its `segs` list its live segments `segFrom..N`.
+  * The manifest holds the protocol's members — `buildId`, the streaming
+  * replay guard, `retain` and `segs`, the live segments — and each
+  * store's own, which [[commit]] writes as given and [[Meta]] parses
+  * strictly when read: `totalRows`, the committed size of a store's
+  * first log (its rows, or the sketch's occurrence mass), so no append
+  * runs a count job over the corpus, and `trainedRows`, `totalRows` as
+  * of the last fold, retrain or build (the index stores' drift
+  * baseline; no reader of a log store uses it); or the dedup store's
+  * bucketed layout (`compactions`, `cFrom`, `segFrom`, `buckets`,
+  * `owners`, `migratedFrom`), whose own segments, compaction and
+  * bucket-owner retention name no `logs` here.
   *
-  * For the row-counting stores `trainedRows` is the drift baseline (rows
-  * the model was last fit on) and `totalRows` the committed log size —
-  * carried in the manifest so the append path never runs a corpus-sized
-  * (even footer-only) count job. Retention after each promote keeps the
-  * latest `retain` versions' dirs and segments (in-flight readers of the
-  * prior commit stay valid) and deletes the rest.
+  * A data log is one partitioned tree whose FIRST partition level is the
+  * writing version (`seg=$N`), so the committed segments read as ONE
+  * multi-path scan with uniform partition columns (Spark's partition
+  * discovery rejects non-partition dirs between base path and files).
+  * Readers list exactly the manifest's `segs`: a crashed commit's
+  * half-written segment is invisible, and the retry overwrites it.
+  * Retention after each promote keeps the latest `retain` versions'
+  * dirs and segments (in-flight readers of the prior commit stay valid)
+  * and deletes the rest.
   *
   * Every path here goes through `java.io.File`, so a store dir must be
   * a driver-local path; [[requireLocalFs]] rejects a URI at every entry
-  * point before anything is written. (The dedup store's own `seg$N` and
-  * bucket-owner dirs stay in [[graft.streaming.DedupStream]]: its
-  * compaction fixes the task count at the bucket count.) */
+  * point before anything is written. */
 private[graft] object VersionedIndex {
 
   /** The committed state a reader resolves: the version, its live log
@@ -136,10 +135,12 @@ private[graft] object VersionedIndex {
       .map(m => m.group(1) -> m.group(2)).toMap)
   }
 
+  /** The error of a read or an index append at a dir with no store. */
+  def noIndex(dir: String): String =
+    s"$dir holds no committed index (no CURRENT pointer) — build one first"
+
   def metaOrThrow(indexDir: String): Meta = meta(indexDir).getOrElse(
-    throw new IllegalStateException(
-      s"$indexDir holds no committed index (no CURRENT pointer) — " +
-        "build one first"))
+    throw new IllegalStateException(noIndex(indexDir)))
 
   /** Whether the committed version at `dir` already admitted micro-batch
     * `stream` = (checkpoint identity, batch id) of the same streaming
@@ -161,24 +162,36 @@ private[graft] object VersionedIndex {
       p
     }
 
-  /** One scan over the committed log segments: declared data schema,
-    * partition columns (`seg`, …) discovered against the log root; the
-    * bookkeeping `seg` column is dropped. Empty segment list → empty
-    * relation of the declared schema PLUS `partitionDdl` — the
-    * partition columns below `seg=` (e.g. `cid INT`) that the
+  /** One data log of a store, declared once: its name (the dir under
+    * the store root), data schema, the partition columns below `seg=`
+    * that a read discovers from paths (e.g. `cid INT`), its file
+    * [[Layout]] and its fold reducer. On a fold, [[Admission.seg]]
+    * writes `fold(committed ∪ batch)`; the default is concatenation.
+    * `None` marks a log whose body writes it whole on a fold: the ANN
+    * index logs (a retrain re-encodes the corpus) and the embedding
+    * labels (the fold applies the composed remap). */
+  final case class Log(name: String, ddl: String, partitionDdl: String = "",
+      layout: Layout = OneFile(),
+      fold: Option[DataFrame => DataFrame] = Some(identity))
+
+  /** One scan over the committed segments of `log`: declared data
+    * schema, partition columns (`seg`, …) discovered against the log
+    * root; the bookkeeping `seg` column is dropped. Empty segment list →
+    * empty relation of the declared schema PLUS `partitionDdl`, which the
     * non-empty branch discovers from paths; without them the two
     * branches would return different schemas and an empty log would
     * break downstream joins on the partition key. */
-  def readLog(spark: SparkSession, indexDir: String, log: String,
-      segs: Seq[Long], ddl: String, partitionDdl: String = ""): DataFrame =
+  def readLog(spark: SparkSession, indexDir: String, log: Log,
+      segs: Seq[Long]): DataFrame =
     if (segs.isEmpty) {
-      val full = if (partitionDdl.isEmpty) ddl else s"$ddl, $partitionDdl"
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(full))
+      val full = if (log.partitionDdl.isEmpty) log.ddl
+        else s"${log.ddl}, ${log.partitionDdl}"
+      spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType.fromDDL(full))
     } else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .option("basePath", s"$indexDir/$log")
-      .parquet(segPaths(indexDir, log, segs): _*)
+      .schema(StructType.fromDDL(log.ddl))
+      .option("basePath", s"$indexDir/${log.name}")
+      .parquet(segPaths(indexDir, log.name, segs): _*)
       .drop("seg")
 
   /** Versions every commit keeps readable (current inclusive). The
@@ -279,38 +292,148 @@ private[graft] object VersionedIndex {
     }
   }
 
-  /** The log stores' admission skeleton ([[SplitPins]], [[HeavyHitters]],
-    * [[SubstringDedup]], [[EmbeddingIncremental]]): resolve the committed
-    * manifest (`missing` is the error when there is none), fold once
-    * `segs.size + 1 > maxLiveSegments`, run `write(m, next, fold)` — it
-    * writes `seg=$next` of every log (the batch's rows, or the folded
-    * log) and returns the new log size — then commit. Append days run
+  /** Version `next` of a store while it is written — what the body of
+    * [[appendOrFold]], [[bootstrap]] and [[rebuild]] gets. `fold` is
+    * the arm: a fold, a retrain, or (with nothing committed read) a
+    * bootstrap or build. Safe to use from overlapped writes. */
+  final class Admission private[VersionedIndex] (spark: SparkSession,
+      val dir: String, committed: Option[Meta], val next: Long,
+      val fold: Boolean) {
+    private[VersionedIndex] val sizes =
+      new java.util.concurrent.ConcurrentHashMap[String, Long]
+    private[VersionedIndex] val models =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, AnyRef)]
+
+    private val reads =
+      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
+
+    /** The committed version this admission grows (a bootstrap or a
+      * build has none). */
+    def base: Meta = committed.get
+
+    /** `log`'s committed relation ([[readLog]] over `base.segs`), read
+      * once per admission: the body's probes and a fold's rewrite share
+      * one file listing, which for a bucketed log is a Spark job per
+      * live segment. */
+    def read(log: Log): DataFrame =
+      reads.computeIfAbsent(log.name, _ => readLog(spark, dir, log, base.segs))
+
+    /** Write `log`'s segment of version `next`: the batch, or on a fold
+      * the log's reducer over committed ∪ batch. Returns the segment's
+      * size ([[writeSeg]]). */
+    def seg(log: Log, batch: DataFrame): Long = {
+      val df = (committed, log.fold) match {
+        case (Some(_), Some(reduce)) if fold =>
+          reduce(read(log).select(batch.columns.map(col).toIndexedSeq: _*)
+            .unionByName(batch))
+        case _ => batch
+      }
+      val n = writeSeg(df, dir, log, next)
+      sizes.put(log.name, n)
+      n
+    }
+
+    /** Model `name` of version `next`: written from `df` on a fold,
+      * copied from the committed version on an append (no Spark job).
+      * `cached` warms the model cache once the version commits. */
+    def model(name: String, cached: AnyRef)(df: => DataFrame): Unit = {
+      if (fold) writeModel(df, dir, next, name)
+      else {
+        val dst = new java.io.File(dir, s"v$next/$name")
+        org.apache.commons.io.FileUtils.deleteDirectory(dst) // crashed try
+        org.apache.commons.io.FileUtils.copyDirectory(
+          new java.io.File(dir, s"v${base.version}/$name"), dst)
+      }
+      models.add(name -> cached)
+    }
+  }
+
+  /** The admission skeleton of every store but the dedup store: resolve
+    * the committed manifest (`missing` is the error when there is none),
+    * take `fold` on it, run the body on an [[Admission]] of the next
+    * version, which writes `seg=$next` of every log in `logs`, then
+    * commit. The committed size is `logs.head`'s: the written segment's
+    * size on a fold, the committed size plus it on an append; a fold
+    * also resets `trainedRows` and the segment list. Append days run
     * under static plans sized to `sizeBy` ([[graft.Par.withAdmitPlan]]:
-    * their relations are batch-sized by construction); a fold rewrites
-    * the logs and keeps AQE, as does an append with no `sizeBy`. The arm
-    * is known from the manifest before any Spark work, so the whole
-    * body, overlapped writes included, runs under one regime. */
-  def appendOrFold(spark: SparkSession, dir: String, missing: String,
-      maxLiveSegments: Int, logs: Seq[String], sizeBy: Seq[DataFrame],
+    * their relations are batch-sized by construction); a fold keeps
+    * AQE, as does an append with no `sizeBy`. Returns the body's result. */
+  def appendOrFold[A](spark: SparkSession, dir: String, missing: String,
+      logs: Seq[Log], fold: Meta => Boolean, sizeBy: Seq[DataFrame],
       stream: Option[(String, Long)] = None,
-      retainVersions: Int = DefaultRetainVersions)(
-      write: (Meta, Long, Boolean) => Long): Unit = {
+      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A = {
     val m = meta(dir).getOrElse(throw new IllegalStateException(missing))
-    val next = m.version + 1
-    val fold = m.segs.size + 1 > maxLiveSegments
-    val total =
-      if (fold || sizeBy.isEmpty) write(m, next, fold)
-      else graft.Par.withAdmitPlan(spark, sizeBy: _*)(write(m, next, fold))
-    commit(dir, next, rows(total, total),
-      if (fold) Vector(next) else m.segs :+ next, logs, stream, retainVersions)
+    val folds = fold(m)
+    admit(spark, dir, Some(m), m.version + 1, folds, logs, stream,
+        retainVersions) { a =>
+      if (folds || sizeBy.isEmpty) body(a)
+      else graft.Par.withAdmitPlan(spark, sizeBy: _*)(body(a))
+    }
+  }
+
+  /** The log stores' fold decision: fold once an append would leave more
+    * than `maxLiveSegments` live segments. */
+  def segmentCap(maxLiveSegments: Int): Meta => Boolean =
+    _.segs.size + 1 > maxLiveSegments
+
+  /** Commit version 0 of a fresh store: reject a URI dir and an existing
+    * store before the body runs (the URI guard runs inside
+    * [[currentVersion]]), then commit the `seg=0` segments it wrote. */
+  def bootstrap[A](spark: SparkSession, dir: String, logs: Seq[Log],
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A = {
+    require(currentVersion(dir).isEmpty,
+      s"$dir already holds a committed store — admit into it instead")
+    rebuild(spark, dir, logs, stream, retainVersions)(body)
+  }
+
+  /** Write every log and model whole as the next version (0 in a fresh
+    * dir) and commit it: the bootstraps and the ANN index builds, whose
+    * retrain arm is the same body. */
+  def rebuild[A](spark: SparkSession, dir: String, logs: Seq[Log],
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A =
+    admit(spark, dir, None, currentVersion(dir).fold(0L)(_ + 1), fold = true,
+      logs, stream, retainVersions)(body)
+
+  private def admit[A](spark: SparkSession, dir: String,
+      committed: Option[Meta], next: Long, fold: Boolean, logs: Seq[Log],
+      stream: Option[(String, Long)], retainVersions: Int)(
+      body: Admission => A): A = {
+    val a = new Admission(spark, dir, committed, next, fold)
+    val out = body(a)
+    val unwritten = logs.map(_.name).filterNot(a.sizes.containsKey)
+    if (unwritten.nonEmpty) throw new IllegalStateException(
+      s"$dir v$next: no segment written for ${unwritten.mkString(", ")}")
+    val n = a.sizes.get(logs.head.name)
+    val (trained, total, segs) = committed match {
+      case Some(m) if !fold => (m.trainedRows, m.totalRows + n, m.segs :+ next)
+      case _ => (n, n, Vector(next))
+    }
+    commit(dir, next, rows(trained, total), segs, logs.map(_.name), stream,
+      retainVersions)
+    // warm the model cache: later appends and queries in this process
+    // skip even the K-row read
+    a.models.forEach { case (name, model) =>
+      val key = modelKey(dir, next, name)
+      modelCache.synchronized { modelCache.put(key, model) }
+    }
+    out
   }
 
   /** How [[writeSeg]] lays out a segment's files. */
   sealed trait Layout
 
   /** One file (`coalesce(1)`): the small logs (pins, splits, spans,
-    * labels, sketch cells). */
-  case object OneFile extends Layout
+    * labels). A `key` sorts the file inside its one write task, which
+    * adds no stage and makes its bytes independent of the order the rows
+    * arrive in (the split store's pins and splits). */
+  final case class OneFile(key: String*) extends Layout
+
+  /** One file written from the rows collected to the driver, for
+    * grid-bounded logs (the sketch cells): the segment's size is
+    * `size(rows)`, not its row count. */
+  final case class Collected(size: Array[Row] => Long) extends Layout
 
   /** Partition directories by existing columns (`cid` for the IVF
     * logs); none writes the files as planned. */
@@ -323,23 +446,35 @@ private[graft] object VersionedIndex {
     * plan's shuffle width. */
   final case class Bucketed(b: String, of: Column, key: String) extends Layout
 
-  /** Write `df` as `$dir/$log/seg=$version` (overwrite: a crashed
-    * attempt's half-written segment is replaced) and return the rows
-    * written ([[segRows]]). (An `Observation` would count on the write
+  /** Write `df` as `$dir/${log.name}/seg=$version` in the log's layout
+    * (overwrite: a crashed attempt's half-written segment is replaced)
+    * and return its size: the rows written ([[segRows]]), or the
+    * [[Collected]] measure. (An `Observation` would count on the write
     * itself, but it leaves the session's observation manager set, and
     * Spark then fails to serialize any closure that captures the
     * session, such as a logistic-regression model's training summary.) */
-  def writeSeg(df: DataFrame, dir: String, log: String, version: Long,
-      layout: Layout): Long = {
-    val w = layout match {
-      case OneFile => df.coalesce(1).write
-      case PartitionedBy() => df.write
-      case PartitionedBy(cols @ _*) => df.write.partitionBy(cols: _*)
-      case Bucketed(b, of, key) => df.withColumn(b, of).repartition(col(b))
-        .sortWithinPartitions(col(b), col(key)).write.partitionBy(b)
+  def writeSeg(df: DataFrame, dir: String, log: Log, version: Long): Long = {
+    val path = s"$dir/${log.name}/seg=$version"
+    def rowsWritten(w: org.apache.spark.sql.DataFrameWriter[Row]): Long = {
+      w.mode("overwrite").parquet(path)
+      segRows(df.sparkSession, dir, log.name, version)
     }
-    w.mode("overwrite").parquet(s"$dir/$log/seg=$version")
-    segRows(df.sparkSession, dir, log, version)
+    log.layout match {
+      case Collected(size) =>
+        val schema = StructType.fromDDL(log.ddl)
+        val rows = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+          .collect()
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+          schema).coalesce(1).write.mode("overwrite").parquet(path)
+        size(rows)
+      case OneFile(key @ _*) => // no key: the optimizer drops the sort
+        rowsWritten(df.coalesce(1).sortWithinPartitions(key.map(col): _*).write)
+      case PartitionedBy() => rowsWritten(df.write)
+      case PartitionedBy(cols @ _*) => rowsWritten(df.write.partitionBy(cols: _*))
+      case Bucketed(b, of, key) => rowsWritten(df.withColumn(b, of)
+        .repartition(col(b)).sortWithinPartitions(col(b), col(key)).write
+        .partitionBy(b))
+    }
   }
 
   /** Rows in segment `$dir/$log/seg=$version`, summed from its files'
@@ -362,39 +497,11 @@ private[graft] object VersionedIndex {
       name: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/v$version/$name")
 
-  /** A version's model relation; `ddl` declares its schema, empty infers
-    * it from the file. */
+  /** A version's model relation, read with its declared schema. */
   def readModel(spark: SparkSession, dir: String, version: Long,
-      name: String, ddl: String = ""): DataFrame = {
-    val r = spark.read
-    (if (ddl.isEmpty) r
-      else r.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+      name: String, ddl: String): DataFrame =
+    spark.read.schema(StructType.fromDDL(ddl))
       .parquet(s"$dir/v$version/$name")
-  }
-
-  /** Commit version 0 of a fresh store: reject a URI dir and an existing
-    * store before `write` runs, then commit the `seg=0` segments of
-    * `logs` that `write` wrote, with the log size it returns (the URI
-    * guard runs inside [[currentVersion]]). */
-  def bootstrap(dir: String, logs: Seq[String],
-      stream: Option[(String, Long)] = None,
-      retainVersions: Int = DefaultRetainVersions)(write: => Long): Unit = {
-    require(currentVersion(dir).isEmpty,
-      s"$dir already holds a committed store — admit into it instead")
-    val n = write
-    commit(dir, 0, rows(n, n), Vector(0L), logs, stream, retainVersions)
-  }
-
-  /** Copy a K-row model directory (centroids/codebook) into the next
-    * version by plain file copy — zero Spark jobs for data that is a
-    * handful of KB. */
-  def copyModelDir(indexDir: String, from: Long, next: Long,
-      name: String): Unit = {
-    val src = new java.io.File(indexDir, s"v$from/$name")
-    val dst = new java.io.File(indexDir, s"v$next/$name")
-    org.apache.commons.io.FileUtils.deleteDirectory(dst) // crashed try
-    org.apache.commons.io.FileUtils.copyDirectory(src, dst)
-  }
 
   /** Driver-side per-(dir, version) model cache — the append/query
     * paths re-use collected K-row models instead of re-reading them
@@ -452,15 +559,5 @@ private[graft] object VersionedIndex {
     val loaded = load
     modelCache.synchronized { modelCache.put(key, loaded) }
     loaded
-  }
-
-  /** Warm the model cache at commit time — the builder already holds
-    * the model rows driver-side, so later appends/queries in this
-    * process skip even the K-row read. */
-  def putModel(indexDir: String, version: Long, name: String,
-      model: AnyRef): Unit = {
-    val key = modelKey(indexDir, version, name)
-    modelCache.synchronized { modelCache.put(key, model) }
-    ()
   }
 }

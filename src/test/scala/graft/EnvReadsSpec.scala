@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * files; a second copy of that protocol would miss its single-writer
   * guard and strict manifest parse. It is also the only code that names
   * a store's `<log>/seg=$N` segments and `v$N/<model>` dirs, so the
-  * segment layout and its row counts live in one writer. Library code
+  * segment layout and its row counts live in one writer. Every store
+  * but the dedup store (whose own layout publishes through `commit`)
+  * admits through its one skeleton, `appendOrFold`. Library code
   * also never uses an `Observation`, which breaks closure serialization
   * for the rest of the session. */
 class EnvReadsSpec extends AnyFunSuite {
@@ -86,6 +88,18 @@ class EnvReadsSpec extends AnyFunSuite {
     // DedupStream's bucket-owner dirs `<table>/b$k/v$N` are its own layout
     val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
       """seg=|(?<!/b\$k)/v\$""".r, skipLineComments = true)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("every store but the dedup store commits through appendOrFold") {
+    assert(root.isDirectory, s"run from the repository root: $root")
+    val files = scalaFiles(root)
+    assert(files.exists(_.getName == "Similarity.scala"), "scan found no store files")
+    // DedupStream keeps its own layout and publishes through commit itself
+    val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
+      """VersionedIndex\.(commit|rows)\(""".r, skipLineComments = true)
+      .filterNot(h => h.startsWith("graft/streaming/DedupStream.scala:") &&
+        h.contains("VersionedIndex.commit(stateDir, next, cur.members,"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

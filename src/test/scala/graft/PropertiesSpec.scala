@@ -301,9 +301,9 @@ class PropertiesSpec extends AnyFunSuite {
         val cb = spark.read.parquet(s"$pqDir/v$pv/codebook").collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toSeq))
           .sortBy(_._1).map(_._2).toSeq
-        val gotP = VersionedIndex.readLog(spark, pqDir, "codes",
-            VersionedIndex.metaOrThrow(pqDir).segs,
-            "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE")
+        val gotP = VersionedIndex.readLog(spark, pqDir,
+            VersionedIndex.Log("codes", "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE"),
+            VersionedIndex.metaOrThrow(pqDir).segs)
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getDouble(2)))
           .toSet

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.VersionedIndex
-import graft.operators.VersionedIndex.{Bucketed, Layout, OneFile, PartitionedBy}
+import graft.operators.VersionedIndex.{Bucketed, Layout, Log, OneFile, PartitionedBy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +16,7 @@ class SegWriterSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val layouts: Seq[(String, Layout)] = Seq(
-    "one file" -> OneFile,
+    "one file" -> OneFile(),
     "as planned" -> PartitionedBy(),
     "partitioned by cid" -> PartitionedBy("cid"),
     "bucketed" -> Bucketed("b", pmod(xxhash64(col("wh")), lit(8L)).cast("int"), "wh"))
@@ -25,7 +25,7 @@ class SegWriterSpec extends AnyFunSuite {
   private def written(df: DataFrame, layout: Layout): (Long, Long) = {
     val dir = java.nio.file.Files.createTempDirectory("seg_writer").toString
     try {
-      val n = VersionedIndex.writeSeg(df, dir, "log", 3, layout)
+      val n = VersionedIndex.writeSeg(df, dir, Log("log", df.schema.toDDL, layout = layout), 3)
       // a partitioned write of no rows leaves no file to infer from
       (n, spark.read.schema(df.schema).parquet(s"$dir/log/seg=3").count())
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -76,7 +76,7 @@ class SegWriterSpec extends AnyFunSuite {
     try {
       val rows = source(s"$tmp/src")
       val plain = jobsOf(rows.coalesce(1).write.parquet(s"$tmp/plain"))
-      assert(jobsOf(VersionedIndex.writeSeg(rows, tmp, "log", 0, OneFile)) == plain)
+      assert(jobsOf(VersionedIndex.writeSeg(rows, tmp, Log("log", rows.schema.toDDL), 0)) == plain)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
