@@ -490,13 +490,15 @@ object Bench {
         val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
       }
       val root = java.nio.file.Files.createTempDirectory("graft-subsplit").toString
+      // the manifest's totalRows is the window log's committed size
+      def windowRows() =
+        graft.operators.VersionedIndex.metaOrThrow(s"$root/state").totalRows
       val boot = secs(graft.operators.SubstringDedup.bootstrapStore(
         spark, s"$root/state", day(0).union(day(1))))
+      val batchRows = windowRows()
       val admit = secs(graft.operators.SubstringDedup.admitDrop(
         spark, s"$root/state", day(2)))
-      def windowRows(v: Long) = graft.operators.VersionedIndex.segRows(
-        spark, s"$root/state", "windows", v)
-      val (segRows, batchRows) = (windowRows(1), windowRows(0))
+      val segRows = windowRows() - batchRows
       try org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(root))
       catch { case _: Exception => }

@@ -76,7 +76,7 @@ object BpeCore {
     * yields zero tokens. */
   def tokenizeWord(word: String,
       ranks: java.util.HashMap[String, Integer]): Array[String] = {
-    var toks = charTokens(word)
+    val toks = charTokens(word)
     var done = toks.size() <= 1
     while (!done) {
       var best = Int.MaxValue

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.functions.TextFns._
 
 /** The composed training-corpus pipeline (q38): everything a pretraining
   * data pass actually runs, wired end to end —

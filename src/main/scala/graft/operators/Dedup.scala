@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.Tables
-import graft.functions.TextFns._
 
 /** Deduplication operators over the `documents` table — the core of a
   * training-data pipeline (builder-prompt scale extensions; the reference

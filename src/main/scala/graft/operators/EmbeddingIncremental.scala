@@ -262,11 +262,11 @@ object EmbeddingIncremental {
     * scan pruning at a saturated grid. */
   val EmbStateBuckets = 64
 
-  /** The bucket log: `grpb` dirs, `grp`-sorted files. */
+  /** The bucket log, bucketed on `grpb` and sorted on `grp`. */
   private val Buckets = Log("buckets",
-    "grp BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>", partitionDdl = "grpb INT",
-    layout = VersionedIndex.Bucketed("grpb",
-      pmod(col("grp"), lit(EmbStateBuckets)).cast("int"), "grp"))
+    "grp BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>",
+    layout = VersionedIndex.Tiered("grpb",
+      n => pmod(col("grp"), lit(n)).cast("int"), "grp"))
 
   /** The bucket log's columns: a loaded log also carries the grpb
     * partition column, in its own column order. */
@@ -310,17 +310,20 @@ object EmbeddingIncremental {
     *
     * {{{
     * dir/
-    *   CURRENT                     # committed version
-    *   v$N/MANIFEST  v$N/remap/   # composed remap C (merges only)
-    *   buckets/seg=$M/grpb=.../   # append-only bucket log
-    *   labels/seg=$M/             # append-only label log (LSM)
+    *   CURRENT                          # committed version
+    *   v$N/MANIFEST  v$N/remap/         # composed remap C (merges only)
+    *   buckets/base/cpart=$j/grpb=…/    # bucket log base (grp-sorted)
+    *   buckets/seg$M/                   # one file per append
+    *   labels/base/cpart=$j/  labels/seg$M/   # label log (LSM)
     * }}}
     *
-    * Both logs append ONE O(batch) segment per admission and share the
-    * manifest's `segs` vector; past `maxLiveSegments` the commit FOLDS
-    * each grown relation into a single segment (an O(corpus) rewrite
-    * every K days — amortized O(corpus/K), bounding listing and read
-    * fan-in exactly like [[graft.streaming.DedupStream]]'s folds).
+    * A two-tier store ([[VersionedIndex.Tiered]], [[EmbStateBuckets]]
+    * buckets): both logs append ONE O(batch) file per admission and share
+    * the manifest's `parts` and `segs`; once parts and segments would
+    * exceed `maxLiveSegments` the commit FOLDS each grown relation into
+    * one new base part (an O(corpus) rewrite every K days — amortized
+    * O(corpus/K), bounding read fan-in like
+    * [[graft.streaming.DedupStream]]'s folds).
     *
     * Labels are LSM-style, NOT rewritten per commit: cluster MERGES are
     * recorded in the composed remap `C` (`v$N/remap`, size = cumulative
@@ -341,7 +344,8 @@ object EmbeddingIncremental {
     // fresh-store bootstrap only: a resave would append the FULL bucket
     // relation as a duplicate segment next to the ones it already holds
     VersionedIndex.bootstrap(state.labels.sparkSession, dir,
-        Seq(Labels, Buckets), stream, retainVersions) { a =>
+        Seq(Labels, Buckets), stream, retainVersions,
+        buckets = Some(EmbStateBuckets)) { a =>
       graft.Par.overlap(a.seg(Buckets, bucketCols(state.buckets)))(
         writeLabels(a, state.labels, emptyRemap(state.labels.sparkSession)))
     }
@@ -359,7 +363,7 @@ object EmbeddingIncremental {
       stream: Option[(String, Long)] = None,
       retainVersions: Int = VersionedIndex.DefaultRetainVersions): Unit =
     VersionedIndex.bootstrap(spark, dir, Seq(Labels, Buckets), stream,
-        retainVersions) { a =>
+        retainVersions, buckets = Some(EmbStateBuckets)) { a =>
       graft.Par.overlap(a.seg(Buckets, bucketRows(emb))) {
         // the eager cluster fixpoint (edge kernel, component closure,
         // label pin) runs while the bucket segment writes; labels-only —
@@ -391,7 +395,7 @@ object EmbeddingIncremental {
 
   private def stateAt(spark: SparkSession, dir: String,
       m: VersionedIndex.Meta): EmbedDedupState =
-    stateOf(spark, dir, m.version, VersionedIndex.readLog(spark, dir, _, m.segs))
+    stateOf(spark, dir, m.version, VersionedIndex.readLog(spark, dir, _, m))
 
   /** The state of committed `version`, its logs read through `read`. */
   private def stateOf(spark: SparkSession, dir: String, version: Long,
@@ -407,7 +411,7 @@ object EmbeddingIncremental {
   /** Admit a batch against the PERSISTED state at `dir` and commit the
     * grown state as the next version — per-admission state WRITES are
     * O(batch + cumulative merges), never the corpus: the batch's bucket
-    * rows and label rows land as their own `seg=$N` of each log, the
+    * rows and label rows land as one day-segment file per log, the
     * composed remap re-points through this admission's merges, and the
     * CURRENT pointer moves atomically (a crashed admission publishes
     * nothing; the retry overwrites its partial segment). Every

@@ -341,7 +341,7 @@ object HeavyHitters {
     * read. */
   def loadGrid(spark: SparkSession, dir: String): Array[Array[Long]] = {
     val m = VersionedIndex.metaOrThrow(dir)
-    gridOf(sumCells(VersionedIndex.readLog(spark, dir, Cells, m.segs))
+    gridOf(sumCells(VersionedIndex.readLog(spark, dir, Cells, m))
       .collect(), CmsDepth, CmsWidth)
   }
 

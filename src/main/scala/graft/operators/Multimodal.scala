@@ -488,7 +488,7 @@ object Multimodal {
                 if (lead < 0x80) 0
                 else Integer.numberOfLeadingZeros(~(lead << 24)) - 0
               p += 1 + (if (lead < 0x80) 0 else extra - 1)
-              var blockSize = bsCode match {
+              val blockSize = bsCode match {
                 case c if c >= 1 && c <= 5 => BlockSizes192(c)
                 case 6 => val v = (b(p) & 0xff) + 1; p += 1; v
                 case 7 =>
@@ -1073,7 +1073,6 @@ object Multimodal {
     * a straight projection of the REAL decode ([[decodeFeatures]]; wav
     * rows read the image sentinel -1×-1), not a stub path. */
   def qMediaFeatures(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     decodeFeatures(decodableMediaTable(Tables.documents(s, d)))
       .toDF()
       .select(col("media_id"), col("n_bytes"), col("format"),
@@ -1101,7 +1100,6 @@ object Multimodal {
       |FROM documents ORDER BY media_id""".stripMargin
 
   def qMediaDecode(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     decodeFeatures(decodableMediaTable(Tables.documents(s, d)))
       .toDF()
   }
@@ -1142,7 +1140,6 @@ object Multimodal {
 
   /** q75: real PCM sample statistics over every wav row's payload. */
   def qPcmStats(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     pcmStats(decodableMediaTable(Tables.documents(s, d)))
       .toDF()
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.engine.Tables
-import graft.functions.TextFns.hash60
 import VersionedIndex.{Admission, Log, PartitionedBy}
 
 /** Approximate-nearest-neighbor / similarity search over the `embeddings`
@@ -372,7 +371,7 @@ object Similarity {
   private[graft] def ivfAssignments(spark: SparkSession,
       indexDir: String): DataFrame =
     VersionedIndex.readLog(spark, indexDir, Assignments,
-      VersionedIndex.metaOrThrow(indexDir).segs)
+      VersionedIndex.metaOrThrow(indexDir))
 
   /** Incrementally grow a persisted IVF index: assign ONLY `newVecs`
     * against the EXISTING centroids (the build's narrow argmax fold — K
@@ -424,7 +423,7 @@ object Similarity {
     // join key would wrap the partition column in a cast and defeat
     // dynamic partition pruning
     val cent = centroidRel(spark, ivfCentroids(spark, indexDir, m.version))
-    val assigned = VersionedIndex.readLog(spark, indexDir, Assignments, m.segs)
+    val assigned = VersionedIndex.readLog(spark, indexDir, Assignments, m)
     ivfSearch(emb, cent, assigned, nQueries, k, nprobe)
   }
 
@@ -758,7 +757,7 @@ object Similarity {
     val spark = emb.sparkSession
     val m = VersionedIndex.metaOrThrow(indexDir)
     val cb = pqCodebookOf(spark, indexDir, m.version)
-    val index = VersionedIndex.readLog(spark, indexDir, Codes, m.segs)
+    val index = VersionedIndex.readLog(spark, indexDir, Codes, m)
     pqScore(emb, index, cb, nQueries, k)
   }
 
@@ -841,7 +840,7 @@ object Similarity {
     val m = VersionedIndex.metaOrThrow(indexDir)
     val cent = centroidRel(spark, ivfCentroids(spark, indexDir, m.version))
     val cb = pqCodebookOf(spark, indexDir, m.version)
-    val index = VersionedIndex.readLog(spark, indexDir, Cells, m.segs)
+    val index = VersionedIndex.readLog(spark, indexDir, Cells, m)
     ivfPqSearch(emb, cent, index, cb, nQueries, k, nprobe)
   }
 

@@ -197,13 +197,13 @@ object SplitPins {
     * (doc_id, split, admit_seq). */
   def loadSplits(spark: SparkSession, dir: String): DataFrame = {
     val m = VersionedIndex.metaOrThrow(dir)
-    VersionedIndex.readLog(spark, dir, Splits, m.segs)
+    VersionedIndex.readLog(spark, dir, Splits, m)
   }
 
   /** The live pin log (post-fold: one effective row per key). */
   private[graft] def loadPins(spark: SparkSession, dir: String): DataFrame = {
     val m = VersionedIndex.metaOrThrow(dir)
-    VersionedIndex.readLog(spark, dir, Pins, m.segs)
+    VersionedIndex.readLog(spark, dir, Pins, m)
   }
 
   // ---- SparkEntry wiring -------------------------------------------------

@@ -178,7 +178,7 @@ object SubstringDedup {
     * with the incremental bootstrap ([[bootstrapStore]]), whose
     * background window-segment write consumes the same relation. */
   private def spansFromWindows(wins: DataFrame, k: Int,
-      saltBuckets: Int, autoSalt: Boolean = false): DataFrame = {
+      saltBuckets: Int, autoSalt: Boolean): DataFrame = {
     val matched =
       if (!autoSalt) matchedPairs(wins, saltBuckets)
       else {
@@ -360,11 +360,10 @@ object SubstringDedup {
 
   // ---- persisted store (the VersionedIndex protocol) ---------------------
 
-  /** The window log — `whb` dirs, `wh`-sorted files; its rows are the
-    * store's committed size. */
+  /** The window log, bucketed on `whb` and sorted on `wh`; its rows are
+    * the store's committed size. */
   private val Windows = Log("windows", "doc_id BIGINT, pos BIGINT, wh STRING",
-    partitionDdl = "whb INT", layout = VersionedIndex.Bucketed("whb",
-      whBucket(col("wh"), WinStateBuckets), "wh"))
+    layout = VersionedIndex.Tiered("whb", whBucket(col("wh"), _), "wh"))
 
   private val Spans = Log("spans", "doc_a BIGINT, doc_b BIGINT, a_start BIGINT, " +
     "b_start BIGINT, span_tokens BIGINT")
@@ -375,49 +374,53 @@ object SubstringDedup {
     * {{{
     * dir/
     *   CURRENT  v$N/MANIFEST
-    *   windows/seg=$M/whb=.../   # append-only window log (wh-sorted)
-    *   spans/seg=$M/             # append-only span log
+    *   windows/base/cpart=$j/whb=…/   # window log base (wh-sorted)
+    *   windows/seg$M/                 # one file per append
+    *   spans/base/cpart=$j/  spans/seg$M/
     * }}}
     *
-    * Both logs append ONE O(batch) segment per admission (spans never
-    * rewrite — see [[SubstringState]]'s pure-append argument, so there
-    * is no remap relation at all); past `maxLiveSegments` the commit
-    * folds each log into a single segment, bounding listing fan-in
-    * exactly like [[EmbeddingIncremental]]'s. The manifest's row counts
-    * carry the WINDOW log size — the O(batch)-writes evidence the bench
-    * stamps. */
+    * A two-tier store ([[VersionedIndex.Tiered]], [[WinStateBuckets]]
+    * buckets): both logs append ONE O(batch) file per admission (spans
+    * never rewrite — see [[SubstringState]]'s pure-append argument, so
+    * there is no remap relation at all); once parts and segments would
+    * exceed `maxLiveSegments` the commit folds each log into one new base
+    * part, bounding read fan-in exactly like [[EmbeddingIncremental]]'s.
+    * The manifest's row counts carry the WINDOW log size — the
+    * O(batch)-writes evidence the bench stamps. */
   def bootstrapStore(spark: SparkSession, dir: String, docs: DataFrame,
       k: Int = DedupK): Unit =
     // the window segment depends only on docs, not on the span join —
     // its write runs concurrently with the one-shot span computation
     // (the bootstrapDrop overlap shape); both sides re-run the narrow
     // windowRel scan rather than pinning a corpus-sized relation
-    VersionedIndex.bootstrap(spark, dir, Seq(Windows, Spans)) { a =>
+    VersionedIndex.bootstrap(spark, dir, Seq(Windows, Spans),
+        buckets = Some(WinStateBuckets)) { a =>
       graft.Par.overlap(a.seg(Windows, windowRel(docs, k)))(
         a.seg(Spans, duplicateSpans(docs, k)))
     }
 
   def loadStore(spark: SparkSession, dir: String): Option[SubstringState] =
     VersionedIndex.meta(dir)
-      .map(m => stateOf(VersionedIndex.readLog(spark, dir, _, m.segs)))
+      .map(m => stateOf(VersionedIndex.readLog(spark, dir, _, m), m.buckets))
 
-  private def stateOf(read: Log => DataFrame): SubstringState =
+  private def stateOf(read: Log => DataFrame, buckets: Int): SubstringState =
     SubstringState(spans = read(Spans), windows = read(Windows),
-      buckets = Some(WinStateBuckets))
+      buckets = Some(buckets))
 
   /** Admit a batch against the PERSISTED state at `dir` and commit the
-    * next version: the batch's windows and its new spans land as their
-    * own `seg=$N` of each log — per-admission writes are O(batch),
-    * never the corpus (a fold day rewrites once per `maxLiveSegments`
+    * next version: the batch's windows and its new spans land as one
+    * day-segment file per log — per-admission writes are O(batch), never
+    * the corpus (a fold day rewrites once per `maxLiveSegments`
     * admissions, amortized O(corpus/K)); the probe reads only touched
-    * `whb` partitions (+ wh row groups) of the committed window log. */
+    * `whb` partitions of the base (+ wh row groups) and the live day
+    * segments. */
   def admitDrop(spark: SparkSession, dir: String, newDocs: DataFrame,
       k: Int = DedupK, maxLiveSegments: Int = 16): Unit =
     VersionedIndex.appendOrFold(spark, dir,
       s"$dir holds no committed substring-dedup state — bootstrapStore first",
       Seq(Windows, Spans), VersionedIndex.segmentCap(maxLiveSegments),
       sizeBy = Seq(newDocs)) { a =>
-      val st = stateOf(a.read)
+      val st = stateOf(a.read, a.base.buckets)
       // the batch's window relation feeds the seg write, the bucket probe,
       // AND the match join — pin once (batch-sized), free once written;
       // the window write overlaps the span probe
@@ -553,7 +556,7 @@ object SubstringDedup {
     * through the PERSISTED window-log store: bootstrap, an append
     * admission, then a fold admission (`maxLiveSegments = 2` makes the
     * third commit exceed the live-segment bound), so every storage arm
-    * — bucketed seg write, whb/wh-pruned probe, span append, log fold —
+    * — day-segment write, whb/wh-pruned probe, span append, log fold —
     * sits inside the correctness gate. The oracle is q76's one-shot SQL
     * replayed over the SAME union: chained admissions ≡ one-shot is the
     * [[SubstringState]] pure-append argument, pinned by hash. */

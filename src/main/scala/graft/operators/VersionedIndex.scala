@@ -11,46 +11,60 @@ import org.apache.spark.sql.types.StructType
   * [[EmbeddingIncremental]]) and the dedup state store
   * ([[graft.streaming.DedupStream]]). This object is the only code that
   * reads or writes `CURRENT` and `v$N/MANIFEST`, and the only code that
-  * names a store's segment and model paths:
+  * names a store's segment, part and model paths:
   *
   * {{{
   * indexDir/
-  *   CURRENT              # last committed version number (atomic move)
-  *   v$N/MANIFEST         # {<store members>,"buildId":…,"retain":…,"segs":[…]}
-  *   v$N/<model dirs>     # per-version relations (centroids, codebook, remap)
-  *   <log>/seg=$M/…       # one data segment per committing version
+  *   CURRENT                # last committed version number (atomic move)
+  *   v$N/MANIFEST           # {<store members>,"buildId":…,"retain":…,"segs":[…]}
+  *   v$N/<model dirs>       # per-version relations (centroids, codebook, remap)
+  *   <log>/seg=$M/…         # one-tier store: one segment per committing version
+  *   <log>/seg$M/           # two-tier store: a day segment, one file
+  *   <log>/base/cpart=$j/…  # two-tier store: a base part, a [[Tiered]] log's
+  *                          #   one file per bucket (`<bucket>=$k/`)
   * }}}
   *
   * Each store declares its data logs once, as data ([[Log]]: name,
-  * schema, partition columns, [[Layout]], fold reducer), and every store
-  * but the dedup store commits through one skeleton, [[appendOrFold]]
-  * (with [[bootstrap]] and [[rebuild]]): the store's fold decision on
-  * the manifest, then an [[Admission]] whose segment writer writes the
-  * batch or, on a fold, the log's reducer over committed ∪ batch. The
-  * log stores fold past a live-segment cap ([[segmentCap]]); the ANN
-  * index stores' fold is a drift retrain that writes their logs whole.
+  * schema, partition columns, [[Layout]], fold reducer), and every commit
+  * runs through one skeleton: [[appendOrFold]] for the log and index
+  * stores, [[advance]] for the dedup store's own fold policy, and
+  * [[bootstrap]] and [[rebuild]] for whole writes. The skeleton takes the
+  * store's fold decision on the manifest, runs the body on an
+  * [[Admission]], whose writer writes the batch or, on a fold, the log's
+  * reducer over committed ∪ batch, then commits. The log stores fold past
+  * a cap on live parts and segments ([[segmentCap]]); the ANN index
+  * stores' fold is a drift retrain that writes their logs whole.
+  *
+  * A store is one-tier or two-tier. In a one-tier store every version
+  * writes each log as `<log>/seg=$N`: the batch on an append, the whole
+  * log on a fold. A store with a [[Tiered]] log is two-tier, an LSM in
+  * miniature: an append writes its batch as one day segment per log,
+  * `<log>/seg$N`, and a version that writes a log whole (a bootstrap, a
+  * fold, a re-bucketing [[rebuild]]) writes a base part
+  * `<log>/base/cpart=$j`, bucketed for a [[Tiered]] log so that a probe
+  * prunes to the buckets it touches. A [[Fold]] names what the new part
+  * takes in.
   *
   * The manifest holds the protocol's members — `buildId`, the streaming
-  * replay guard, `retain` and `segs`, the live segments — and each
-  * store's own, which [[commit]] writes as given and [[Meta]] parses
-  * strictly when read: `totalRows`, the committed size of a store's
-  * first log (its rows, or the sketch's occurrence mass), so no append
-  * runs a count job over the corpus, and `trainedRows`, `totalRows` as
-  * of the last fold, retrain or build (the index stores' drift
-  * baseline; no reader of a log store uses it); or the dedup store's
-  * bucketed layout (`compactions`, `cFrom`, `segFrom`, `buckets`,
-  * `owners`, `migratedFrom`), whose own segments, compaction and
-  * bucket-owner retention name no `logs` here.
+  * replay guard, `retain` and `segs`, the live segments; a two-tier
+  * store's `parts`, its live base parts, and `buckets`, its bucket count,
+  * fixed by the first commit and changed only by a re-bucketing
+  * [[rebuild]] — and each store's own, which [[commit]] writes as given
+  * and [[Meta]] parses strictly when read: `totalRows`, the committed
+  * size of a store's first log (its rows, or the sketch's occurrence
+  * mass), so no append runs a count job over the corpus, and
+  * `trainedRows`, `totalRows` as of the last whole write (the index
+  * stores' drift baseline; no reader of a log store uses it); the dedup
+  * store's bucket owners (`owners`, `migratedFrom`).
   *
-  * A data log is one partitioned tree whose FIRST partition level is the
-  * writing version (`seg=$N`), so the committed segments read as ONE
-  * multi-path scan with uniform partition columns (Spark's partition
-  * discovery rejects non-partition dirs between base path and files).
-  * Readers list exactly the manifest's `segs`: a crashed commit's
-  * half-written segment is invisible, and the retry overwrites it.
-  * Retention after each promote keeps the latest `retain` versions'
-  * dirs and segments (in-flight readers of the prior commit stay valid)
-  * and deletes the rest.
+  * Readers list exactly the manifest's parts and segments, each its own
+  * partition base, and fail on one that is missing: a crashed commit's
+  * half-written segment or part is invisible, and the retry overwrites
+  * it. A read lists its files on the driver ([[graft.FileSet]]), so
+  * building it starts no Spark job, however many bucket files a part
+  * holds. Retention after each promote keeps the latest `retain`
+  * versions' dirs, parts and segments (in-flight readers of the prior
+  * commit stay valid) and deletes the rest.
   *
   * Every path here goes through `java.io.File`, so a store dir must be
   * a driver-local path; [[requireLocalFs]] rejects a URI at every entry
@@ -76,6 +90,11 @@ private[graft] object VersionedIndex {
     }.getOrElse(unreadable(k))
 
     val segs: Vector[Long] = nums("segs")
+    /** Whether the store is two-tier; only a two-tier store has base
+      * parts and a bucket count. */
+    val tiered: Boolean = members.contains("parts")
+    val parts: Vector[Long] = if (tiered) nums("parts") else Vector.empty
+    def buckets: Int = num("buckets").toInt
     def trainedRows: Long = num("trainedRows")
     def totalRows: Long = num("totalRows")
     def retainVersions: Option[Int] = members.get("retain").map(_.toInt)
@@ -150,20 +169,14 @@ private[graft] object VersionedIndex {
     meta(dir).flatMap(_.stream).exists { case (c, b) =>
       c == stream._1 && b >= stream._2 }
 
-  /** Committed segment directories of the data log, for a multi-path
-    * read rooted at `$indexDir/$log` (so `seg` and any lower partition
-    * columns are discovered uniformly). */
-  def segPaths(indexDir: String, log: String, segs: Seq[Long]): Seq[String] =
-    segs.map { s =>
-      val p = s"$indexDir/$log/seg=$s"
-      if (!new java.io.File(p).isDirectory) throw new IllegalStateException(
-        s"committed index references $log/seg=$s but $p does not exist — " +
-          "lost or deleted committed state")
-      p
-    }
+  private def segDir(dir: String, log: String, v: Long, tiered: Boolean): String =
+    if (tiered) s"$dir/$log/seg$v" else s"$dir/$log/seg=$v"
+
+  private def partDir(dir: String, log: String, j: Long): String =
+    s"$dir/$log/base/cpart=$j"
 
   /** One data log of a store, declared once: its name (the dir under
-    * the store root), data schema, the partition columns below `seg=`
+    * the store root), data schema, the partition columns below a segment
     * that a read discovers from paths (e.g. `cid INT`), its file
     * [[Layout]] and its fold reducer. On a fold, [[Admission.seg]]
     * writes `fold(committed ∪ batch)`; the default is concatenation.
@@ -172,27 +185,81 @@ private[graft] object VersionedIndex {
     * labels (the fold applies the composed remap). */
   final case class Log(name: String, ddl: String, partitionDdl: String = "",
       layout: Layout = OneFile(),
-      fold: Option[DataFrame => DataFrame] = Some(identity))
+      fold: Option[DataFrame => DataFrame] = Some(identity)) {
+    /** The relation a read returns: the data schema, the partition
+      * columns, and a [[Tiered]] log's bucket column. */
+    def schema: StructType = StructType.fromDDL((Seq(ddl, partitionDdl) ++
+      (layout match { case Tiered(b, _, _) => Seq(s"$b INT"); case _ => Nil }))
+      .filter(_.nonEmpty).mkString(", "))
+  }
 
-  /** One scan over the committed segments of `log`: declared data
-    * schema, partition columns (`seg`, …) discovered against the log
-    * root; the bookkeeping `seg` column is dropped. Empty segment list →
-    * empty relation of the declared schema PLUS `partitionDdl`, which the
-    * non-empty branch discovers from paths; without them the two
-    * branches would return different schemas and an empty log would
-    * break downstream joins on the partition key. */
-  def readLog(spark: SparkSession, indexDir: String, log: Log,
-      segs: Seq[Long]): DataFrame =
-    if (segs.isEmpty) {
-      val full = if (log.partitionDdl.isEmpty) log.ddl
-        else s"${log.ddl}, ${log.partitionDdl}"
-      spark.createDataFrame(new java.util.ArrayList[Row](),
-        StructType.fromDDL(full))
-    } else spark.read
-      .schema(StructType.fromDDL(log.ddl))
-      .option("basePath", s"$indexDir/${log.name}")
-      .parquet(segPaths(indexDir, log.name, segs): _*)
-      .drop("seg")
+  /** One relation over the committed parts and segments of `log` at `m`,
+    * in [[Log.schema]]: a part stores a [[Tiered]] log's bucket as
+    * partition dirs, a day segment computes it. A log with no data file
+    * reads as an empty relation of the same schema, so an empty log still
+    * joins on its partition key. */
+  def readLog(spark: SparkSession, indexDir: String, log: Log, m: Meta): DataFrame =
+    readTiers(spark, indexDir, log, m, m.parts, m.segs)
+
+  private def readTiers(spark: SparkSession, dir: String, log: Log, m: Meta,
+      parts: Seq[Long], segs: Seq[Long]): DataFrame = {
+    def committed(p: String): String = {
+      if (!new java.io.File(p).isDirectory) throw new IllegalStateException(
+        s"committed index v${m.version} references ${p.stripPrefix(s"$dir/")} " +
+          s"but $p does not exist — lost or deleted committed state")
+      p
+    }
+    // the parts, and a one-tier store's segments, are partitions of one
+    // base dir (`cpart=`, `seg=`); a two-tier store's day segments are
+    // plain dirs, each its own base
+    val base = scan(spark, log, parts.map(j => committed(partDir(dir, log.name, j))),
+      Some(s"$dir/${log.name}/base" -> "cpart"))
+    val days = scan(spark, log,
+        segs.map(v => committed(segDir(dir, log.name, v, m.tiered))),
+        Option.when(!m.tiered)(s"$dir/${log.name}" -> "seg"))
+      .map(df => log.layout match {
+        case Tiered(b, of, _) => df.withColumn(b, of(m.buckets))
+        case _ => df
+      })
+    (base ++ days).reduceOption(_ unionByName _).getOrElse(
+      spark.createDataFrame(new java.util.ArrayList[Row](), log.schema))
+  }
+
+  /** One parquet scan over the data files under `roots`, or None when
+    * they hold no file. With `base` = (dir, column) the roots are
+    * partitions `column=…` of that dir, and the column is dropped;
+    * without, each root is its own base. The partition columns below are
+    * typed by [[Log.schema]]. The files are listed on the driver
+    * ([[graft.FileSet]]) and handed to the file index, which would
+    * otherwise list more than `parallelPartitionDiscovery.threshold` (32)
+    * paths or subdirs with a Spark job: a 64-bucket part did, once per
+    * read. */
+  private def scan(spark: SparkSession, log: Log, roots: Seq[String],
+      base: Option[(String, String)]): Option[DataFrame] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex}
+    val listed = roots.map(graft.FileSet.list(spark, _)).filter(_.files.nonEmpty)
+    if (listed.isEmpty) None
+    else {
+      val leaves = listed.map(l => new Path(l.root) -> l.files.map(f =>
+        new FileStatus(f.length, false, 1, 32L << 20, f.mtime,
+          new Path(s"${l.root}/${f.path}"))).toArray)
+      val cache = new FileStatusCache {
+        private val byRoot = leaves.toMap
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] = byRoot.get(p)
+        override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val index = new InMemoryFileIndex(spark, leaves.map(_._1),
+        base.map { case (b, _) => "basePath" -> b }.toMap, Some(log.schema), cache)
+      val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+        index.partitionSchema, StructType.fromDDL(log.ddl), None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty)(spark))
+      Some(base.fold(df)(b => df.drop(b._2)))
+    }
+  }
 
   /** Versions every commit keeps readable (current inclusive). The
     * default preserves the original current+previous contract; a
@@ -213,11 +280,11 @@ private[graft] object VersionedIndex {
     case n: Long => n.toString
   }
 
-  /** Publish version `next` (everything under `v$next/` and
-    * `<log>/seg=$next` is already written): manifest — the store's
-    * `members` (integers, integer arrays or strings), then the
-    * protocol's — atomic pointer move, then retention. `logs` names the
-    * data-log roots to prune. */
+  /** Publish version `next` (every segment, part and model it lists is
+    * already written): manifest — the store's `members` (integers,
+    * integer arrays or strings; a two-tier store's `parts` and
+    * `buckets` among them), then the protocol's — atomic pointer move,
+    * then retention. `logs` names the data-log roots to prune. */
   def commit(indexDir: String, next: Long, members: Seq[(String, Any)],
       segs: Vector[Long], logs: Seq[String] = Nil,
       stream: Option[(String, Long)] = None,
@@ -259,15 +326,17 @@ private[graft] object VersionedIndex {
       java.nio.file.StandardOpenOption.CREATE_NEW)
     // strict parse (metaAt): a CORRUPT retained manifest must abort the
     // commit, not silently read as segs=[] and let retention delete the
-    // segments that version still references. Live segments = the union
-    // over every RETAINED version's manifest (not just next-1): with
-    // retention depth > 2, an old retained version's log segments must
-    // survive until IT is reclaimed.
+    // segments that version still references. Live segments and parts =
+    // the union over every RETAINED version's manifest, this one
+    // included (not just next-1): with retention depth > 2, an old
+    // retained version's segments and parts must survive until IT is
+    // reclaimed.
     val keepFrom = next - retainVersions + 1
-    val prevSegs: Set[Long] = (math.max(0L, keepFrom) until next)
+    val retained = (math.max(0L, keepFrom) to next)
       .filter(v => new java.io.File(indexDir, s"v$v/MANIFEST").isFile)
-      .flatMap(v => metaAt(indexDir, v).segs)
-      .toSet
+      .map(metaAt(indexDir, _))
+    val liveSegs = retained.flatMap(_.segs).toSet
+    val liveParts = retained.flatMap(_.parts).toSet
     val tmp = java.nio.file.Paths.get(indexDir, s".CURRENT.$next.tmp")
     java.nio.file.Files.writeString(tmp, next.toString)
     java.nio.file.Files.move(tmp,
@@ -282,23 +351,41 @@ private[graft] object VersionedIndex {
       .filter(d => d.isDirectory && d.getName.matches("v\\d+")
         && d.getName.drop(1).toLong < keepFrom)
     vDirs.foreach(rmQuiet)
-    val live = segs.toSet ++ prevSegs
-    logs.foreach { log =>
-      val root = new java.io.File(indexDir, log)
-      if (root.isDirectory) root.listFiles.foreach { d =>
-        if (d.isDirectory && d.getName.startsWith("seg=")
-            && !live.contains(d.getName.drop(4).toLong)) rmQuiet(d)
+    def prune(d: java.io.File, name: scala.util.matching.Regex,
+        live: Set[Long]): Unit =
+      Option(d.listFiles).toSeq.flatten.foreach { f =>
+        f.getName match {
+          case name(n) if f.isDirectory && !live(n.toLong) => rmQuiet(f)
+          case _ =>
+        }
       }
+    logs.foreach { log =>
+      prune(new java.io.File(indexDir, log), SegName, liveSegs)
+      prune(new java.io.File(indexDir, s"$log/base"), PartName, liveParts)
     }
   }
 
-  /** Version `next` of a store while it is written — what the body of
-    * [[appendOrFold]], [[bootstrap]] and [[rebuild]] gets. `fold` is
-    * the arm: a fold, a retrain, or (with nothing committed read) a
-    * bootstrap or build. Safe to use from overlapped writes. */
+  private val SegName = """seg=?(\d+)""".r
+  private val PartName = """cpart=(\d+)""".r
+
+  /** What a two-tier store's fold writes into its one new base part:
+    * every committed day segment; every committed part too when `parts`
+    * (the log stores' fold and the dedup store's major fold, but not its
+    * minor fold); and the version's own batch when `batch` (the log
+    * stores' fold), which otherwise stays a day segment (the dedup
+    * store's folds, which run beside its writes). A one-tier store's fold
+    * is [[FoldAll]]: its next segment is the whole log. */
+  final case class Fold(parts: Boolean, batch: Boolean)
+
+  val FoldAll: Fold = Fold(parts = true, batch = true)
+
+  /** Version `next` of a store while it is written — what a skeleton's
+    * body gets. `plan` is the fold, if any; with nothing committed (a
+    * bootstrap, build or rebuild) every log is written whole. Safe to use
+    * from overlapped writes. */
   final class Admission private[VersionedIndex] (spark: SparkSession,
       val dir: String, committed: Option[Meta], val next: Long,
-      val fold: Boolean) {
+      plan: Option[Fold], tiered: Boolean, buckets: Int, part: Long) {
     private[VersionedIndex] val sizes =
       new java.util.concurrent.ConcurrentHashMap[String, Long]
     private[VersionedIndex] val models =
@@ -307,28 +394,40 @@ private[graft] object VersionedIndex {
     private val reads =
       new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
 
+    /** Whether this version writes each log whole, batch included: a
+      * log store's fold, a retrain, a bootstrap, a build or a rebuild. */
+    val fold: Boolean = committed.isEmpty || plan.exists(_.batch)
+
     /** The committed version this admission grows (a bootstrap or a
       * build has none). */
     def base: Meta = committed.get
 
-    /** `log`'s committed relation ([[readLog]] over `base.segs`), read
-      * once per admission: the body's probes and a fold's rewrite share
-      * one file listing, which for a bucketed log is a Spark job per
-      * live segment. */
+    /** `log`'s committed relation ([[readLog]] at `base`), read once per
+      * admission: the body's probes and a fold's rewrite share it. */
     def read(log: Log): DataFrame =
-      reads.computeIfAbsent(log.name, _ => readLog(spark, dir, log, base.segs))
+      reads.computeIfAbsent(log.name, _ => readLog(spark, dir, log, base))
 
-    /** Write `log`'s segment of version `next`: the batch, or on a fold
-      * the log's reducer over committed ∪ batch. Returns the segment's
-      * size ([[writeSeg]]). */
+    /** Write `log`'s share of version `next` and return the size of the
+      * write that holds the batch: the batch as a day segment on an
+      * append; on a fold of the batch, the log's reducer over committed ∪
+      * batch as the next segment (one-tier) or base part (two-tier); on a
+      * fold that leaves the batch a day segment, the folded tiers as the
+      * next part, written beside the segment. */
     def seg(log: Log, batch: DataFrame): Long = {
-      val df = (committed, log.fold) match {
-        case (Some(_), Some(reduce)) if fold =>
-          reduce(read(log).select(batch.columns.map(col).toIndexedSeq: _*)
-            .unionByName(batch))
-        case _ => batch
+      def whole(df: DataFrame): Long =
+        if (tiered) writePart(df, dir, log, part, buckets)
+        else writeSeg(df, dir, log, next)
+      def day(): Long = writeSeg(batch, dir, log, next, tiered)
+      def folded(f: Fold): DataFrame =
+        if (f.parts) read(log) else readTiers(spark, dir, log, base, Nil, base.segs)
+      val n = (committed, plan) match {
+        case (None, _) => whole(batch)
+        case (Some(_), None) => day()
+        case (Some(_), Some(f)) if f.batch => whole(log.fold.fold(batch)(reduce =>
+          reduce(folded(f).select(batch.columns.map(col).toIndexedSeq: _*)
+            .unionByName(batch))))
+        case (Some(_), Some(f)) => graft.Par.overlap(whole(folded(f)))(day())._2
       }
-      val n = writeSeg(df, dir, log, next)
       sizes.put(log.name, n)
       n
     }
@@ -348,69 +447,103 @@ private[graft] object VersionedIndex {
     }
   }
 
-  /** The admission skeleton of every store but the dedup store: resolve
-    * the committed manifest (`missing` is the error when there is none),
-    * take `fold` on it, run the body on an [[Admission]] of the next
-    * version, which writes `seg=$next` of every log in `logs`, then
-    * commit. The committed size is `logs.head`'s: the written segment's
-    * size on a fold, the committed size plus it on an append; a fold
-    * also resets `trainedRows` and the segment list. Append days run
+  /** The admission skeleton of the log and index stores: resolve the
+    * committed manifest (`missing` is the error when there is none), take
+    * `fold` on it (a fold is [[FoldAll]]) and [[advance]]. Append days run
     * under static plans sized to `sizeBy` ([[graft.Par.withAdmitPlan]]:
-    * their relations are batch-sized by construction); a fold keeps
-    * AQE, as does an append with no `sizeBy`. Returns the body's result. */
+    * their relations are batch-sized by construction); a fold keeps AQE,
+    * as does an append with no `sizeBy`. Returns the body's result. */
   def appendOrFold[A](spark: SparkSession, dir: String, missing: String,
       logs: Seq[Log], fold: Meta => Boolean, sizeBy: Seq[DataFrame],
       stream: Option[(String, Long)] = None,
       retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A = {
     val m = meta(dir).getOrElse(throw new IllegalStateException(missing))
     val folds = fold(m)
-    admit(spark, dir, Some(m), m.version + 1, folds, logs, stream,
-        retainVersions) { a =>
+    advance(spark, dir, m, Option.when(folds)(FoldAll), logs, stream = stream,
+        retainVersions = retainVersions) { a =>
       if (folds || sizeBy.isEmpty) body(a)
       else graft.Par.withAdmitPlan(spark, sizeBy: _*)(body(a))
     }
   }
 
   /** The log stores' fold decision: fold once an append would leave more
-    * than `maxLiveSegments` live segments. */
+    * than `maxLiveSegments` live parts and segments. */
   def segmentCap(maxLiveSegments: Int): Meta => Boolean =
-    _.segs.size + 1 > maxLiveSegments
+    m => m.parts.size + m.segs.size + 1 > maxLiveSegments
+
+  /** Write version `m.version + 1` on committed `m` — an append (`plan`
+    * None) or a fold — and commit it with the store's own `members`. The
+    * committed size is `logs.head`'s: its whole write's size when the
+    * batch is folded, the committed size plus its day segment otherwise;
+    * a fold of the batch also resets `trainedRows`. */
+  def advance[A](spark: SparkSession, dir: String, m: Meta, plan: Option[Fold],
+      logs: Seq[Log], members: Seq[(String, Any)] = Nil,
+      stream: Option[(String, Long)] = None,
+      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A =
+    admit(spark, dir, Some(m), m.version + 1, plan, logs, None, members,
+      stream, retainVersions)(body)
 
   /** Commit version 0 of a fresh store: reject a URI dir and an existing
     * store before the body runs (the URI guard runs inside
-    * [[currentVersion]]), then commit the `seg=0` segments it wrote. */
+    * [[currentVersion]]), then commit the logs it wrote whole. A
+    * two-tier store fixes its bucket count here. */
   def bootstrap[A](spark: SparkSession, dir: String, logs: Seq[Log],
       stream: Option[(String, Long)] = None,
-      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A = {
+      retainVersions: Int = DefaultRetainVersions,
+      buckets: Option[Int] = None,
+      members: Seq[(String, Any)] = Nil)(body: Admission => A): A = {
     require(currentVersion(dir).isEmpty,
       s"$dir already holds a committed store — admit into it instead")
-    rebuild(spark, dir, logs, stream, retainVersions)(body)
+    rebuild(spark, dir, logs, stream, retainVersions, buckets, members)(body)
   }
 
   /** Write every log and model whole as the next version (0 in a fresh
-    * dir) and commit it: the bootstraps and the ANN index builds, whose
-    * retrain arm is the same body. */
+    * dir) and commit it: the bootstraps, the ANN index builds, whose
+    * retrain arm is the same body, and the dedup store's re-bucketing,
+    * which alone passes a new bucket count to a committed two-tier
+    * store. */
   def rebuild[A](spark: SparkSession, dir: String, logs: Seq[Log],
       stream: Option[(String, Long)] = None,
-      retainVersions: Int = DefaultRetainVersions)(body: Admission => A): A =
-    admit(spark, dir, None, currentVersion(dir).fold(0L)(_ + 1), fold = true,
-      logs, stream, retainVersions)(body)
+      retainVersions: Int = DefaultRetainVersions,
+      buckets: Option[Int] = None,
+      members: Seq[(String, Any)] = Nil)(body: Admission => A): A =
+    admit(spark, dir, None, currentVersion(dir).fold(0L)(_ + 1), None, logs,
+      buckets, members, stream, retainVersions)(body)
 
   private def admit[A](spark: SparkSession, dir: String,
-      committed: Option[Meta], next: Long, fold: Boolean, logs: Seq[Log],
+      committed: Option[Meta], next: Long, plan: Option[Fold], logs: Seq[Log],
+      buckets: Option[Int], members: Seq[(String, Any)],
       stream: Option[(String, Long)], retainVersions: Int)(
       body: Admission => A): A = {
-    val a = new Admission(spark, dir, committed, next, fold)
+    val tiered = logs.exists(_.layout.isInstanceOf[Tiered])
+    val latest = committed.orElse(meta(dir)).filter(_.tiered)
+    val b = buckets.orElse(latest.map(_.buckets))
+    require(b.isDefined == tiered, s"$dir: a bucket count is given exactly " +
+      s"to a store with a tiered log (logs ${logs.map(_.name)}, buckets $b)")
+    require(tiered || plan.forall(_ == FoldAll),
+      s"$dir: a one-tier store folds every log whole, got $plan")
+    val part = latest.fold(0L)(m => (m.parts :+ -1L).max + 1)
+    val a = new Admission(spark, dir, committed, next, plan, tiered,
+      b.getOrElse(0), part)
     val out = body(a)
     val unwritten = logs.map(_.name).filterNot(a.sizes.containsKey)
     if (unwritten.nonEmpty) throw new IllegalStateException(
       s"$dir v$next: no segment written for ${unwritten.mkString(", ")}")
     val n = a.sizes.get(logs.head.name)
-    val (trained, total, segs) = committed match {
-      case Some(m) if !fold => (m.trainedRows, m.totalRows + n, m.segs :+ next)
-      case _ => (n, n, Vector(next))
+    val (trained, total) = committed match {
+      case Some(m) if !a.fold => (m.trainedRows, m.totalRows + n)
+      case _ => (n, n)
     }
-    commit(dir, next, rows(trained, total), segs, logs.map(_.name), stream,
+    val (parts, segs) = (committed, plan) match {
+      case (None, _) => (Vector(part), Vector.empty[Long])
+      case (Some(m), None) => (m.parts, m.segs :+ next)
+      case (Some(m), Some(f)) => ((if (f.parts) Vector.empty else m.parts) :+ part,
+        if (f.batch) Vector.empty[Long] else Vector(next))
+    }
+    // a one-tier store's whole write is its next segment
+    val tiers = if (tiered) Seq("parts" -> parts, "buckets" -> b.get) else Nil
+    commit(dir, next, rows(trained, total) ++ members ++ tiers,
+      if (!tiered && a.fold) Vector(next) else segs, logs.map(_.name), stream,
       retainVersions)
     // warm the model cache: later appends and queries in this process
     // skip even the K-row read
@@ -421,7 +554,7 @@ private[graft] object VersionedIndex {
     out
   }
 
-  /** How [[writeSeg]] lays out a segment's files. */
+  /** How a log's files are laid out. */
   sealed trait Layout
 
   /** One file (`coalesce(1)`): the small logs (pins, splits, spans,
@@ -439,56 +572,82 @@ private[graft] object VersionedIndex {
     * logs); none writes the files as planned. */
   final case class PartitionedBy(cols: String*) extends Layout
 
-  /** Coarse bucket column `b` = `of`, one shuffle on it, rows sorted by
-    * (`b`, `key`) inside each file and partition dirs by `b` — the
-    * window and embedding bucket logs: a probe prunes to touched bucket
-    * dirs, then row groups on the sorted key. The task count is the
-    * plan's shuffle width. */
-  final case class Bucketed(b: String, of: Column, key: String) extends Layout
+  /** The bucketed log of a two-tier store: bucket column `b` =
+    * `of(buckets)`, rows sorted on `key` — the dedup store's bands and
+    * shingles, the substring store's windows and the embedding store's
+    * LSH buckets. A day segment is the batch as one file, sorted on
+    * `key`, its bucket computed when it is read. A base part holds one
+    * file per bucket under `b=$k` dirs, written by one task per bucket:
+    * a probe prunes a part to the buckets it touches, then row groups on
+    * the sorted key. */
+  final case class Tiered(b: String, of: Int => Column, key: String)
+      extends Layout
 
-  /** Write `df` as `$dir/${log.name}/seg=$version` in the log's layout
-    * (overwrite: a crashed attempt's half-written segment is replaced)
-    * and return its size: the rows written ([[segRows]]), or the
-    * [[Collected]] measure. (An `Observation` would count on the write
-    * itself, but it leaves the session's observation manager set, and
-    * Spark then fails to serialize any closure that captures the
-    * session, such as a logistic-regression model's training summary.) */
-  def writeSeg(df: DataFrame, dir: String, log: Log, version: Long): Long = {
-    val path = s"$dir/${log.name}/seg=$version"
+  /** Write `df` as `log`'s day segment of `version`, `<log>/seg$version`
+    * in a two-tier store (`tiered`) and `<log>/seg=$version` otherwise
+    * (overwrite: a crashed attempt's half-written segment is replaced),
+    * and return its size: the rows written, or the [[Collected]]
+    * measure. */
+  def writeSeg(df: DataFrame, dir: String, log: Log, version: Long,
+      tiered: Boolean = false): Long =
+    write(df, segDir(dir, log.name, version, tiered), log, None)
+
+  /** Write `df` as base part `j` of a two-tier store's `log`, a
+    * [[Tiered]] log in `buckets` buckets, and return the rows written. */
+  def writePart(df: DataFrame, dir: String, log: Log, j: Long,
+      buckets: Int): Long =
+    write(df, partDir(dir, log.name, j), log, Some(buckets))
+
+  /** The rows come from the written files' parquet footers, read on the
+    * driver. (An `Observation` would count on the write itself, but it
+    * leaves the session's observation manager set, and Spark then fails
+    * to serialize any closure that captures the session, such as a
+    * logistic-regression model's training summary.) */
+  private def write(df: DataFrame, path: String, log: Log,
+      buckets: Option[Int]): Long = {
+    val spark = df.sparkSession
     def rowsWritten(w: org.apache.spark.sql.DataFrameWriter[Row]): Long = {
       w.mode("overwrite").parquet(path)
-      segRows(df.sparkSession, dir, log.name, version)
+      val conf = spark.sessionState.newHadoopConf()
+      val files = graft.FileSet.list(spark, path)
+      files.files.map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(s"${files.root}/${f.path}"), conf))
+        try r.getRecordCount finally r.close()
+      }.sum
     }
-    log.layout match {
-      case Collected(size) =>
+    (log.layout, buckets) match {
+      case (Collected(size), _) =>
         val schema = StructType.fromDDL(log.ddl)
         val rows = df.select(schema.fieldNames.map(col).toIndexedSeq: _*)
           .collect()
-        df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-          schema).coalesce(1).write.mode("overwrite").parquet(path)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .coalesce(1).write.mode("overwrite").parquet(path)
         size(rows)
-      case OneFile(key @ _*) => // no key: the optimizer drops the sort
+      case (OneFile(key @ _*), _) => // no key: the optimizer drops the sort
         rowsWritten(df.coalesce(1).sortWithinPartitions(key.map(col): _*).write)
-      case PartitionedBy() => rowsWritten(df.write)
-      case PartitionedBy(cols @ _*) => rowsWritten(df.write.partitionBy(cols: _*))
-      case Bucketed(b, of, key) => rowsWritten(df.withColumn(b, of)
-        .repartition(col(b)).sortWithinPartitions(col(b), col(key)).write
+      case (PartitionedBy(), _) => rowsWritten(df.write)
+      case (PartitionedBy(cols @ _*), _) => rowsWritten(df.write.partitionBy(cols: _*))
+      case (Tiered(b, _, key), None) =>
+        rowsWritten(df.drop(b).coalesce(1).sortWithinPartitions(col(key)).write)
+      case (Tiered(b, of, key), Some(n)) => rowsWritten(df.withColumn(b, of(n))
+        .repartition(n, col(b)).sortWithinPartitions(col(b), col(key)).write
         .partitionBy(b))
     }
   }
 
-  /** Rows in segment `$dir/$log/seg=$version`, summed from its files'
-    * parquet footers on the driver — no Spark job. */
-  def segRows(spark: SparkSession, dir: String, log: String,
-      version: Long): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val seg = graft.FileSet.list(spark, s"$dir/$log/seg=$version")
-    seg.files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"${seg.root}/${f.path}"), conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+  /** Bytes of `log`'s live base parts at `m`. */
+  def partBytes(dir: String, log: Log, m: Meta): Long =
+    m.parts.map(j => dirBytes(partDir(dir, log.name, j))).sum
+
+  /** Bytes of each of `log`'s live day segments at `m`. */
+  def segBytes(dir: String, log: Log, m: Meta): Vector[Long] =
+    m.segs.map(v => dirBytes(segDir(dir, log.name, v, m.tiered)))
+
+  private def dirBytes(p: String): Long = {
+    val d = new java.io.File(p)
+    if (d.isDirectory) org.apache.commons.io.FileUtils.sizeOfDirectory(d) else 0L
   }
 
   /** Write a version's model relation (centroids, codebook, remap) as

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{AdmitDelta, DedupState, IncrementalDedup, SplitPins,
   VersionedIndex}
+import VersionedIndex.{Fold, Log, Tiered}
 
 /** Streaming admission for the incremental dedup state — the reference's
   * daily-drop topology (landing zone → bookmark-incremental processing)
@@ -21,25 +22,23 @@ import graft.operators.{AdmitDelta, DedupState, IncrementalDedup, SplitPins,
   *
   * {{{
   * stateDir/
-  *   CURRENT  v$N/MANIFEST              # the VersionedIndex protocol
-  *   bands/seg$M/  shingles/seg$M/      # live day segments segFrom..N
-  *   bands/base/cpart=$j/bucket=$k/     # bucketed base, compactions
-  *   shingles/base/cpart=$j/bucket=$k/  #   [cFrom, compactions)
-  *   labels/b$k/v$M/  sizes/b$k/v$M/    # copy-on-write buckets, owners(k)=M
+  *   CURRENT  v$N/MANIFEST                # the VersionedIndex protocol
+  *   bands/seg$M/  shingles/seg$M/        # live day segments (`segs`)
+  *   bands/base/cpart=$j/bucket=$k/       # bucketed base parts (`parts`)
+  *   shingles/base/cpart=$j/bucket=$k/
+  *   labels/b$k/v$M/  sizes/b$k/v$M/      # copy-on-write buckets, owners(k)=M
   * }}}
   *
-  * `bands`/`shingles` exploit being APPEND-ONLY: a two-tier log (LSM in
-  * miniature) of RECENT day segments (`bands/seg$i`, batch-sized). Once
-  * [[MaxLiveSegments]] segments have accumulated — or an OVERSIZED
-  * segment (a backfill day, k× its cohort's median bytes) is live, see
-  * [[foldPlan]]'s mass trigger — the next commit folds them,
-  * concurrently with its own writes, since the fold never touches
-  * the segment being committed, into a BUCKETED BASE
-  * (`bands/base/cpart=$j/bucket=$k/`, sorted by key within bucket) that
-  * makes the daily probe a partition-pruned scan
+  * `bands`/`shingles` exploit being APPEND-ONLY: they are the
+  * [[VersionedIndex.Tiered]] logs of a two-tier store, RECENT day
+  * segments (batch-sized, one file) over a BUCKETED BASE (sorted by key
+  * within bucket) that makes the daily probe a partition-pruned scan
   * ([[IncrementalDedup.prunedBands]]; plan-asserted in DedupStreamSpec).
-  * The BOOTSTRAP snapshot (the one corpus-sized "segment") is written
-  * pre-folded into `cpart=0` by the first commit, so no probe ever
+  * This store's own fold policy ([[foldOf]]) folds the older segments
+  * into a new base part once [[MaxLiveSegments]] have accumulated, or an
+  * OVERSIZED one is live, concurrently with the commit's own writes; its
+  * mass policy re-buckets ([[migrateBuckets]]). The BOOTSTRAP snapshot
+  * (the one corpus-sized write) is the first base part, so no probe ever
   * scans it unpruned.
   *
   * `labels`/`sizes` — the two relations admission MUTATES — are
@@ -55,18 +54,17 @@ import graft.operators.{AdmitDelta, DedupState, IncrementalDedup, SplitPins,
   * plan size constant in both the day index and the version count. A
   * touched bucket whose rows all migrate elsewhere commits an EMPTY
   * marker dir (zero files), so a referenced dir that is ABSENT is loud
-  * lost-state, same contract as the base compactions.
+  * lost-state, same contract as the base parts.
   *
-  * Each manifest carries the store's [[Layout]] members (compactions,
-  * live-segment range, bucket count, owner array) next to the
-  * protocol's, whose `segs` list the live segments. Crash-safety:
-  * half-written segments/compactions/bucket versions sit above the
-  * committed pointer or outside the committed owners and are never
-  * listed; the retried commit overwrites them. The protocol keeps the
-  * current + previous manifests, and [[publish]] keeps every segment,
-  * compaction and bucket version either references (in-flight readers
-  * of the prior commit stay valid) and deletes the rest, so disk stays
-  * O(corpus + 2·touched), not O(days · corpus).
+  * Each manifest carries the owner array (and a re-bucketing's
+  * `migratedFrom`) next to the protocol's parts, segments and bucket
+  * count. Crash-safety: half-written segments, parts and bucket versions
+  * sit above the committed pointer or outside the committed owners and
+  * are never listed; the retried commit overwrites them. The protocol
+  * keeps the current + previous manifests and every part and segment
+  * either lists, and [[retireOwners]] keeps every bucket version either
+  * owns (in-flight readers of the prior commit stay valid), so disk
+  * stays O(corpus + 2·touched), not O(days · corpus).
   */
 object DedupStream {
 
@@ -152,62 +150,23 @@ object DedupStream {
 
   private val LabelsDdl = "doc_id BIGINT, cluster_id BIGINT"
   private val SizesDdl = "cluster_id BIGINT, cluster_size BIGINT"
-  private val BandsDdl = "doc_id BIGINT, band BIGINT, band_hash STRING"
-  private val ShinglesDdl = "doc_id BIGINT, sh ARRAY<STRING>"
 
-  /** Every state read declares its schema — the layouts above are fixed
-    * by this file's own writers, so footer-based inference would spend a
-    * driver file-read (and at 4096 buckets, a listing job) per relation
-    * per admission purely to rediscover a known shape. */
-  private def readPq(spark: SparkSession, ddl: String,
-      paths: Seq[String], basePath: Option[String] = None): DataFrame = {
-    val r = spark.read.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-    basePath.foreach(p => r.option("basePath", p))
-    r.parquet(paths: _*)
-  }
+  /** The two append-only logs, bucketed on their probe key: bands on
+    * [[IncrementalDedup.bandBucket]] sorted on `band_hash`, shingles on
+    * [[IncrementalDedup.docBucket]] sorted on `doc_id`. */
+  private val Bands = Log("bands", "doc_id BIGINT, band BIGINT, band_hash STRING",
+    layout = Tiered("bucket",
+      IncrementalDedup.bandBucket(col("band"), col("band_hash"), _), "band_hash"))
+  private val Shingles = Log("shingles", "doc_id BIGINT, sh ARRAY<STRING>",
+    layout = Tiered("bucket", IncrementalDedup.docBucket(col("doc_id"), _),
+      "doc_id"))
+  private val Logs = Seq(Bands, Shingles)
 
-  /** The store's own manifest members, next to [[VersionedIndex]]'s: the
-    * base holds compactions [cFrom, compactions) — cFrom advances past
-    * the compactions a major fold or a re-bucketing migration
-    * supersedes; segments segFrom..N are live; `owners(k)` is the
-    * version whose commit last wrote labels/sizes bucket k; a migration
-    * records the bucket count it replaced as `migratedFrom`. */
-  private final case class Layout(compactions: Int, cFrom: Int,
-      segFrom: Long, buckets: Int, owners: Vector[Long],
-      migratedFrom: Option[Int] = None) {
-    def members: Seq[(String, Any)] = Seq("compactions" -> compactions,
-      "cFrom" -> cFrom, "segFrom" -> segFrom, "buckets" -> buckets,
-      "owners" -> owners) ++ migratedFrom.map("migratedFrom" -> _)
-  }
-
-  private def layoutOf(m: VersionedIndex.Meta): Layout =
-    Layout(m.num("compactions").toInt, m.num("cFrom").toInt,
-      m.num("segFrom"), m.num("buckets").toInt, m.nums("owners"))
+  /** `owners(k)` is the version whose commit last wrote labels/sizes
+    * bucket k. */
+  private def ownersOf(m: VersionedIndex.Meta): Vector[Long] = m.nums("owners")
 
   private def isDir(p: String): Boolean = new java.io.File(p).isDirectory
-
-  /** A DataFrame whose every leaf is an in-memory LocalRelation (the
-    * admission's pinned frontier) would otherwise be WRITTEN through
-    * `leafNodeDefaultParallelism` tasks — 32 near-empty part files for a
-    * few hundred rows, paid again by every later probe's listing.
-    * Coalesce those to one task; distributed inputs pass through with
-    * their own partitioning (a deployment-sized batch segment needs it). */
-  private def oneTaskIfLocal(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    if (leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]))
-      df.coalesce(1)
-    else df
-  }
-
-  /** A compaction dir that actually holds bucket partitions (an empty
-    * fold writes only _SUCCESS; listing it would fail schema inference). */
-  private def hasBucketDirs(p: String): Boolean = {
-    val d = new java.io.File(p)
-    d.isDirectory && d.listFiles.exists(f =>
-      f.isDirectory && f.getName.startsWith("bucket="))
-  }
 
   /** A bucket-version dir with data files (an empty marker commits a
     * bare dir: the bucket is owned, has zero rows, and is NOT lost). */
@@ -217,15 +176,13 @@ object DedupStream {
       f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
   }
 
-  private def emptyDf(spark: SparkSession, ddl: String): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-
   /** The copy-on-write relation (`labels` or `sizes`): one multi-root
     * scan over the owned bucket dirs — `only` restricts to a touched
     * subset (the commit-time pruned read). A referenced dir that does
     * not exist is lost committed state and fails loudly; empty marker
-    * dirs contribute no files. */
+    * dirs contribute no files. Every read declares its schema: the
+    * layout is fixed by [[writeBuckets]], so footer inference would
+    * spend a driver file-read per relation per admission. */
   private def ownedRelation(spark: SparkSession, stateDir: String, t: String,
       owners: Vector[Long], only: Option[Set[Int]], ddl: String): DataFrame = {
     val paths = owners.zipWithIndex
@@ -238,125 +195,41 @@ object DedupStream {
         p
       }
       .filter(hasDataFiles)
-    if (paths.isEmpty) emptyDf(spark, ddl)
-    else readPq(spark, ddl, paths)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    if (paths.isEmpty)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
   }
 
   /** Load the last committed state, or None before the first commit.
-    * `labels`/`sizes` come from the owner-mapped bucket dirs;
-    * `bands`/`shingles` each come from two multi-root scans — the
-    * committed compactions of the bucketed base (carrying the `bucket`
-    * partition column for pruning) and the live segments (bucket
-    * recomputed as a column so the union is uniform); uncommitted
-    * garbage above CURRENT / outside the committed owners is never
-    * listed. A state whose tiers are ALL legitimately empty
-    * (empty-corpus commits) reads as an empty relation of the right
-    * schema, not an error. */
+    * `labels`/`sizes` come from the owner-mapped bucket dirs,
+    * `bands`/`shingles` from [[VersionedIndex.readLog]]: the bucketed
+    * base parts (carrying the `bucket` partition column for pruning) and
+    * the live day segments (bucket computed); uncommitted garbage above
+    * CURRENT / outside the committed owners is never listed. A state
+    * whose tiers are ALL legitimately empty (empty-corpus commits) reads
+    * as an empty relation of the right schema, not an error. */
   def loadState(spark: SparkSession, stateDir: String): Option[DedupState] =
     VersionedIndex.meta(stateDir).map { m =>
-      val l = layoutOf(m)
-      def log(t: String, bucketCol: Int => Column, emptyDdl: String) = {
-        val segPaths = m.segs.map(i => s"$stateDir/$t/seg$i").filter(isDir)
-        val basePaths = (l.cFrom until l.compactions).map { j =>
-          val p = s"$stateDir/$t/base/cpart=$j"
-          if (!isDir(p)) throw new IllegalStateException(
-            s"committed state v${m.version} references $t compaction " +
-              s"cpart=$j but $p does not exist — lost or deleted committed state")
-          p
-        }.filter(hasBucketDirs)
-        val segDf =
-          if (segPaths.isEmpty) None
-          else Some(readPq(spark, emptyDdl, segPaths)
-            .withColumn("bucket", bucketCol(l.buckets)))
-        // basePath so the committed cpart roots read as one partitioned
-        // tree (partition columns cpart, bucket); cpart is only commit
-        // bookkeeping — drop it, keep bucket for probe-time pruning
-        val baseDf =
-          if (basePaths.isEmpty) None
-          else Some(readPq(spark, emptyDdl + ", cpart INT, bucket INT",
-            basePaths, basePath = Some(s"$stateDir/$t/base")).drop("cpart"))
-        (baseDf.toSeq ++ segDf.toSeq).reduceOption(_ unionByName _)
-          .getOrElse(emptyDf(spark, emptyDdl))
-      }
       DedupState(
-        ownedRelation(spark, stateDir, "labels", l.owners, None, LabelsDdl),
-        ownedRelation(spark, stateDir, "sizes", l.owners, None, SizesDdl),
-        log("bands",
-          n => IncrementalDedup.bandBucket(col("band"), col("band_hash"), n),
-          BandsDdl),
-        log("shingles", n => IncrementalDedup.docBucket(col("doc_id"), n),
-          ShinglesDdl),
-        buckets = Some(l.buckets))
+        ownedRelation(spark, stateDir, "labels", ownersOf(m), None, LabelsDdl),
+        ownedRelation(spark, stateDir, "sizes", ownersOf(m), None, SizesDdl),
+        VersionedIndex.readLog(spark, stateDir, Bands, m),
+        VersionedIndex.readLog(spark, stateDir, Shingles, m),
+        buckets = Some(m.buckets))
     }
 
-  /** Fold segments [from, to] of one log into compaction `cpart`,
-    * partitioned by the probe key's bucket and sorted by the key within
-    * each bucket (row groups arrive key-clustered for min/max pruning).
-    * `repartition(bucket)` first so each bucket directory is written by
-    * exactly one task — one file per bucket per fold. Write mode is
-    * overwrite: a crashed fold's leftovers (never referenced by a
-    * manifest) are wiped by the retry. */
-  private def compactInto(df: DataFrame, path: String, bucketCol: Column,
-      sortKey: Column, numBuckets: Int): Unit =
-    df.withColumn("bucket", bucketCol)
-      // task count bounded by the layout's bucket count, not the session
-      // shuffle width — a fold over b buckets schedules b tasks
-      .repartition(numBuckets, col("bucket"))
-      .sortWithinPartitions(col("bucket"), sortKey)
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(path)
-
-  /** One log's fold input → compaction `cpart=$c`: segments
-    * [segFrom, segTo] and — when `major` — every live base cpart
-    * [cFrom, c) too, so the new compaction SUPERSEDES them (the caller
-    * advances the manifest's cFrom past the folded-in cparts, exactly
-    * the [[migrateBuckets]] bookkeeping). Writes the cpart even when
-    * every input is empty (a _SUCCESS-only marker): the manifest will
-    * reference it, and a referenced-but-absent dir is the loud
-    * lost-state signal, not a legal state. */
-  private def compactLog(spark: SparkSession, stateDir: String, t: String,
-      ddl: String, major: Boolean, cFrom: Int, c: Int, segFrom: Long,
-      segTo: Long, bucketCol: Column, sortKey: Column,
-      numBuckets: Int): Unit = {
-    val segs = (segFrom to segTo).map(i => s"$stateDir/$t/seg$i").filter(isDir)
-    val segDf = if (segs.isEmpty) None else Some(readPq(spark, ddl, segs))
-    val baseDf =
-      if (!major) None
-      else {
-        val paths = (cFrom until c).map { j =>
-          val p = s"$stateDir/$t/base/cpart=$j"
-          // same loud lost-state contract as loadState: a REFERENCED
-          // cpart that no longer exists must abort the fold — folding
-          // past it would advance cFrom and make the loss permanent
-          // and silent (an existing-but-empty fold dir is legal and
-          // contributes nothing)
-          if (!isDir(p)) throw new IllegalStateException(
-            s"major fold references $t compaction cpart=$j but $p does " +
-              "not exist — lost or deleted committed state")
-          p
-        }.filter(hasBucketDirs)
-        if (paths.isEmpty) None
-        else Some(readPq(spark, ddl + ", cpart INT, bucket INT", paths,
-          basePath = Some(s"$stateDir/$t/base")).drop("cpart").drop("bucket"))
-      }
-    compactInto(
-      (segDf.toSeq ++ baseDf.toSeq).reduceOption(_ unionByName _)
-        .getOrElse(emptyDf(spark, ddl)),
-      s"$stateDir/$t/base/cpart=$c", bucketCol, sortKey, numBuckets)
-  }
-
-  /** Fold plan for one commit: once [[MaxLiveSegments]] segments have
-    * accumulated BEFORE this commit, fold them — segments
-    * [prevF, next-1], never the segment this commit is writing — into
-    * the bucketed base (amortized O(batch)/day: every log row is
-    * written exactly twice, once as a segment, once into a compaction).
-    * Excluding the in-flight segment is what lets the caller run the
-    * returned compaction task CONCURRENTLY with the commit's own
-    * writes (every fold input already exists on disk), hiding the fold
-    * behind the slower labels/sizes staged writes instead of paying it
-    * serially; the current segment simply stays live one commit longer
-    * (the probe's live-segment bound is unchanged: a reader of commit
-    * N sees at most maxLiveSegments live segments).
+  /** The store's fold policy for the commit after `m`: once
+    * [[MaxLiveSegments]] day segments have accumulated BEFORE this commit,
+    * fold them — never the segment this commit is writing — into one new
+    * base part (amortized O(batch)/day: every log row is written exactly
+    * twice, once as a segment, once into a part). Excluding the in-flight
+    * segment is what lets the fold run CONCURRENTLY with the commit's own
+    * writes (every fold input already exists on disk), hiding it behind
+    * the slower labels/sizes staged writes instead of paying it serially;
+    * the current segment simply stays live one commit longer (the probe's
+    * live-segment bound is unchanged: a reader of commit N sees at most
+    * maxLiveSegments live segments).
     *
     * MASS TRIGGER (in addition to the count rule): live segments are
     * probed UNPRUNED (their bucket column is computed at read, so a
@@ -364,47 +237,28 @@ object DedupStream {
     * the steady case the count rule bounds at k·batch). A segment k×
     * its cohort's median — a backfill day's bulk drop — would make
     * every probe until the count-rule fold pay its full mass, so it
-    * folds at the NEXT commit instead (one driver-side listing of the
-    * live segment sizes decides; an oversized segment is therefore
-    * live for at most 2 commits). Equal-sized cohorts never trigger
-    * early — the cadence stays exactly the count rule's, and the
-    * probe's read bound is O(k·batch + touched base buckets) in both
-    * regimes (measured: variants L and P of the committed
-    * `bench/CHAINPROBE_r16_read.txt`).
+    * folds at the NEXT commit instead (one driver-side sizing of the
+    * live segments decides; an oversized segment is therefore live for
+    * at most 2 commits). Equal-sized cohorts never trigger early — the
+    * cadence stays exactly the count rule's, and the probe's read bound
+    * is O(k·batch + touched base buckets) in both regimes (measured:
+    * variants L and P of the committed `bench/CHAINPROBE_r16_read.txt`).
     *
-    * MAJOR FOLDS: once [[MaxBaseCompactions]] cparts are live, the
-    * fold also folds them all into its new compaction and returns an
-    * advanced cFrom — see [[MaxBaseCompactions]]'s amortization
-    * argument. Returns the fold task and the next manifest's layout
-    * (owners still `prev`'s). */
-  private def foldPlan(spark: SparkSession, stateDir: String, next: Long,
-      prev: Layout, maxLiveSegments: Int): (Option[() => Unit], Layout) = {
-    val Layout(prevC, prevCFrom, prevF, b, _, _) = prev
-    def segBytes(i: Long): Long = Seq("bands", "shingles").map { t =>
-      val d = new java.io.File(stateDir, s"$t/seg$i")
-      if (d.isDirectory)
-        org.apache.commons.io.FileUtils.sizeOfDirectory(d) else 0L
-    }.sum
-    lazy val liveSizes = (prevF until next).map(segBytes).filter(_ > 0L)
+    * MAJOR FOLDS: once [[MaxBaseCompactions]] parts are live, the fold
+    * also folds them all into its new part — see [[MaxBaseCompactions]]'s
+    * amortization argument. */
+  private def foldOf(stateDir: String, m: VersionedIndex.Meta,
+      maxLiveSegments: Int): Option[Fold] = {
+    lazy val liveSizes = VersionedIndex.segBytes(stateDir, Bands, m)
+      .zip(VersionedIndex.segBytes(stateDir, Shingles, m))
+      .map { case (x, y) => x + y }.filter(_ > 0L)
     lazy val oversized = liveSizes.size >= 2 && {
       val sorted = liveSizes.sorted
       sorted.last >= maxLiveSegments.toLong *
         math.max(1L, sorted((liveSizes.size - 1) / 2))
     }
-    if (next - prevF >= maxLiveSegments || oversized) {
-      val major = prevC - prevCFrom >= MaxBaseCompactions
-      val task: () => Unit = () => graft.Par.inParallel(
-        () => compactLog(spark, stateDir, "bands", BandsDdl, major,
-          prevCFrom, prevC, prevF, next - 1,
-          IncrementalDedup.bandBucket(col("band"), col("band_hash"), b),
-          col("band_hash"), b),
-        () => compactLog(spark, stateDir, "shingles", ShinglesDdl, major,
-          prevCFrom, prevC, prevF, next - 1,
-          IncrementalDedup.docBucket(col("doc_id"), b),
-          col("doc_id"), b))
-      (Some(task), prev.copy(compactions = prevC + 1,
-        cFrom = if (major) prevC else prevCFrom, segFrom = next))
-    } else (None, prev)
+    Option.when(m.segs.size >= maxLiveSegments || oversized)(
+      Fold(parts = m.parts.size >= MaxBaseCompactions, batch = false))
   }
 
   /** Write `df` (carrying cluster_id) into per-bucket version dirs
@@ -446,49 +300,30 @@ object DedupStream {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stage))
   }
 
-  private def rmQuiet(d: java.io.File): Unit =
-    try org.apache.commons.io.FileUtils.deleteDirectory(d)
-    catch { case _: Exception => } // stale history is harmless
-
-  /** Commit version `next` (every relation it references is written)
-    * through [[VersionedIndex.commit]] — manifest, atomic pointer move,
-    * manifest retention — then delete the folded-away segments,
-    * superseded compactions and labels/sizes bucket versions that
-    * neither `cur` nor `prev` references (in-flight readers of the prior
-    * commit stay valid). Returns `next`. */
-  private def publish(stateDir: String, next: Long, cur: Layout,
-      prev: Option[Layout], stream: Option[(String, Long)]): Long = {
-    VersionedIndex.commit(stateDir, next, cur.members,
-      segs = (cur.segFrom to next).toVector, stream = stream)
-    Seq("bands", "shingles").foreach { t =>
-      (0L until math.min(cur.segFrom, prev.fold(0L)(_.segFrom)))
-        .map(i => new java.io.File(stateDir, s"$t/seg$i"))
-        .filter(_.isDirectory).foreach(rmQuiet)
-      // compactions superseded by a re-bucketing migration in BOTH the
-      // current and previous manifests' ranges are unreferenced
-      (0 until math.min(cur.cFrom, prev.fold(0)(_.cFrom)))
-        .map(j => new java.io.File(stateDir, s"$t/base/cpart=$j"))
-        .filter(_.isDirectory).foreach(rmQuiet)
-    }
+  /** Once version `next` is committed (its manifest names `cur` as the
+    * owners), delete the labels/sizes bucket versions that neither `cur`
+    * nor the previous commit's `prev` owns: in-flight readers of the
+    * prior commit stay valid. */
+  private def retireOwners(stateDir: String, cur: Vector[Long],
+      prev: Option[Vector[Long]]): Unit =
     Seq("labels", "sizes").foreach { t =>
       val root = new java.io.File(stateDir, t)
       if (root.isDirectory) root.listFiles.foreach { bdir =>
         if (bdir.isDirectory && bdir.getName.startsWith("b")
             && bdir.getName.drop(1).forall(_.isDigit)) {
           val k = bdir.getName.drop(1).toInt
-          def owns(l: Layout, ver: Long) =
-            k < l.owners.length && l.owners(k) == ver
+          def owns(o: Vector[Long], ver: Long) = k < o.length && o(k) == ver
           bdir.listFiles.foreach { vdir =>
             if (vdir.isDirectory && vdir.getName.startsWith("v")) {
               val ver = vdir.getName.drop(1).toLong
-              if (!owns(cur, ver) && !prev.exists(owns(_, ver))) rmQuiet(vdir)
+              if (!owns(cur, ver) && !prev.exists(owns(_, ver)))
+                try org.apache.commons.io.FileUtils.deleteDirectory(vdir)
+                catch { case _: Exception => } // stale history is harmless
             }
           }
         }
       }
     }
-    next
-  }
 
   /** Write the next state version FROM A FULL STATE and promote it —
     * the bootstrap path: every labels/sizes bucket becomes owned by
@@ -507,16 +342,14 @@ object DedupStream {
       buckets: Int = StateBuckets,
       maxLiveSegments: Int = MaxLiveSegments,
       stream: Option[(String, Long)] = None): Long = {
-    val prevMeta = VersionedIndex.meta(stateDir)
-    val prev = prevMeta.map(layoutOf)
-    val next = prevMeta.fold(0L)(_.version + 1)
+    val prev = VersionedIndex.meta(stateDir)
+    val next = prev.fold(0L)(_.version + 1)
     require(next == 0 || (newBands.isDefined && newShingles.isDefined),
       "commitState on an existing state requires the batch deltas for the " +
         "bands/shingles append log (a full rewrite would double-count)")
-    // layout constants are fixed by the FIRST commit's manifest; later
-    // commits inherit them. The manifest value wins on every commit
-    // after the first; a caller passing a CONFLICTING non-default count
-    // would otherwise silently believe the layout was re-sized.
+    // the bucket count is fixed by the FIRST commit's manifest; later
+    // commits inherit it. A caller passing a CONFLICTING non-default
+    // count would otherwise silently believe the layout was re-sized.
     val b = prev.fold(buckets)(_.buckets)
     require(buckets == StateBuckets || buckets == b,
       s"state layout is fixed at $b buckets by its first commit's manifest; " +
@@ -525,39 +358,29 @@ object DedupStream {
     val spark = st.labels.sparkSession
     def dropB(df: DataFrame) = IncrementalDedup.dropBucket(df)
     val all = (0 until b).toSeq
-    def wr(df: DataFrame, path: String): Unit =
-      oneTaskIfLocal(df).write.mode("overwrite").parquet(s"$stateDir/$path")
-    // The FIRST commit's snapshot is corpus-sized — committed as a live
-    // segment it would be probed UNPRUNED (bucket computed at read) by
-    // every admission until the count-rule fold, i.e. k days of
-    // full-corpus reads (measured: `bench/CHAINPROBE_r16_read.txt`
-    // variant P, days 0-3 read the whole band tier at every bucket
-    // count). Write it PRE-FOLDED into the bucketed base instead: one
-    // extra shuffle on a day that is O(corpus) anyway (labels/sizes
-    // write every bucket), and every later probe prunes from day 1.
-    val logTasks: Seq[() => Unit] =
-      if (prev.isEmpty) Seq(
-        () => compactInto(dropB(newBands.getOrElse(st.bands)),
-          s"$stateDir/bands/base/cpart=0",
-          IncrementalDedup.bandBucket(col("band"), col("band_hash"), b),
-          col("band_hash"), b),
-        () => compactInto(dropB(newShingles.getOrElse(st.shingles)),
-          s"$stateDir/shingles/base/cpart=0",
-          IncrementalDedup.docBucket(col("doc_id"), b), col("doc_id"), b))
-      else Seq(
-        () => wr(dropB(newBands.getOrElse(st.bands)), s"bands/seg$next"),
-        () => wr(dropB(newShingles.getOrElse(st.shingles)),
-          s"shingles/seg$next"))
     val owners = Vector.fill(b)(next)
-    val (foldTask, cur) = prev match {
-      case None => (None, Layout(1, 0, 1L, b, owners))
-      case Some(p) => foldPlan(spark, stateDir, next, p, maxLiveSegments)
-    }
-    graft.Par.inParallel(Seq(
+    def write(a: VersionedIndex.Admission): Unit = graft.Par.inParallel(
       () => writeBuckets(dropB(st.labels), stateDir, "labels", next, b, all),
-      () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next, b, all))
-      ++ logTasks ++ foldTask: _*)
-    publish(stateDir, next, cur.copy(owners = owners), prev, stream)
+      () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next, b, all),
+      () => a.seg(Bands, dropB(newBands.getOrElse(st.bands))),
+      () => a.seg(Shingles, dropB(newShingles.getOrElse(st.shingles))))
+    prev match {
+      // The FIRST commit's snapshot is corpus-sized — committed as a day
+      // segment it would be probed UNPRUNED (bucket computed at read) by
+      // every admission until the count-rule fold, i.e. k days of
+      // full-corpus reads (measured: `bench/CHAINPROBE_r16_read.txt`
+      // variant P, days 0-3 read the whole band tier at every bucket
+      // count). The bootstrap writes it as a bucketed base part instead:
+      // one extra shuffle on a day that is O(corpus) anyway (labels/sizes
+      // write every bucket), and every later probe prunes from day 1.
+      case None => VersionedIndex.bootstrap(spark, stateDir, Logs, stream,
+        buckets = Some(b), members = Seq("owners" -> owners))(write)
+      case Some(m) => VersionedIndex.advance(spark, stateDir, m,
+        foldOf(stateDir, m, maxLiveSegments), Logs, Seq("owners" -> owners),
+        stream)(write)
+    }
+    retireOwners(stateDir, owners, prev.map(ownersOf))
+    next
   }
 
   /** Commit one admitted batch against the previously committed state —
@@ -610,8 +433,8 @@ object DedupStream {
     * read, two directory sizings, zero jobs). */
   private def maybeAutoMigrate(spark: SparkSession, stateDir: String,
       bucketBytesTarget: Long, bucketBytesFloor: Long): Option[Long] =
-    VersionedIndex.meta(stateDir).map(layoutOf).flatMap { man =>
-      val b = man.buckets
+    VersionedIndex.meta(stateDir).flatMap { m =>
+      val b = m.buckets
       val newB = math.min(b * AutoMigrateGrowth, AutoMigrateMaxBuckets)
       // PER-TABLE masses: the sizing rule ("one bucket ≈ a few
       // block-sized files") is a statement about each probed table's
@@ -620,13 +443,7 @@ object DedupStream {
       // the documented per-table target) and the floor protects the
       // LIGHTEST (an admission probes both tables, so shattering
       // either into sub-footer files pays the tiny-file penalty).
-      lazy val perTableBytes = Seq("bands", "shingles").map { t =>
-        (man.cFrom until man.compactions).map { j =>
-          val d = new java.io.File(stateDir, s"$t/base/cpart=$j")
-          if (d.isDirectory)
-            org.apache.commons.io.FileUtils.sizeOfDirectory(d) else 0L
-        }.sum
-      }
+      lazy val perTableBytes = Logs.map(VersionedIndex.partBytes(stateDir, _, m))
       // newB > b FIRST: at the bucket cap the sizing walk (a full
       // recursive listing of the base) would otherwise run on every
       // commit for a result migration could never use
@@ -647,9 +464,9 @@ object DedupStream {
     val committed = VersionedIndex.meta(stateDir).getOrElse(
       throw new IllegalStateException("commitDelta requires an existing " +
         "committed state (bootstrap with commitState)"))
-    val prev = layoutOf(committed)
+    val prevOwners = ownersOf(committed)
     val next = committed.version + 1
-    val b = prev.buckets
+    val b = committed.buckets
     def kb(c: Column) = IncrementalDedup.docBucket(c, b).as("k")
     // every bucket a label row can leave, enter, or appear in:
     // remapped old cluster ids (rows leave), merged labels (rows
@@ -668,13 +485,13 @@ object DedupStream {
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
     }
     val tset = touched.toSet
-    val oldLab = ownedRelation(spark, stateDir, "labels", prev.owners,
+    val oldLab = ownedRelation(spark, stateDir, "labels", prevOwners,
       Some(tset), LabelsDdl)
     val newLab = oldLab.join(broadcast(delta.remap), Seq("cluster_id"), "left")
       .select(col("doc_id"),
         coalesce(col("merged"), col("cluster_id")).as("cluster_id"))
       .unionByName(delta.newAssign.select("doc_id", "cluster_id"))
-    val oldSz = ownedRelation(spark, stateDir, "sizes", prev.owners,
+    val oldSz = ownedRelation(spark, stateDir, "sizes", prevOwners,
       Some(tset), SizesDdl)
     val newSz = oldSz.join(broadcast(delta.remap), Seq("cluster_id"), "left")
       .select(coalesce(col("merged"), col("cluster_id")).as("cluster_id"),
@@ -682,70 +499,61 @@ object DedupStream {
       .unionByName(delta.newAssign.groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size")))
       .groupBy("cluster_id").agg(sum("cluster_size").as("cluster_size"))
-    def wr(df: DataFrame, path: String): Unit =
-      oneTaskIfLocal(df).write.mode("overwrite").parquet(s"$stateDir/$path")
-    val (foldTask, cur) = foldPlan(spark, stateDir, next, prev, maxLiveSegments)
-    graft.Par.inParallel(Seq(
-      () => writeBuckets(newLab, stateDir, "labels", next, b, touched),
-      () => writeBuckets(newSz, stateDir, "sizes", next, b, touched),
-      () => wr(delta.newBands, s"bands/seg$next"),
-      () => wr(delta.newShingles, s"shingles/seg$next"),
-      () => foldTask.foreach(_())): _*)
-    publish(stateDir, next,
-      cur.copy(owners = touched.foldLeft(prev.owners)((v, k) => v.updated(k, next))),
-      Some(prev), stream)
+    val owners = touched.foldLeft(prevOwners)((v, k) => v.updated(k, next))
+    VersionedIndex.advance(spark, stateDir, committed,
+        foldOf(stateDir, committed, maxLiveSegments), Logs,
+        Seq("owners" -> owners), stream) { a =>
+      graft.Par.inParallel(
+        () => writeBuckets(newLab, stateDir, "labels", next, b, touched),
+        () => writeBuckets(newSz, stateDir, "sizes", next, b, touched),
+        () => a.seg(Bands, delta.newBands),
+        () => a.seg(Shingles, delta.newShingles))
+    }
+    retireOwners(stateDir, owners, Some(prevOwners))
+    next
   }
 
   /** Re-size the persisted layout's bucket count — the migration fold a
     * growing deployment needs when the corpus has outgrown the count
     * pinned by its first commit (a bucket should stay a few block-sized
-    * files). One full-rewrite commit, atomic like any other: everything
-    * (all committed compactions + live segments) re-folds into ONE new
-    * compaction per log under the new bucket count, labels/sizes rewrite
-    * into `newBuckets` owner dirs, and the manifest's `cFrom` advances
-    * past the superseded compactions — readers of the previous version
-    * stay valid (its compactions/segments/bucket dirs survive one more
-    * commit), and the next [[commitDelta]] prunes against the new
-    * layout. O(corpus) I/O by nature — scheduled like any compaction,
-    * not a daily cost. */
+    * files). One full-rewrite commit ([[VersionedIndex.rebuild]]), atomic
+    * like any other: every base part and live segment re-folds into ONE
+    * new part per log under the new bucket count, labels/sizes rewrite
+    * into `newBuckets` owner dirs, and the manifest lists only the new
+    * part — readers of the previous version stay valid (its parts,
+    * segments and bucket dirs survive one more commit), and the next
+    * [[commitDelta]] prunes against the new layout. O(corpus) I/O by
+    * nature — scheduled like any compaction, not a daily cost. */
   def migrateBuckets(spark: SparkSession, stateDir: String,
       newBuckets: Int): Long = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
     val committed = VersionedIndex.meta(stateDir).getOrElse(
       throw new IllegalStateException(
         "migrateBuckets requires an existing committed state"))
-    val prev = layoutOf(committed)
     val next = committed.version + 1
     val st = loadState(spark, stateDir).get
     def dropB(df: DataFrame) = IncrementalDedup.dropBucket(df)
     val all = (0 until newBuckets).toSeq
-    graft.Par.inParallel(
-      () => writeBuckets(dropB(st.labels), stateDir, "labels", next,
-        newBuckets, all),
-      () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next,
-        newBuckets, all),
-      () => compactInto(dropB(st.bands),
-        s"$stateDir/bands/base/cpart=${prev.compactions}",
-        IncrementalDedup.bandBucket(col("band"), col("band_hash"), newBuckets),
-        col("band_hash"), newBuckets),
-      () => compactInto(dropB(st.shingles),
-        s"$stateDir/shingles/base/cpart=${prev.compactions}",
-        IncrementalDedup.docBucket(col("doc_id"), newBuckets),
-        col("doc_id"), newBuckets))
-    // the new base is compaction [compactions, compactions+1); every
-    // prior compaction and every live segment is folded in and
-    // superseded (segFrom moves past this version's — empty — segment
-    // slot, which never exists: migration admits no batch).
+    val owners = Vector.fill(newBuckets)(next)
     // The streaming replay guard carries FORWARD: migration admits no
     // batch, so the last admitted (checkpoint identity, batch id) must
     // survive into this manifest — dropping it would open the exact
     // at-least-once window the guard exists for (a crash between the
     // migrated commit and the streaming checkpoint would re-admit the
     // last micro-batch against its own stored copies)
-    publish(stateDir, next,
-      Layout(prev.compactions + 1, prev.compactions, next + 1, newBuckets,
-        Vector.fill(newBuckets)(next), migratedFrom = Some(prev.buckets)),
-      Some(prev), committed.stream)
+    VersionedIndex.rebuild(spark, stateDir, Logs, committed.stream,
+        buckets = Some(newBuckets), members = Seq("owners" -> owners,
+          "migratedFrom" -> committed.buckets)) { a =>
+      graft.Par.inParallel(
+        () => writeBuckets(dropB(st.labels), stateDir, "labels", next,
+          newBuckets, all),
+        () => writeBuckets(dropB(st.sizes), stateDir, "sizes", next,
+          newBuckets, all),
+        () => a.seg(Bands, dropB(st.bands)),
+        () => a.seg(Shingles, dropB(st.shingles)))
+    }
+    retireOwners(stateDir, owners, Some(ownersOf(committed)))
+    next
   }
 
   /** Admit every not-yet-seen parquet drop under `docsPath` into the

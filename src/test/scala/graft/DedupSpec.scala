@@ -849,7 +849,7 @@ class DedupSpec extends AnyFunSuite {
     assert(m0.totalRows == base.count() && m0.segs == Vector(0L))
     val v0Rows = graft.operators.VersionedIndex
       .readLog(spark, dir, graft.operators.VersionedIndex.Log("assignments",
-        "vec_id BIGINT, cid INT"), m0.segs)
+        "vec_id BIGINT, cid INT"), m0)
       .select("vec_id").as[Long].collect().toSet
     assert(v0Rows == base.select("vec_id").as[Long].collect().toSet,
       "time-travel read of v0 must see exactly the pre-append corpus")

@@ -294,7 +294,7 @@ class DedupStreamSpec extends AnyFunSuite {
     // two-tier layout after day 9: base holds compactions cpart=0 (the
     // pre-folded day-0 bootstrap), cpart=1 (days 1-4) and cpart=2
     // (days 5-8), bucket-partitioned; only the unfolded segment 9 is
-    // LIVE to the current manifest (segFrom=9 — the commit-9 fold took
+    // LIVE to the current manifest (segs [9] — the commit-9 fold took
     // segs 5-8), while segs 5-8 stay on disk exactly one more commit
     // for in-flight readers of the PREVIOUS version (whose manifest
     // still lists them live) — so the daily probe reads at most
@@ -379,7 +379,7 @@ class DedupStreamSpec extends AnyFunSuite {
     admit(day4) // commit 3: mass trigger folds segs 1-2 (count rule is 4)
     val man = Files.readString(
       java.nio.file.Paths.get(state, "v3", "MANIFEST"))
-    assert(man.contains(""""segFrom":3"""),
+    assert(man.contains(""""segs":[3]"""),
       s"mass trigger did not fold the oversized segment: $man")
     assert(new java.io.File(s"$state/bands/base/cpart=1").isDirectory,
       "mass-triggered fold wrote no compaction")
@@ -426,11 +426,11 @@ class DedupStreamSpec extends AnyFunSuite {
     assert(cparts.size <= 2 * (DedupStream.MaxBaseCompactions + 1),
       s"base compactions unbounded: ${cparts.size} dirs ($cparts)")
     val man = Files.readString(java.nio.file.Paths.get(state, s"v$n", "MANIFEST"))
-    val cFrom = """"cFrom":(\d+)""".r.findFirstMatchIn(man).get.group(1).toInt
-    val comps = """"compactions":(\d+)""".r.findFirstMatchIn(man).get.group(1).toInt
-    assert(comps - cFrom <= DedupStream.MaxBaseCompactions,
-      s"manifest lists ${comps - cFrom} live cparts: $man")
-    assert(cFrom > 0, "no major fold ever ran in 2x MaxBaseCompactions commits")
+    val live = """"parts":\[([\d,]*)\]""".r.findFirstMatchIn(man).get.group(1)
+      .split(",").map(_.toInt)
+    assert(live.length <= DedupStream.MaxBaseCompactions,
+      s"manifest lists ${live.length} live cparts: $man")
+    assert(live.min > 0, "no major fold ever ran in 2x MaxBaseCompactions commits")
     val streamed = IncrementalDedup.labelsWithSizes(
         DedupStream.loadState(spark, state).get).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -510,7 +510,7 @@ class DedupStreamSpec extends AnyFunSuite {
     DedupStream.commitDelta(spark, state, d2)
     d2.release()
     val m = VersionedIndex.metaOrThrow(state)
-    assert(m.version == 1 && m.segs == Vector(1L) && m.num("segFrom") == 1L,
+    assert(m.version == 1 && m.segs == Vector(1L) && m.parts == Vector(0L),
       s"v1 should list its one live segment: ${m.members}")
     // a second writer re-committing the published version fails loudly
     val e = intercept[IllegalStateException] {

@@ -116,12 +116,14 @@ class EmbeddingIncrementalSpec extends AnyFunSuite {
       EmbeddingIncremental.initialState(emb.filter(col("vec_id") % 5 === 0)),
       dir, retainVersions = 3)
     (1 to 3).foreach(admit)
-    // v0 [seg0]; v1 [0,1]; v2 FOLDS -> [2]; v3 [2,3] — retain 3 keeps
-    // v1..v3, and crucially v1's pre-fold segments 0,1 must SURVIVE the
-    // v2 fold and the v3 commit because v1 itself is still retained
+    // v0 part 0; v1 part 0 + seg 1; v2 FOLDS -> part 1; v3 part 1 +
+    // seg 3 — retain 3 keeps v1..v3, and crucially v1's pre-fold part 0
+    // and seg 1 must SURVIVE the v2 fold and the v3 commit because v1
+    // itself is still retained
     assert(graft.operators.VersionedIndex.metaOrThrow(dir)
       .retainVersions.contains(3), "depth must be recorded in the manifest")
-    assert(graft.operators.VersionedIndex.metaOrThrow(dir).segs == Vector(2L, 3L))
+    val m3 = graft.operators.VersionedIndex.metaOrThrow(dir)
+    assert(m3.parts == Vector(1L) && m3.segs == Vector(3L), m3.members)
     val v1Truth = rows(Dedup.embeddingDupClusters(
       emb.filter(col("vec_id") % 5 < 2)))
     assert(rows(EmbeddingIncremental.labelsWithSizes(
@@ -135,13 +137,14 @@ class EmbeddingIncrementalSpec extends AnyFunSuite {
     assert(!new java.io.File(dir, "v0").isDirectory)
     (1 to 3).foreach(v =>
       assert(new java.io.File(dir, s"v$v").isDirectory, s"v$v must survive"))
-    // one more admission moves the boundary: v4 folds -> [4], v1 (and
-    // only then its segments 0,1) become unreferenced and are reclaimed
+    // one more admission moves the boundary: v4 folds -> part 2, v1 (and
+    // only then its part 0 and seg 1) become unreferenced and are
+    // reclaimed
     admit(4)
     assert(!new java.io.File(dir, "v1").isDirectory, "v1 past new boundary")
-    Seq(0, 1).foreach(sg => assert(
-      !new java.io.File(dir, s"labels/seg=$sg").isDirectory,
-      s"seg $sg unreferenced once v1 fell out of retention"))
+    Seq("labels/base/cpart=0", "labels/seg1").foreach(t => assert(
+      !new java.io.File(dir, t).isDirectory,
+      s"$t unreferenced once v1 fell out of retention"))
     val v2Truth = rows(Dedup.embeddingDupClusters(
       emb.filter(col("vec_id") % 5 < 3)))
     assert(rows(EmbeddingIncremental.labelsWithSizes(
@@ -159,10 +162,11 @@ class EmbeddingIncrementalSpec extends AnyFunSuite {
       EmbeddingIncremental.admitDrop(spark, dir,
         emb.filter(col("vec_id") % 4 === d), maxLiveSegments = 2)
     }
-    // save → [0]; admit1 → [0,1]; admit2 folds → [2]; admit3 → [2,3]
+    // save → part 0; admit1 → part 0 + seg 1; admit2 folds → part 1;
+    // admit3 → part 1 + seg 3
     val m = graft.operators.VersionedIndex.metaOrThrow(dir)
-    assert(m.segs == Vector(2L, 3L),
-      s"expected the day-2 commit to fold the log: ${m.segs}")
+    assert(m.parts == Vector(1L) && m.segs == Vector(3L),
+      s"expected the day-2 commit to fold the log: ${m.members}")
     val grown = EmbeddingIncremental.loadState(spark, dir).get
     assert(rows(EmbeddingIncremental.labelsWithSizes(grown)) == batchTruth,
       "folded 4-day chain must equal the one-shot clustering")

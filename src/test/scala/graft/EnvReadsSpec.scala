@@ -15,12 +15,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * place that reads or writes the `CURRENT` pointer and the `MANIFEST`
   * files; a second copy of that protocol would miss its single-writer
   * guard and strict manifest parse. It is also the only code that names
-  * a store's `<log>/seg=$N` segments and `v$N/<model>` dirs, so the
-  * segment layout and its row counts live in one writer. Every store
-  * but the dedup store (whose own layout publishes through `commit`)
-  * admits through its one skeleton, `appendOrFold`. Library code
-  * also never uses an `Observation`, which breaks closure serialization
-  * for the rest of the session. */
+  * a store's `<log>/seg=$N` segments, a two-tier store's `<log>/seg$N`
+  * day segments and `<log>/base/cpart=$j` parts, and `v$N/<model>` dirs,
+  * so the segment layout, its row counts and its retention live in one
+  * writer. No store calls `commit` itself: the log and index stores
+  * admit through `appendOrFold`, the dedup store through `advance`.
+  * Library code also never uses an `Observation`, which breaks closure
+  * serialization for the rest of the session. */
 class EnvReadsSpec extends AnyFunSuite {
 
   private val Reads = """sys\.env|System\.getenv|sys\.props|System\.getProperty""".r
@@ -87,7 +88,7 @@ class EnvReadsSpec extends AnyFunSuite {
       files.exists(_.getName == "Bench.scala"), "scan found no store files")
     // DedupStream's bucket-owner dirs `<table>/b$k/v$N` are its own layout
     val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
-      """seg=|(?<!/b\$k)/v\$""".r, skipLineComments = true)
+      """seg=|seg\$|base/cpart=|(?<!/b\$k)/v\$""".r, skipLineComments = true)
     assert(found.isEmpty, found.mkString("\n"))
   }
 
@@ -95,11 +96,9 @@ class EnvReadsSpec extends AnyFunSuite {
     assert(root.isDirectory, s"run from the repository root: $root")
     val files = scalaFiles(root)
     assert(files.exists(_.getName == "Similarity.scala"), "scan found no store files")
-    // DedupStream keeps its own layout and publishes through commit itself
+    // the dedup store commits through the same skeleton (`advance`)
     val found = hits(files.filter(_.getName != "VersionedIndex.scala"),
       """VersionedIndex\.(commit|rows)\(""".r, skipLineComments = true)
-      .filterNot(h => h.startsWith("graft/streaming/DedupStream.scala:") &&
-        h.contains("VersionedIndex.commit(stateDir, next, cur.members,"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 

@@ -232,6 +232,69 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
+  test("randomized substring and embed chains: tiered appends and folds equal batch recompute") {
+    // The two-tier log law for the other two bucketed stores: seeded
+    // random day splits, each admitted under a random fold cap of 1 to 3
+    // so that day-segment appends and base-part folds interleave, must
+    // load as the one-shot result over the union — the substring store's
+    // spans as duplicateSpans, the embedding store's labels with sizes as
+    // initialState's.
+    import graft.operators.{EmbeddingIncremental, SubstringDedup, VersionedIndex}
+    def spanSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSet
+    def labelSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // docs from 4 token pools share >= DedupK-token runs when two docs of
+    // one pool overlap enough
+    val docGen: Gen[String] = for {
+      pool <- Gen.choose(0, 3)
+      start <- Gen.choose(0, 6)
+      len <- Gen.choose(13, 18)
+    } yield (start until start + len).map(i => s"s${pool}_w$i").mkString(" ")
+    val arms = collection.mutable.Set[String]()
+    (1L to 2L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val days = 4
+      // every day gets at least one row
+      def dayOf(i: Int) = if (i < days) i else rnd.nextInt(days)
+      val docs = sample(docGen, 24, seed).zipWithIndex
+        .map { case (text, i) => (i.toLong, text, dayOf(i)) }
+      val bases = Array.fill(4)(Array.fill(64)(rnd.nextGaussian().toFloat))
+      val vecs = (0 until 24).map { i =>
+        (i.toLong, bases(rnd.nextInt(4)).map(_ + rnd.nextGaussian().toFloat * 0.15f),
+          dayOf(i))
+      }
+      val docDf = docs.toDF("doc_id", "text", "day")
+      val vecDf = vecs.toDF("vec_id", "embedding", "day")
+      def docDay(d: Int) = docDf.filter($"day" === d).drop("day")
+      def vecDay(d: Int) = vecDf.filter($"day" === d).drop("day")
+      val root = java.nio.file.Files.createTempDirectory(s"prop_tiered$seed").toString
+      val (sub, emb) = (s"$root/substring", s"$root/embed")
+      SubstringDedup.bootstrapStore(spark, sub, docDay(0))
+      EmbeddingIncremental.bootstrapDrop(spark, emb, vecDay(0))
+      (1 until days).foreach { d =>
+        SubstringDedup.admitDrop(spark, sub, docDay(d), maxLiveSegments = 1 + rnd.nextInt(3))
+        EmbeddingIncremental.admitDrop(spark, emb, vecDay(d),
+          maxLiveSegments = 1 + rnd.nextInt(3))
+        Seq(sub, emb).foreach(dir =>
+          arms += (if (VersionedIndex.metaOrThrow(dir).segs.isEmpty) "fold" else "append"))
+      }
+      val oneShotSpans = spanSet(SubstringDedup.duplicateSpans(docDf.drop("day")))
+      assert(oneShotSpans.nonEmpty, s"seed=$seed: the fixture shares no span")
+      assert(spanSet(SubstringDedup.loadStore(spark, sub).get.spans) == oneShotSpans,
+        s"seed=$seed: chained substring store diverged from duplicateSpans")
+      val oneShotLabels = labelSet(EmbeddingIncremental.labelsWithSizes(
+        EmbeddingIncremental.initialState(vecDf.drop("day"))))
+      assert(oneShotLabels.exists(_._3 > 1), s"seed=$seed: the fixture has no cluster")
+      assert(labelSet(EmbeddingIncremental.labelsWithSizes(
+          EmbeddingIncremental.loadState(spark, emb).get)) == oneShotLabels,
+        s"seed=$seed: chained embedding store diverged from initialState")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+    assert(arms == Set("fold", "append"), s"the chains ran only $arms")
+  }
+
   test("large-star/small-star handles a deep chain in few rounds") {
     // a 30-node path graph: diameter 29, the worst case for plain
     // min-label propagation; the star alternation collapses it fast
@@ -303,7 +366,7 @@ class PropertiesSpec extends AnyFunSuite {
           .sortBy(_._1).map(_._2).toSeq
         val gotP = VersionedIndex.readLog(spark, pqDir,
             VersionedIndex.Log("codes", "cand_id BIGINT, codes ARRAY<INT>, rnorm DOUBLE"),
-            VersionedIndex.metaOrThrow(pqDir).segs)
+            VersionedIndex.metaOrThrow(pqDir))
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Int](1).toList, r.getDouble(2)))
           .toSet

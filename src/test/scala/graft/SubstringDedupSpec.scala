@@ -136,17 +136,18 @@ class SubstringDedupSpec extends AnyFunSuite {
       def day(i: Int) = docs.filter(pmod(col("doc_id"), lit(3)) === i)
       SubstringDedup.bootstrapStore(spark, s"$root/state", day(0))
       SubstringDedup.admitDrop(spark, s"$root/state", day(1),
-        maxLiveSegments = 2) // append: segs [0, 1]
+        maxLiveSegments = 2) // append: parts [0], segs [1]
       // O(batch) evidence: the append segment holds EXACTLY the batch's
       // window rows, not the grown log
-      val segRows = spark.read.parquet(s"$root/state/windows/seg=1").count()
+      val segRows = spark.read.parquet(s"$root/state/windows/seg1").count()
       val expectWins = graft.operators.SubstringDedupSpecAccess.windowCount(day(1))
       assert(segRows == expectWins,
         s"append segment wrote $segRows rows, batch has $expectWins windows")
       SubstringDedup.admitDrop(spark, s"$root/state", day(2),
-        maxLiveSegments = 2) // fold: segs [2]
+        maxLiveSegments = 2) // fold: parts [1], segs []
       val m = graft.operators.VersionedIndex.metaOrThrow(s"$root/state")
-      assert(m.segs == Vector(2L), s"fold did not collapse segs: ${m.segs}")
+      assert(m.parts == Vector(1L) && m.segs.isEmpty,
+        s"fold did not collapse the log into one part: ${m.members}")
       val st = SubstringDedup.loadStore(spark, s"$root/state").get
       val oneShot = spanSet(SubstringDedup.duplicateSpans(docs))
       val chained = spanSet(st.spans)
